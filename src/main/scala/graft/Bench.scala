@@ -57,23 +57,13 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Also land the JSON in a file: the one-line stdout contract is
     // fragile under log interleaving/truncation (BENCH_r01 survived
     // only as a cut-off tail and parsed as null).
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     // Optional comma-separated subset for local iteration.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // local test files are a single ~30 MB parquet per table; split
-      // them so scans parallelize across the cores (cluster default
-      // 128m is right when files are many and large)
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create("graft-bench")
     val io = new IoListener
     spark.sparkContext.addSparkListener(io)
     // Warm up the session (codegen, exchange, scheduler) so the first

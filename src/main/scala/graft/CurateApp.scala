@@ -12,6 +12,10 @@ import graft.operators.{Dedup, TextAnalysis}
   *
   * Usage: CurateApp <inputParquet> <outputDir> [qualityMin] [lang]
   *
+  * The session comes from `GraftSession.create`: under spark-submit
+  * the job runs on the submitted `spark.master`, and only a direct
+  * invocation falls back to `local[SPARK_GRAFT_CPUS]`.
+  *
   * Scoring and filtering fuse into the scan; the shuffles are the
   * signature aggregation, the LSH bucket join, the component rounds,
   * and the survivor anti-join — none of them O(corpus²).
@@ -71,10 +75,8 @@ object CurateApp {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
       "Usage: CurateApp <inputParquet> <outputDir> [qualityMin] [lang]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark: SparkSession = GraftSession.local(cpus.toInt, appName = "graft-curate")
+    val spark = GraftSession.create("graft-curate")
     try {
-      spark.sparkContext.setLogLevel("WARN")
       val n = run(spark, args(0), args(1),
         args.lift(2).map(_.toDouble).getOrElse(0.75),
         args.lift(3).getOrElse("en"))

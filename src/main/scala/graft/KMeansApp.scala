@@ -26,14 +26,7 @@ object KMeansApp {
     val output = args(2)
     val seed = args.lift(3).map(_.toLong)
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .appName("graft-kmeans")
-      // spark-submit provides spark.master on a cluster; fall back to
-      // local for direct invocation.
-      .master(sys.props.getOrElse("spark.master", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .getOrCreate()
+    val spark = GraftSession.create("graft-kmeans")
     try run(spark, k, input, output, seed)
     finally spark.stop()
   }

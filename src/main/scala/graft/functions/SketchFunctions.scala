@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.graft.{ColumnBridge, GramianAgg, KmvAgg, KmvMergeAgg, MinHashAgg, SimHashAgg}
 import org.apache.spark.sql.types.IntegerType
@@ -78,21 +78,5 @@ object SketchFunctions {
     case Seq(sk, Literal(k: Int, IntegerType)) => KmvMergeAgg(sk, k)
     case other => throw new IllegalArgumentException(
       s"graft_kmv_merge(col, k) needs an integer-literal sketch size, got: $other")
-  }
-
-  /** Register `graft_minhash` / `graft_gramian` / `graft_kmv` for
-    * SQL use in an existing session.
-    */
-  def registerSql(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash", minhashBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_gramian", gramianBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_kmv", kmvBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_kmv_merge", kmvMergeBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash", simhashBuilder, "built-in")
   }
 }

@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graft.{ColumnBridge, UnicodeNormalize}
 
-/** Column-API and SQL-registration surface for graft's native text
+/** Column-API surface and SQL builder for graft's native text
   * functions (expression implementation:
   * org.apache.spark.sql.graft.UnicodeNormalize).
   */
@@ -52,9 +52,4 @@ object TextFunctions {
   def word_gram_xxhash(tokens: Column, n: Int): Column =
     ColumnBridge.column(
       org.apache.spark.sql.graft.WordGramXxhash(ColumnBridge.expression(tokens), n))
-
-  /** Register `graft_normalize` for SQL use in an existing session. */
-  def registerSql(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_normalize", normalizeBuilder, "built-in")
 }

@@ -1,18 +1,20 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Divide, Expression, ExpressionInfo, Multiply, Sqrt}
-import org.apache.spark.sql.graft.{ColumnBridge, DotProduct, HilbertIndex, PqEncode, VecDivide, VecSubtract}
+import org.apache.spark.sql.graft.{ColumnBridge, DotProduct, GramianAgg, HilbertIndex,
+  InferTopKFromWindow, KmvAgg, KmvMergeAgg, MinHashAgg, PqEncode, SimHashAgg,
+  TopKPerKeyStrategy, UnicodeNormalize, VecDivide, VecSubtract}
 
-/** Column-API and SQL-registration surface for graft's native
+/** Column-API surface and SQL builders for graft's native
   * vector functions (expression implementation:
   * org.apache.spark.sql.graft.DotProduct).
   */
 object VectorFunctions {
 
-  /** Single source for the expression trees — both registration
-    * paths (temp function and session extension) build from these.
+  /** Single source for the expression trees — the Column API and
+    * the `GraftExtensions` SQL table both build from these.
     */
   private[functions] val dotBuilder: Seq[Expression] => Expression =
     exprs => DotProduct(exprs(0), exprs(1))
@@ -67,67 +69,42 @@ object VectorFunctions {
     ColumnBridge.column(
       PqEncode(ColumnBridge.expression(u),
         codebooks.toIndexedSeq.map(_.toIndexedSeq.map(_.toIndexedSeq))))
-
-  /** Register `graft_dot` / `graft_cosine` for SQL use in an
-    * existing session.
-    */
-  def registerSql(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", dotBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cosine", cosineBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vec_div", vecDivBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vec_sub", vecSubBuilder, "built-in")
-  }
 }
 
-/** Session-extension entry point: lets any Spark app pick up graft's
-  * native functions via
+/** Session-extension entry point and graft's single registration
+  * path: every `GraftSession` carries it, and any other Spark app picks
+  * it up via
   * `--conf spark.sql.extensions=graft.functions.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      VectorFunctions.dotBuilder))
-    e.injectFunction((
-      FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_cosine"),
-      VectorFunctions.cosineBuilder))
-    e.injectFunction((
-      FunctionIdentifier("graft_minhash"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.graft.MinHashAgg].getName, "graft_minhash"),
-      SketchFunctions.minhashBuilder))
-    e.injectFunction((
-      FunctionIdentifier("graft_normalize"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.graft.UnicodeNormalize].getName,
-        "graft_normalize"),
-      TextFunctions.normalizeBuilder))
-    e.injectFunction((
-      FunctionIdentifier("graft_vec_div"),
-      new ExpressionInfo(classOf[VecDivide].getName, "graft_vec_div"),
-      VectorFunctions.vecDivBuilder))
-    e.injectFunction((
-      FunctionIdentifier("graft_vec_sub"),
-      new ExpressionInfo(classOf[VecSubtract].getName, "graft_vec_sub"),
-      VectorFunctions.vecSubBuilder))
-    e.injectFunction((
-      FunctionIdentifier("graft_gramian"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.graft.GramianAgg].getName, "graft_gramian"),
-      SketchFunctions.gramianBuilder))
-    // graft_pq_encode is Column-API only: its codebooks parameter is
-    // a fitted model object, not a SQL-expressible literal.
-    // Whole-operator extension: sort-free per-key top-k (the
-    // TopKOps.topKPerKey entry also self-registers per session for
-    // sessions built without this extension class).
-    e.injectPlannerStrategy(_ => org.apache.spark.sql.graft.TopKPerKeyStrategy)
+    GraftExtensions.functions.foreach { case (name, impl, build) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(impl.getName, name), build))
+    }
+    // whole-operator extension: sort-free per-key top-k
+    e.injectPlannerStrategy(_ => TopKPerKeyStrategy)
     // conf-gated (graft.topk.rewrite) window-rank → TopKPerKey rewrite
-    e.injectOptimizerRule(_ => org.apache.spark.sql.graft.InferTopKFromWindow)
+    e.injectOptimizerRule(_ => InferTopKFromWindow)
   }
+}
+
+object GraftExtensions {
+
+  /** Every `graft_*` SQL function: name, implementing expression
+    * class, builder. graft_pq_encode is Column-API only: its
+    * codebooks parameter is a fitted model object, not a
+    * SQL-expressible literal.
+    */
+  val functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("graft_dot", classOf[DotProduct], VectorFunctions.dotBuilder),
+    ("graft_cosine", classOf[DotProduct], VectorFunctions.cosineBuilder),
+    ("graft_vec_div", classOf[VecDivide], VectorFunctions.vecDivBuilder),
+    ("graft_vec_sub", classOf[VecSubtract], VectorFunctions.vecSubBuilder),
+    ("graft_normalize", classOf[UnicodeNormalize], TextFunctions.normalizeBuilder),
+    ("graft_minhash", classOf[MinHashAgg], SketchFunctions.minhashBuilder),
+    ("graft_simhash", classOf[SimHashAgg], SketchFunctions.simhashBuilder),
+    ("graft_gramian", classOf[GramianAgg], SketchFunctions.gramianBuilder),
+    ("graft_kmv", classOf[KmvAgg], SketchFunctions.kmvBuilder),
+    ("graft_kmv_merge", classOf[KmvMergeAgg], SketchFunctions.kmvMergeBuilder))
 }

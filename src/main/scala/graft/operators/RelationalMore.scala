@@ -170,8 +170,7 @@ object RelationalMore {
       |  FROM orders)
       |SELECT o_custkey, o_orderkey, o_totalprice FROM r WHERE rk <= 2
       |ORDER BY o_custkey, o_orderkey""".stripMargin) { (s, d) =>
-    import org.apache.spark.sql.graft.{InferTopKFromWindow, TopKOps}
-    TopKOps.register(s)
+    import org.apache.spark.sql.graft.InferTopKFromWindow
     val w = Window.partitionBy(col("o_custkey"))
       .orderBy(col("o_totalprice").desc, col("o_orderkey"))
     val prev = s.conf.getOption(InferTopKFromWindow.Flag)

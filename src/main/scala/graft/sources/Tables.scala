@@ -33,7 +33,7 @@ object Tables {
     *                      to the µs Spark can represent).
     *   - TimestampNTZType → file was TIMESTAMP(MICROS/MILLIS,
     *                      isAdjustedToUTC=false); the session is UTC
-    *                      (GraftSession/Verify/Bench all pin it), so
+    *                      (every GraftSession pins it), so
     *                      the cast to TimestampType is value-identity
     *                      and matches DuckDB's naive read.
     *   - TimestampType  → pass through.

@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.GraftSession
 
 /** Synthesize a larger corpus from /root/testdata/sf0.1 by key-offset
   * replication (dup-with-jitter), so the flagship plans get a second
@@ -25,13 +26,7 @@ object MakeScale {
     val outDir = if (args.length > 0) args(0) else "/tmp/sf1"
     val copies = if (args.length > 1) args(1).toInt else 10
     val src = "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create("graft-make-scale")
     val K = 100000000L // above every base key in the sf0.1 corpus
 
     def rep(t: String)(f: (DataFrame, Long) => DataFrame): Unit = {

@@ -156,32 +156,14 @@ object InferTopKFromWindow
 /** DataFrame-level entry for the native top-k operator. */
 object TopKOps {
 
-  /** Idempotently register the planner strategy (and, for the
-    * window-rewrite path, the optimizer rule) on a session.
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    register(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession])
-
-  def register(spark: org.apache.spark.sql.classic.SparkSession): Unit = {
-    if (!spark.experimental.extraStrategies.contains(TopKPerKeyStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKPerKeyStrategy
-    }
-    if (!spark.experimental.extraOptimizations.contains(InferTopKFromWindow)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ InferTopKFromWindow
-    }
-  }
-
   /** Exact top-k rows per key group under `order` (express DESC and
     * tie-breaks in the Columns, e.g. `col("v").desc, col("id").asc`).
-    * Registers the planner strategy on the session idempotently;
-    * `GraftExtensions` also injects it for conf-configured sessions.
+    * The session must carry `GraftExtensions`, which plans the node
+    * (every `GraftSession` does).
     */
   def topKPerKey(df: DataFrame, keys: Seq[Column], order: Seq[Column], k: Int): DataFrame = {
     val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
     val spark = ds.sparkSession
-    register(spark)
     // eager ColumnNode→catalyst conversion (the lazy bridge node is
     // neither analyzable inside a custom plan nor serializable)
     val sortOrder = order.map(c => spark.expression(c) match {

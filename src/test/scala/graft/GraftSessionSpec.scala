@@ -1,29 +1,63 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 class GraftSessionSpec extends AnyFunSuite {
+  import TestSpark._
 
-  test("builder carries extensions and AQE confs") {
-    // inspect the builder's config without starting a second context:
-    // apply it to the shared session's conf-reading path instead
-    val spark = TestSpark.spark
-    graft.functions.VectorFunctions.registerSql(spark)
-    val r = spark.sql("SELECT graft_cosine(array(3D,4D), array(3D,4D)) AS c")
-      .collect()(0).getDouble(0)
-    assert(math.abs(r - 1.0) < 1e-12)
-    val v = spark.sql(
-      "SELECT graft_vec_div(array(2D,4D), 2D) AS d, " +
-        "graft_vec_sub(array(3D,4D), array(1D,1D)) AS s").collect()(0)
-    assert(v.getSeq[Double](0) == Seq(1.0, 2.0))
-    assert(v.getSeq[Double](1) == Seq(2.0, 3.0))
+  test("shared session carries GraftExtensions and UTC") {
+    assert(spark.conf.get("spark.sql.extensions") ==
+      classOf[graft.functions.GraftExtensions].getName)
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(spark.sparkContext.master == "local[4]")
   }
 
-  test("GraftExtensions registers both native functions in a fresh session") {
-    val ext = new graft.functions.GraftExtensions
-    // the extension object is pure wiring; invoking it against a
-    // SparkSessionExtensions instance must register without error
-    val e = new org.apache.spark.sql.SparkSessionExtensions
-    ext(e)
+  test("every graft_* SQL function resolves in the factory session") {
+    val names = graft.functions.GraftExtensions.functions.map(_._1)
+    assert(names.sorted == Seq("graft_cosine", "graft_dot", "graft_gramian",
+      "graft_kmv", "graft_kmv_merge", "graft_minhash", "graft_normalize",
+      "graft_simhash", "graft_vec_div", "graft_vec_sub"))
+    val r = spark.sql(
+      """SELECT graft_dot(array(1D,2D), array(3D,4D)) AS dot,
+        |  graft_cosine(array(3D,4D), array(3D,4D)) AS cos,
+        |  graft_vec_div(array(2D,4D), 2D) AS div,
+        |  graft_vec_sub(array(3D,4D), array(1D,1D)) AS sub,
+        |  graft_normalize('café') AS nfc""".stripMargin).collect()(0)
+    assert(r.getDouble(0) == 11.0)
+    assert(math.abs(r.getDouble(1) - 1.0) < 1e-12)
+    assert(r.getSeq[Double](2) == Seq(1.0, 2.0))
+    assert(r.getSeq[Double](3) == Seq(2.0, 3.0))
+    assert(r.getString(4) == "café")
+    val a = spark.sql(
+      """SELECT graft_minhash(h, 4) AS mh, graft_simhash(h) AS sim,
+        |  graft_gramian(array(CAST(h AS DOUBLE), 1D), 2) AS gram,
+        |  graft_kmv(h, 8) AS kmv
+        |FROM VALUES (1L), (2L), (99L) AS t(h)""".stripMargin).collect()(0)
+    assert(a.getSeq[Long](0).length == 4)
+    assert(!a.isNullAt(1))
+    // [n, Σv (2), upper-tri Σvvᵀ (3)]
+    assert(a.getSeq[Double](2) == Seq(3.0, 102.0, 3.0, 9806.0, 102.0, 3.0))
+    assert(a.getSeq[Long](3).length == 3)
+    val merged = spark.sql(
+      """SELECT graft_kmv_merge(sk, 8) FROM (
+        |  SELECT graft_kmv(h, 8) AS sk FROM VALUES (1L), (2L), (99L) AS t(h)
+        |  GROUP BY h % 2)""".stripMargin).collect()(0).getSeq[Long](0)
+    assert(merged == a.getSeq[Long](3))
+  }
+
+  test("only GraftSession builds a SparkSession") {
+    val needle = Seq("SparkSession", "builder()").mkString(".")
+    val roots = Seq("src/main/scala", "src/test/scala").map(Paths.get(_))
+    roots.foreach(r => assert(Files.isDirectory(r), s"$r not found"))
+    val hits = roots.flatMap { r =>
+      val files = Files.walk(r)
+      try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally files.close()
+    }.filter(p => Files.readString(p).contains(needle))
+      .map(_.getFileName.toString)
+    assert(hits == Seq("GraftSession.scala"))
   }
 }

@@ -228,8 +228,7 @@ class DedupSpec extends AnyFunSuite {
       .select(graft.functions.TextFunctions.unicode_normalize(col("text"), "NFKC").as("t"))
       .collect().map(_.getString(0)).distinct
     assert(nfkc.length == 1)
-    // SQL registration
-    graft.functions.TextFunctions.registerSql(spark)
+    // SQL (GraftExtensions)
     val viaSql = spark.sql(
       s"SELECT graft_normalize('café', 'NFC') = 'café'")
       .collect()(0).getBoolean(0)

@@ -170,9 +170,8 @@ class RelationalMoreSpec extends AnyFunSuite {
   }
 
   test("optimizer rule substitutes the native operator for the window spelling") {
-    import org.apache.spark.sql.graft.{InferTopKFromWindow, TopKOps}
+    import org.apache.spark.sql.graft.InferTopKFromWindow
     import org.apache.spark.sql.expressions.Window
-    TopKOps.register(spark)
     val w = Window.partitionBy(col("o_custkey"))
       .orderBy(col("o_totalprice").desc, col("o_orderkey"))
     def build() = Tables.orders(spark, sf)

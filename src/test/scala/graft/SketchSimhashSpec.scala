@@ -29,7 +29,6 @@ class SketchSimhashSpec extends AnyFunSuite {
   }
 
   test("graft_simhash is callable from SQL") {
-    graft.functions.SketchFunctions.registerSql(spark)
     Tables.documents(spark, sf).createOrReplaceTempView("docs_simhash_sql")
     val n = spark.sql(
       """SELECT doc_id, graft_simhash(xxhash64(tok)) AS sig

@@ -17,7 +17,6 @@ class VectorExprSpec extends AnyFunSuite {
   }
 
   test("sql registration: graft_dot and graft_cosine") {
-    VectorFunctions.registerSql(spark)
     val r = spark.sql(
       "SELECT graft_dot(array(1D,2D), array(3D,4D)) AS d, " +
         "graft_cosine(array(1D,0D), array(1D,0D)) AS c").collect()(0)
@@ -56,7 +55,6 @@ class VectorExprSpec extends AnyFunSuite {
   }
 
   test("sql registration: graft_minhash") {
-    graft.functions.SketchFunctions.registerSql(spark)
     val r = spark.sql(
       "SELECT graft_minhash(sh, 4) AS sig FROM VALUES (1L), (2L), (99L) AS t(sh)")
       .collect()(0).getSeq[Long](0)
