@@ -1,6 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerStageCompleted}
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicLong
 
@@ -9,7 +9,8 @@ object Bench {
   /** Accumulates coarse per-stage IO metrics so each query's shuffle
     * and scan volume lands in the bench JSON — the quantitative side
     * of the PLANS.md audit (a "broadcast join" claim should show ~zero
-    * shuffle bytes; a map-side operator ~zero beyond its scan).
+    * shuffle bytes; a map-side operator ~zero beyond its scan) — and
+    * the size-adaptive regime picks (`Regime`) each query made.
     */
   private final class IoListener extends SparkListener {
     val shuffle = new AtomicLong
@@ -24,6 +25,15 @@ object Bench {
       }
     }
     def snapshot: (Long, Long, Long) = (shuffle.get, input.get, spill.get)
+    private val picks = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case p: org.apache.spark.sql.graft.RegimePick => picks.add(
+        s"""{"site":"${p.site}","regime":"${p.regime}","bytes":${p.estimatedBytes},"budget":${p.budgetBytes}}""")
+      case _ => ()
+    }
+    /** JSON list of the picks recorded since the last call. */
+    def drainPicks(): String =
+      Iterator.continually(picks.poll()).takeWhile(_ != null).mkString("[", ",", "]")
   }
 
   /** One timed run with the host telemetry that makes cross-run floor
@@ -34,10 +44,10 @@ object Bench {
     * field 8, USER_HZ=100 — on a Firecracker-style VM steal is the
     * direct signature of invisible host contention). `ok=false`
     * marks a run that threw; its elapsed is the failure time, not a
-    * measurement.
+    * measurement. `regimes` is the JSON list of the run's Regime picks.
     */
   final case class Sample(sec: Double, ok: Boolean, at: Long,
-      load1: Double, stealS: Double)
+      load1: Double, stealS: Double, regimes: String)
 
   private def load1(): Double =
     try Files.readString(Paths.get("/proc/loadavg")).split(" ")(0).toDouble
@@ -161,6 +171,7 @@ object Bench {
       val at = System.currentTimeMillis() / 1000
       val ld = load1()
       val st0 = stealJiffies()
+      io.drainPicks()
       val t0 = System.nanoTime()
       // a throwing run keeps its elapsed (the failure time) but is
       // marked !ok so it can never win a min against a clean sample
@@ -171,7 +182,7 @@ object Bench {
       val sec = (System.nanoTime() - t0) / 1e9
       val stealS = (stealJiffies() - st0) / 100.0
       clearStorage()
-      Sample(sec, ok, at, ld, stealS)
+      Sample(sec, ok, at, ld, stealS, io.drainPicks())
     }
     val firstPass = selected.map { case (name, fn) =>
       val io0 = io.snapshot
@@ -246,6 +257,9 @@ object Bench {
     val ios = results.map { case (k, _, sh, in, sp) =>
       s""""$k":{"shuffle_mb":$sh,"input_mb":$in,"spill_mb":$sp}"""
     }.mkString("{", ",", "}")
+    // every Regime pick of each entry's first sample, in order
+    val regimesJson = firstPass.map { case (k, s1, _, _, _) => s""""$k":${s1.regimes}""" }
+      .mkString("{", ",", "}")
     val total = math.round(results.map(_._2).sum * 1000) / 1000.0
     // The driver scrapes only the LAST 2000 chars of stdout (see
     // BENCH_r01/r02: "tail": 2000, "parsed": null — the full map is
@@ -299,7 +313,7 @@ object Bench {
     val stdoutJson =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$headline,"isolated_s":$isolatedJson,"sf":"$sfDir"}"""
     val fileJson =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"io":$ios,"build_s":$buildJson,"isolated_s":$isolatedJson,"samples":$samplesJson,"env":$envJson,"isolated_env":$isolatedEnvJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"io":$ios,"regimes":$regimesJson,"build_s":$buildJson,"isolated_s":$isolatedJson,"samples":$samplesJson,"env":$envJson,"isolated_env":$isolatedEnvJson,"sf":"$sfDir"}"""
     Files.writeString(Paths.get(outFile), fileJson + "\n")
     println(stdoutJson)
     spark.stop()

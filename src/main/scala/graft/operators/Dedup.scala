@@ -135,50 +135,45 @@ object Dedup {
     // values: collect_set = the distinct shingle set, |A∩B| and the
     // set sizes are the same longs, the jaccard algebra is the same
     // expression, and inter ≥ 1 reproduces the inner join's implicit
-    // no-overlap drop. Decision stat is the plan-time size of the
-    // UNRESTRICTED shingle relation (candidate-restricted arrays are
-    // never bigger), ×4 for parquet→rows inflation; above budget the
-    // join-expansion shape remains the scale fallback (candidates at
-    // 100 TB are a corpus-sized relation only under pathological
-    // duplication, but the fallback must exist).
-    val budget = math.min(Runtime.getRuntime.maxMemory / 16L, 512L << 20)
-    val shBytes = sh.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (shBytes * 4 <= BigInt(budget)) {
-      val arrays = sh.join(broadcast(candIds), Seq("doc_id"), "left_semi")
-        .groupBy(col("doc_id")).agg(collect_set(col("sh")).as("shs"))
-      p.join(broadcast(arrays.select(col("doc_id").as("id1"), col("shs").as("shs1"))), "id1")
-        .join(broadcast(arrays.select(col("doc_id").as("id2"), col("shs").as("shs2"))), "id2")
-        .select(col("id1"), col("id2"),
-          size(array_intersect(col("shs1"), col("shs2"))).cast("long").as("inter"),
-          size(col("shs1")).cast("long").as("n1"),
-          size(col("shs2")).cast("long").as("n2"))
-        .filter(col("inter") >= 1L)
-        .withColumn("jaccard",
-          col("inter").cast("double") / (col("n1") + col("n2") - col("inter")))
-        .filter(col("jaccard") >= threshold)
-        .select(col("id1"), col("id2"), round(col("jaccard"), 4).as("jaccard"))
-        .orderBy(col("id1"), col("id2"))
-    } else {
-      // scale fallback: the r10 join-expansion shape, unchanged
-      // distinct AFTER the candidate restriction: exact Jaccard needs
-      // set semantics, but deduping only candidate shingles keeps the
-      // shuffle candidate-sized (the input `sh` is intentionally raw)
-      val shCand = sh.join(broadcast(candIds), Seq("doc_id"), "left_semi").distinct()
-      val counts = shCand.groupBy("doc_id").agg(count(lit(1)).as("n"))
-      val inter = p
-        .join(shCand.toDF("id1", "sh"), "id1")
-        .join(shCand.toDF("id2b", "sh2"),
-          col("id2") === col("id2b") && col("sh") === col("sh2"))
-        .groupBy("id1", "id2").agg(count(lit(1)).as("inter"))
-      inter
-        .join(broadcast(counts.toDF("id1", "n1")), "id1")
-        .join(broadcast(counts.toDF("id2", "n2")), "id2")
-        .withColumn("jaccard",
-          col("inter").cast("double") / (col("n1") + col("n2") - col("inter")))
-        .filter(col("jaccard") >= threshold)
-        .select(col("id1"), col("id2"), round(col("jaccard"), 4).as("jaccard"))
-        .orderBy(col("id1"), col("id2"))
-    }
+    // no-overlap drop. Above the Regime budget the join-expansion
+    // shape remains the scale fallback (candidates at 100 TB are a
+    // corpus-sized relation only under pathological duplication, but
+    // the fallback must exist).
+    // estimate: plan bytes of the UNRESTRICTED shingle relation
+    // (candidate-restricted arrays are never bigger) ×4 for
+    // parquet→rows inflation
+    val counted =
+      if (Regime.fits(sh.sparkSession, "dedup.jaccard_verify",
+          Regime.planBytes(sh) * 4, ("intersect", "join_expand"))) {
+        val arrays = sh.join(broadcast(candIds), Seq("doc_id"), "left_semi")
+          .groupBy(col("doc_id")).agg(collect_set(col("sh")).as("shs"))
+        p.join(broadcast(arrays.select(col("doc_id").as("id1"), col("shs").as("shs1"))), "id1")
+          .join(broadcast(arrays.select(col("doc_id").as("id2"), col("shs").as("shs2"))), "id2")
+          .select(col("id1"), col("id2"),
+            size(array_intersect(col("shs1"), col("shs2"))).cast("long").as("inter"),
+            size(col("shs1")).cast("long").as("n1"),
+            size(col("shs2")).cast("long").as("n2"))
+          .filter(col("inter") >= 1L)
+      } else {
+        // scale fallback: the r10 join-expansion shape, unchanged
+        // distinct AFTER the candidate restriction: exact Jaccard needs
+        // set semantics, but deduping only candidate shingles keeps the
+        // shuffle candidate-sized (the input `sh` is intentionally raw)
+        val shCand = sh.join(broadcast(candIds), Seq("doc_id"), "left_semi").distinct()
+        val counts = shCand.groupBy("doc_id").agg(count(lit(1)).as("n"))
+        p.join(shCand.toDF("id1", "sh"), "id1")
+          .join(shCand.toDF("id2b", "sh2"),
+            col("id2") === col("id2b") && col("sh") === col("sh2"))
+          .groupBy("id1", "id2").agg(count(lit(1)).as("inter"))
+          .join(broadcast(counts.toDF("id1", "n1")), "id1")
+          .join(broadcast(counts.toDF("id2", "n2")), "id2")
+      }
+    counted
+      .withColumn("jaccard",
+        col("inter").cast("double") / (col("n1") + col("n2") - col("inter")))
+      .filter(col("jaccard") >= threshold)
+      .select(col("id1"), col("id2"), round(col("jaccard"), 4).as("jaccard"))
+      .orderBy(col("id1"), col("id2"))
   }
 
   /** Exact pairwise n-gram Jaccard ≥ threshold on a bounded id range:
@@ -442,21 +437,21 @@ object Dedup {
     * doesn't grow with iterations; the label table is O(nodes in the
     * pair graph), far smaller than the corpus.
     *
-    * SIZE-ADAPTIVE: at or below `localMaxEdges` the graph collects and
-    * a driver union-find answers in one pass — the candidate graph is
-    * small relative to the corpus by LSH construction, and each
-    * distributed round costs two joins + a checkpoint + a convergence
-    * collect, a fixed overhead a tiny graph never amortizes. The
-    * distributed loop is the ≥millions-of-edges path (and stays
-    * test-pinned via localMaxEdges = 0).
+    * SIZE-ADAPTIVE (Regime): while the collected graph fits the
+    * budget, a driver union-find answers in one pass — the candidate
+    * graph is small relative to the corpus by LSH construction, and
+    * each distributed round costs two joins + a checkpoint + a
+    * convergence collect, a fixed overhead a tiny graph never
+    * amortizes. The distributed loop is the scale path, with the same
+    * labels.
     */
-  /** Edge-count threshold below which components resolve driver-side.
-    * The candidate graph is SMALL relative to the corpus by LSH
-    * construction (only colliding near-dups pair up), so most runs fit
-    * comfortably; a million edges is a few MB collected. Above it the
-    * distributed pointer-jumping loop takes over — same labels.
+  /** Driver heap per collected edge on the union-find path, measured
+    * on JDK 17 (compressed oops) by retained heap after GC over 1M
+    * disjoint edges: 101 B for the collected Row, 44 B for its
+    * (Long, Long) copy, 103 B for the union-find map entries of its
+    * two nodes — 248 B, rounded up.
     */
-  val LocalCcMaxEdges = 1000000L
+  private val DriverBytesPerEdge = 256L
 
   /** Driver-side union-find (path compression, min-id roots) — one
     * collect, zero iterative Spark rounds. Returns the same
@@ -482,13 +477,13 @@ object Dedup {
     parent.keys.toSeq.sorted.map(id => (id, find(id))).toDF("id", "label")
   }
 
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 30,
-      localMaxEdges: Long = LocalCcMaxEdges): DataFrame = {
+  def connectedComponents(pairs: DataFrame, maxIter: Int = 30): DataFrame = {
     // the pair plan feeds three edge branches — materialize it once,
     // not once per branch (the caller may hand us an expensive join)
     val p = pairs.select(col("id1"), col("id2")).persist()
-    val nEdges = p.count()
-    if (nEdges <= localMaxEdges) {
+    // estimate: edge count × driver bytes per collected edge
+    if (Regime.fits(p.sparkSession, "dedup.connected_components",
+        p.count() * DriverBytesPerEdge, ("driver_union_find", "distributed"))) {
       try {
         return localComponents(p.sparkSession,
           p.collect().map(r => (r.getLong(0), r.getLong(1))))

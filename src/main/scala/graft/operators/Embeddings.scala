@@ -445,9 +445,10 @@ object Embeddings {
     // list (WindowGroupLimit still sorts the whole partition); the
     // TopKPerKey cut keeps 4-row buffers and never sorts. Same
     // (cos_sim DESC, dst) total order ⇒ identical surviving rows.
-    // size-adaptive broadcast (r11): identical pair set, shuffled
-    // cartesian fallback past capacity — see Similarity.bcIfSmall
-    val pairs = a.crossJoin(graft.operators.Similarity.bcIfSmall(b, e))
+    // Regime estimate: plan bytes of the vector relation (see
+    // emb_knn_graph); cartesian fallback, identical pair set
+    val pairs = a.crossJoin(Regime.broadcastIfFits(
+        "emb_hubness.vectors", Regime.planBytes(e), b, "cartesian"))
       .filter(col("src") =!= col("dst"))
       .select(col("src"), col("dst"),
         round(graft.operators.Similarity.dot(col("va"), col("vb"))

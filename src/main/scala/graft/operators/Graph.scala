@@ -624,9 +624,9 @@ object Graph {
     * even with duplicate weights. Per-round state is O(|V|) labels +
     * O(components) chosen edges, checkpointed so the plan stays
     * flat; the component merge reuses Dedup.connectedComponents
-    * (size-adaptive: driver union-find under 10⁶ edges, distributed
-    * pointer jumping above). Kruskal-recomputed edge-set equality is
-    * test-pinned.
+    * (size-adaptive through Regime: driver union-find while the
+    * collected edges fit the budget, distributed pointer jumping
+    * above). Kruskal-recomputed edge-set equality is test-pinned.
     */
   /** graph_mst's oracle: Borůvka replayed as FIXED rounds (extra
     * rounds no-op once components exhaust — ⌈log₂ 25⌉ bounds the
@@ -2588,21 +2588,11 @@ object Graph {
     // Below the bound the join is map-side and v-clustering survives
     // into the partial agg; above it the shuffled join is the
     // fallback (same result — bit_or is order-free).
-    val nNodes = state.count()
-    // bound in BYTES, not rows (r11, verdict item 6): the r10 500k-row
-    // bound implied 500k × ~264 B ≈ 130 MB re-broadcast per round on
-    // ANY executor size — near the edge on 8 GiB and wrong on smaller.
-    // Row width is known exactly (UnsafeRow: 8 B header + 1 null word
-    // + 33 long fields); the budget scales with the JVM the broadcast
-    // must actually fit in (1/32nd of max heap, capped at 256 MB so a
-    // huge driver doesn't pick a multi-GB broadcast rebuilt 16×). At
-    // 8 GiB this keeps the regime switch where sf3 measured healthy
-    // (~480k nodes ⇒ 136 MB ≤ 256 MB budget) and moves the cliff with
-    // the hardware instead of sitting 96% of the way to it.
-    val stateRowBytes = 8L + 8L + 8L * (AnfK + 1) // header + nulls + node + masks
-    val bcBudget = math.min(Runtime.getRuntime.maxMemory / 32L, 256L << 20)
-    def bcState(st: DataFrame): DataFrame =
-      if (nNodes * stateRowBytes <= bcBudget) broadcast(st) else st
+    // Regime estimate: nodes × the (node, 32 masks) UnsafeRow, ×2
+    // because the broadcast is rebuilt every round while the previous
+    // round's copy is still held
+    val bcState = Regime.fits(s, "graph_anf.state",
+      state.count() * Regime.rowBytes(AnfK + 1) * 2)
     // ball-size estimate: R = mean lowest-ZERO-bit position (exact
     // integer sum ÷ k), est = 2^R/φ. Per-node estimates quantize to
     // exact micro longs BEFORE the node sum so the estimate is
@@ -2622,7 +2612,8 @@ object Graph {
       // the 33-column aggregate. The fused exchange-free alternative
       // generated one method the JIT refused (every round ran
       // interpreted, 2-3× slower) — keep the branches split.
-      val msgs = edges.join(bcState(state), col("u") === col("node"))
+      val msgs = edges.join(if (bcState) broadcast(state) else state,
+          col("u") === col("node"))
         .select(col("v").as("node") +: mcols.map(col): _*)
       state = graft.Ckpt.roll(msgs.union(state)
         .groupBy(col("node"))

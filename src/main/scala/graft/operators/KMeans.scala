@@ -96,15 +96,18 @@ object KMeans {
   /** n chained Lloyd iterations, dropping empty clusters (matches the
     * generated SQL oracle). Returns final centroids keyed by cid.
     * Caller should persist `pts` (each iteration is a full pass).
+    * `stepFn` is the update: `step`, or `weightedStep` for weighted
+    * Lloyd.
     */
-  def iterate(pts: DataFrame, init: Array[(Double, Double)], iters: Int): Map[Int, (Double, Double)] = {
+  def iterate(pts: DataFrame, init: Array[(Double, Double)], iters: Int,
+      stepFn: (DataFrame, Array[(Double, Double)]) => DataFrame = step): Map[Int, (Double, Double)] = {
     var centroids: Map[Int, (Double, Double)] = init.zipWithIndex.map { case (c, i) => i -> c }.toMap
     var i = 0
     while (i < iters) {
       val ordered = centroids.toSeq.sortBy(_._1)
       val cs = ordered.map(_._2).toArray
       val ids = ordered.map(_._1).toArray
-      val updated = step(pts, cs).select("cid", "x", "y").collect()
+      val updated = stepFn(pts, cs).select("cid", "x", "y").collect()
         .map(r => ids(r.getInt(0)) -> (r.getDouble(1), r.getDouble(2))).toMap
       centroids = updated
       i += 1
@@ -117,12 +120,19 @@ object KMeans {
     * empty clusters keep their previous centroid.
     */
   def lloyd(pts: DataFrame, init: Array[(Double, Double)],
-      tol: Double = 1e-3, maxIter: Int = 20): (Array[(Double, Double)], Int, Boolean) = {
+      tol: Double = 1e-3, maxIter: Int = 20): (Array[(Double, Double)], Int, Boolean) =
+    lloydLoop(_ => pts, init, tol, maxIter)
+
+  /** The Lloyd loop over a per-iteration input: `batch(iter)` is the
+    * relation iteration `iter` averages (all points, or a mini-batch).
+    */
+  private def lloydLoop(batch: Int => DataFrame, init: Array[(Double, Double)],
+      tol: Double, maxIter: Int): (Array[(Double, Double)], Int, Boolean) = {
     var centroids = init.clone()
     var iter = 0
     var converged = false
     while (iter < maxIter && !converged) {
-      val updated = step(pts, centroids).select("cid", "x", "y").collect()
+      val updated = step(batch(iter), centroids).select("cid", "x", "y").collect()
         .map(r => r.getInt(0) -> (r.getDouble(1), r.getDouble(2))).toMap
       val next = centroids.zipWithIndex.map { case (old, i) => updated.getOrElse(i, old) }
       converged = centroids.zip(next).forall { case ((ox, oy), (nx, ny)) =>
@@ -177,31 +187,9 @@ object KMeans {
         lit(1L << i)).otherwise(lit(0L))
     }.reduce(_ + _)
     val hashed = halves.select(col("x"), col("y"), mask.as("bmask")).persist()
-    def inBatch(iter: Int): Column =
-      col("bmask").bitwiseAND(lit(1L << iter)) =!= 0L
-    try {
-      minibatchLoop(hashed, init, tol, maxIter, inBatch)
-    } finally hashed.unpersist(true)
-  }
-
-  private def minibatchLoop(pts: DataFrame, init: Array[(Double, Double)],
-      tol: Double, maxIter: Int,
-      inBatch: Int => Column): (Array[(Double, Double)], Int, Boolean) = {
-    var centroids = init.clone()
-    var iter = 0
-    var converged = false
-    while (iter < maxIter && !converged) {
-      val batch = pts.filter(inBatch(iter))
-      val updated = step(batch, centroids).select("cid", "x", "y").collect()
-        .map(r => r.getInt(0) -> (r.getDouble(1), r.getDouble(2))).toMap
-      val next = centroids.zipWithIndex.map { case (old, i) => updated.getOrElse(i, old) }
-      converged = centroids.zip(next).forall { case ((ox, oy), (nx, ny)) =>
-        math.abs(ox - nx) < tol && math.abs(oy - ny) < tol
-      }
-      centroids = next
-      iter += 1
-    }
-    (centroids, iter, converged)
+    try lloydLoop(iter => hashed.filter(col("bmask").bitwiseAND(lit(1L << iter)) =!= 0L),
+      init, tol, maxIter)
+    finally hashed.unpersist(true)
   }
 
   // ---- DuckDB oracle generation --------------------------------------
@@ -958,21 +946,6 @@ object KMeans {
         (sum(col("w") * col("y")) / sum(col("w"))).as("y"),
         count(lit(1)).as("n"))
 
-  def weightedIterate(pts: DataFrame, init: Array[(Double, Double)], iters: Int): Map[Int, (Double, Double)] = {
-    var centroids: Map[Int, (Double, Double)] =
-      init.zipWithIndex.map { case (c, i) => i -> c }.toMap
-    var i = 0
-    while (i < iters) {
-      val ordered = centroids.toSeq.sortBy(_._1)
-      val cs = ordered.map(_._2).toArray
-      val ids = ordered.map(_._1).toArray
-      centroids = weightedStep(pts, cs).select("cid", "x", "y").collect()
-        .map(r => ids(r.getInt(0)) -> (r.getDouble(1), r.getDouble(2))).toMap
-      i += 1
-    }
-    centroids
-  }
-
   private def weightedLloydCtes(k: Int, iters: Int): String = {
     val sb = new StringBuilder
     sb.append(
@@ -1004,7 +977,7 @@ object KMeans {
     val all = points(Tables.lineitem(s, d))
     val init = initCentroids(all)
     val pts = all.select(col("x"), col("y"), col("x").as("w")).persist()
-    val fin = try weightedIterate(pts, init, 3) finally pts.unpersist(false)
+    val fin = try iterate(pts, init, 3, weightedStep) finally pts.unpersist(false)
     import s.implicits._
     fin.toSeq.sortBy(_._1)
       .map { case (cid, (x, y)) => (cid.toLong, x, y) }
@@ -1110,10 +1083,11 @@ object KMeans {
     * work is Σ|cell|·|neighborhood|, never n²), the exact eps test
     * filters candidates, core points are a neighbor-count aggregate,
     * and the cluster partition is connected components over the
-    * core-core eps graph (Dedup.connectedComponents: size-adaptive —
-    * driver union-find when tiny, pointer-jumping label rounds when
-    * not). Border points attach to their minimum-label core
-    * neighbor; everything else is noise. Coordinates are min-max
+    * core-core eps graph (Dedup.connectedComponents: size-adaptive
+    * through Regime — driver union-find while the edges fit the
+    * budget, pointer-jumping label rounds when not). Border points
+    * attach to their minimum-label core neighbor; everything else is
+    * noise. Coordinates are min-max
     * normalized to [0,100]² (one broadcast 1-row aggregate) so eps
     * is scale-free across SFs. Output: per-cluster core/border
     * counts plus one (-1) noise row — cluster ids are component
@@ -1160,13 +1134,13 @@ object KMeans {
         col("nb.jx").as("jx"), col("nb.jy").as("jy"))
     val build = withCell.select(col("pid").as("pid2"), col("nx").as("nx2"),
       col("ny").as("ny2"), col("cx").as("jx"), col("cy").as("jy"))
-    // size-adaptive broadcast of the slim (~40 B/row) build side —
-    // the profile_lof round-10 treatment: below the bound the 9n
-    // exploded probe rows never cross an exchange (the r9 shape
-    // shuffled 34 MB at sf0.1 through this join); above it the
-    // shuffled join is the fallback. Identical neighbor set either
-    // way; nPts is already a driver-side plan-time stat.
-    val buildSide = if (nPts <= 2000000L) broadcast(build) else build
+    // size-adaptive broadcast of the slim build side (Regime): while
+    // it fits, the 9n exploded probe rows never cross an exchange
+    // (the r9 shape shuffled 34 MB at sf0.1 through this join); above
+    // it the shuffled join is the fallback, same neighbor set.
+    // Estimate: nPts (already counted) × the 5-field build row.
+    val buildSide = Regime.broadcastIfFits("cluster_dbscan.build",
+      nPts * Regime.rowBytes(5), build)
     // the eps-neighbor relation feeds three branches (core counts,
     // core-core edges, border attachment) — materialize it once
     val nbrs = probe.join(buildSide, Seq("jx", "jy"))

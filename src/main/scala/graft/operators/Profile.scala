@@ -968,31 +968,21 @@ object Profile {
     // duplication is actually present (>1.25× ids per coordinate;
     // approx_count_distinct's ~2% error is far from the decision
     // boundary on any corpus where the choice matters).
-    // second plan-time pick off the SAME one-row aggregate: the cells
-    // build side is ~48 B/row, so under ~2M ids it fits a broadcast
-    // comfortably (sf0.1: 600k rows ≈ 30 MB) and the candidate join
-    // runs map-side; above the bound the shuffle join is the fallback
-    // (same result, both regimes plan-locked in Round9LofSpec).
-    // r11: BOTH pooled picks are byte-sized against the heap (the anf
-    // treatment), not row-counted. The r10 2e6-row lookup bound was
-    // ~32 MB of data dressed as a memory guard — at sf1/sf3 the
-    // 600k-coordinate corpus has 3.6M lookup rows (115 MB, constant
-    // in SF because replication never adds coordinates), so the pick
-    // fell back to the shuffled joins and re-exchanged the exploded
-    // O(coords·k²) relation: 2.1-2.6 GB shuffle + ~0.5 GB spill, the
-    // r10 scale table's red row. Byte math: kd/lrdB rows are 32 B
-    // UnsafeRows (header+nulls+long+double), the coords cell build
-    // side ~120 B/row (u, v, ids6[6], cx, cy); budget 1/16th of heap
-    // capped at 512 MB — the broadcasts are built once per query (not
-    // per round), and ~115 MB data is well inside guide §3.1's "few
-    // hundred MB is fine". Above budget the shuffled fallbacks keep
-    // the exact same results (Round9LofSpec pins all regimes).
-    val bcBudget = math.min(Runtime.getRuntime.maxMemory / 16L, 512L << 20)
+    // second plan-time pick off the SAME one-row aggregate: whether
+    // the cell-join build side (and, pooled, the kd/lrdB lookups)
+    // fits a broadcast — see Regime; both regimes plan-locked in
+    // Round9LofSpec. Estimates: per-id cells n × the (id, u, v, cx,
+    // cy) row; pooled lookups nCoords·(k+1) × 32 B (long+double
+    // UnsafeRows); pooled cells nCoords × ~120 B (u, v, ids6[6], cx,
+    // cy). nCoords is constant in SF (replication never adds
+    // coordinates), which is why these are bytes, not rows.
     val nCoords = st.getLong(5)
-    if (dupRatio <= 1.25) lofPerId(pts, h, k, broadcastCells = n <= 2e6)
+    if (dupRatio <= 1.25) lofPerId(pts, h, k, broadcastCells =
+      Regime.fits(s, "profile_lof.per_id.cells", n.toLong * Regime.rowBytes(5)))
     else lofPooled(pts, h, k,
-      broadcastLookups = nCoords * (k + 1) * 32L <= bcBudget,
-      broadcastCells = nCoords * 120L <= bcBudget)
+      broadcastLookups = Regime.fits(s, "profile_lof.pooled.lookups",
+        nCoords * (k + 1) * Regime.rowBytes(2)),
+      broadcastCells = Regime.fits(s, "profile_lof.pooled.cells", nCoords * 120L))
   }
 
   /** Per-id LOF path for ~distinct coordinates: candidate pairs from
@@ -1028,7 +1018,7 @@ object Profile {
     // exchange carried 513 MB at sf0.1 — ~50× the suite median — and
     // made this entry the suite's noise amplifier); the first
     // corpus-wide exchange becomes TopKPerKey's O(k·n) survivor
-    // shuffle. Above the caller's row bound the shuffled join is the
+    // shuffle. Above the Regime budget the shuffled join is the
     // fallback, pruned first by the occupied-cell semi join:
     // quantized axes leave most of the 9-ring EMPTY (neighboring
     // value-columns sit many cells away), so the prune drops most

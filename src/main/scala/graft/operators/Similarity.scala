@@ -30,32 +30,6 @@ object Similarity {
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
 
-  /** Size-adaptive broadcast for the exact-kNN all-pairs build side
-    * (emb_hubness / emb_knn_graph / emb_knn_classify). r10 shipped
-    * these with an UNCONDITIONAL broadcast(b) — unlike every other
-    * broadcast that round (anf ≤500k, dbscan ≤2M, lof ≤2M all carry
-    * shuffled fallbacks) — so past broadcast capacity the query dies
-    * with an executor/driver OOM instead of degrading. The pick reads
-    * the relation's plan-time size estimate (parquet file bytes — the
-    * same statistic autoBroadcastJoinThreshold consults; embedding
-    * doubles are ~incompressible so file bytes ≈ row bytes) and only
-    * hints broadcast under 64 MB; above it the plain cross join
-    * plans a partitioned cartesian product — slower, but it completes
-    * and the O(n²) stage keeps the probe side's repartition
-    * parallelism. Identical pair set either way (a cross join's
-    * output does not depend on the join strategy).
-    */
-  private[operators] def bcIfSmall(side: DataFrame, base: DataFrame): DataFrame = {
-    // bound parameterised for cluster tuning (and for tests to force
-    // the fallback regime); 64 MB is the local default — comfortably
-    // inside executor memory yet far above the bench corpora
-    val bound = BigInt(base.sparkSession.conf
-      .getOption("spark.graft.knn.broadcastMaxBytes")
-      .map(_.toLong).getOrElse(64L << 20))
-    val bytes = base.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (bytes <= bound) broadcast(side) else side
-  }
-
   /** Embeddings as (vec_id, v: array<double>). */
   /** NONZERO-NORM INVARIANT: every cosine path here divides by the
     * row's L2 norm; a zero-norm embedding yields NaN, and NaN then
@@ -1009,10 +983,11 @@ object Similarity {
       sqrt(dot(col("v"), col("v"))).as("nb"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("src")).orderBy(col("cos_sim").desc, col("dst"))
-    // size-adaptive (r11): broadcast only while the vector relation
-    // fits; the unconditional hint OOMed past capacity where the
-    // unhinted cross join degrades to a cartesian plan (see bcIfSmall)
-    val pairs = a.crossJoin(bcIfSmall(b, e))
+    // Regime estimate: plan bytes of the vector relation (embedding
+    // doubles are ~incompressible, so file bytes ≈ row bytes); the
+    // fallback cross join plans a cartesian product, same pair set
+    val pairs = a.crossJoin(Regime.broadcastIfFits(
+        "emb_knn_graph.vectors", Regime.planBytes(e), b, "cartesian"))
       .filter(col("src") =!= col("dst"))
       .select(col("src"), col("dst"),
         (floor((dot(col("va"), col("vb")) / (col("na") * col("nb"))) * 10000 + 0.5) / 10000.0)
@@ -1498,8 +1473,10 @@ object Similarity {
       col("v").as("vb"), sqrt(dot(col("v"), col("v"))).as("nb"))
     val wVote = org.apache.spark.sql.expressions.Window
       .partitionBy(col("src")).orderBy(col("n_votes").desc, col("nb_label"))
-    // size-adaptive broadcast (r11) — see bcIfSmall
-    val pairs = a.crossJoin(bcIfSmall(b, e)).filter(col("src") =!= col("dst"))
+    // Regime estimate: plan bytes of the vector relation (see emb_knn_graph)
+    val pairs = a.crossJoin(Regime.broadcastIfFits(
+        "emb_knn_classify.vectors", Regime.planBytes(e), b, "cartesian"))
+      .filter(col("src") =!= col("dst"))
       .select(col("src"), col("truth"), col("nb_label"), col("dst"),
         (floor((dot(col("va"), col("vb")) / (col("na") * col("nb"))) * 10000 + 0.5) / 10000.0)
           .as("cos_sim"))

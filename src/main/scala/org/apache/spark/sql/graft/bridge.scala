@@ -268,3 +268,13 @@ object SessionHygiene {
     catch { case _: java.util.concurrent.TimeoutException => () }
   }
 }
+
+/** One size-adaptive regime decision (`graft.operators.Regime.fits`),
+  * posted to the `private[spark]` listener bus so a SparkListener's
+  * `onOtherEvent` sees which regime a run took and the sizes behind
+  * it. Listeners that don't match on it ignore it.
+  */
+case class RegimePick(site: String, regime: String, estimatedBytes: Long,
+    budgetBytes: Long) extends org.apache.spark.scheduler.SparkListenerEvent {
+  def post(s: org.apache.spark.sql.SparkSession): Unit = s.sparkContext.listenerBus.post(this)
+}

@@ -9,6 +9,14 @@ import org.scalatest.funsuite.AnyFunSuite
 object TestSpark {
   lazy val spark: SparkSession = GraftSession.create("graft-test", cpus = 4)
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Runs `body` with the Regime broadcast budget at `bytes`; `0`
+    * forces every size-adaptive pick onto its fallback.
+    */
+  def withBudget[T](bytes: Long)(body: => T): T = {
+    spark.conf.set(graft.operators.Regime.BudgetConf, bytes)
+    try body finally spark.conf.unset(graft.operators.Regime.BudgetConf)
+  }
 }
 
 class ContractSpec extends AnyFunSuite {

@@ -43,7 +43,7 @@ class DedupSpec extends AnyFunSuite {
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L, 20L -> 20L))
     // distributed pointer jumping agrees with the driver fallback
-    val dist = Dedup.connectedComponents(pairs, localMaxEdges = 0).collect()
+    val dist = withBudget(0)(Dedup.connectedComponents(pairs)).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(dist == got)
     // regression: a live graph whose ids sum to zero (negative ids)

@@ -77,7 +77,7 @@ class PlanAuditSpec extends AnyFunSuite {
     val pairs = Seq((1L, 2L), (2L, 3L)).toDF("id1", "id2")
     // force the distributed path — the default takes the driver
     // fallback on a graph this small
-    val p = graft.operators.Dedup.connectedComponents(pairs, localMaxEdges = 0)
+    val p = withBudget(0)(graft.operators.Dedup.connectedComponents(pairs))
       .queryExecution.executedPlan.toString
     assert(!p.contains("CartesianProduct"))
     assert(!p.contains("BroadcastNestedLoopJoin"))

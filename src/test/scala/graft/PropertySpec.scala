@@ -78,8 +78,8 @@ class PropertySpec extends AnyFunSuite {
       val expected = parent.keys.map(n => n -> find(n)).toMap
       // force the DISTRIBUTED pointer-jumping path (the default would
       // take the small-graph driver fallback and leave it untested)
-      val got = graft.operators.Dedup.connectedComponents(
-          edges.toDF("id1", "id2"), localMaxEdges = 0)
+      val got = withBudget(0)(graft.operators.Dedup.connectedComponents(
+          edges.toDF("id1", "id2")))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       // union-find roots are component minima too (we always keep min)
       assert(got == expected, s"seed=$seed")

@@ -13,8 +13,8 @@ class Round11Spec extends AnyFunSuite {
   import TestSpark._
 
   test("exact-kNN trio: broadcast and cartesian regimes are value-identical") {
-    // the conf knob exists for cluster tuning; here it forces the
-    // above-bound fallback so both plan shapes are exercised on the
+    // the Regime budget conf exists for cluster tuning; here it forces
+    // the above-budget fallback so both plan shapes are exercised on the
     // same corpus. Survivors must be identical — a cross join's
     // output cannot depend on the join strategy, and the TopKPerKey
     // cut under a total order is deterministic.
@@ -27,7 +27,7 @@ class Round11Spec extends AnyFunSuite {
       // over the bound the HINT disappears; the planner/AQE may still
       // pick a broadcast on runtime sizes (that's the graceful part),
       // so disable auto-broadcast too to pin the true cartesian floor
-      spark.conf.set("spark.graft.knn.broadcastMaxBytes", "0")
+      spark.conf.set(graft.operators.Regime.BudgetConf, "0")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       try {
         val dfCart = SparkEntry.queries(name)(spark, sf)
@@ -39,7 +39,7 @@ class Round11Spec extends AnyFunSuite {
         assert(bc == cart,
           s"$name regimes diverge:\n${bc.take(5)}\nvs\n${cart.take(5)}")
       } finally {
-        spark.conf.unset("spark.graft.knn.broadcastMaxBytes")
+        spark.conf.unset(graft.operators.Regime.BudgetConf)
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
       }
     }
@@ -72,17 +72,17 @@ class Round11Spec extends AnyFunSuite {
 
   test("jaccardVerify: intersect and join-expansion shapes are value-identical") {
     // the size-adaptive pick must never change survivors: drive the
-    // SAME candidate set through both shapes by toggling the stat the
-    // pick reads (a tiny in-memory sh relation always takes the
-    // intersect path; a huge-stats wrapper can't be faked, so compare
-    // against the legacy algebra re-spelled inline from its r10 form).
+    // SAME candidate set through both shapes — the default budget
+    // takes the intersect path on this tiny relation, budget 0 the
+    // real join-expansion branch — and against the legacy algebra
+    // re-spelled inline from its r10 form as an independent reference.
     import spark.implicits._
     val docs = graft.sources.Tables.documents(spark, sf).limit(120)
     val sh = graft.operators.Dedup.shinglesHashed(docs)
     val cand = graft.operators.Dedup.lshCandidates(
       graft.operators.Dedup.minhashSignatures(sh))
-    val fast = graft.operators.Dedup.jaccardVerify(sh, cand, 0.8)
-      .collect().map(_.toString).toSeq
+    val fastDf = graft.operators.Dedup.jaccardVerify(sh, cand, 0.8)
+    val fast = fastDf.collect().map(_.toString).toSeq
     // legacy r10 join-expansion algebra, spelled out
     val p = cand.select(col("id1"), col("id2")).distinct()
     val candIds = p.select(col("id1").as("doc_id"))
@@ -106,6 +106,15 @@ class Round11Spec extends AnyFunSuite {
     assert(fast == legacy,
       s"shapes diverge:\n${fast.take(10)}\nvs\n${legacy.take(10)}")
     assert(fast.nonEmpty, "vacuous parity: no verified pairs at this SF")
+    val fastPlan = fastDf.queryExecution.executedPlan.toString
+    assert(fastPlan.contains("array_intersect"), fastPlan.take(2000))
+    val expand = withBudget(0)(graft.operators.Dedup.jaccardVerify(sh, cand, 0.8))
+    val expandPlan = expand.queryExecution.executedPlan.toString
+    assert(!expandPlan.contains("array_intersect"),
+      s"budget 0 must take the join-expansion branch:\n${expandPlan.take(2000)}")
+    val expanded = expand.collect().map(_.toString).toSeq
+    assert(fast == expanded,
+      s"branches diverge:\n${fast.take(10)}\nvs\n${expanded.take(10)}")
   }
 
   test("lshCandidates group-then-expand equals the self-join pair set") {

@@ -433,8 +433,8 @@ class Round5cOpsSpec extends AnyFunSuite {
   test("kmeans_weighted: k=1 centroid is the global weighted mean") {
     val pts = KMeans.points(Tables.lineitem(spark, sf))
       .select(col("x"), col("y"), col("x").as("w"))
-    val one = KMeans.weightedIterate(pts,
-      Array((0.0, 0.0)), iters = 1)(0)
+    val one = KMeans.iterate(pts,
+      Array((0.0, 0.0)), iters = 1, KMeans.weightedStep)(0)
     val g = pts.agg(
       (sum(col("w") * col("x")) / sum(col("w"))).as("mx"),
       (sum(col("w") * col("y")) / sum(col("w"))).as("my")).collect()(0)
