@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerStageCompleted}
 import java.nio.file.{Files, Paths}
@@ -44,10 +45,13 @@ object Bench {
     * field 8, USER_HZ=100 — on a Firecracker-style VM steal is the
     * direct signature of invisible host contention). `ok=false`
     * marks a run that threw; its elapsed is the failure time, not a
-    * measurement. `regimes` is the JSON list of the run's Regime picks.
+    * measurement. `regimes` is the JSON list of the run's Regime picks;
+    * `compiles` is the number of janino compiles during the run (Spark's
+    * codegen counter is process-wide; entries run one at a time, so the
+    * count is the entry's).
     */
   final case class Sample(sec: Double, ok: Boolean, at: Long,
-      load1: Double, stealS: Double, regimes: String)
+      load1: Double, stealS: Double, regimes: String, compiles: Long)
 
   private def load1(): Double =
     try Files.readString(Paths.get("/proc/loadavg")).split(" ")(0).toDouble
@@ -172,6 +176,7 @@ object Bench {
       val ld = load1()
       val st0 = stealJiffies()
       io.drainPicks()
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val t0 = System.nanoTime()
       // a throwing run keeps its elapsed (the failure time) but is
       // marked !ok so it can never win a min against a clean sample
@@ -181,8 +186,9 @@ object Bench {
         catch { case e: Throwable => System.err.println(s"[bench] $name: $e"); false }
       val sec = (System.nanoTime() - t0) / 1e9
       val stealS = (stealJiffies() - st0) / 100.0
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
       clearStorage()
-      Sample(sec, ok, at, ld, stealS, io.drainPicks())
+      Sample(sec, ok, at, ld, stealS, io.drainPicks(), compiles)
     }
     val firstPass = selected.map { case (name, fn) =>
       val io0 = io.snapshot
@@ -260,6 +266,9 @@ object Bench {
     // every Regime pick of each entry's first sample, in order
     val regimesJson = firstPass.map { case (k, s1, _, _, _) => s""""$k":${s1.regimes}""" }
       .mkString("{", ",", "}")
+    // codegen compiles of each entry's first sample
+    val compilesJson = firstPass.map { case (k, s1, _, _, _) => s""""$k":${s1.compiles}""" }
+      .mkString("{", ",", "}")
     val total = math.round(results.map(_._2).sum * 1000) / 1000.0
     // The driver scrapes only the LAST 2000 chars of stdout (see
     // BENCH_r01/r02: "tail": 2000, "parsed": null — the full map is
@@ -313,7 +322,7 @@ object Bench {
     val stdoutJson =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$headline,"isolated_s":$isolatedJson,"sf":"$sfDir"}"""
     val fileJson =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"io":$ios,"regimes":$regimesJson,"build_s":$buildJson,"isolated_s":$isolatedJson,"samples":$samplesJson,"env":$envJson,"isolated_env":$isolatedEnvJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"io":$ios,"regimes":$regimesJson,"compiles":$compilesJson,"build_s":$buildJson,"isolated_s":$isolatedJson,"samples":$samplesJson,"env":$envJson,"isolated_env":$isolatedEnvJson,"sf":"$sfDir"}"""
     Files.writeString(Paths.get(outFile), fileJson + "\n")
     println(stdoutJson)
     spark.stop()

