@@ -1,7 +1,7 @@
 package graft
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerStageCompleted}
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicLong
 
@@ -11,12 +11,15 @@ object Bench {
     * and scan volume lands in the bench JSON — the quantitative side
     * of the PLANS.md audit (a "broadcast join" claim should show ~zero
     * shuffle bytes; a map-side operator ~zero beyond its scan) — and
-    * the size-adaptive regime picks (`Regime`) each query made.
+    * the size-adaptive regime picks (`Regime`) each query made, and
+    * the number of Spark jobs it started.
     */
   private final class IoListener extends SparkListener {
     val shuffle = new AtomicLong
     val input = new AtomicLong
     val spill = new AtomicLong
+    val jobs = new AtomicLong
+    override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
     override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
       val m = sc.stageInfo.taskMetrics
       if (m != null) {
@@ -48,10 +51,10 @@ object Bench {
     * measurement. `regimes` is the JSON list of the run's Regime picks;
     * `compiles` is the number of janino compiles during the run (Spark's
     * codegen counter is process-wide; entries run one at a time, so the
-    * count is the entry's).
+    * count is the entry's); `jobs` is the number of Spark jobs it started.
     */
   final case class Sample(sec: Double, ok: Boolean, at: Long,
-      load1: Double, stealS: Double, regimes: String, compiles: Long)
+      load1: Double, stealS: Double, regimes: String, compiles: Long, jobs: Long)
 
   private def load1(): Double =
     try Files.readString(Paths.get("/proc/loadavg")).split(" ")(0).toDouble
@@ -177,6 +180,7 @@ object Bench {
       val st0 = stealJiffies()
       io.drainPicks()
       val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val j0 = io.jobs.get
       val t0 = System.nanoTime()
       // a throwing run keeps its elapsed (the failure time) but is
       // marked !ok so it can never win a min against a clean sample
@@ -187,8 +191,8 @@ object Bench {
       val sec = (System.nanoTime() - t0) / 1e9
       val stealS = (stealJiffies() - st0) / 100.0
       val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
-      clearStorage()
-      Sample(sec, ok, at, ld, stealS, io.drainPicks(), compiles)
+      clearStorage() // drains the listener bus: every job start has arrived
+      Sample(sec, ok, at, ld, stealS, io.drainPicks(), compiles, io.jobs.get - j0)
     }
     val firstPass = selected.map { case (name, fn) =>
       val io0 = io.snapshot
@@ -269,6 +273,9 @@ object Bench {
     // codegen compiles of each entry's first sample
     val compilesJson = firstPass.map { case (k, s1, _, _, _) => s""""$k":${s1.compiles}""" }
       .mkString("{", ",", "}")
+    // Spark jobs of each entry's first sample
+    val jobsJson = firstPass.map { case (k, s1, _, _, _) => s""""$k":${s1.jobs}""" }
+      .mkString("{", ",", "}")
     val total = math.round(results.map(_._2).sum * 1000) / 1000.0
     // The driver scrapes only the LAST 2000 chars of stdout (see
     // BENCH_r01/r02: "tail": 2000, "parsed": null — the full map is
@@ -322,7 +329,7 @@ object Bench {
     val stdoutJson =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$headline,"isolated_s":$isolatedJson,"sf":"$sfDir"}"""
     val fileJson =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"io":$ios,"regimes":$regimesJson,"compiles":$compilesJson,"build_s":$buildJson,"isolated_s":$isolatedJson,"samples":$samplesJson,"env":$envJson,"isolated_env":$isolatedEnvJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"io":$ios,"regimes":$regimesJson,"compiles":$compilesJson,"jobs":$jobsJson,"build_s":$buildJson,"isolated_s":$isolatedJson,"samples":$samplesJson,"env":$envJson,"isolated_env":$isolatedEnvJson,"sf":"$sfDir"}"""
     Files.writeString(Paths.get(outFile), fileJson + "\n")
     println(stdoutJson)
     spark.stop()

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.operators.{Dedup, TextAnalysis}
+import graft.sources.Tables
 
 /** CLI driver for the training-data curation pipeline: read a
   * documents parquet (doc_id, text, ...), score quality and language,
@@ -62,14 +63,17 @@ object CurateApp {
   }
 
   /** The full job against an existing session (what main and tests
-    * both drive). Returns the curated row count.
+    * both drive). Returns the curated row count. The input goes
+    * through `Tables.parquet` (schema inferred once per content); the
+    * count reads the output back with the schema it was written with,
+    * so neither read pays a schema-inference job on a repeated run.
     */
   def run(spark: SparkSession, input: String, output: String,
       qualityMin: Double = 0.75, lang: String = "en"): Long = {
-    val docs = spark.read.parquet(input)
-    nearDedup(curate(docs, qualityMin, lang))
-      .write.mode("overwrite").parquet(output)
-    spark.read.parquet(output).count()
+    val docs = Tables.parquet(spark, input)
+    val curated = nearDedup(curate(docs, qualityMin, lang))
+    curated.write.mode("overwrite").parquet(output)
+    spark.read.schema(curated.schema).parquet(output).count()
   }
 
   def main(args: Array[String]): Unit = {

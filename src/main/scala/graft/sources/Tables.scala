@@ -1,20 +1,73 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
-/** Parquet table catalog for a data directory (TESTDATA.md layout).
+/** Parquet table catalog for a data directory (TESTDATA.md layout),
+  * and the one resolver of graft's immutable parquet sources.
   *
-  * Plain `spark.read.parquet` keeps the scan fully Catalyst-visible:
-  * filters and column pruning from downstream operators reach the
-  * parquet reader (check `PushedFilters`/`ReadSchema` in explain).
+  * Every table is a plain parquet scan, so the scan stays fully
+  * Catalyst-visible: filters and column pruning from downstream
+  * operators reach the parquet reader (check `PushedFilters`/
+  * `ReadSchema` in explain). What `parquet` adds is that a source's
+  * schema is inferred once per content, not once per read.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** Session confs that change the schema the parquet reader infers
+    * from the same footers; part of every `parquet` memo key.
+    */
+  private val SchemaConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive")
+
+  private val MaxSchemas = 256
+
+  /** Inferred schemas by (content fingerprint, schema confs); LRU. */
+  private val schemas = new java.util.LinkedHashMap[String, StructType](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[String, StructType]): Boolean =
+      size() > MaxSchemas
+  }
+
+  /** Reads the parquet file or dir `path`, inferring its schema only
+    * when the key is new. Every `spark.read.parquet` otherwise starts
+    * a footer-reading Spark job to infer the schema, on every read,
+    * even of one unchanged file. The key is the content fingerprint
+    * (`Warehouse.fingerprint`: path, total size, max mtime, the
+    * contract the staged artifacts use) plus the session's
+    * `SchemaConfs`, so a rewritten source or a changed type mapping is
+    * inferred afresh. Each call builds a new relation with fresh
+    * exprIds, so a query may read one source several times (q21 reads
+    * lineitem three times) as from separate reads.
+    *
+    * Only for sources that no one writes while a read of them is
+    * live: index, state and sink dirs, which operators rewrite in
+    * place, keep `spark.read.parquet`. A path that does not exist (or
+    * a glob) also goes straight to `spark.read.parquet`, for Spark's
+    * own resolution and error.
+    */
+  def parquet(s: SparkSession, path: String): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    if (!p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)) return s.read.parquet(path)
+    val key = Warehouse.fingerprint(s, p.getParent.toString, Seq(p.getName)) + "|" + path +
+      SchemaConfs.map(c => s.conf.getOption(c).getOrElse("")).mkString("|", "|", "")
+    val schema = schemas.synchronized(Option(schemas.get(key))).getOrElse {
+      val inferred = s.read.parquet(path).schema
+      schemas.synchronized(schemas.put(key, inferred))
+      inferred
+    }
+    s.read.schema(schema).parquet(path)
+  }
+
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = load(s, d, "nation")

@@ -112,8 +112,9 @@ object Warehouse {
 
   /** Build-once-read-many: parquet at
     * `<warehouse>/graft_<name>_<md5(fingerprint)>`, built iff its
-    * `_SUCCESS` is absent. Synchronized: concurrent first-touch from
-    * the test suite must not double-build.
+    * `_SUCCESS` is absent, and read through `Tables.parquet`, so its
+    * schema is inferred once, not on every read. Synchronized:
+    * concurrent first-touch from the test suite must not double-build.
     */
   def staged(s: SparkSession, d: String, name: String, tables: Seq[String])
       (build: => DataFrame): DataFrame = synchronized {
@@ -127,6 +128,6 @@ object Warehouse {
       writeMeta(s, dir, d, tables, "")
       gcStale(s) // a build miss means a fingerprint moved: sweep now
     }
-    s.read.parquet(dir.toString)
+    Tables.parquet(s, dir.toString)
   }
 }

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.functions.{col, lit}
 import org.scalatest.funsuite.AnyFunSuite
 
 class GraftSessionSpec extends AnyFunSuite {
@@ -46,6 +48,18 @@ class GraftSessionSpec extends AnyFunSuite {
         |  SELECT graft_kmv(h, 8) AS sk FROM VALUES (1L), (2L), (99L) AS t(h)
         |  GROUP BY h % 2)""".stripMargin).collect()(0).getSeq[Long](0)
     assert(merged == a.getSeq[Long](3))
+  }
+
+  test("the codegen cache keeps more generated classes than Spark's default 100") {
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") ==
+      GraftSession.CodegenCacheEntries.toString)
+    val base = spark.range(0, 8, 1, 1).toDF("x")
+    def project(i: Int): Unit = base.select(col("x") + lit(i)).collect()
+    (0 until 150).foreach(project) // 150 distinct classes, and more
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    project(0)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == before,
+      "the first projection's class was evicted and compiled again")
   }
 
   test("only GraftSession builds a SparkSession") {
