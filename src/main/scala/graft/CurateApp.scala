@@ -51,15 +51,12 @@ object CurateApp {
     * (cheap fingerprint shuffle), then MinHash+LSH pairs resolved to
     * components, one survivor each.
     */
-  def nearDedup(docs: DataFrame): DataFrame = {
+  def nearDedup(docs: DataFrame): DataFrame = Ckpt.scoped { sc =>
     val exact = Dedup.dedupedCorpus(docs)
-    val sh = Dedup.shinglesHashed(exact).cache()
-    try {
-      val pairs = Dedup.jaccardVerify(sh,
-        Dedup.lshCandidates(Dedup.minhashSignatures(sh)), 0.8)
-        .select("id1", "id2").localCheckpoint(true)
-      Dedup.nearDedupedCorpus(exact, pairs)
-    } finally sh.unpersist(false)
+    val sh = sc.persist(Dedup.shinglesHashed(exact))
+    val pairs = sc.checkpoint(sc.adopt(Dedup.jaccardVerify(sh,
+      Dedup.lshCandidates(Dedup.minhashSignatures(sh)), 0.8)).select("id1", "id2"))
+    Dedup.nearDedupedCorpus(exact, pairs)
   }
 
   /** The full job against an existing session (what main and tests
@@ -71,9 +68,12 @@ object CurateApp {
   def run(spark: SparkSession, input: String, output: String,
       qualityMin: Double = 0.75, lang: String = "en"): Long = {
     val docs = Tables.parquet(spark, input)
-    val curated = nearDedup(curate(docs, qualityMin, lang))
-    curated.write.mode("overwrite").parquet(output)
-    spark.read.schema(curated.schema).parquet(output).count()
+    Ckpt.scoped { sc =>
+      // the curated plan may read component labels nearDedup kept
+      val curated = sc.adopt(nearDedup(curate(docs, qualityMin, lang)))
+      curated.write.mode("overwrite").parquet(output)
+      spark.read.schema(curated.schema).parquet(output).count()
+    }
   }
 
   def main(args: Array[String]): Unit = {

@@ -40,8 +40,8 @@ object KMeansApp {
     init.zipWithIndex.foreach { case ((x, y), i) =>
       println(s"init centroid $i: $x, $y")
     }
-    val pts = PointsText.read(spark, input).persist()
-    try {
+    Ckpt.scoped { sc =>
+      val pts = sc.persist(PointsText.read(spark, input))
       val result @ (centroids, iters, converged) = KMeans.lloyd(pts, init)
       PointsText.writeCentroids(spark, centroids, output)
       println(s"finished after $iters iterations, converged=$converged")
@@ -49,6 +49,6 @@ object KMeansApp {
         println(s"centroid $i: x=$x y=$y")
       }
       result
-    } finally pts.unpersist(false)
+    }
   }
 }

@@ -415,16 +415,15 @@ object Curation {
   def qualityModelScores(s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.ml.functions.array_to_vector
     import org.apache.spark.ml.classification.LogisticRegression
-    val q = TextAnalysis.qualityInputs(Tables.documents(s, d), keep = Seq("source"))
-      .filter(col("n_chars") > 0 && col("n_tokens") > 0)
-      .select(col("doc_id"), col("source"), qualityCol.as("quality"),
-        substring(md5(col("doc_id").cast("string")), 1, 1).as("hx"),
-        array_to_vector(array(
-          least(lit(1.0), col("n_tokens").cast("double") / 100),
-          col("alpha_chars").cast("double") / col("n_chars"),
-          col("n_stops").cast("double") / col("n_tokens"))).as("features"))
-      .persist()
-    try {
+    graft.Ckpt.scoped { sc =>
+      val q = sc.persist(TextAnalysis.qualityInputs(Tables.documents(s, d), keep = Seq("source"))
+        .filter(col("n_chars") > 0 && col("n_tokens") > 0)
+        .select(col("doc_id"), col("source"), qualityCol.as("quality"),
+          substring(md5(col("doc_id").cast("string")), 1, 1).as("hx"),
+          array_to_vector(array(
+            least(lit(1.0), col("n_tokens").cast("double") / 100),
+            col("alpha_chars").cast("double") / col("n_chars"),
+            col("n_stops").cast("double") / col("n_tokens"))).as("features")))
       q.count() // materialize once; train + score both read the cache
       // weak-label threshold: a median is a THRESHOLD here, not a
       // reported statistic — the GK sketch (bounded memory, mergeable)
@@ -437,11 +436,9 @@ object Curation {
       val model = new LogisticRegression().setMaxIter(50).setRegParam(0.0)
         .setFeaturesCol("features").setLabelCol("label")
         .fit(labeled.filter(col("hx") < "8"))
-      // materialize before unpersist (the returned plan re-reads otherwise)
-      model.transform(labeled)
-        .select(col("doc_id"), col("source"), col("hx"), col("label"), col("prediction"))
-        .localCheckpoint(eager = true)
-    } finally q.unpersist(false)
+      sc.keep(model.transform(labeled)
+        .select(col("doc_id"), col("source"), col("hx"), col("label"), col("prediction")))
+    }
   }
 
   val pipelineQualityModel: QueryDef = QueryDef.rowsOnly("pipeline_quality_model") { (s, d) =>
@@ -1106,8 +1103,8 @@ object Curation {
       .select(col("doc_id"), explode(
         graft.functions.TextFunctions.word_grams(col("toks"), 5)).as("sh"))
       .distinct()
-    val benchGrams = grams.filter(col("doc_id") % 37 === 0)
-      .select(col("sh")).distinct().localCheckpoint(true)
+    val benchGrams = graft.Ckpt.keep(grams.filter(col("doc_id") % 37 === 0)
+      .select(col("sh")).distinct())
     val nBench = math.max(benchGrams.count(), 1L)
     // fpp must price in the ~grams-per-doc union bound: a doc is a
     // false suspect if ANY of its ~300 grams false-positives, so the

@@ -108,8 +108,9 @@ object Dedup {
     // denominator negative and silently rejects every true pair
     // (stream_dedup_indexed returned 0 rows for exactly this reason
     // until a planted cross-batch duplicate exposed it).
-    val p = pairs.select(col("id1"), col("id2")).distinct()
-      .localCheckpoint(eager = true)
+    // The result reads this checkpoint: a caller that consumes the
+    // pairs inside a scope adopts the result so the scope frees it.
+    val p = graft.Ckpt.keep(pairs.select(col("id1"), col("id2")).distinct())
     // Candidate ids are small BY LSH CONSTRUCTION (only colliding
     // buckets pair up); the corpus is not. Everything broadcast below
     // must therefore be restricted to candidate ids FIRST — a
@@ -370,18 +371,17 @@ object Dedup {
     *
     * The hashed-shingle corpus feeds three subtrees (signatures + both
     * sides of the verification join), so it is cached for the run and
-    * — unlike a bare `.cache()` — released afterwards: the verified
-    * pairs (tiny vs. the corpus) are materialized eagerly while the
-    * cache is hot, then the shingle blocks are dropped so a long-lived
-    * session (Bench runs every query in one JVM) isn't left pinning
-    * the corpus in executor memory.
+    * released afterwards: the verified pairs (tiny vs. the corpus) are
+    * kept while the cache is hot, then the shingle blocks are dropped
+    * so a long-lived session (Bench runs every query in one JVM) isn't
+    * left pinning the corpus in executor memory.
     */
   val dedupMinhash: QueryDef = QueryDef.rowsOnly("dedup_minhash") { (s, d) =>
-    val sh = stagedShingles(s, d).cache()
-    try {
+    graft.Ckpt.scoped { sc =>
+      val sh = sc.persist(stagedShingles(s, d))
       val cand = lshCandidates(minhashSignatures(sh))
-      jaccardVerify(sh, cand, 0.8).localCheckpoint(eager = true)
-    } finally sh.unpersist(false)
+      sc.keep(sc.adopt(jaccardVerify(sh, cand, 0.8)))
+    }
   }
 
   /** Sketch-calibration report: the MinHash-ESTIMATED Jaccard
@@ -396,8 +396,8 @@ object Dedup {
     * DuckDB-expressible); estimator error bounds pinned in ScalaTest.
     */
   val dedupMinhashEst: QueryDef = QueryDef.rowsOnly("dedup_minhash_est") { (s, d) =>
-    val sh = stagedShingles(s, d).cache()
-    try {
+    graft.Ckpt.scoped { sc =>
+      val sh = sc.persist(stagedShingles(s, d))
       val sigs = minhashSignatures(sh)
       val cand = lshCandidates(sigs)
       val matches = size(filter(
@@ -409,14 +409,13 @@ object Dedup {
           round(matches / lit(NumPerm.toDouble), 4).as("est_jaccard"))
       // threshold 0 keeps every candidate that shares any shingle;
       // zero-overlap candidates (possible but LSH-rare) exact to 0
-      val exact = jaccardVerify(sh, cand, 0.0)
-      est.join(exact, Seq("id1", "id2"), "left")
+      val exact = sc.adopt(jaccardVerify(sh, cand, 0.0))
+      sc.keep(est.join(exact, Seq("id1", "id2"), "left")
         .select(col("id1"), col("id2"), col("est_jaccard"),
           coalesce(col("jaccard"), lit(0.0)).as("jaccard"))
         .withColumn("abs_err", round(abs(col("est_jaccard") - col("jaccard")), 4))
-        .orderBy(col("id1"), col("id2"))
-        .localCheckpoint(eager = true)
-    } finally sh.unpersist(false)
+        .orderBy(col("id1"), col("id2")))
+    }
   }
 
   // ---- Near-dup group resolution (connected components) --------------
@@ -477,63 +476,55 @@ object Dedup {
     parent.keys.toSeq.sorted.map(id => (id, find(id))).toDF("id", "label")
   }
 
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 30): DataFrame = {
-    // the pair plan feeds three edge branches — materialize it once,
-    // not once per branch (the caller may hand us an expensive join)
-    val p = pairs.select(col("id1"), col("id2")).persist()
-    // estimate: edge count × driver bytes per collected edge
-    if (Regime.fits(p.sparkSession, "dedup.connected_components",
-        p.count() * DriverBytesPerEdge, ("driver_union_find", "distributed"))) {
-      try {
-        return localComponents(p.sparkSession,
-          p.collect().map(r => (r.getLong(0), r.getLong(1))))
-      } finally p.unpersist(false)
+  def connectedComponents(pairs: DataFrame, maxIter: Int = 30): DataFrame =
+    graft.Ckpt.scoped { sc =>
+      // the pair plan feeds three edge branches — materialize it once,
+      // not once per branch (the caller may hand us an expensive join)
+      val p = sc.persist(pairs.select(col("id1"), col("id2")))
+      // estimate: edge count × driver bytes per collected edge
+      if (Regime.fits(p.sparkSession, "dedup.connected_components",
+          p.count() * DriverBytesPerEdge, ("driver_union_find", "distributed")))
+        localComponents(p.sparkSession, p.collect().map(r => (r.getLong(0), r.getLong(1))))
+      else {
+        val nodes = p.select(col("id1").as("src"))
+          .union(p.select(col("id2").as("src"))).distinct()
+        // symmetric closure + self-loops: min over neighbors then includes
+        // the node's own label, so one inner join per round suffices
+        val edges = sc.persist(p.select(col("id1").as("src"), col("id2").as("dst"))
+          .union(p.select(col("id2").as("src"), col("id1").as("dst")))
+          .union(nodes.withColumn("dst", col("src"))))
+        var labels = sc.checkpoint(edges.select(col("src").as("id")).distinct()
+          .withColumn("label", col("id")))
+        def labelSum(df: DataFrame): Long = {
+          val r = df.agg(sum(col("label"))).collect()(0)
+          if (r.isNullAt(0)) 0L else r.getLong(0)
+        }
+        var prev = labelSum(labels)
+        var iter = 0
+        // an explicit emptiness probe — a zero label SUM does not mean
+        // empty (negative ids can sum to zero on a live graph)
+        var done = labels.head(1).isEmpty
+        while (!done && iter < maxIter) {
+          val prop = edges
+            .join(labels.withColumnRenamed("id", "nbr"), col("dst") === col("nbr"))
+            .groupBy(col("src").as("id")).agg(min(col("label")).as("label"))
+          // pointer jumping: label(v) ← label(label(v)). A label is
+          // itself a node id, so one self-join squares the propagation
+          // distance per round — O(log diameter) rounds on chains
+          // instead of O(diameter).
+          labels = sc.roll(prop
+            .join(prop.select(col("id").as("pid"), col("label").as("plabel")),
+              col("label") === col("pid"))
+            .select(col("id"), col("plabel").as("label")), labels)
+          val cur = labelSum(labels)
+          done = cur == prev
+          prev = cur
+          iter += 1
+        }
+        require(done, s"connectedComponents did not converge in $maxIter rounds")
+        sc.keep(labels)
+      }
     }
-    val nodes = p.select(col("id1").as("src"))
-      .union(p.select(col("id2").as("src"))).distinct()
-    // symmetric closure + self-loops: min over neighbors then includes
-    // the node's own label, so one inner join per round suffices
-    val edges = p.select(col("id1").as("src"), col("id2").as("dst"))
-      .union(p.select(col("id2").as("src"), col("id1").as("dst")))
-      .union(nodes.withColumn("dst", col("src")))
-      .persist()
-    try {
-      var labels = edges.select(col("src").as("id")).distinct()
-        .withColumn("label", col("id"))
-        .localCheckpoint(true)
-      def labelSum(df: DataFrame): Long = {
-        val r = df.agg(sum(col("label"))).collect()(0)
-        if (r.isNullAt(0)) 0L else r.getLong(0)
-      }
-      var prev = labelSum(labels)
-      var iter = 0
-      // an explicit emptiness probe — a zero label SUM does not mean
-      // empty (negative ids can sum to zero on a live graph)
-      var done = labels.head(1).isEmpty
-      while (!done && iter < maxIter) {
-        val prop = edges
-          .join(labels.withColumnRenamed("id", "nbr"), col("dst") === col("nbr"))
-          .groupBy(col("src").as("id")).agg(min(col("label")).as("label"))
-        // pointer jumping: label(v) ← label(label(v)). A label is
-        // itself a node id, so one self-join squares the propagation
-        // distance per round — O(log diameter) rounds on chains
-        // instead of O(diameter).
-        // roll: the new generation frees the one it replaces (a bare
-        // per-round localCheckpoint leaks every prior label table)
-        val next = graft.Ckpt.roll(prop
-          .join(prop.select(col("id").as("pid"), col("label").as("plabel")),
-            col("label") === col("pid"))
-          .select(col("id"), col("plabel").as("label")), labels)
-        val cur = labelSum(next)
-        done = cur == prev
-        prev = cur
-        labels = next
-        iter += 1
-      }
-      require(done, s"connectedComponents did not converge in $maxIter rounds")
-      labels
-    } finally { edges.unpersist(false); p.unpersist(false) }
-  }
 
   /** The near-deduplicated corpus: drop every document that belongs
     * to a near-dup component but is not its minimum-id representative.
@@ -809,12 +800,11 @@ object Dedup {
   val dedupIncremental: QueryDef = QueryDef.rowsOnly("dedup_incremental") { (s, d) =>
     val docs = Tables.documents(s, d)
     val split = incrementSplit(docs)
-    val sh = stagedShingles(s, d).cache()
-    try {
-      val out = minhashIncrementPairs(
-        sh.filter(col("doc_id") < split), sh.filter(col("doc_id") >= split))
-      out.localCheckpoint(eager = true)
-    } finally sh.unpersist(false)
+    graft.Ckpt.scoped { sc =>
+      val sh = sc.persist(stagedShingles(s, d))
+      sc.keep(sc.adopt(minhashIncrementPairs(
+        sh.filter(col("doc_id") < split), sh.filter(col("doc_id") >= split))))
+    }
   }
 
   /** The indexed daily-ingest entry: the increment joins the STORED
@@ -830,12 +820,12 @@ object Dedup {
       val docs = Tables.documents(s, d)
       val split = incrementSplit(docs)
       val idx = dedupIndexDir(s, d, docs.filter(col("doc_id") < split))
-      val incSh = stagedShingles(s, d).filter(col("doc_id") >= split).cache()
-      try {
+      graft.Ckpt.scoped { sc =>
+        val incSh = sc.persist(stagedShingles(s, d).filter(col("doc_id") >= split))
         val corpusSh = stagedShingles(s, d).filter(col("doc_id") < split)
-        minhashIncrementPairsWithIndex(s.read.parquet(idx), corpusSh, incSh)
-          .localCheckpoint(eager = true)
-      } finally incSh.unpersist(false)
+        sc.keep(sc.adopt(
+          minhashIncrementPairsWithIndex(s.read.parquet(idx), corpusSh, incSh)))
+      }
     }
 
   /** The full 100 TB near-dedup pipeline end-to-end: MinHash+LSH
@@ -846,8 +836,10 @@ object Dedup {
     */
   val dedupMinhashCorpus: QueryDef = QueryDef.rowsOnly("dedup_minhash_corpus") { (s, d) =>
     val docs = Tables.documents(s, d)
-    val pairs = dedupMinhash.fn(s, d).select("id1", "id2")
-    nearDedupedCorpus(docs, pairs).select(col("doc_id")).orderBy(col("doc_id"))
+    graft.Ckpt.scoped { sc =>
+      val pairs = sc.adopt(dedupMinhash.fn(s, d)).select("id1", "id2")
+      nearDedupedCorpus(docs, pairs).select(col("doc_id")).orderBy(col("doc_id"))
+    }
   }
 
   /** STREAMING ingest against the STORED dedup index: documents
@@ -907,13 +899,15 @@ object Dedup {
             val batchSh = shinglesHashed(batch.toDF())
             val cand = incrementCrossCandidates(s.read.parquet(idx),
               lshBuckets(minhashSignatures(batchSh)))
-            jaccardVerify(stagedShingles(s, d).filter(col("doc_id") < split).union(batchSh), cand, 0.8)
-              .write.mode("append").parquet(sinkDir)
+            graft.Ckpt.scoped { sc =>
+              sc.adopt(jaccardVerify(
+                stagedShingles(s, d).filter(col("doc_id") < split).union(batchSh), cand, 0.8))
+                .write.mode("append").parquet(sinkDir)
+            }
           }
           .start()
         try q.processAllAvailable() finally q.stop()
-        s.read.parquet(sinkDir).orderBy(col("id1"), col("id2"))
-          .localCheckpoint(eager = true)
+        graft.Ckpt.keep(s.read.parquet(sinkDir).orderBy(col("id1"), col("id2")))
       } finally
         org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
     }
@@ -950,13 +944,12 @@ object Dedup {
       |       JOIN tot t2 ON p.id2 = t2.doc_id
       |WHERE imin / (t1.tw + t2.tw - imin) >= 0.5
       |ORDER BY id1, id2""".stripMargin) { (s, d) =>
-    val tf = Tables.documents(s, d).filter(col("doc_id") < 300L)
+    val tf = graft.Ckpt.keep(Tables.documents(s, d).filter(col("doc_id") < 300L)
       .select(col("doc_id"),
         explode(regexp_extract_all(lower(col("text")), lit("\\S+"), lit(0)))
           .as("tok"))
       .groupBy(col("doc_id"), col("tok"))
-      .agg(count(lit(1)).cast("double").as("w"))
-      .localCheckpoint(eager = true) // pair join + totals share one scan
+      .agg(count(lit(1)).cast("double").as("w"))) // pair join + totals share one scan
     val tot = tf.groupBy("doc_id").agg(sum(col("w")).as("tw"))
     tf.toDF("id1", "tok", "w1")
       .join(tf.toDF("id2", "tok2", "w2"),
@@ -1006,13 +999,12 @@ object Dedup {
     * verify ≥ threshold. Returns (id1, id2, w_jaccard).
     */
   private[graft] def weightedMinhashPairs(docs: DataFrame, threshold: Double): DataFrame = {
-    val tf = docs
+    val tf = graft.Ckpt.keep(docs
       .select(col("doc_id"),
         explode(regexp_extract_all(lower(col("text")), lit("\\S+"), lit(0)))
           .as("tok"))
       .groupBy(col("doc_id"), col("tok"))
-      .agg(count(lit(1)).cast("double").as("w"))
-      .localCheckpoint(eager = true) // feeds samples AND the exact verify
+      .agg(count(lit(1)).cast("double").as("w"))) // feeds samples AND the exact verify
     // u ∈ (0, 1]: top 53 hash bits + 1 — never 0, so ln is total
     def u(salt: Int): Column =
       (shiftrightunsigned(xxhash64(col("tok"), col("j"), lit(salt)), 11) + 1L)
@@ -1028,12 +1020,11 @@ object Dedup {
       .agg(min(struct(a.as("a"), col("tok").as("tok"), t.as("t"))).as("p"))
       .select(col("doc_id"), col("j"),
         col("p.tok").as("btok"), col("p.t").as("bt"))
-    val cand = sig.toDF("id1", "j", "btok", "bt")
+    val cand = graft.Ckpt.keep(sig.toDF("id1", "j", "btok", "bt")
       .join(sig.toDF("id2", "j2", "btok2", "bt2"),
         col("j") === col("j2") && col("btok") === col("btok2")
           && col("bt") === col("bt2") && col("id1") < col("id2"))
-      .select("id1", "id2").distinct()
-      .localCheckpoint(eager = true)
+      .select("id1", "id2").distinct())
     // exact weighted Jaccard, candidate-restricted before any work
     val candIds = cand.select(col("id1").as("doc_id"))
       .union(cand.select(col("id2").as("doc_id"))).distinct()
@@ -1232,13 +1223,11 @@ object Dedup {
     */
   val dedupEval: QueryDef = QueryDef.rowsOnly("dedup_eval") { (s, d) =>
     val docs = Tables.documents(s, d).filter(col("doc_id") < 300L)
-    val truth = ngramPairs(docs, 300L, 0.8).select("id1", "id2")
-      .localCheckpoint(eager = true)
-    val sh = stagedShingles(s, d).filter(col("doc_id") < 300L).cache()
-    try {
-      val verified = jaccardVerify(
-        sh, lshCandidates(minhashSignatures(sh)), 0.8)
-        .select("id1", "id2").localCheckpoint(eager = true)
+    graft.Ckpt.scoped { sc =>
+      val truth = sc.checkpoint(ngramPairs(docs, 300L, 0.8).select("id1", "id2"))
+      val sh = sc.persist(stagedShingles(s, d).filter(col("doc_id") < 300L))
+      val verified = sc.checkpoint(sc.adopt(jaccardVerify(
+        sh, lshCandidates(minhashSignatures(sh)), 0.8)).select("id1", "id2"))
       val nTruth = truth.count()
       val nVerified = verified.count()
       val nHit = truth.join(verified, Seq("id1", "id2"), "left_semi").count()
@@ -1252,7 +1241,7 @@ object Dedup {
           else BigDecimal(nHit.toDouble / nTruth)
             .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble))
         .toDF("metric", "value")
-    } finally sh.unpersist(false)
+    }
   }
 
   /** Cross-source duplication matrix — the provenance readout behind

@@ -747,11 +747,10 @@ object EventOps {
         }
         .start()
       try q.processAllAvailable() finally q.stop()
-      s.read.parquet(s"$tmp/state/v${version.get()}")
+      graft.Ckpt.keep(s.read.parquet(s"$tmp/state/v${version.get()}")
         .select(col("event_type"), col("event_id"),
           round(col("value"), 2).as("value"))
-        .orderBy(col("event_type"), col("event_id"))
-        .localCheckpoint(eager = true)
+        .orderBy(col("event_type"), col("event_id")))
     } finally
       org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
   }
@@ -974,14 +973,14 @@ object EventOps {
         coalesce(sum(when(unix_micros(col("ts")) > col("mid"), micro)
           .otherwise(0L)), lit(0L)).as("y"))
     val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
-    val v = pu.groupBy(col("variant")).agg(
+    // 2 rows; θ derivation and the readout share one corpus pass
+    val v = graft.Ckpt.keep(pu.groupBy(col("variant")).agg(
       count(lit(1)).as("nv"),
       (sum(col("x")).cast("double") * 1e-6).as("sx"),
       (sum(col("y")).cast("double") * 1e-6).as("sy"),
       (sum(dec(col("x")) * col("x")).cast("double") * 1e-12).as("sxx"),
       (sum(dec(col("x")) * col("y")).cast("double") * 1e-12).as("sxy"),
-      (sum(dec(col("y")) * col("y")).cast("double") * 1e-12).as("syy"))
-      .cache() // 2 rows; θ derivation and the readout share one corpus pass
+      (sum(dec(col("y")) * col("y")).cast("double") * 1e-12).as("syy")))
     val g = v.agg(sum(col("nv")).cast("double").as("n"),
       sum(col("sx")).as("gsx"), sum(col("sy")).as("gsy"),
       sum(col("sxx")).as("gsxx"), sum(col("sxy")).as("gsxy"))
@@ -1065,11 +1064,11 @@ object EventOps {
           .otherwise(0L)), lit(0L)).as("pre"),
         coalesce(sum(when(unix_micros(col("ts")) > col("mid"), micro)
           .otherwise(0L)), lit(0L)).as("post"))
-    val g = pu.groupBy(col("grp")).agg(
+    // 2 rows; both cell branches share one corpus pass
+    val g = graft.Ckpt.keep(pu.groupBy(col("grp")).agg(
       count(lit(1)).as("n"),
       (sum(col("pre")).cast("double") * 1e-6).as("sp"),
-      (sum(col("post")).cast("double") * 1e-6).as("sq"))
-      .cache() // 2 rows; both cell branches share one corpus pass
+      (sum(col("post")).cast("double") * 1e-6).as("sq")))
     val c0 = g.filter(col("grp") === 0)
       .select((col("sp") / col("n")).as("pre_control"),
         (col("sq") / col("n")).as("post_control"))
@@ -1194,7 +1193,7 @@ object EventOps {
     val wUser = Window.partitionBy(col("user_id")).orderBy(col("ts"))
     val wCum = Window.partitionBy(col("user_id")).orderBy(col("ts"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val sessions = Tables.events(s, d)
+    val sessions = graft.Ckpt.keep(Tables.events(s, d)
       .withColumn("prev", lag(col("ts"), 1).over(wUser))
       .withColumn("new_session",
         when(col("prev").isNull ||
@@ -1202,8 +1201,7 @@ object EventOps {
           .otherwise(0))
       .withColumn("sid", sum(col("new_session")).over(wCum))
       .groupBy(col("user_id"), col("sid"))
-      .agg(min(col("ts")).as("t0"), max(col("ts")).as("t1"))
-      .cache()
+      .agg(min(col("ts")).as("t0"), max(col("ts")).as("t1")))
     val deltas = sessions.select(col("t0").as("t"), lit(1).as("delta"))
       .unionAll(sessions.select(col("t1").as("t"), lit(-1).as("delta")))
       .withColumn("day", date_trunc("day", col("t")))
@@ -1299,11 +1297,10 @@ object EventOps {
       |  floor(min(rk) * 10000.0 / (SELECT count(*) FROM per_user) + 0.5) / 10000
       |    AS share_of_users
       |FROM ranked WHERE cum_rev >= 0.8 * total_rev""".stripMargin) { (s, d) =>
-    val perUser = Tables.events(s, d)
+    val perUser = graft.Ckpt.keep(Tables.events(s, d)
       .filter(col("event_type") === "purchase")
       .groupBy(col("user_id"))
-      .agg(sum(col("value")).as("revenue"))
-      .cache()
+      .agg(sum(col("value")).as("revenue")))
     val nBuyers = perUser.count()
     val wCum = Window.orderBy(col("revenue").desc, col("user_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1342,9 +1339,9 @@ object EventOps {
       |FROM weeks w LEFT JOIN churned c ON c.week = w.week
       |WHERE w.week < (SELECT max(week) FROM wu)
       |ORDER BY w.week""".stripMargin) { (s, d) =>
-    val wu = Tables.events(s, d)
+    val wu = graft.Ckpt.keep(Tables.events(s, d)
       .select(date_trunc("week", col("ts")).as("week"), col("user_id"))
-      .distinct().cache()
+      .distinct())
     val weeks = wu.groupBy(col("week")).agg(count(lit(1)).as("active"))
     val nextWeek = wu.select((col("week") - expr("INTERVAL 7 DAY")).as("b_week"),
       col("user_id").as("b_user"))
@@ -1972,9 +1969,9 @@ object EventOps {
           .cast("long").as("t"), // long: matches DuckDB date_diff's BIGINT
         when(col("last_ts") >= col("horizon") - expr("INTERVAL 14 DAY"), 1)
           .otherwise(0).as("censored"))
-    val byt = life.groupBy(col("t"))
-      .agg(sum(lit(1) - col("censored")).as("d"), sum(col("censored")).as("c"))
-      .cache() // O(durations) rows; both readers below share one corpus pass
+    // O(durations) rows; both readers below share one corpus pass
+    val byt = graft.Ckpt.keep(life.groupBy(col("t"))
+      .agg(sum(lit(1) - col("censored")).as("d"), sum(col("censored")).as("c")))
     // total users as a single-row broadcast over the O(durations)
     // aggregate — no second corpus pass, no driver count
     val total = byt.agg(sum(col("d") + col("c")).as("n_users"))
@@ -2481,12 +2478,11 @@ object EventOps {
        |  round((1.0 + cnt.c) / (1.0 + $PermB), 4) AS p_value
        |FROM obs, cnt""".stripMargin) { (s, d) =>
     val cents = round(col("value") * 100, 0).cast("long")
-    val perUser = Tables.events(s, d)
-      .groupBy(col("user_id"), (col("user_id") % 2).as("variant"))
-      .agg(sum(when(col("event_type") === "purchase", cents).otherwise(0L))
-        .as("rev"))
-      .persist()
-    try {
+    graft.Ckpt.scoped { sc =>
+      val perUser = sc.persist(Tables.events(s, d)
+        .groupBy(col("user_id"), (col("user_id") % 2).as("variant"))
+        .agg(sum(when(col("event_type") === "purchase", cents).otherwise(0L))
+          .as("rev")))
       perUser.count()
       val obs = perUser.agg(
           count(lit(1)).as("n"), sum(col("rev")).as("s"),
@@ -2520,7 +2516,7 @@ object EventOps {
             .as("abs_lift"),
           col("c").cast("long").as("n_extreme"),
           round((lit(1.0) + col("c")) / lit(1.0 + PermB), 4).as("p_value"))
-    } finally perUser.unpersist(false)
+    }
   }
 
   /** Offline UCB1 bandit replay (Auer, Cesa-Bianchi & Fischer 2002)

@@ -128,35 +128,27 @@ object Graph {
     * endpoints of E. Each iteration is one equality join + one
     * aggregate over O(|V|) state; lineage is cut every 3 rounds.
     */
-  def pageRank(edges: DataFrame, iters: Int, damping: Double = 0.85): DataFrame = {
-    val e = edges.select(col("src"), col("dst")).distinct().cache()
-    val vertices = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct().cache()
-    val n = vertices.count().toDouble
-    val outdeg = e.groupBy(col("src").as("od_node"))
-      .agg(count(lit(1)).as("outdeg"))
-    var ranks = vertices.withColumn("rank", lit(1.0 / n))
-    var last: DataFrame = null
-    for (i <- 1 to iters) {
-      val contribs = e
-        .join(ranks, col("src") === col("node"))
-        .join(outdeg, col("src") === col("od_node"))
-        .select(col("dst"), (col("rank") / col("outdeg")).as("contrib"))
-        .groupBy(col("dst")).agg(sum(col("contrib")).as("inflow"))
-      ranks = vertices
-        .join(contribs, col("node") === col("dst"), "left_outer")
-        .select(col("node"),
-          (lit((1.0 - damping) / n) +
-            lit(damping) * coalesce(col("inflow"), lit(0.0))).as("rank"))
-      // roll: eager-checkpoint the new state, free the generation it
-      // replaces (a plain in-loop localCheckpoint leaks every prior
-      // generation's blocks until driver GC). Final round checkpoints
-      // too, so the edge/vertex caches can be released before return.
-      if (i % 3 == 0 || i == iters) { ranks = graft.Ckpt.roll(ranks, last); last = ranks }
+  def pageRank(edges: DataFrame, iters: Int, damping: Double = 0.85): DataFrame =
+    graft.Ckpt.scoped { sc =>
+      val e = sc.persist(edges.select(col("src"), col("dst")).distinct())
+      val vertices = sc.persist(e.select(col("src").as("node"))
+        .union(e.select(col("dst").as("node"))).distinct())
+      val n = vertices.count().toDouble
+      val outdeg = e.groupBy(col("src").as("od_node"))
+        .agg(count(lit(1)).as("outdeg"))
+      sc.keep(sc.iterate(vertices.withColumn("rank", lit(1.0 / n)), iters, 3) { (ranks, _) =>
+        val contribs = e
+          .join(ranks, col("src") === col("node"))
+          .join(outdeg, col("src") === col("od_node"))
+          .select(col("dst"), (col("rank") / col("outdeg")).as("contrib"))
+          .groupBy(col("dst")).agg(sum(col("contrib")).as("inflow"))
+        vertices
+          .join(contribs, col("node") === col("dst"), "left_outer")
+          .select(col("node"),
+            (lit((1.0 - damping) / n) +
+              lit(damping) * coalesce(col("inflow"), lit(0.0))).as("rank"))
+      })
     }
-    e.unpersist(false); vertices.unpersist(false)
-    ranks
-  }
 
   private val PrIters = 8
 
@@ -229,28 +221,27 @@ object Graph {
          |$steps
          |SELECT node, round(r, 8) AS rank FROM pr$PprIters ORDER BY node""".stripMargin
     }) { (s, d) =>
-    val e = nationEdges(s, d).select(col("src"), col("dst")).distinct().cache()
-    val vertices = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct().cache()
-    val outdeg = e.groupBy(col("src").as("od_node"))
-      .agg(count(lit(1)).as("outdeg"))
-    val teleport = when(col("node") === PprSource, lit(0.15)).otherwise(lit(0.0))
-    var ranks = vertices.withColumn("rank",
-      when(col("node") === PprSource, lit(1.0)).otherwise(lit(0.0)))
-    var last: DataFrame = null
-    for (i <- 1 to PprIters) {
-      val contribs = e
-        .join(ranks, col("src") === col("node"))
-        .join(outdeg, col("src") === col("od_node"))
-        .select(col("dst"), (col("rank") / col("outdeg")).as("contrib"))
-        .groupBy(col("dst")).agg(sum(col("contrib")).as("inflow"))
-      ranks = vertices
-        .join(contribs, col("node") === col("dst"), "left_outer")
-        .select(col("node"),
-          (teleport + lit(0.85) * coalesce(col("inflow"), lit(0.0))).as("rank"))
-      if (i % 3 == 0 || i == PprIters) { ranks = graft.Ckpt.roll(ranks, last); last = ranks }
+    val ranks = graft.Ckpt.scoped { sc =>
+      val e = sc.persist(nationEdges(s, d).select(col("src"), col("dst")).distinct())
+      val vertices = sc.persist(e.select(col("src").as("node"))
+        .union(e.select(col("dst").as("node"))).distinct())
+      val outdeg = e.groupBy(col("src").as("od_node"))
+        .agg(count(lit(1)).as("outdeg"))
+      val teleport = when(col("node") === PprSource, lit(0.15)).otherwise(lit(0.0))
+      val init = vertices.withColumn("rank",
+        when(col("node") === PprSource, lit(1.0)).otherwise(lit(0.0)))
+      sc.keep(sc.iterate(init, PprIters, 3) { (ranks, _) =>
+        val contribs = e
+          .join(ranks, col("src") === col("node"))
+          .join(outdeg, col("src") === col("od_node"))
+          .select(col("dst"), (col("rank") / col("outdeg")).as("contrib"))
+          .groupBy(col("dst")).agg(sum(col("contrib")).as("inflow"))
+        vertices
+          .join(contribs, col("node") === col("dst"), "left_outer")
+          .select(col("node"),
+            (teleport + lit(0.85) * coalesce(col("inflow"), lit(0.0))).as("rank"))
+      })
     }
-    e.unpersist(false); vertices.unpersist(false)
     ranks.select(col("node"), round(col("rank"), 8).as("rank"))
       .orderBy(col("node"))
   }
@@ -281,7 +272,7 @@ object Graph {
        |SELECT count(*) AS n_triangles
        |FROM ue e1 JOIN ue e2 ON e2.a = e1.b
        |JOIN ue e3 ON e3.a = e1.a AND e3.b = e2.b""".stripMargin) { (s, d) =>
-    val ue = undirectedNationEdges(s, d).cache()
+    val ue = graft.Ckpt.keep(undirectedNationEdges(s, d))
     val e1 = ue.select(col("a").as("x"), col("b").as("y"))
     val e2 = ue.select(col("a").as("y2"), col("b").as("z"))
     val e3 = ue.select(col("a").as("x3"), col("b").as("z3"))
@@ -297,25 +288,21 @@ object Graph {
     * (node, hops), each round expands one equality join and keeps
     * the min hop per node — O(|V|) state per round.
     */
-  def bfsHops(edges: DataFrame, source: Long, iters: Int): DataFrame = {
-    val sym = edges.select(col("a"), col("b"))
-      .union(edges.select(col("b").as("a"), col("a").as("b")))
-      .distinct().cache()
-    val spark = edges.sparkSession
-    import spark.implicits._
-    var hops = Seq((source, 0)).toDF("node", "hops")
-    var last: DataFrame = null
-    for (i <- 1 to iters) {
-      val expanded = hops
-        .join(sym, col("node") === col("a"))
-        .select(col("b").as("node"), (col("hops") + 1).as("hops"))
-      hops = hops.union(expanded)
-        .groupBy(col("node")).agg(min(col("hops")).as("hops"))
-      if (i % 3 == 0 || i == iters) { hops = graft.Ckpt.roll(hops, last); last = hops }
+  def bfsHops(edges: DataFrame, source: Long, iters: Int): DataFrame =
+    graft.Ckpt.scoped { sc =>
+      val sym = sc.persist(edges.select(col("a"), col("b"))
+        .union(edges.select(col("b").as("a"), col("a").as("b")))
+        .distinct())
+      val spark = edges.sparkSession
+      import spark.implicits._
+      sc.keep(sc.iterate(Seq((source, 0)).toDF("node", "hops"), iters, 3) { (hops, _) =>
+        val expanded = hops
+          .join(sym, col("node") === col("a"))
+          .select(col("b").as("node"), (col("hops") + 1).as("hops"))
+        hops.union(expanded)
+          .groupBy(col("node")).agg(min(col("hops")).as("hops"))
+      })
     }
-    sym.unpersist(false)
-    hops
-  }
 
   private def bfsOracle(iters: Int): String = {
     val steps = (1 to iters).map { i =>
@@ -357,26 +344,26 @@ object Graph {
     */
   def labelPropagation(edges: DataFrame, iters: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val sym = edges.select(col("a"), col("b"))
-      .union(edges.select(col("b").as("a"), col("a").as("b")))
-      .distinct().cache()
-    var labels = sym.select(col("a").as("node"))
-      .union(sym.select(col("b").as("node"))).distinct()
-      .withColumn("label", col("node"))
-    val w = Window.partitionBy(col("nb_node"))
-      .orderBy(col("c").desc, col("label"))
-    for (i <- 1 to iters) {
-      labels = sym
-        .join(labels.withColumnRenamed("node", "l_node"), col("l_node") === col("b"))
-        .groupBy(col("a").as("nb_node"), col("label"))
-        .agg(count(lit(1)).as("c"))
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") === 1)
-        .select(col("nb_node").as("node"), col("label"))
+    graft.Ckpt.scoped { sc =>
+      val sym = sc.persist(edges.select(col("a"), col("b"))
+        .union(edges.select(col("b").as("a"), col("a").as("b")))
+        .distinct())
+      var labels = sym.select(col("a").as("node"))
+        .union(sym.select(col("b").as("node"))).distinct()
+        .withColumn("label", col("node"))
+      val w = Window.partitionBy(col("nb_node"))
+        .orderBy(col("c").desc, col("label"))
+      for (i <- 1 to iters) {
+        labels = sym
+          .join(labels.withColumnRenamed("node", "l_node"), col("l_node") === col("b"))
+          .groupBy(col("a").as("nb_node"), col("label"))
+          .agg(count(lit(1)).as("c"))
+          .withColumn("rk", row_number().over(w))
+          .filter(col("rk") === 1)
+          .select(col("nb_node").as("node"), col("label"))
+      }
+      sc.keep(labels)
     }
-    val out = labels.localCheckpoint(eager = true)
-    sym.unpersist(false)
-    out
   }
 
   private def labelPropOracle(iters: Int): String = {
@@ -438,10 +425,10 @@ object Graph {
        |JOIN deg da ON da.node = l.a
        |JOIN deg db ON db.node = l.b
        |ORDER BY jaccard DESC, l.a, l.b LIMIT 20""".stripMargin) { (s, d) =>
-    val ue = undirectedNationEdges(s, d).cache()
-    val sym = ue.select(col("a"), col("b"))
+    val ue = graft.Ckpt.keep(undirectedNationEdges(s, d))
+    val sym = graft.Ckpt.keep(ue.select(col("a"), col("b"))
       .union(ue.select(col("b").as("a"), col("a").as("b")))
-      .distinct().cache()
+      .distinct())
     val deg = sym.groupBy(col("a").as("node")).agg(count(lit(1)).as("d"))
     val s1 = sym.select(col("a").as("u"), col("b").as("w"))
     val s2 = sym.select(col("a").as("v"), col("b").as("w2"))
@@ -490,28 +477,26 @@ object Graph {
          |FROM h$iters GROUP BY src HAVING sum(hops) > 0 ORDER BY src""".stripMargin
     QueryDef.sql("graph_closeness", oracle) { (s, d) =>
       val ue = undirectedNationEdges(s, d)
-      val sym = ue.select(col("a"), col("b"))
-        .union(ue.select(col("b").as("a"), col("a").as("b")))
-        .distinct().cache()
-      val vertices = sym.select(col("a").as("node"))
-        .union(sym.select(col("b").as("node"))).distinct()
-      var hops = vertices.select(col("node").as("src"), col("node"),
-        lit(0).as("hops"))
-      var last: DataFrame = null
-      for (i <- 1 to iters) {
-        val expanded = hops
-          .join(sym, col("node") === col("a"))
-          .select(col("src"), col("b").as("node"), (col("hops") + 1).as("hops"))
-        hops = hops.unionAll(expanded)
-          .groupBy(col("src"), col("node")).agg(min(col("hops")).as("hops"))
-        // hops is referenced twice in its own next-round plan (the
-        // union arm and the expansion join), so the lazy tree doubles
-        // per round — checkpoint the O(|V|·reachable) relation every
-        // round (rolling: each new generation frees the one it
-        // replaces) to keep the plan flat and the store bounded.
-        hops = graft.Ckpt.roll(hops, last); last = hops
+      // hops is referenced twice in its own next-round plan (the
+      // union arm and the expansion join), so the lazy tree doubles
+      // per round — checkpoint the O(|V|·reachable) relation every
+      // round to keep the plan flat and the store bounded.
+      val hops = graft.Ckpt.scoped { sc =>
+        val sym = sc.persist(ue.select(col("a"), col("b"))
+          .union(ue.select(col("b").as("a"), col("a").as("b")))
+          .distinct())
+        val vertices = sym.select(col("a").as("node"))
+          .union(sym.select(col("b").as("node"))).distinct()
+        val init = vertices.select(col("node").as("src"), col("node"),
+          lit(0).as("hops"))
+        sc.keep(sc.iterate(init, iters, 1) { (hops, _) =>
+          val expanded = hops
+            .join(sym, col("node") === col("a"))
+            .select(col("src"), col("b").as("node"), (col("hops") + 1).as("hops"))
+          hops.unionAll(expanded)
+            .groupBy(col("src"), col("node")).agg(min(col("hops")).as("hops"))
+        })
       }
-      sym.unpersist(false)
       hops.groupBy(col("src"))
         .agg(count(lit(1)).as("n"), sum(col("hops")).as("sum_hops"))
         .filter(col("sum_hops") > 0)
@@ -563,26 +548,24 @@ object Graph {
          |GROUP BY s.a ORDER BY s.a""".stripMargin
     QueryDef.sql("graph_kcore", oracle) { (s, d) =>
       val ue = undirectedNationEdges(s, d)
-      val sym = ue.select(col("a"), col("b"))
-        .union(ue.select(col("b").as("a"), col("a").as("b")))
-        .distinct().cache()
-      var alive = sym.select(col("a").as("node"))
-        .union(sym.select(col("b").as("node"))).distinct()
-      var last: DataFrame = null
-      for (_ <- 1 to KcoreRounds) {
-        alive = graft.Ckpt.roll(sym
+      graft.Ckpt.scoped { sc =>
+        val sym = sc.persist(ue.select(col("a"), col("b"))
+          .union(ue.select(col("b").as("a"), col("a").as("b")))
+          .distinct())
+        def core(alive: DataFrame) = sym
           .join(alive.withColumnRenamed("node", "na"), col("na") === col("a"), "left_semi")
           .join(alive.withColumnRenamed("node", "nb"), col("nb") === col("b"), "left_semi")
-          .groupBy(col("a").as("node")).agg(count(lit(1)).as("c"))
-          .filter(col("c") >= KcoreK)
-          .select(col("node")), last)
-        last = alive
+          .groupBy(col("a").as("node"))
+        val init = sym.select(col("a").as("node"))
+          .union(sym.select(col("b").as("node"))).distinct()
+        val alive = sc.iterate(init, KcoreRounds, 1) { (alive, _) =>
+          core(alive).agg(count(lit(1)).as("c"))
+            .filter(col("c") >= KcoreK)
+            .select(col("node"))
+        }
+        sc.keep(core(alive).agg(count(lit(1)).as("core_degree"))
+          .orderBy(col("node")))
       }
-      sym
-        .join(alive.withColumnRenamed("node", "na"), col("na") === col("a"), "left_semi")
-        .join(alive.withColumnRenamed("node", "nb"), col("nb") === col("b"), "left_semi")
-        .groupBy(col("a").as("node")).agg(count(lit(1)).as("core_degree"))
-        .orderBy(col("node"))
     }
   }
 
@@ -688,46 +671,45 @@ object Graph {
 
   val graphMst: QueryDef = QueryDef.sql(
     "graph_mst", mstOracle(5, 25)) { (s, d) =>
-    val we = weightedNationEdges(s, d).cache()
-    var comp = we.select(col("a").as("id")).union(we.select(col("b").as("id")))
-      .distinct().withColumn("comp", col("id")).localCheckpoint(eager = true)
-    var mst: DataFrame = null
-    var done = false
-    var rounds = 0
-    while (!done && rounds < 34) { // ⌈log₂ maxVertices⌉ safety bound
-      val e2 = we
-        .join(comp.select(col("id").as("a2"), col("comp").as("ca")), col("a") === col("a2"))
-        .join(comp.select(col("id").as("b2"), col("comp").as("cb")), col("b") === col("b2"))
-        .filter(col("ca") =!= col("cb"))
-        .select(col("a"), col("b"), col("w"), col("ca"), col("cb"))
-      val pick = struct(col("w"), col("a"), col("b"), col("ca"), col("cb")).as("e")
-      val cand = e2.select(col("ca").as("c"), pick)
-        .unionAll(e2.select(col("cb").as("c"), pick))
-      val chosen = cand.groupBy(col("c")).agg(min(col("e")).as("e"))
-        .select(col("e.a").as("a"), col("e.b").as("b"), col("e.w").as("w"),
-          col("e.ca").as("ca"), col("e.cb").as("cb"))
-        .distinct().localCheckpoint(eager = true)
-      if (chosen.head(1).isEmpty) { graft.Ckpt.free(chosen); done = true }
-      else {
-        val edges = chosen.select("a", "b", "w")
-        // mst must be materialized before `chosen` is freed below —
-        // a lazy view over freed checkpoint blocks is unrecoverable.
-        mst = if (mst == null) edges.localCheckpoint(eager = true)
-          else graft.Ckpt.roll(mst.unionAll(edges), mst)
-        val mapping = Dedup.connectedComponents(
-          chosen.select(col("ca").as("id1"), col("cb").as("id2")))
-          .select(col("id").as("comp0"), col("label").as("newc"))
-        comp = graft.Ckpt.roll(
-          comp.join(mapping, col("comp") === col("comp0"), "left")
-            .select(col("id"), coalesce(col("newc"), col("comp")).as("comp")),
-          comp)
-        graft.Ckpt.free(chosen)
-        rounds += 1
+    graft.Ckpt.scoped { sc =>
+      val we = sc.persist(weightedNationEdges(s, d))
+      var comp = sc.checkpoint(we.select(col("a").as("id")).union(we.select(col("b").as("id")))
+        .distinct().withColumn("comp", col("id")))
+      var mst = Option.empty[DataFrame]
+      var done = false
+      var rounds = 0
+      while (!done && rounds < 34) { // ⌈log₂ maxVertices⌉ safety bound
+        val e2 = we
+          .join(comp.select(col("id").as("a2"), col("comp").as("ca")), col("a") === col("a2"))
+          .join(comp.select(col("id").as("b2"), col("comp").as("cb")), col("b") === col("b2"))
+          .filter(col("ca") =!= col("cb"))
+          .select(col("a"), col("b"), col("w"), col("ca"), col("cb"))
+        val pick = struct(col("w"), col("a"), col("b"), col("ca"), col("cb")).as("e")
+        val cand = e2.select(col("ca").as("c"), pick)
+          .unionAll(e2.select(col("cb").as("c"), pick))
+        val chosen = sc.checkpoint(cand.groupBy(col("c")).agg(min(col("e")).as("e"))
+          .select(col("e.a").as("a"), col("e.b").as("b"), col("e.w").as("w"),
+            col("e.ca").as("ca"), col("e.cb").as("cb"))
+          .distinct())
+        if (chosen.head(1).isEmpty) done = true
+        else {
+          val edges = chosen.select("a", "b", "w")
+          mst = Some(mst.fold(sc.checkpoint(edges))(m => sc.roll(m.unionAll(edges), m)))
+          val cc = sc.adopt(Dedup.connectedComponents(
+            chosen.select(col("ca").as("id1"), col("cb").as("id2"))))
+          val mapping = cc.select(col("id").as("comp0"), col("label").as("newc"))
+          comp = sc.roll(
+            comp.join(mapping, col("comp") === col("comp0"), "left")
+              .select(col("id"), coalesce(col("newc"), col("comp")).as("comp")),
+            comp)
+          sc.free(cc)
+          rounds += 1
+        }
+        sc.free(chosen)
       }
+      mst.map(sc.keep).getOrElse(we.select("a", "b", "w").limit(0))
+        .orderBy(col("w"), col("a"), col("b"))
     }
-    we.unpersist(false)
-    (if (mst == null) we.select("a", "b", "w").limit(0) else mst)
-      .orderBy(col("w"), col("a"), col("b"))
   }
 
   private val SsspIters = 6
@@ -742,24 +724,19 @@ object Graph {
     * graph is converged in practice and both engines agree by
     * construction either way).
     */
-  def ssspDists(edges: DataFrame, source: Long, iters: Int): DataFrame = {
-    val sym = edges.select(col("a"), col("b"), col("cost"))
-      .union(edges.select(col("b").as("a"), col("a").as("b"), col("cost")))
-      .cache()
-    val spark = edges.sparkSession
-    import spark.implicits._
-    var dist = Seq((source, 0.0)).toDF("node", "dist")
-    var last: DataFrame = null
-    for (i <- 1 to iters) {
-      val relaxed = dist.join(sym, col("node") === col("a"))
-        .select(col("b").as("node"), (col("dist") + col("cost")).as("dist"))
-      dist = dist.union(relaxed)
-        .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-      if (i % 3 == 0 || i == iters) { dist = graft.Ckpt.roll(dist, last); last = dist }
+  def ssspDists(edges: DataFrame, source: Long, iters: Int): DataFrame =
+    graft.Ckpt.scoped { sc =>
+      val sym = sc.persist(edges.select(col("a"), col("b"), col("cost"))
+        .union(edges.select(col("b").as("a"), col("a").as("b"), col("cost"))))
+      val spark = edges.sparkSession
+      import spark.implicits._
+      sc.keep(sc.iterate(Seq((source, 0.0)).toDF("node", "dist"), iters, 3) { (dist, _) =>
+        val relaxed = dist.join(sym, col("node") === col("a"))
+          .select(col("b").as("node"), (col("dist") + col("cost")).as("dist"))
+        dist.union(relaxed)
+          .groupBy(col("node")).agg(min(col("dist")).as("dist"))
+      })
     }
-    sym.unpersist(false)
-    dist
-  }
 
   private def ssspOracle(iters: Int): String = {
     val steps = (1 to iters).map { i =>
@@ -856,48 +833,47 @@ object Graph {
     */
   val graphHits: QueryDef = QueryDef.sql(
     "graph_hits", hitsOracle(HitsIters)) { (s, d) =>
-    val e = nationEdges(s, d).localCheckpoint(eager = true)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .localCheckpoint(eager = true)
-    var hub = nodes.withColumn("h", lit(1.0))
-    var auth: DataFrame = null
-    var lastHub: DataFrame = null
-    var lastAuth: DataFrame = null
-    for (i <- 1 to HitsIters) {
-      val araw = nodes.join(
-          e.join(hub.select(col("node").as("hn"), col("h")), col("src") === col("hn"))
-            .groupBy(col("dst").as("an")).agg(sum(col("h")).as("raw")),
-          col("node") === col("an"), "left_outer")
-        .select(col("node"), coalesce(col("raw"), lit(0.0)).as("raw"))
-      val atot = araw.agg(sum(col("raw")).as("t"))
-      auth = araw.crossJoin(broadcast(atot))
-        .select(col("node"), (col("raw") / col("t")).as("a"))
-      val hraw = nodes.join(
-          e.join(auth.select(col("node").as("an2"), col("a")), col("dst") === col("an2"))
-            .groupBy(col("src").as("hn2")).agg(sum(col("a")).as("raw")),
-          col("node") === col("hn2"), "left_outer")
-        .select(col("node"), coalesce(col("raw"), lit(0.0)).as("raw"))
-      val htot = hraw.agg(sum(col("raw")).as("t"))
-      hub = hraw.crossJoin(broadcast(htot))
-        .select(col("node"), (col("raw") / col("t")).as("h"))
-      if (i % 2 == 0 || i == HitsIters) {
-        // materialize BOTH new states before freeing EITHER old one:
-        // auth's lazy plan runs through the previous hub checkpoint,
-        // so a hub-roll-then-auth-roll order would free blocks the
-        // auth materialization still needs.
-        val h2 = hub.localCheckpoint(eager = true)
-        val a2 = auth.localCheckpoint(eager = true)
-        graft.Ckpt.free(lastHub); graft.Ckpt.free(lastAuth)
-        hub = h2; auth = a2; lastHub = h2; lastAuth = a2
+    graft.Ckpt.scoped { sc =>
+      val e = sc.checkpoint(nationEdges(s, d))
+      val nodes = sc.checkpoint(e.select(col("src").as("node"))
+        .union(e.select(col("dst").as("node"))).distinct())
+      var hub = nodes.withColumn("h", lit(1.0))
+      var auth = hub
+      var gen = Seq.empty[DataFrame]
+      for (i <- 1 to HitsIters) {
+        val araw = nodes.join(
+            e.join(hub.select(col("node").as("hn"), col("h")), col("src") === col("hn"))
+              .groupBy(col("dst").as("an")).agg(sum(col("h")).as("raw")),
+            col("node") === col("an"), "left_outer")
+          .select(col("node"), coalesce(col("raw"), lit(0.0)).as("raw"))
+        val atot = araw.agg(sum(col("raw")).as("t"))
+        auth = araw.crossJoin(broadcast(atot))
+          .select(col("node"), (col("raw") / col("t")).as("a"))
+        val hraw = nodes.join(
+            e.join(auth.select(col("node").as("an2"), col("a")), col("dst") === col("an2"))
+              .groupBy(col("src").as("hn2")).agg(sum(col("a")).as("raw")),
+            col("node") === col("hn2"), "left_outer")
+          .select(col("node"), coalesce(col("raw"), lit(0.0)).as("raw"))
+        val htot = hraw.agg(sum(col("raw")).as("t"))
+        hub = hraw.crossJoin(broadcast(htot))
+          .select(col("node"), (col("raw") / col("t")).as("h"))
+        if (i % 2 == 0 || i == HitsIters) {
+          // materialize BOTH new states before freeing EITHER old one:
+          // auth's lazy plan runs through the previous hub checkpoint,
+          // so a hub-roll-then-auth-roll order would free blocks the
+          // auth materialization still needs.
+          val next = Seq(hub, auth).map(sc.checkpoint(_))
+          gen.foreach(sc.free)
+          gen = next
+          hub = next(0); auth = next(1)
+        }
       }
+      sc.keep(hub).join(sc.keep(auth).select(col("node").as("anode"), col("a")),
+          col("node") === col("anode"))
+        .select(col("node"), round(col("h"), 8).as("hub"),
+          round(col("a"), 8).as("auth"))
+        .orderBy(col("node"))
     }
-    graft.Ckpt.free(e); graft.Ckpt.free(nodes)
-    hub.join(auth.select(col("node").as("anode"), col("a")),
-        col("node") === col("anode"))
-      .select(col("node"), round(col("h"), 8).as("hub"),
-        round(col("a"), 8).as("auth"))
-      .orderBy(col("node"))
   }
 
   /** Connected components of the thresholded co-purchase part graph
@@ -1023,18 +999,16 @@ object Graph {
       |ORDER BY dc.community""".stripMargin) { (s, d) =>
     val items = Tables.lineitem(s, d)
       .select(col("l_orderkey"), col("l_partkey")).distinct()
-    val cp = items
+    val cp = graft.Ckpt.keep(items
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("id1"))
       .join(items.select(col("l_orderkey").as("ok2"), col("l_partkey").as("id2")),
         col("ok") === col("ok2") && col("id1") < col("id2"))
       .groupBy(col("id1"), col("id2")).agg(count(lit(1)).as("nn"))
       .filter(col("nn") >= 3)
-      .select(col("id1").as("a"), col("id2").as("b"))
-      .localCheckpoint(eager = true)
+      .select(col("id1").as("a"), col("id2").as("b")))
     val lab = graft.operators.Dedup.connectedComponents(
         cp.select(col("a").as("id1"), col("b").as("id2")))
       .select(col("id").as("node"), col("label").as("community"))
-      .localCheckpoint(eager = true)
     val m = cp.agg(count(lit(1)).as("m"))
     val w = cp
       .join(lab.select(col("node").as("na"), col("community").as("ca")),
@@ -1082,7 +1056,7 @@ object Graph {
        |    END, 6) AS coeff
        |FROM deg d LEFT JOIN tri t ON t.node = d.node
        |ORDER BY d.node""".stripMargin) { (s, d) =>
-    val ue = undirectedNationEdges(s, d).cache()
+    val ue = graft.Ckpt.keep(undirectedNationEdges(s, d))
     val sym = ue.select(col("a").as("c"), col("b").as("n"))
       .unionAll(ue.select(col("b").as("c"), col("a").as("n")))
     val deg = sym.groupBy(col("c").as("node")).agg(count(lit(1)).as("degree"))
@@ -1123,7 +1097,7 @@ object Graph {
        |FROM sym d LEFT JOIN
        |  (SELECT v, count(*) AS n2 FROM strict GROUP BY v) r ON r.v = d.c
        |GROUP BY d.c, r.n2 ORDER BY d.c""".stripMargin) { (s, d) =>
-    val ue = undirectedNationEdges(s, d).cache()
+    val ue = graft.Ckpt.keep(undirectedNationEdges(s, d))
     val sym = ue.select(col("a").as("c"), col("b").as("n"))
       .unionAll(ue.select(col("b").as("c"), col("a").as("n")))
     val hop2 = sym.select(col("c").as("v"), col("n").as("mid"))
@@ -1205,7 +1179,7 @@ object Graph {
          |""".stripMargin + steps +
         "\nSELECT start, s1, s2, s3 FROM w3 ORDER BY start"
     }) { (s, d) =>
-    val ue = undirectedNationEdges(s, d).cache()
+    val ue = graft.Ckpt.keep(undirectedNationEdges(s, d))
     val sym = ue.select(col("a").as("c"), col("b").as("n"))
       .unionAll(ue.select(col("b").as("c"), col("a").as("n")))
     var walk = sym.select(col("c").as("start")).distinct()
@@ -1286,7 +1260,7 @@ object Graph {
          |""".stripMargin + steps +
         "\nSELECT start, s1, s2, s3 FROM w3 ORDER BY start"
     }) { (s, d) =>
-    val ue = undirectedNationEdges(s, d).cache()
+    val ue = graft.Ckpt.keep(undirectedNationEdges(s, d))
     val sym = ue.select(col("a").as("c"), col("b").as("n"))
       .unionAll(ue.select(col("b").as("c"), col("a").as("n")))
     // step 1: uniform argmin-hash (no prev yet)
@@ -1341,15 +1315,17 @@ object Graph {
        |         ON b.src = a.dst AND b.dst = a.src) * 1.0 / count(*)
        |        * 1000000 + 0.5) / 1000000 AS reciprocity
        |FROM e""".stripMargin) { (s, d) =>
-    val e = nationEdges(s, d).filter(col("src") =!= col("dst")).cache()
-    val rec = e.as("a")
-      .join(e.as("b"),
-        col("b.src") === col("a.dst") && col("b.dst") === col("a.src"))
-      .count()
-    val n = e.count()
-    import s.implicits._
-    Seq((n, rec, math.floor(rec * 1.0 / n * 1000000 + 0.5) / 1000000))
-      .toDF("n_edges", "n_reciprocal", "reciprocity")
+    graft.Ckpt.scoped { sc =>
+      val e = sc.persist(nationEdges(s, d).filter(col("src") =!= col("dst")))
+      val rec = e.as("a")
+        .join(e.as("b"),
+          col("b.src") === col("a.dst") && col("b.dst") === col("a.src"))
+        .count()
+      val n = e.count()
+      import s.implicits._
+      Seq((n, rec, math.floor(rec * 1.0 / n * 1000000 + 0.5) / 1000000))
+        .toDF("n_edges", "n_reciprocal", "reciprocity")
+    }
   }
 
   private val SccRounds = 6
@@ -1397,22 +1373,18 @@ object Graph {
   /** Fixed-round directed reachability closure over an edge relation:
     * pairs (a, b) with a path a→b of length ≤ rounds (plus a→a).
     */
-  def reachClosure(edges: DataFrame, rounds: Int): DataFrame = {
-    val e = edges.select(col("src"), col("dst")).distinct().cache()
-    val v = e.select(col("src").as("n"))
-      .union(e.select(col("dst").as("n"))).distinct()
-    var reach = v.select(col("n").as("a"), col("n").as("b"))
-    var last: DataFrame = null
-    for (i <- 1 to rounds) {
-      reach = reach
-        .unionAll(reach.join(e, col("b") === col("src"))
-          .select(col("a"), col("dst").as("b")))
-        .distinct()
-      if (i % 2 == 0 || i == rounds) { reach = graft.Ckpt.roll(reach, last); last = reach }
+  def reachClosure(edges: DataFrame, rounds: Int): DataFrame =
+    graft.Ckpt.scoped { sc =>
+      val e = sc.persist(edges.select(col("src"), col("dst")).distinct())
+      val v = e.select(col("src").as("n"))
+        .union(e.select(col("dst").as("n"))).distinct()
+      sc.keep(sc.iterate(v.select(col("n").as("a"), col("n").as("b")), rounds, 2) { (reach, _) =>
+        reach
+          .unionAll(reach.join(e, col("b") === col("src"))
+            .select(col("a"), col("dst").as("b")))
+          .distinct()
+      })
     }
-    e.unpersist(false)
-    reach
-  }
 
   private val BrandesDepth = 4
 
@@ -1476,56 +1448,53 @@ object Graph {
            |  floor(sum(delta) / 2 * 10000 + 0.5) / 10000 AS bc
            |FROM ($unions) GROUP BY v ORDER BY v""".stripMargin
     }) { (s, d) =>
-    val ue = undirectedNationEdges(s, d).cache()
-    val sym = ue.select(col("a").as("c"), col("b").as("n"))
-      .unionAll(ue.select(col("b").as("c"), col("a").as("n"))).cache()
-    val nodes = sym.select(col("c")).distinct()
-    // forward: lv(i) = (src, v, sigma) at BFS depth i
-    val lv = new Array[DataFrame](BrandesDepth + 1)
-    lv(0) = nodes.select(col("c").as("src"), col("c").as("v"),
-      lit(1L).as("sigma")).cache()
-    var visited = lv(0).select(col("src"), col("v")).cache()
-    var lastVisited: DataFrame = null
-    for (i <- 1 to BrandesDepth) {
-      val f = lv(i - 1).select(col("src"), col("v").as("fv"), col("sigma"))
-      val cand = f.join(sym, col("fv") === col("c"))
-        .groupBy(col("src"), col("n").as("v"))
-        .agg(sum(col("sigma")).as("sigma"))
-      lv(i) = cand.join(visited, Seq("src", "v"), "left_anti")
-        .localCheckpoint(eager = true) // kept: the backward phase reads every level
-      visited = graft.Ckpt.roll(
-        visited.unionAll(lv(i).select(col("src"), col("v"))), lastVisited)
-      lastVisited = visited
+    graft.Ckpt.scoped { sc =>
+      val ue = sc.persist(undirectedNationEdges(s, d))
+      val sym = sc.persist(ue.select(col("a").as("c"), col("b").as("n"))
+        .unionAll(ue.select(col("b").as("c"), col("a").as("n"))))
+      val nodes = sym.select(col("c")).distinct()
+      // forward: lv(i) = (src, v, sigma) at BFS depth i
+      val lv = new Array[DataFrame](BrandesDepth + 1)
+      lv(0) = sc.persist(nodes.select(col("c").as("src"), col("c").as("v"),
+        lit(1L).as("sigma")))
+      var visited = sc.persist(lv(0).select(col("src"), col("v")))
+      for (i <- 1 to BrandesDepth) {
+        val f = lv(i - 1).select(col("src"), col("v").as("fv"), col("sigma"))
+        val cand = f.join(sym, col("fv") === col("c"))
+          .groupBy(col("src"), col("n").as("v"))
+          .agg(sum(col("sigma")).as("sigma"))
+        // every level is held: the backward phase reads them all
+        lv(i) = sc.checkpoint(cand.join(visited, Seq("src", "v"), "left_anti"))
+        visited = sc.roll(visited.unionAll(lv(i).select(col("src"), col("v"))), visited)
+      }
+      sc.free(visited)
+      // backward: dl(i) = (src, v, delta) over exactly lv(i)'s rows
+      val dl = new Array[DataFrame](BrandesDepth + 1)
+      dl(BrandesDepth) = lv(BrandesDepth)
+        .select(col("src"), col("v"), lit(0.0).as("delta"))
+      for (i <- BrandesDepth - 1 to 1 by -1) {
+        val a = lv(i).select(col("src"), col("v"), col("sigma"))
+        val b = lv(i + 1).select(col("src").as("bs"), col("v").as("bv"),
+          col("sigma").as("bsigma"))
+        val dn = dl(i + 1).select(col("src").as("ds"), col("v").as("dv"),
+          col("delta").as("dnext"))
+        val contrib = a.join(sym, col("v") === col("c"))
+          .join(b, col("src") === col("bs") && col("n") === col("bv"))
+          .join(dn, col("src") === col("ds") && col("n") === col("dv"))
+          .groupBy(col("src"), col("v"))
+          .agg(sum(col("sigma").cast("double") / col("bsigma") *
+            (lit(1.0) + col("dnext"))).as("delta"))
+        dl(i) = sc.checkpoint(a.select(col("src"), col("v"))
+          .join(contrib, Seq("src", "v"), "left_outer")
+          .select(col("src"), col("v"),
+            coalesce(col("delta"), lit(0.0)).as("delta")))
+      }
+      sc.keep((1 to BrandesDepth).map(i => dl(i).select(col("v"), col("delta")))
+        .reduce(_ unionAll _)
+        .groupBy(col("v").as("node"))
+        .agg((floor(sum(col("delta")) / 2 * 10000 + 0.5) / 10000).as("bc"))
+        .orderBy(col("node")))
     }
-    graft.Ckpt.free(visited)
-    // backward: dl(i) = (src, v, delta) over exactly lv(i)'s rows
-    val dl = new Array[DataFrame](BrandesDepth + 1)
-    dl(BrandesDepth) = lv(BrandesDepth)
-      .select(col("src"), col("v"), lit(0.0).as("delta"))
-    for (i <- BrandesDepth - 1 to 1 by -1) {
-      val a = lv(i).select(col("src"), col("v"), col("sigma"))
-      val b = lv(i + 1).select(col("src").as("bs"), col("v").as("bv"),
-        col("sigma").as("bsigma"))
-      val dn = dl(i + 1).select(col("src").as("ds"), col("v").as("dv"),
-        col("delta").as("dnext"))
-      val contrib = a.join(sym, col("v") === col("c"))
-        .join(b, col("src") === col("bs") && col("n") === col("bv"))
-        .join(dn, col("src") === col("ds") && col("n") === col("dv"))
-        .groupBy(col("src"), col("v"))
-        .agg(sum(col("sigma").cast("double") / col("bsigma") *
-          (lit(1.0) + col("dnext"))).as("delta"))
-      dl(i) = a.select(col("src"), col("v"))
-        .join(contrib, Seq("src", "v"), "left_outer")
-        .select(col("src"), col("v"),
-          coalesce(col("delta"), lit(0.0)).as("delta"))
-        .localCheckpoint(eager = true)
-    }
-    ue.unpersist(false); sym.unpersist(false); lv(0).unpersist(false)
-    (1 to BrandesDepth).map(i => dl(i).select(col("v"), col("delta")))
-      .reduce(_ unionAll _)
-      .groupBy(col("v").as("node"))
-      .agg((floor(sum(col("delta")) / 2 * 10000 + 0.5) / 10000).as("bc"))
-      .orderBy(col("node"))
   }
 
   /** Louvain community detection, level 1 (Blondel et al. 2008) —
@@ -1669,7 +1638,7 @@ object Graph {
     */
   def louvainLabelsArtifact(s: SparkSession, d: String): DataFrame =
     stagedEdges(s, d, "louvain_labels") {
-      louvainLabels(s, copurchaseEdges(s, d).localCheckpoint(eager = true))
+      graft.Ckpt.scoped(sc => louvainLabels(s, sc.checkpoint(copurchaseEdges(s, d))))
     }
 
   /** Louvain level-1 local moves + modularity readout over an
@@ -1685,16 +1654,14 @@ object Graph {
     * set — the local-move loop of louvainReadout, exposed so
     * graph_conductance can score the same partition.
     */
-  def louvainLabels(s: SparkSession, cp: DataFrame): DataFrame = {
-    val edges = cp.select(col("a").as("src"), col("b").as("dst"))
-      .unionAll(cp.select(col("b").as("src"), col("a").as("dst")))
-      .localCheckpoint(eager = true) // symmetric, unit weights
-    val deg = edges.groupBy(col("src")).agg(count(lit(1)).cast("double").as("k"))
-      .localCheckpoint(eager = true)
+  def louvainLabels(s: SparkSession, cp: DataFrame): DataFrame = graft.Ckpt.scoped { sc =>
+    val edges = sc.checkpoint(cp.select(col("a").as("src"), col("b").as("dst"))
+      .unionAll(cp.select(col("b").as("src"), col("a").as("dst")))) // symmetric, unit weights
+    val deg = sc.checkpoint(
+      edges.groupBy(col("src")).agg(count(lit(1)).cast("double").as("k")))
     val m2 = deg.agg(sum(col("k")).as("m2")) // 2m, single row
-    var labels = deg.select(col("src").as("node"), col("src").as("c"))
-    var lastLabels: DataFrame = null
-    for (round <- 1 to 6) {
+    val init = deg.select(col("src").as("node"), col("src").as("c"))
+    sc.keep(sc.iterate(init, 6, 1) { (labels, round) =>
       // k_in: weight from each node into each neighboring community
       val kin = edges
         .join(labels.select(col("node").as("dn"), col("c").as("dc")),
@@ -1731,15 +1698,11 @@ object Graph {
           (col("k_in") - col("ki") *
             (col("tot") - when(col("cand") === col("ci"), col("ki"))
               .otherwise(lit(0.0))) / col("m2")).as("gain"))
-      labels = graft.Ckpt.roll(scored
+      scored
         .groupBy(col("i"))
         .agg(max(struct(col("gain"), (-col("cand")).as("nc"))).as("best"))
-        .select(col("i").as("node"), (-col("best.nc")).as("c")),
-        lastLabels)
-      lastLabels = labels
-    }
-    graft.Ckpt.free(edges); graft.Ckpt.free(deg)
-    labels
+        .select(col("i").as("node"), (-col("best.nc")).as("c"))
+    })
   }
 
   /** Per-community modularity readout over given labels. */
@@ -1813,11 +1776,10 @@ object Graph {
   def conductance(s: SparkSession, cp: DataFrame, labels: DataFrame): DataFrame = {
     val la = labels.select(col("node").as("na"), col("c").as("ca"))
     val lb = labels.select(col("node").as("nb"), col("c").as("cb"))
-    val tagged = cp
+    val tagged = graft.Ckpt.keep(cp
       .join(la, col("a") === col("na"))
       .join(lb, col("b") === col("nb"))
-      .select(col("ca"), col("cb"))
-      .localCheckpoint(eager = true)
+      .select(col("ca"), col("cb")))
     val m2 = tagged.count() * 2.0 // 2m (each edge contributes 2 volume)
     // volume per community: degree mass = edge endpoints in C
     val vol = tagged.select(col("ca").as("c")).unionAll(tagged.select(col("cb")))
@@ -1881,38 +1843,36 @@ object Graph {
          |WHERE a < b AND round(s, 6) > 0
          |ORDER BY simrank DESC, a, b LIMIT 20""".stripMargin
     }) { (s, d) =>
-    val e = nationEdges(s, d).localCheckpoint(eager = true)
-    val v = e.select(col("src").as("node"))
-      .union(e.select(col("dst"))).distinct()
-    val ind = e.groupBy(col("dst").as("node"))
-      .agg(count(lit(1)).cast("double").as("ind"))
-    // O(|V|²) pair frame over the bounded entity graph (25 nodes)
-    val pairs = v.toDF("a").crossJoin(v.toDF("b"))
-    var sim = pairs.withColumn("s",
-      when(col("a") === col("b"), 1.0).otherwise(0.0))
-    var lastSim: DataFrame = null
-    for (_ <- 1 to SimIters) {
-      val agg = sim.toDF("sa", "sb", "sv")
-        .join(e.toDF("ia", "a2"), col("sa") === col("ia"))
-        .join(e.toDF("jb", "b2"), col("sb") === col("jb"))
-        .groupBy(col("a2"), col("b2")).agg(sum(col("sv")).as("t"))
-      sim = pairs
-        .join(broadcast(ind.toDF("na", "inda")), col("a") === col("na"), "left_outer")
-        .join(broadcast(ind.toDF("nb", "indb")), col("b") === col("nb"), "left_outer")
-        .join(agg, col("a") === col("a2") && col("b") === col("b2"), "left_outer")
-        .select(col("a"), col("b"),
-          when(col("a") === col("b"), 1.0)
-            .otherwise(coalesce(
-              lit(SimC) * col("t") / (col("inda") * col("indb")), lit(0.0)))
-            .as("s"))
-        .localCheckpoint(eager = true)
-      graft.Ckpt.free(lastSim); lastSim = sim
+    graft.Ckpt.scoped { sc =>
+      val e = sc.checkpoint(nationEdges(s, d))
+      val v = e.select(col("src").as("node"))
+        .union(e.select(col("dst"))).distinct()
+      val ind = e.groupBy(col("dst").as("node"))
+        .agg(count(lit(1)).cast("double").as("ind"))
+      // O(|V|²) pair frame over the bounded entity graph (25 nodes)
+      val pairs = v.toDF("a").crossJoin(v.toDF("b"))
+      val init = pairs.withColumn("s",
+        when(col("a") === col("b"), 1.0).otherwise(0.0))
+      val sim = sc.keep(sc.iterate(init, SimIters, 1) { (sim, _) =>
+        val agg = sim.toDF("sa", "sb", "sv")
+          .join(e.toDF("ia", "a2"), col("sa") === col("ia"))
+          .join(e.toDF("jb", "b2"), col("sb") === col("jb"))
+          .groupBy(col("a2"), col("b2")).agg(sum(col("sv")).as("t"))
+        pairs
+          .join(broadcast(ind.toDF("na", "inda")), col("a") === col("na"), "left_outer")
+          .join(broadcast(ind.toDF("nb", "indb")), col("b") === col("nb"), "left_outer")
+          .join(agg, col("a") === col("a2") && col("b") === col("b2"), "left_outer")
+          .select(col("a"), col("b"),
+            when(col("a") === col("b"), 1.0)
+              .otherwise(coalesce(
+                lit(SimC) * col("t") / (col("inda") * col("indb")), lit(0.0)))
+              .as("s"))
+      })
+      sim.filter(col("a") < col("b") && round(col("s"), 6) > 0)
+        .select(col("a"), col("b"), round(col("s"), 6).as("simrank"))
+        .orderBy(col("simrank").desc, col("a"), col("b"))
+        .limit(20)
     }
-    graft.Ckpt.free(e)
-    sim.filter(col("a") < col("b") && round(col("s"), 6) > 0)
-      .select(col("a"), col("b"), round(col("s"), 6).as("simrank"))
-      .orderBy(col("simrank").desc, col("a"), col("b"))
-      .limit(20)
   }
 
   /** Eccentricity / diameter / radius — the graph's "how far can a
@@ -1950,33 +1910,32 @@ object Graph {
          |  CAST(ecc = (SELECT min(ecc) FROM ecc) AS BOOLEAN) AS is_central
          |FROM ecc ORDER BY node""".stripMargin
     QueryDef.sql("graph_eccentricity", oracle) { (s, d) =>
-      val ue = undirectedNationEdges(s, d)
-      val sym = ue.select(col("a"), col("b"))
-        .union(ue.select(col("b").as("a"), col("a").as("b")))
-        .distinct().cache()
-      val vertices = sym.select(col("a").as("node"))
-        .union(sym.select(col("b").as("node"))).distinct()
-      var hops = vertices.select(col("node").as("src"), col("node"),
-        lit(0).as("hops"))
-      var last: DataFrame = null
-      for (i <- 1 to iters) {
-        val expanded = hops
-          .join(sym, col("node") === col("a"))
-          .select(col("src"), col("b").as("node"), (col("hops") + 1).as("hops"))
-        hops = hops.unionAll(expanded)
-          .groupBy(col("src"), col("node")).agg(min(col("hops")).as("hops"))
-        hops = graft.Ckpt.roll(hops, last); last = hops
+      graft.Ckpt.scoped { sc =>
+        val ue = undirectedNationEdges(s, d)
+        val sym = sc.persist(ue.select(col("a"), col("b"))
+          .union(ue.select(col("b").as("a"), col("a").as("b")))
+          .distinct())
+        val vertices = sym.select(col("a").as("node"))
+          .union(sym.select(col("b").as("node"))).distinct()
+        val init = vertices.select(col("node").as("src"), col("node"),
+          lit(0).as("hops"))
+        val hops = sc.iterate(init, iters, 1) { (hops, _) =>
+          val expanded = hops
+            .join(sym, col("node") === col("a"))
+            .select(col("src"), col("b").as("node"), (col("hops") + 1).as("hops"))
+          hops.unionAll(expanded)
+            .groupBy(col("src"), col("node")).agg(min(col("hops")).as("hops"))
+        }
+        val ecc = hops.groupBy(col("src").as("node"))
+          .agg(max(col("hops")).as("ecc"))
+        val summary = ecc.agg(max(col("ecc")).as("diameter"),
+          min(col("ecc")).as("radius"))
+        sc.keep(ecc.crossJoin(broadcast(summary))
+          .select(col("node"), col("ecc"),
+            (col("ecc") === col("diameter")).as("is_peripheral"),
+            (col("ecc") === col("radius")).as("is_central"))
+          .orderBy(col("node")))
       }
-      sym.unpersist(false)
-      val ecc = hops.groupBy(col("src").as("node"))
-        .agg(max(col("hops")).as("ecc"))
-      val summary = ecc.agg(max(col("ecc")).as("diameter"),
-        min(col("ecc")).as("radius"))
-      ecc.crossJoin(broadcast(summary))
-        .select(col("node"), col("ecc"),
-          (col("ecc") === col("diameter")).as("is_peripheral"),
-          (col("ecc") === col("radius")).as("is_central"))
-        .orderBy(col("node"))
     }
   }
 
@@ -2019,36 +1978,34 @@ object Graph {
          |  CAST(n_reached AS BIGINT) AS n_reached
          |FROM acc, nv ORDER BY node""".stripMargin
     QueryDef.sql("graph_harmonic", oracle) { (s, d) =>
-      val ue = undirectedNationEdges(s, d)
-      val sym = ue.select(col("a"), col("b"))
-        .union(ue.select(col("b").as("a"), col("a").as("b")))
-        .distinct().cache()
-      val vertices = sym.select(col("a").as("node"))
-        .union(sym.select(col("b").as("node"))).distinct()
-      var hops = vertices.select(col("node").as("src"), col("node"),
-        lit(0).as("hops"))
-      var last: DataFrame = null
-      for (i <- 1 to iters) {
-        val expanded = hops
-          .join(sym, col("node") === col("a"))
-          .select(col("src"), col("b").as("node"), (col("hops") + 1).as("hops"))
-        hops = hops.unionAll(expanded)
-          .groupBy(col("src"), col("node")).agg(min(col("hops")).as("hops"))
-        hops = graft.Ckpt.roll(hops, last); last = hops
+      graft.Ckpt.scoped { sc =>
+        val ue = undirectedNationEdges(s, d)
+        val sym = sc.persist(ue.select(col("a"), col("b"))
+          .union(ue.select(col("b").as("a"), col("a").as("b")))
+          .distinct())
+        val vertices = sym.select(col("a").as("node"))
+          .union(sym.select(col("b").as("node"))).distinct()
+        val init = vertices.select(col("node").as("src"), col("node"),
+          lit(0).as("hops"))
+        val hops = sc.iterate(init, iters, 1) { (hops, _) =>
+          val expanded = hops
+            .join(sym, col("node") === col("a"))
+            .select(col("src"), col("b").as("node"), (col("hops") + 1).as("hops"))
+          hops.unionAll(expanded)
+            .groupBy(col("src"), col("node")).agg(min(col("hops")).as("hops"))
+        }
+        val nv = sc.checkpoint(vertices.agg(count(lit(1)).as("n_v")))
+        sc.keep(hops.groupBy(col("src").as("node"))
+          .agg(
+            sum(when(col("hops") > 0, expr("12 div hops")).otherwise(0L)).as("h12"),
+            sum(when(col("hops") > 0, 1L).otherwise(0L)).as("n_reached"))
+          .crossJoin(broadcast(nv))
+          .select(col("node"),
+            (floor(col("h12").cast("double") / 12 / (col("n_v") - 1) * 10000
+              + 0.5) / 10000).as("harmonic"),
+            col("n_reached").cast("long").as("n_reached"))
+          .orderBy(col("node")))
       }
-      val nv = vertices.agg(count(lit(1)).as("n_v"))
-        .localCheckpoint(eager = true)
-      sym.unpersist(false)
-      hops.groupBy(col("src").as("node"))
-        .agg(
-          sum(when(col("hops") > 0, expr("12 div hops")).otherwise(0L)).as("h12"),
-          sum(when(col("hops") > 0, 1L).otherwise(0L)).as("n_reached"))
-        .crossJoin(broadcast(nv))
-        .select(col("node"),
-          (floor(col("h12").cast("double") / 12 / (col("n_v") - 1) * 10000
-            + 0.5) / 10000).as("harmonic"),
-          col("n_reached").cast("long").as("n_reached"))
-        .orderBy(col("node"))
     }
   }
 
@@ -2105,14 +2062,14 @@ object Graph {
             col("s2a") === col("b") && col("c2") === col("c1"))
           .groupBy(col("a"), col("b")).agg(count(lit(1)).as("support"))
       }
-      var edges = undirectedNationEdges(s, d).localCheckpoint(eager = true)
-      for (_ <- 1 to KtrussRounds) {
-        val prev = edges
-        edges = graft.Ckpt.roll(supportOf(edges)
-          .filter(col("support") >= support)
-          .select(col("a"), col("b")), prev)
+      graft.Ckpt.scoped { sc =>
+        val edges = sc.iterate(sc.checkpoint(undirectedNationEdges(s, d)), KtrussRounds, 1) {
+          (edges, _) => supportOf(edges)
+            .filter(col("support") >= support)
+            .select(col("a"), col("b"))
+        }
+        supportOf(sc.keep(edges)).orderBy(col("a"), col("b"))
       }
-      supportOf(edges).orderBy(col("a"), col("b"))
     }
   }
 
@@ -2165,47 +2122,42 @@ object Graph {
          |FROM v LEFT JOIN mis ON mis.node = v.node
          |ORDER BY v.node""".stripMargin
     QueryDef.sql("graph_mis", oracle) { (s, d) =>
-      val ue = undirectedNationEdges(s, d)
-      val sym = ue.select(col("a"), col("b"))
-        .union(ue.select(col("b").as("a"), col("a").as("b")))
-        .distinct().cache()
-      val vertices = sym.select(col("a").as("node"))
-        .union(sym.select(col("b").as("node"))).distinct()
-        .localCheckpoint(eager = true)
-      var active = vertices
-      var lastActive: DataFrame = null
-      var mis: DataFrame = null
-      for (i <- 1 to MisRounds) {
-        val p = active.withColumn("pri",
-          md5(concat_ws(":", lit(i.toString), col("node").cast("string"))))
-        val p2 = p.select(col("node").as("bnode"), col("pri").as("bpri"))
-        val nmin = sym
-          .join(p.select(col("node").as("anode"), col("pri").as("apri")),
-            col("anode") === col("a"))
-          .join(p2, col("bnode") === col("b"))
-          .groupBy(col("anode").as("nnode")).agg(min(col("bpri")).as("nmin"))
-        val winners = p.join(nmin, col("node") === col("nnode"), "left_outer")
-          .filter(col("nmin").isNull || col("pri") < col("nmin"))
-          .select(col("node"))
-          .localCheckpoint(eager = true)
-        val w = winners.withColumn("mis_round", lit(i.toLong))
-        mis = if (mis == null) w else mis.unionAll(w)
-        val retired = winners
-          .unionAll(sym.join(winners.withColumnRenamed("node", "wn"),
-            col("wn") === col("a"), "left_semi").select(col("b").as("node")))
-          .distinct()
-        active = graft.Ckpt.roll(
-          active.join(retired.withColumnRenamed("node", "rn"),
-            col("rn") === col("node"), "left_anti"), lastActive)
-        lastActive = active
+      graft.Ckpt.scoped { sc =>
+        val ue = undirectedNationEdges(s, d)
+        val sym = sc.persist(ue.select(col("a"), col("b"))
+          .union(ue.select(col("b").as("a"), col("a").as("b")))
+          .distinct())
+        val vertices = sc.keep(sym.select(col("a").as("node"))
+          .union(sym.select(col("b").as("node"))).distinct())
+        var active = vertices
+        var mis = Seq.empty[DataFrame]
+        for (i <- 1 to MisRounds) {
+          val p = active.withColumn("pri",
+            md5(concat_ws(":", lit(i.toString), col("node").cast("string"))))
+          val p2 = p.select(col("node").as("bnode"), col("pri").as("bpri"))
+          val nmin = sym
+            .join(p.select(col("node").as("anode"), col("pri").as("apri")),
+              col("anode") === col("a"))
+            .join(p2, col("bnode") === col("b"))
+            .groupBy(col("anode").as("nnode")).agg(min(col("bpri")).as("nmin"))
+          val winners = sc.keep(p.join(nmin, col("node") === col("nnode"), "left_outer")
+            .filter(col("nmin").isNull || col("pri") < col("nmin"))
+            .select(col("node")))
+          mis :+= winners.withColumn("mis_round", lit(i.toLong))
+          val retired = winners
+            .unionAll(sym.join(winners.withColumnRenamed("node", "wn"),
+              col("wn") === col("a"), "left_semi").select(col("b").as("node")))
+            .distinct()
+          active = sc.roll(
+            active.join(retired.withColumnRenamed("node", "rn"),
+              col("rn") === col("node"), "left_anti"), active)
+        }
+        vertices.join(mis.reduce(_ unionAll _).withColumnRenamed("node", "mn"),
+            col("mn") === col("node"), "left_outer")
+          .select(col("node"), col("mis_round").isNotNull.as("in_mis"),
+            col("mis_round"))
+          .orderBy(col("node"))
       }
-      graft.Ckpt.free(active)
-      sym.unpersist(false)
-      vertices.join(mis.withColumnRenamed("node", "mn"),
-          col("mn") === col("node"), "left_outer")
-        .select(col("node"), col("mis_round").isNotNull.as("in_mis"),
-          col("mis_round"))
-        .orderBy(col("node"))
     }
   }
 
@@ -2318,71 +2270,66 @@ object Graph {
 
   val graphColoring: QueryDef = QueryDef.sql(
     "graph_coloring", coloringOracle(64)) { (s, d) =>
-    import s.implicits._
-    val ed = intervalConflictEdges(s, d)
-      .select(col("a").cast("string").as("a"), col("b").cast("string").as("b"))
-    val sym = ed.union(ed.select(col("b").as("a"), col("a").as("b")))
-      .distinct().cache()
-    var active = sym.select(col("a").as("node")).distinct()
-      .withColumn("pri", md5(col("node")))
-      .localCheckpoint(eager = true)
-    var colored = Seq.empty[(String, Int)].toDF("node", "color")
-    var lastColored: DataFrame = null
-    val pendingNewly = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var remaining = active.count()
-    var round = 0
-    while (remaining > 0 && round < 64) {
-      round += 1
-      // highest active-neighbor priority per node
-      val nbrMax = sym
-        .join(active.select(col("node").as("bn"), col("pri").as("bpri")),
-          col("bn") === col("b"))
-        .groupBy(col("a").as("nnode")).agg(max(col("bpri")).as("nmax"))
-      val winners = active
-        .join(nbrMax, col("node") === col("nnode"), "left_outer")
-        .filter(col("nmax").isNull || col("pri") > col("nmax"))
-        .select(col("node"))
-      // smallest color not used by any already-colored neighbor
-      val nbrColors = sym
-        .join(colored.select(col("node").as("cn"), col("color").as("bc")),
-          col("cn") === col("b"))
-        .select(col("a").as("wn"), col("bc"))
-      val newly = winners
-        .join(nbrColors, col("wn") === col("node"), "left_outer")
-        .groupBy(col("node")).agg(collect_set(col("bc")).as("cs"))
-        .withColumn("color",
-          element_at(filter(sequence(lit(0), size(col("cs"))),
-            i => !array_contains(col("cs"), i)), 1))
-        .select(col("node"), col("color"))
-        .localCheckpoint(eager = true)
-      remaining -= newly.count()
-      colored = colored.unionAll(newly)
-      pendingNewly += newly
-      // next-round active must materialize BEFORE any newly
-      // checkpoint is freed (its anti-join reads this round's newly)
-      active = graft.Ckpt.roll(
-        active.join(newly.select(col("node").as("dn")),
-          col("dn") === col("node"), "left_anti"), active)
-      // colored's union tree references every round's `newly`
-      // checkpoint, so those may only be freed once a periodic
-      // colored checkpoint absorbs them (lineage truncation).
-      if (round % 4 == 0) {
-        colored = graft.Ckpt.roll(colored, lastColored); lastColored = colored
-        pendingNewly.foreach(graft.Ckpt.free); pendingNewly.clear()
+    graft.Ckpt.scoped { sc =>
+      import s.implicits._
+      val ed = intervalConflictEdges(s, d)
+        .select(col("a").cast("string").as("a"), col("b").cast("string").as("b"))
+      val sym = sc.persist(ed.union(ed.select(col("b").as("a"), col("a").as("b")))
+        .distinct())
+      var active = sc.checkpoint(sym.select(col("a").as("node")).distinct()
+        .withColumn("pri", md5(col("node"))))
+      var colored = Seq.empty[(String, Int)].toDF("node", "color")
+      // the checkpoints colored's union tree reads: this round's `newly`
+      // frames since its last checkpoint, and that checkpoint
+      val absorbed = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      var remaining = active.count()
+      var round = 0
+      while (remaining > 0 && round < 64) {
+        round += 1
+        // highest active-neighbor priority per node
+        val nbrMax = sym
+          .join(active.select(col("node").as("bn"), col("pri").as("bpri")),
+            col("bn") === col("b"))
+          .groupBy(col("a").as("nnode")).agg(max(col("bpri")).as("nmax"))
+        val winners = active
+          .join(nbrMax, col("node") === col("nnode"), "left_outer")
+          .filter(col("nmax").isNull || col("pri") > col("nmax"))
+          .select(col("node"))
+        // smallest color not used by any already-colored neighbor
+        val nbrColors = sym
+          .join(colored.select(col("node").as("cn"), col("color").as("bc")),
+            col("cn") === col("b"))
+          .select(col("a").as("wn"), col("bc"))
+        val newly = sc.checkpoint(winners
+          .join(nbrColors, col("wn") === col("node"), "left_outer")
+          .groupBy(col("node")).agg(collect_set(col("bc")).as("cs"))
+          .withColumn("color",
+            element_at(filter(sequence(lit(0), size(col("cs"))),
+              i => !array_contains(col("cs"), i)), 1))
+          .select(col("node"), col("color")))
+        remaining -= newly.count()
+        colored = colored.unionAll(newly)
+        absorbed += newly
+        active = sc.roll(
+          active.join(newly.select(col("node").as("dn")),
+            col("dn") === col("node"), "left_anti"), active)
+        if (round % 4 == 0) {
+          colored = sc.checkpoint(colored)
+          absorbed.foreach(sc.free); absorbed.clear(); absorbed += colored
+        }
       }
+      // cap exhaustion must be an explicit failure, never a silently
+      // PARTIAL coloring that downstream reads as proper (the dense
+      // bipartite graph once drained only 858/1600 nodes in 64 rounds)
+      require(remaining == 0,
+        s"graph_coloring: $remaining node(s) uncolored after $round rounds — " +
+          "the conflict graph is too dense for the round cap; raise it or " +
+          "sparsify the edge projection")
+      absorbed.foreach(sc.keep(_))
+      colored
+        .select(col("node").cast("long").as("o_orderkey"), col("color"))
+        .orderBy(col("o_orderkey"))
     }
-    graft.Ckpt.free(active)
-    sym.unpersist(false)
-    // cap exhaustion must be an explicit failure, never a silently
-    // PARTIAL coloring that downstream reads as proper (the dense
-    // bipartite graph once drained only 858/1600 nodes in 64 rounds)
-    require(remaining == 0,
-      s"graph_coloring: $remaining node(s) uncolored after $round rounds — " +
-        "the conflict graph is too dense for the round cap; raise it or " +
-        "sparsify the edge projection")
-    colored
-      .select(col("node").cast("long").as("o_orderkey"), col("color"))
-      .orderBy(col("o_orderkey"))
   }
 
   private val MatchRounds = 8
@@ -2435,34 +2382,32 @@ object Graph {
          |SELECT a AS custkey, b AS suppkey, CAST(match_round AS BIGINT) AS match_round
          |FROM m ORDER BY custkey""".stripMargin
     QueryDef.sql("graph_matching", oracle) { (s, d) =>
-      var active = tradeEdges(s, d)
-        .select(col("src").as("a"), col("dst").as("b"))
-        .localCheckpoint(eager = true)
-      var matched: DataFrame = null
-      for (i <- 1 to MatchRounds) {
-        val p = active.withColumn("pri",
-          md5(concat_ws(":", lit(i.toString),
-            col("a").cast("string"), col("b").cast("string"))))
-        val na = p.groupBy(col("a").as("xa")).agg(min(col("pri")).as("xm"))
-        val nb = p.groupBy(col("b").as("yb")).agg(min(col("pri")).as("ym"))
-        val w = p
-          .join(na, col("xa") === col("a") && col("xm") === col("pri"))
-          .join(nb, col("yb") === col("b") && col("ym") === col("pri"))
-          .select(col("a"), col("b"))
-          .localCheckpoint(eager = true)
-        val wr = w.withColumn("match_round", lit(i.toLong))
-        matched = if (matched == null) wr else matched.unionAll(wr)
-        active = graft.Ckpt.roll(active
-          .join(w.select(col("a").as("wa")).distinct(),
-            col("wa") === col("a"), "left_anti")
-          .join(w.select(col("b").as("wb")).distinct(),
-            col("wb") === col("b"), "left_anti"), active)
+      graft.Ckpt.scoped { sc =>
+        var active = sc.checkpoint(tradeEdges(s, d)
+          .select(col("src").as("a"), col("dst").as("b")))
+        var matched = Seq.empty[DataFrame]
+        for (i <- 1 to MatchRounds) {
+          val p = active.withColumn("pri",
+            md5(concat_ws(":", lit(i.toString),
+              col("a").cast("string"), col("b").cast("string"))))
+          val na = p.groupBy(col("a").as("xa")).agg(min(col("pri")).as("xm"))
+          val nb = p.groupBy(col("b").as("yb")).agg(min(col("pri")).as("ym"))
+          val w = sc.keep(p
+            .join(na, col("xa") === col("a") && col("xm") === col("pri"))
+            .join(nb, col("yb") === col("b") && col("ym") === col("pri"))
+            .select(col("a"), col("b")))
+          matched :+= w.withColumn("match_round", lit(i.toLong))
+          active = sc.roll(active
+            .join(w.select(col("a").as("wa")).distinct(),
+              col("wa") === col("a"), "left_anti")
+            .join(w.select(col("b").as("wb")).distinct(),
+              col("wb") === col("b"), "left_anti"), active)
+        }
+        matched.reduce(_ unionAll _)
+          .select(col("a").as("custkey"), col("b").as("suppkey"),
+            col("match_round"))
+          .orderBy(col("custkey"))
       }
-      graft.Ckpt.free(active)
-      matched
-        .select(col("a").as("custkey"), col("b").as("suppkey"),
-          col("match_round"))
-        .orderBy(col("custkey"))
     }
   }
 
@@ -2542,99 +2487,97 @@ object Graph {
     * BFS closure at sf0.001) within FM tolerance, and N(0) ≈ n.
     */
   val graphAnf: QueryDef = QueryDef.sql("graph_anf", anfOracle(AnfRounds)) { (s, d) =>
-    import s.implicits._
-    val e = tradeEdges(s, d)
-    // disjoint node namespace: customer 2k, supplier 2k+1
-    val und = e.select((col("src") * 2).as("u"), (col("dst") * 2 + 1).as("v"))
-    // REPARTITION BY v (the merge key): the r9 cache was scan-ordered,
-    // so every partition of the per-round msgs relation saw ~ALL nodes
-    // and the partial bit_or collapsed nothing — the merge exchange
-    // carried ~16k groups × 33 longs × 32 partitions ≈ 40 MB/round
-    // (120 MB/suite at sf0.1, the #3 shuffler). v-clustered partitions
-    // reduce the partial output to each partition's own ~n/32 nodes,
-    // an 8-10× smaller exchange for one 10 MB edge repartition.
-    // Explicit partition count — a bare repartition(col) lets AQE
-    // coalesce this ~10 MB relation to ONE partition (advisory 64 MB)
-    // and serialize every round. (The zero-exchange alternative —
-    // self-loop edges + broadcast state + alias-preserved partitioning
-    // — was measured 2-3× SLOWER per round here: it fuses the probe
-    // and both 33-column agg phases into one whole-stage method that
-    // the JIT refuses, so every round ran interpreted. Two smaller
-    // stages + a tiny exchange win; don't re-fuse this.)
-    val edges = und.union(und.select(col("v").as("u"), col("u").as("v")))
-      .repartition(s.sparkContext.defaultParallelism, col("v"))
-      .persist()
-    val mcols = (0 until AnfK).map(j => s"m$j")
-    // init: one geometric bit per (node, mask): lowest set bit of a
-    // 52-bit md5-derived hash — p with prob 2^-(p+1). md5 (not
-    // xxhash64) so the DuckDB oracle replays identical hex, and the
-    // bit position comes from EXACT integer ops (bit_count(h⊕(h−1))−1
-    // — the log2-on-a-power-of-two cast, which both engines would
-    // have to get ulp-identically right, is gone).
-    def geoBit(j: Int): Column = {
-      val h = conv(substring(md5(concat_ws(",", col("node"), lit(j))), 1, 13),
-        16, 10).cast("long")
-      call_function("shiftleft", lit(1L),
-        bit_count(h.bitwiseXOR(h - 1)) - 1)
+    graft.Ckpt.scoped { sc =>
+      import s.implicits._
+      val e = tradeEdges(s, d)
+      // disjoint node namespace: customer 2k, supplier 2k+1
+      val und = e.select((col("src") * 2).as("u"), (col("dst") * 2 + 1).as("v"))
+      // REPARTITION BY v (the merge key): the r9 cache was scan-ordered,
+      // so every partition of the per-round msgs relation saw ~ALL nodes
+      // and the partial bit_or collapsed nothing — the merge exchange
+      // carried ~16k groups × 33 longs × 32 partitions ≈ 40 MB/round
+      // (120 MB/suite at sf0.1, the #3 shuffler). v-clustered partitions
+      // reduce the partial output to each partition's own ~n/32 nodes,
+      // an 8-10× smaller exchange for one 10 MB edge repartition.
+      // Explicit partition count — a bare repartition(col) lets AQE
+      // coalesce this ~10 MB relation to ONE partition (advisory 64 MB)
+      // and serialize every round. (The zero-exchange alternative —
+      // self-loop edges + broadcast state + alias-preserved partitioning
+      // — was measured 2-3× SLOWER per round here: it fuses the probe
+      // and both 33-column agg phases into one whole-stage method that
+      // the JIT refuses, so every round ran interpreted. Two smaller
+      // stages + a tiny exchange win; don't re-fuse this.)
+      val edges = sc.persist(und.union(und.select(col("v").as("u"), col("u").as("v")))
+        .repartition(s.sparkContext.defaultParallelism, col("v")))
+      val mcols = (0 until AnfK).map(j => s"m$j")
+      // init: one geometric bit per (node, mask): lowest set bit of a
+      // 52-bit md5-derived hash — p with prob 2^-(p+1). md5 (not
+      // xxhash64) so the DuckDB oracle replays identical hex, and the
+      // bit position comes from EXACT integer ops (bit_count(h⊕(h−1))−1
+      // — the log2-on-a-power-of-two cast, which both engines would
+      // have to get ulp-identically right, is gone).
+      def geoBit(j: Int): Column = {
+        val h = conv(substring(md5(concat_ws(",", col("node"), lit(j))), 1, 13),
+          16, 10).cast("long")
+        call_function("shiftleft", lit(1L),
+          bit_count(h.bitwiseXOR(h - 1)) - 1)
+      }
+      var state = sc.checkpoint(edges.select(col("u").as("node")).distinct()
+        .select(col("node") +: (0 until AnfK).map(j => geoBit(j).as(s"m$j")): _*))
+      // size-adaptive broadcast of the O(n)×33-long state (~264 B/row):
+      // the checkpointed state scans with UNKNOWN size, so the planner
+      // would pick a sort-merge join and re-shuffle the edge cache by u
+      // — destroying the v-clustering the repartition above bought
+      // (measured: 106 MB suite shuffle via SMJ vs ~30 MB broadcast).
+      // Below the bound the join is map-side and v-clustering survives
+      // into the partial agg; above it the shuffled join is the
+      // fallback (same result — bit_or is order-free).
+      // Regime estimate: nodes × the (node, 32 masks) UnsafeRow, ×2
+      // because the broadcast is rebuilt every round while the previous
+      // round's copy is still held
+      val bcState = Regime.fits(s, "graph_anf.state",
+        state.count() * Regime.rowBytes(AnfK + 1) * 2)
+      // ball-size estimate: R = mean lowest-ZERO-bit position (exact
+      // integer sum ÷ k), est = 2^R/φ. Per-node estimates quantize to
+      // exact micro longs BEFORE the node sum so the estimate is
+      // partition-order invariant and engine-exact (Round-7 rule).
+      val lowestZero = mcols.map { m =>
+        // m ⊕ (m+1) sets all bits through the lowest ZERO bit of m
+        bit_count(col(m).bitwiseXOR(col(m) + 1)) - 1
+      }.reduce(_ + _).cast("double") / AnfK
+      def nh(st: DataFrame): Double =
+        st.select(sum(round(pow(lit(2.0), lowestZero) / lit(0.77351)
+            * lit(1000000.0), 0).cast("long")).as("n"))
+          .as[Long].collect()(0) / 1e6
+      val curve = scala.collection.mutable.ArrayBuffer(nh(state))
+      for (h <- 1 to AnfRounds) {
+        // union(state) is load-bearing for CODEGEN, not just retention:
+        // it breaks whole-stage fusion between the broadcast probe and
+        // the 33-column aggregate. The fused exchange-free alternative
+        // generated one method the JIT refused (every round ran
+        // interpreted, 2-3× slower) — keep the branches split.
+        val msgs = edges.join(if (bcState) broadcast(state) else state,
+            col("u") === col("node"))
+          .select(col("v").as("node") +: mcols.map(col): _*)
+        state = sc.roll(msgs.union(state)
+          .groupBy(col("node"))
+          .agg(bit_or(col(mcols.head)).as(mcols.head),
+            mcols.tail.map(m => bit_or(col(m)).as(m)): _*),
+          // checkpoint EVERY round, not every 3: the per-round N(h)
+          // aggregate below forces a full evaluation anyway, so an
+          // uncheckpointed round would be recomputed by the next one
+          // (1+2+3 round-executions between cuts ≈ 2-3× wasted work);
+          // the state is a slim O(n)×33-column relation. Rolling frees
+          // the replaced generation.
+          state)
+        curve += nh(state)
+      }
+      val plateau = curve.last
+      curve.toSeq.zipWithIndex.map { case (n, h) =>
+        (h, math.floor(n * 100 + 0.5) / 100,
+          math.floor(n / plateau * 10000 + 0.5) / 10000)
+      }.toDF("h", "est_pairs", "pct_of_plateau").orderBy(col("h"))
     }
-    var state = edges.select(col("u").as("node")).distinct()
-      .select(col("node") +: (0 until AnfK).map(j => geoBit(j).as(s"m$j")): _*)
-      .localCheckpoint(eager = true)
-    // size-adaptive broadcast of the O(n)×33-long state (~264 B/row):
-    // the checkpointed state scans with UNKNOWN size, so the planner
-    // would pick a sort-merge join and re-shuffle the edge cache by u
-    // — destroying the v-clustering the repartition above bought
-    // (measured: 106 MB suite shuffle via SMJ vs ~30 MB broadcast).
-    // Below the bound the join is map-side and v-clustering survives
-    // into the partial agg; above it the shuffled join is the
-    // fallback (same result — bit_or is order-free).
-    // Regime estimate: nodes × the (node, 32 masks) UnsafeRow, ×2
-    // because the broadcast is rebuilt every round while the previous
-    // round's copy is still held
-    val bcState = Regime.fits(s, "graph_anf.state",
-      state.count() * Regime.rowBytes(AnfK + 1) * 2)
-    // ball-size estimate: R = mean lowest-ZERO-bit position (exact
-    // integer sum ÷ k), est = 2^R/φ. Per-node estimates quantize to
-    // exact micro longs BEFORE the node sum so the estimate is
-    // partition-order invariant and engine-exact (Round-7 rule).
-    val lowestZero = mcols.map { m =>
-      // m ⊕ (m+1) sets all bits through the lowest ZERO bit of m
-      bit_count(col(m).bitwiseXOR(col(m) + 1)) - 1
-    }.reduce(_ + _).cast("double") / AnfK
-    def nh(st: DataFrame): Double =
-      st.select(sum(round(pow(lit(2.0), lowestZero) / lit(0.77351)
-          * lit(1000000.0), 0).cast("long")).as("n"))
-        .as[Long].collect()(0) / 1e6
-    val curve = scala.collection.mutable.ArrayBuffer(nh(state))
-    for (h <- 1 to AnfRounds) {
-      // union(state) is load-bearing for CODEGEN, not just retention:
-      // it breaks whole-stage fusion between the broadcast probe and
-      // the 33-column aggregate. The fused exchange-free alternative
-      // generated one method the JIT refused (every round ran
-      // interpreted, 2-3× slower) — keep the branches split.
-      val msgs = edges.join(if (bcState) broadcast(state) else state,
-          col("u") === col("node"))
-        .select(col("v").as("node") +: mcols.map(col): _*)
-      state = graft.Ckpt.roll(msgs.union(state)
-        .groupBy(col("node"))
-        .agg(bit_or(col(mcols.head)).as(mcols.head),
-          mcols.tail.map(m => bit_or(col(m)).as(m)): _*),
-        // checkpoint EVERY round, not every 3: the per-round N(h)
-        // aggregate below forces a full evaluation anyway, so an
-        // uncheckpointed round would be recomputed by the next one
-        // (1+2+3 round-executions between cuts ≈ 2-3× wasted work);
-        // the state is a slim O(n)×33-column relation. Rolling frees
-        // the replaced generation.
-        state)
-      curve += nh(state)
-    }
-    graft.Ckpt.free(state)
-    edges.unpersist(false)
-    val plateau = curve.last
-    curve.toSeq.zipWithIndex.map { case (n, h) =>
-      (h, math.floor(n * 100 + 0.5) / 100,
-        math.floor(n / plateau * 10000 + 0.5) / 10000)
-    }.toDF("h", "est_pairs", "pct_of_plateau").orderBy(col("h"))
   }
 
   /** Full per-supplier butterfly counts over the repeat-trade
@@ -2721,15 +2664,14 @@ object Graph {
     // hop-0: sparse random projection row per node, ±1/√d signs —
     // md5 parity (not xxhash64) so the DuckDB oracle replays the
     // sign matrix identically
-    val init = edges.select(col("u").as("node")).distinct()
+    val init = graft.Ckpt.keep(edges.select(col("u").as("node")).distinct()
       .select(col("node") +: dims.map(j =>
         (when(conv(substring(md5(concat_ws(",", col("node"), lit(j))),
             1, 13), 16, 10).cast("long") % 2 === 0, 1.0).otherwise(-1.0) /
-          math.sqrt(FastRpDims)).as(ecol(j))): _*)
+          math.sqrt(FastRpDims)).as(ecol(j))): _*))
       // materialized ONCE: the hop join would otherwise re-evaluate
       // the 8 md5 columns per EDGE row post-join (~2.4M MessageDigest
       // calls per hop at sf0.1 — xxhash64 tolerated that, md5 doesn't)
-      .localCheckpoint(eager = true)
     var x = init
     var acc = init.select(col("node") +:
       dims.map(j => (col(ecol(j)) * FastRpWeights.head).as(ecol(j))): _*)
@@ -2745,11 +2687,9 @@ object Graph {
       def qMean(j: Int) =
         (floor(sum(col(ecol(j))).cast("double") / count(lit(1)) + lit(0.5))
           .cast("long").cast("double") / lit(1000000000000.0)).as(ecol(j))
-      // NOTE: previous x generations stay live — acc's lazy tree
-      // joins every hop's checkpoint, so none may be freed here.
-      x = msgs.groupBy(col("node"))
-        .agg(qMean(0), dims.tail.map(qMean): _*)
-        .localCheckpoint(eager = true)
+      // every hop's checkpoint is the result's: acc's lazy tree joins them all
+      x = graft.Ckpt.keep(msgs.groupBy(col("node"))
+        .agg(qMean(0), dims.tail.map(qMean): _*))
       val w = FastRpWeights(k)
       acc = acc.join(x.select(col("node") +: dims.map(j =>
           col(ecol(j)).as(s"h$j")): _*), Seq("node"))
@@ -2872,35 +2812,29 @@ object Graph {
     * round. Shared with the spec's exact-BFS audit.
     */
   private[graft] def landmarkDistances(s: SparkSession, d: String)
-      : (DataFrame, Array[Long]) = {
+      : (DataFrame, Array[Long]) = graft.Ckpt.scoped { sc =>
     val e = repeatTradeEdges(s, d)
     val und = e.select((col("src") * 2).as("u"), (col("dst") * 2 + 1).as("v"))
-    val edges = und.union(und.select(col("v").as("u"), col("u").as("v")))
-      .persist()
+    val edges = sc.persist(und.union(und.select(col("v").as("u"), col("u").as("v"))))
     val landmarks = edges.groupBy(col("u")).agg(count(lit(1)).as("deg"))
       .filter(col("u") % 2 === 1) // suppliers: hubs of the bipartite graph
       .orderBy(col("deg").desc, col("u"))
       .limit(LandmarkCount)
       .select("u").collect().map(_.getLong(0))
     val dcols = landmarks.indices.map(i => s"d$i")
-    var state = edges.select(col("u").as("node")).distinct()
+    val init = edges.select(col("u").as("node")).distinct()
       .select(col("node") +: landmarks.zipWithIndex.map { case (l, i) =>
         when(col("node") === l, 0).otherwise(lit(null).cast("int")).as(s"d$i")
       }: _*)
-    var lastState: DataFrame = null
-    for (r <- 1 to LandmarkRounds) {
+    val state = sc.iterate(init, LandmarkRounds, 3) { (state, _) =>
       val msgs = edges.join(state, col("u") === col("node"))
         .select(col("v").as("node") +: dcols.map(c => (col(c) + 1).as(c)): _*)
-      state = msgs.union(state)
+      msgs.union(state)
         .groupBy(col("node"))
         .agg(min(col(dcols.head)).as(dcols.head),
           dcols.tail.map(c => min(col(c)).as(c)): _*)
-      if (r % 3 == 0 || r == LandmarkRounds) {
-        state = graft.Ckpt.roll(state, lastState); lastState = state
-      }
     }
-    edges.unpersist(false)
-    (state, landmarks)
+    (sc.keep(state), landmarks)
   }
 
   /** Generated DuckDB replay of landmarkDistances + the md5 panel:
@@ -3075,10 +3009,10 @@ object Graph {
        |  WHERE NOT EXISTS (SELECT 1 FROM sym e WHERE e.a = s.u AND e.b = s.v))
        |SELECT u, v, aa, n_common
        |FROM nonedge ORDER BY aa DESC, u, v LIMIT 20""".stripMargin) { (s, d) =>
-    val ue = strongTieEdges(s, d).cache()
-    val sym = ue.select(col("a"), col("b"))
+    val ue = strongTieEdges(s, d)
+    val sym = graft.Ckpt.keep(ue.select(col("a"), col("b"))
       .union(ue.select(col("b").as("a"), col("a").as("b")))
-      .distinct().cache()
+      .distinct())
     val deg = sym.groupBy(col("a").as("node")).agg(count(lit(1)).as("d"))
     val wedge = sym.select(col("a").as("u"), col("b").as("z"))
       .join(sym.select(col("a").as("v"), col("b").as("z2")),

@@ -188,10 +188,11 @@ object KMeans {
       when(pmod(shiftright(half, sh).bitwiseAND(lit(4095L)), lit(frac)) === 0,
         lit(1L << i)).otherwise(lit(0L))
     }.reduce(_ + _)
-    val hashed = halves.select(col("x"), col("y"), mask.as("bmask")).persist()
-    try lloydLoop(iter => hashed.filter(col("bmask").bitwiseAND(lit(1L << iter)) =!= 0L),
-      init, tol, maxIter)
-    finally hashed.unpersist(true)
+    graft.Ckpt.scoped { sc =>
+      val hashed = sc.persist(halves.select(col("x"), col("y"), mask.as("bmask")))
+      lloydLoop(iter => hashed.filter(col("bmask").bitwiseAND(lit(1L << iter)) =!= 0L),
+        init, tol, maxIter)
+    }
   }
 
   // ---- DuckDB oracle generation --------------------------------------
@@ -357,8 +358,7 @@ object KMeans {
       "\nSELECT cid, round(x, 3) AS cx, round(y, 3) AS cy FROM c3 ORDER BY cid") { (s, d) =>
     val all = points(Tables.lineitem(s, d))
     val init = initCentroids(all)
-    val pts = all.select("x", "y").persist()
-    val fin = try iterate(pts, init, 3) finally pts.unpersist(false)
+    val fin = graft.Ckpt.scoped(sc => iterate(sc.persist(all.select("x", "y")), init, 3))
     import s.implicits._
     fin.toSeq.sortBy(_._1)
       .map { case (cid, (x, y)) => (cid.toLong, x, y) }
@@ -392,9 +392,8 @@ object KMeans {
     val all = points(Tables.lineitem(s, d))
     val init = initCentroids(all)
     // cache only what the loop reads: 16 bytes/row
-    val pts = all.select("x", "y").persist()
     val (cs, iters, converged) =
-      try lloyd(pts, init) finally pts.unpersist(false)
+      graft.Ckpt.scoped(sc => lloyd(sc.persist(all.select("x", "y")), init))
     import s.implicits._
     cs.zipWithIndex.map { case ((x, y), i) =>
       (i.toLong, math.round(x * 1000) / 1000.0, math.round(y * 1000) / 1000.0,
@@ -409,25 +408,23 @@ object KMeans {
     import org.apache.spark.ml.functions.array_to_vector
     import org.apache.spark.ml.clustering.{KMeans => MlKMeans}
     val pts = points(Tables.lineitem(s, d))
-    val features = pts
-      .select(array_to_vector(array(col("x"), col("y"))).as("features"))
-      .persist()
-    // materialize the cache BEFORE fit so MLlib's storageLevel check
-    // sees populated blocks and every k-means|| pass reads memory.
-    // (Bench IO note: inputMetrics counts cached-block reads too, so
-    // this query reports ~8 passes x corpus as "input" — that's the
-    // cache being read, not the parquet being rescanned.)
-    features.count()
-    try {
+    graft.Ckpt.scoped { sc =>
+      val features = sc.persist(pts
+        .select(array_to_vector(array(col("x"), col("y"))).as("features")))
+      // materialize the cache BEFORE fit so MLlib's storageLevel check
+      // sees populated blocks and every k-means|| pass reads memory.
+      // (Bench IO note: inputMetrics counts cached-block reads too, so
+      // this query reports ~8 passes x corpus as "input" — that's the
+      // cache being read, not the parquet being rescanned.)
+      features.count()
       val fitted = new MlKMeans().setK(K).setSeed(42L).setMaxIter(20)
         .setTol(1e-3) // the reference's convergence tolerance (KMeans.java:199)
         .setFeaturesCol("features").fit(features)
       val sizes = fitted.transform(features)
         .groupBy(col("prediction")).agg(count(lit(1)).as("n"))
         .select(col("prediction").cast("long").as("cid"), col("n")).orderBy(col("cid"))
-      // materialize before unpersist (the returned plan re-reads otherwise)
-      sizes.localCheckpoint(eager = true)
-    } finally features.unpersist(false)
+      sc.keep(sizes)
+    }
   }
 
   // ---- n-dimensional Lloyd (DataFrame-native) ------------------------
@@ -487,10 +484,9 @@ object KMeans {
         |SELECT c3.cid, coalesce(n3.n, 0) AS n,
         |  round(c3.c[1], 4) AS c0, round(c3.c[2], 4) AS c1
         |FROM c3 LEFT JOIN n3 USING (cid) ORDER BY cid""".stripMargin) { (s, d) =>
-    val pts = Tables.embeddings(s, d)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .persist()
-    try {
+    graft.Ckpt.scoped { sc =>
+      val pts = sc.persist(Tables.embeddings(s, d)
+        .select(col("vec_id"), col("embedding").cast("array<double>").as("v")))
       val init = pts.orderBy(col("vec_id")).limit(K)
         .select("v").collect().map(_.getSeq[Double](0).toArray)
       val (cs, sizes) = ndLloyd(pts, init, iters = 3)
@@ -501,7 +497,7 @@ object KMeans {
         // toward +inf, which disagrees on negative embedding means)
         .select(col("cid"), col("n"),
           round(col("c0"), 4).as("c0"), round(col("c1"), 4).as("c1"))
-    } finally pts.unpersist(false)
+    }
   }
 
   /** Generated DuckDB replay of the mini-batch loop: per-iteration
@@ -597,21 +593,20 @@ object KMeans {
     import org.apache.spark.ml.functions.array_to_vector
     import org.apache.spark.ml.clustering.BisectingKMeans
     val pts = points(Tables.lineitem(s, d))
-    val features = pts
-      .select(array_to_vector(array(col("x"), col("y"))).as("features"),
-        pmod(xxhash64(col("x"), col("y")), lit(10)).as("h"))
-      .persist()
-    val sample = features.filter(col("h") === 0).select("features").persist()
-    sample.count() // materialize before fit (see kmeansMllib note)
-    try {
+    graft.Ckpt.scoped { sc =>
+      val features = sc.persist(pts
+        .select(array_to_vector(array(col("x"), col("y"))).as("features"),
+          pmod(xxhash64(col("x"), col("y")), lit(10)).as("h")))
+      val sample = sc.persist(features.filter(col("h") === 0).select("features"))
+      sample.count() // materialize before fit (see kmeansMllib note)
       val fitted = new BisectingKMeans().setK(K).setSeed(42L).setMaxIter(10)
         .setFeaturesCol("features").fit(sample)
       val sizes = fitted.transform(features.select("features"))
         .groupBy(col("prediction")).agg(count(lit(1)).as("n"))
         .select(col("prediction").cast("long").as("cid"), col("n"))
         .orderBy(col("cid"))
-      sizes.localCheckpoint(eager = true)
-    } finally { sample.unpersist(false); features.unpersist(false) }
+      sc.keep(sizes)
+    }
   }
 
   /** Deterministic k-means++ initialization (Arthur & Vassilvitskii
@@ -642,10 +637,9 @@ object KMeans {
       (conv(substring(h, 8 * (j % 4) + 1, 8), 16, 10)
         .cast("long") + 1L).cast("double") / lit(4294967296.0) // 2^32
     }
-    val withU = pts.select(
-      col("x") +: col("y") +: (0 until k).map(j => uExpr(j).as(s"u$j")): _*)
-      .persist()
-    try {
+    graft.Ckpt.scoped { sc =>
+      val withU = sc.persist(pts.select(
+        col("x") +: col("y") +: (0 until k).map(j => uExpr(j).as(s"u$j")): _*))
       val first = withU.orderBy(col("u0").asc, col("x"), col("y")).limit(1)
         .select("x", "y").collect()(0)
       val chosen = scala.collection.mutable.ArrayBuffer(
@@ -661,7 +655,7 @@ object KMeans {
         j += 1
       }
       chosen.toArray
-    } finally withU.unpersist(false)
+    }
   }
 
   /** DuckDB replay of ppInit + 3 Lloyd iterations: the md5-derived
@@ -720,8 +714,8 @@ object KMeans {
   val kmeansPp: QueryDef = QueryDef.sql(
     "kmeans_pp", ppOracle(K, 3)) { (s, d) =>
     val allPts = points(Tables.lineitem(s, d))
-    val pts = allPts.select("x", "y").persist()
-    try {
+    graft.Ckpt.scoped { sc =>
+      val pts = sc.persist(allPts.select("x", "y"))
       val init = ppInit(pts, K)
       val fin = iterate(pts, init, 3)
       import s.implicits._
@@ -730,7 +724,7 @@ object KMeans {
           (cid.toLong, math.floor(x * 10000 + 0.5) / 10000,
             math.floor(y * 10000 + 0.5) / 10000) }
         .toDF("cid", "x", "y")
-    } finally pts.unpersist(false)
+    }
   }
 
   /** Elbow sweep — the "choose k" workflow: reference-semantics
@@ -786,8 +780,8 @@ object KMeans {
         s"\n$perK\nORDER BY k"
     }) { (s, d) =>
     val allPts = points(Tables.lineitem(s, d))
-    val pts = allPts.select("x", "y").persist()
-    try {
+    graft.Ckpt.scoped { sc =>
+      val pts = sc.persist(allPts.select("x", "y"))
       val ks = Seq(2, 4, 8, 16)
       // the line init has the PREFIX property — init(k) is the first
       // k points of one fixed ordering — so all four inits come from
@@ -808,7 +802,7 @@ object KMeans {
       }
       import s.implicits._
       rows.toDF("k", "n_iters", "converged", "cost_m")
-    } finally pts.unpersist(false)
+    }
   }
 
   /** Lloyd for SEVERAL k at once over one stream of scans: per
@@ -907,8 +901,7 @@ object KMeans {
         |FROM sil GROUP BY cid ORDER BY cid""".stripMargin) { (s, d) =>
     val all = points(Tables.lineitem(s, d))
     val init = initCentroids(all)
-    val pts = all.select("x", "y").persist()
-    val fin = try iterate(pts, init, 3) finally pts.unpersist(false)
+    val fin = graft.Ckpt.scoped(sc => iterate(sc.persist(all.select("x", "y")), init, 3))
     val ordered = fin.toSeq.sortBy(_._1)
     val ids = ordered.map(_._1).toArray
     val cs = ordered.map(_._2).toArray
@@ -978,8 +971,9 @@ object KMeans {
       "\nSELECT cid, round(x, 3) AS cx, round(y, 3) AS cy FROM c3 ORDER BY cid") { (s, d) =>
     val all = points(Tables.lineitem(s, d))
     val init = initCentroids(all)
-    val pts = all.select(col("x"), col("y"), col("x").as("w")).persist()
-    val fin = try iterate(pts, init, 3, weightedStep) finally pts.unpersist(false)
+    val fin = graft.Ckpt.scoped { sc =>
+      iterate(sc.persist(all.select(col("x"), col("y"), col("x").as("w"))), init, 3, weightedStep)
+    }
     import s.implicits._
     fin.toSeq.sortBy(_._1)
       .map { case (cid, (x, y)) => (cid.toLong, x, y) }
@@ -1145,12 +1139,11 @@ object KMeans {
       nPts * Regime.rowBytes(5), build)
     // the eps-neighbor relation feeds three branches (core counts,
     // core-core edges, border attachment) — materialize it once
-    val nbrs = probe.join(buildSide, Seq("jx", "jy"))
-      .filter((col("nx") - col("nx2")) * (col("nx") - col("nx2")) +
-        (col("ny") - col("ny2")) * (col("ny") - col("ny2")) <= lit(eps * eps))
-      .select(col("pid"), col("pid2"))
-      .persist()
-    try {
+    graft.Ckpt.scoped { sc =>
+      val nbrs = sc.persist(probe.join(buildSide, Seq("jx", "jy"))
+        .filter((col("nx") - col("nx2")) * (col("nx") - col("nx2")) +
+          (col("ny") - col("ny2")) * (col("ny") - col("ny2")) <= lit(eps * eps))
+        .select(col("pid"), col("pid2")))
       // neighbor count INCLUDES self (pid==pid2 survives the eps test)
       val cores = nbrs.groupBy(col("pid")).agg(count(lit(1)).as("n_nbr"))
         .filter(col("n_nbr") >= minPts).select(col("pid"))
@@ -1159,8 +1152,8 @@ object KMeans {
         .join(cores.select(col("pid").as("pid2")), Seq("pid2"))
         .filter(col("pid") < col("pid2"))
         .select(col("pid").as("id1"), col("pid2").as("id2"))
-      val labels = Dedup.connectedComponents(
-        coreEdges.union(cores.select(col("pid").as("id1"), col("pid").as("id2"))))
+      val labels = sc.adopt(Dedup.connectedComponents(
+        coreEdges.union(cores.select(col("pid").as("id1"), col("pid").as("id2")))))
       val coreLabeled = labels.select(col("id").as("core_id"), col("label"))
       // border: non-core with ≥1 core neighbor → minimum core label
       val borders = nbrs
@@ -1182,7 +1175,7 @@ object KMeans {
       (perCluster.toSeq :+ ((-1L, 0L, nPts - assigned)))
         .toDF("cluster", "n_core", "n_border")
         .orderBy(col("cluster"))
-    } finally nbrs.unpersist(false)
+    }
   }
 
   /** k-means|| oversampling initialization (Bahmani et al., VLDB
@@ -1268,8 +1261,8 @@ object KMeans {
     */
   val kmeansParallel: QueryDef = QueryDef.rowsOnly("kmeans_parallel") { (s, d) =>
     val allPts = points(Tables.lineitem(s, d))
-    val pts = allPts.select("x", "y").persist()
-    try {
+    graft.Ckpt.scoped { sc =>
+      val pts = sc.persist(allPts.select("x", "y"))
       val (init, _) = parallelInit(pts, K, l = 2 * K, rounds = 2)
       val fin = iterate(pts, init, 3)
       import s.implicits._
@@ -1278,7 +1271,7 @@ object KMeans {
           (cid.toLong, math.floor(x * 10000 + 0.5) / 10000,
             math.floor(y * 10000 + 0.5) / 10000) }
         .toDF("cid", "x", "y")
-    } finally pts.unpersist(false)
+    }
   }
 
   private val FuzzyIters = 5
@@ -1353,8 +1346,8 @@ object KMeans {
   val kmeansFuzzy: QueryDef = QueryDef.sql(
     "kmeans_fuzzy", fuzzyOracle(K, FuzzyIters)) { (s, d) =>
     import s.implicits._
-    val pts = points(Tables.lineitem(s, d)).select(col("x"), col("y")).persist()
-    try {
+    graft.Ckpt.scoped { sc =>
+      val pts = sc.persist(points(Tables.lineitem(s, d)).select(col("x"), col("y")))
       var cents = initCentroids(pts)
       val k = cents.length
       val rows = scala.collection.mutable.ArrayBuffer
@@ -1393,18 +1386,7 @@ object KMeans {
       }
       rows.toSeq.toDF("iter", "cid", "cx", "cy", "fuzzy_mass", "j_before_m")
         .orderBy(col("iter"), col("cid"))
-    } finally pts.unpersist(false)
-  }
-
-  /** Spherical assignment: on unit vectors argmax cosine = argmax
-    * dot; min over (−dot, cid) structs gives the lowest-cid tie-break.
-    */
-  def sphericalAssignExpr(cs: Array[Array[Double]], v: Column): Column = {
-    val candidates = cs.zipWithIndex.map { case (c, i) =>
-      val cl = array(c.map(lit): _*)
-      struct((lit(0.0) - Similarity.dot(v, cl)).as("negdot"), lit(i).as("cid"))
     }
-    array_min(array(candidates: _*)).getField("cid")
   }
 
   /** Spherical k-means (Dhillon & Modha 2001) on the embedding corpus
@@ -1493,13 +1475,12 @@ object KMeans {
       : (Array[Array[Double]], Array[Long], Array[Double], Seq[Double]) = {
     import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
     import org.apache.spark.ml.stat.Summarizer
-    val pts = Tables.embeddings(s, d)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("raw"))
-      .withColumn("nrm", sqrt(Similarity.dot(col("raw"), col("raw"))))
-      .filter(col("nrm") > 0)
-      .select(col("vec_id"), expr("transform(raw, x -> x / nrm)").as("v"))
-      .persist()
-    try {
+    graft.Ckpt.scoped { sc =>
+      val pts = sc.persist(Tables.embeddings(s, d)
+        .select(col("vec_id"), col("embedding").cast("array<double>").as("raw"))
+        .withColumn("nrm", sqrt(Similarity.dot(col("raw"), col("raw"))))
+        .filter(col("nrm") > 0)
+        .select(col("vec_id"), expr("transform(raw, x -> x / nrm)").as("v")))
       val cs = pts.orderBy(col("vec_id")).limit(k)
         .select("v").collect().map(r => l2norm(r.getSeq[Double](0).toArray))
       val sizes = Array.fill(k)(0L)
@@ -1532,7 +1513,7 @@ object KMeans {
         traj += rows.map(r => r.getDouble(3) * r.getLong(2)).sum / total
       }
       (cs, sizes, cos, traj.toSeq)
-    } finally pts.unpersist(false)
+    }
   }
 
   val all: Seq[QueryDef] = Seq(

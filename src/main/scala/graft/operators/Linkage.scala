@@ -162,28 +162,26 @@ object Linkage {
     // persist: the basket build is a corpus collect_set shuffle read
     // by the support count AND the fit's item-conversion pass (ml's
     // internal persistence only covers its own RDD, not this frame)
-    val baskets = Tables.lineitem(s, d)
-      .groupBy(col("l_orderkey"))
-      .agg(collect_set(col("l_partkey")).as("items"))
-      .persist()
-    val nBaskets = baskets.count()
-    try {
+    graft.Ckpt.scoped { sc =>
+      val baskets = sc.persist(Tables.lineitem(s, d)
+        .groupBy(col("l_orderkey"))
+        .agg(collect_set(col("l_partkey")).as("items")))
+      val nBaskets = baskets.count()
       val model = new FPGrowth()
         .setItemsCol("items").setMinSupport((3.0 - 0.5) / nBaskets)
         .fit(baskets)
-      model.freqItemsets
+      // freqItemsets is a LAZY RDD view over the fit's lineage — kept
+      // while the basket cache is live (kmeans_mllib pattern), or the
+      // post-scope evaluation recomputes the collect_set shuffle and
+      // the FP-tree generation
+      sc.keep(model.freqItemsets
         .select(
           concat_ws(",", array_sort(col("items"))).as("itemset"),
           size(col("items")).as("n_items"),
           col("freq"))
         .orderBy(col("freq").desc, col("n_items"), col("itemset"))
-        .limit(500)
-        // freqItemsets is a LAZY RDD view over the fit's lineage —
-        // materialize while the basket cache is live (kmeans_mllib
-        // pattern), or the post-unpersist evaluation recomputes the
-        // collect_set shuffle and the FP-tree generation
-        .localCheckpoint(true)
-    } finally baskets.unpersist(false)
+        .limit(500))
+    }
   }
 
   /** Association rules from the frequent itemsets — the actionable
@@ -259,37 +257,37 @@ object Linkage {
     import org.apache.spark.ml.fpm.FPGrowth
     // persist: same rationale as mining_fpgrowth (support count + fit
     // conversion share one materialization of the collect_set shuffle)
-    val baskets = Tables.lineitem(s, d)
-      .groupBy(col("l_orderkey"))
-      .agg(collect_set(col("l_partkey")).as("items"))
-      .persist()
-    val nBaskets = baskets.count()
-    try {
-    val model = new FPGrowth()
-      .setItemsCol("items").setMinSupport((3.0 - 0.5) / nBaskets)
-      .setMinConfidence(0.01)
-      .fit(baskets)
-    // freqItemsets is a LAZY view over the whole mining lineage and
-    // has TWO consumers here (the size guard below and the rule
-    // generation) — without this persist the FP-tree mining runs
-    // twice end-to-end
-    model.freqItemsets.persist()
-    // The oracle enumerates itemset levels only up to size 7; if the
-    // data ever produced a FREQUENT itemset bigger than that (≥3
-    // baskets sharing 8+ items), FPGrowth would emit rules the
-    // oracle silently omits — fail loudly instead of a mystery hash
-    // mismatch. (Raw basket size may exceed 7; only frequent-set
-    // size matters for rule parity.)
-    // coalesce(…, 0): max over ZERO frequent itemsets is null, and a
-    // bare getInt would turn that corpus shape into an opaque NPE
-    // instead of this require's message
-    try {
+    graft.Ckpt.scoped { sc =>
+      val baskets = sc.persist(Tables.lineitem(s, d)
+        .groupBy(col("l_orderkey"))
+        .agg(collect_set(col("l_partkey")).as("items")))
+      val nBaskets = baskets.count()
+      val model = new FPGrowth()
+        .setItemsCol("items").setMinSupport((3.0 - 0.5) / nBaskets)
+        .setMinConfidence(0.01)
+        .fit(baskets)
+      // freqItemsets is a LAZY view over the whole mining lineage and
+      // has TWO consumers here (the size guard below and the rule
+      // generation) — without this persist the FP-tree mining runs
+      // twice end-to-end
+      sc.persist(model.freqItemsets)
+      // The oracle enumerates itemset levels only up to size 7; if the
+      // data ever produced a FREQUENT itemset bigger than that (≥3
+      // baskets sharing 8+ items), FPGrowth would emit rules the
+      // oracle silently omits — fail loudly instead of a mystery hash
+      // mismatch. (Raw basket size may exceed 7; only frequent-set
+      // size matters for rule parity.)
+      // coalesce(…, 0): max over ZERO frequent itemsets is null, and a
+      // bare getInt would turn that corpus shape into an opaque NPE
+      // instead of this require's message
       val maxSet = model.freqItemsets
         .agg(coalesce(max(size(col("items"))), lit(0))).head.getInt(0)
       require(maxSet <= 7,
         s"mining_assoc's oracle caps itemsets at size 7; " +
           s"corpus has a frequent itemset of size $maxSet")
-      model.associationRules
+      // associationRules is lazy over the fit lineage — kept while the
+      // basket/itemset caches are live (see mining_fpgrowth)
+      sc.keep(model.associationRules
         .select(
           concat_ws(",", array_sort(col("antecedent"))).as("antecedent"),
           concat_ws(",", array_sort(col("consequent"))).as("consequent"),
@@ -298,12 +296,8 @@ object Linkage {
           (floor(col("lift") * lit(10000.0) + 0.5) / lit(10000.0)).as("lift"))
         .orderBy(col("confidence").desc, col("lift").desc,
           col("antecedent"), col("consequent"))
-        .limit(100)
-        // associationRules is lazy over the fit lineage — materialize
-        // while the basket/itemset caches are live (see mining_fpgrowth)
-        .localCheckpoint(true)
-    } finally model.freqItemsets.unpersist(false)
-    } finally baskets.unpersist(false)
+        .limit(100))
+    }
   }
 
   /** Collaborative-filtering recommendations by implicit-feedback
@@ -319,13 +313,15 @@ object Linkage {
     * above unbought pairs on average.
     */
   val miningAls: QueryDef = QueryDef.rowsOnly("mining_als") { (s, d) =>
-    val model = alsModel(s, d)
-    model.recommendForAllUsers(5)
-      .select(col("user"), posexplode(col("recommendations")))
-      .select(col("user"), (col("pos") + 1).as("rank"),
-        col("col.item").as("item"),
-        round(col("col.rating").cast("double"), 4).as("score"))
-      .orderBy(col("user"), col("rank"))
+    graft.Ckpt.scoped { sc =>
+      val model = sc.fit(alsModel(s, d))
+      sc.keep(model.recommendForAllUsers(5)
+        .select(col("user"), posexplode(col("recommendations")))
+        .select(col("user"), (col("pos") + 1).as("rank"),
+          col("col.item").as("item"),
+          round(col("col.rating").cast("double"), 4).as("score"))
+        .orderBy(col("user"), col("rank")))
+    }
   }
 
   /** Purchase-count ratings and the fitted ALS model (shared with
@@ -389,23 +385,23 @@ object Linkage {
     // AND PrefixSpan's internal passes (MLlib warns "Input data is
     // not cached" — it re-derives the sequence frame per prefix-growth
     // round otherwise); count() materializes the cache
-    val seqs = sessionSequences(s, d).persist()
-    val n = seqs.count()
-    try new PrefixSpan()
-      .setSequenceCol("sequence")
-      .setMinSupport((10.0 - 0.5) / n)
-      .setMaxPatternLength(3)
-      .findFrequentSequentialPatterns(seqs)
-      // materialize while the cache is live; the plan re-reads seqs
-      .localCheckpoint(true)
-      .select(
-        concat_ws(">", transform(col("sequence"), x => concat_ws(",", x)))
-          .as("pattern"),
-        size(col("sequence")).as("n_steps"),
-        col("freq"))
-      .orderBy(col("freq").desc, col("n_steps"), col("pattern"))
-      .limit(200)
-    finally seqs.unpersist(false)
+    graft.Ckpt.scoped { sc =>
+      val seqs = sc.persist(sessionSequences(s, d))
+      val n = seqs.count()
+      // kept while the cache is live; the plan re-reads seqs
+      sc.keep(new PrefixSpan()
+        .setSequenceCol("sequence")
+        .setMinSupport((10.0 - 0.5) / n)
+        .setMaxPatternLength(3)
+        .findFrequentSequentialPatterns(seqs))
+        .select(
+          concat_ws(">", transform(col("sequence"), x => concat_ws(",", x)))
+            .as("pattern"),
+          size(col("sequence")).as("n_steps"),
+          col("freq"))
+        .orderBy(col("freq").desc, col("n_steps"), col("pattern"))
+        .limit(200)
+    }
   }
 
   /** Topic modeling via MLlib's distributed LDA (EM optimizer —
@@ -426,25 +422,27 @@ object Linkage {
     val docs = Tables.documents(s, d)
       .select(col("doc_id"),
         regexp_extract_all(lower(col("text")), lit("\\S+"), lit(0)).as("toks"))
-    val cv = new CountVectorizer()
-      .setInputCol("toks").setOutputCol("features")
-      .setVocabSize(256).setMinDF(2.0)
-      .fit(docs)
-    val vecs = cv.transform(docs).select(col("doc_id"), col("features"))
-    val lda = new LDA().setK(4).setMaxIter(10).setSeed(7)
-      .setOptimizer("em").fit(vecs)
-    val vocab = cv.vocabulary.zipWithIndex
-      .map { case (w, i) => (i, w) }.toSeq.toDF("term_idx", "term")
-    lda.describeTopics(5)
-      .select(col("topic"),
-        posexplode(arrays_zip(col("termIndices"), col("termWeights")))
-          .as(Seq("rank", "tw")))
-      .select(col("topic"), (col("rank") + 1).as("term_rank"),
-        col("tw.termIndices").as("term_idx"),
-        round(col("tw.termWeights"), 4).as("weight"))
-      .join(broadcast(vocab), "term_idx")
-      .select(col("topic"), col("term_rank"), col("term"), col("weight"))
-      .orderBy(col("topic"), col("term_rank"))
+    graft.Ckpt.scoped { sc =>
+      val cv = new CountVectorizer()
+        .setInputCol("toks").setOutputCol("features")
+        .setVocabSize(256).setMinDF(2.0)
+        .fit(docs)
+      val vecs = cv.transform(docs).select(col("doc_id"), col("features"))
+      val lda = sc.fit(new LDA().setK(4).setMaxIter(10).setSeed(7)
+        .setOptimizer("em").fit(vecs))
+      val vocab = cv.vocabulary.zipWithIndex
+        .map { case (w, i) => (i, w) }.toSeq.toDF("term_idx", "term")
+      lda.describeTopics(5)
+        .select(col("topic"),
+          posexplode(arrays_zip(col("termIndices"), col("termWeights")))
+            .as(Seq("rank", "tw")))
+        .select(col("topic"), (col("rank") + 1).as("term_rank"),
+          col("tw.termIndices").as("term_idx"),
+          round(col("tw.termWeights"), 4).as("weight"))
+        .join(broadcast(vocab), "term_idx")
+        .select(col("topic"), col("term_rank"), col("term"), col("weight"))
+        .orderBy(col("topic"), col("term_rank"))
+    }
   }
 
   /** Distributed multiple linear regression by normal equations:
@@ -883,8 +881,9 @@ object Linkage {
   def nbModel(s: SparkSession, d: String): (DataFrame, DataFrame, Long) = {
     val train = Tables.documents(s, d).filter(!nbIsTest)
     val tri = nbTrigrams(train)
-    val counts = tri.groupBy(col("lang"), col("tri"))
-      .agg(sum(col("m")).as("cnt")).cache()
+    // the result's own checkpoint: every caller's plan reads it
+    val counts = graft.Ckpt.keep(tri.groupBy(col("lang"), col("tri"))
+      .agg(sum(col("m")).as("cnt")))
     val vocab = counts.select(col("tri")).distinct().count()
     val nTrain = train.count()
     val classes = counts.groupBy(col("lang")).agg(sum(col("cnt")).as("tot"))
@@ -1080,14 +1079,13 @@ object Linkage {
     val feats = Seq("ep", "disc", "qty")
     val hk = conv(substring(md5(concat_ws(",",
       col("l_orderkey"), col("l_linenumber"))), 1, 13), 16, 10).cast("long")
-    val li = Tables.lineitem(s, d).select(
-        col("l_extendedprice").cast("double").as("ep"),
-        col("l_discount").cast("double").as("disc"),
-        col("l_quantity").cast("double").as("qty"),
-        (col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("y"),
-        pmod(hk, lit(10L)).as("smp"))
-      .persist()
-    try {
+    graft.Ckpt.scoped { sc =>
+      val li = sc.persist(Tables.lineitem(s, d).select(
+          col("l_extendedprice").cast("double").as("ep"),
+          col("l_discount").cast("double").as("disc"),
+          col("l_quantity").cast("double").as("qty"),
+          (col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("y"),
+          pmod(hk, lit(10L)).as("smp")))
       // base score from exact cent sums (a float avg would be
       // partition-order noise the oracle can't replay)
       val bRow = li.agg(count(lit(1)).cast("double").as("n"),
@@ -1165,7 +1163,7 @@ object Linkage {
       }
       rows.toSeq.toDF("round", "feature", "thr", "gain", "rmse_in")
         .orderBy(col("round"))
-    } finally li.unpersist(false)
+    }
   }
 
   private val IsoBuckets = 200
@@ -1469,13 +1467,12 @@ object Linkage {
     // standardized rows quantize to exact nano longs; x/y dequantize
     // per row so both engines run the SAME doubles, and the
     // subgradient sums reduce to exact counts + exact Σxm
-    val pts = raw.select(
-        round((col("x") - mx) / sx * lit(1000000000.0), 0).cast("long").as("xm"),
-        round((col("y") - my) / sy * lit(1000000000.0), 0).cast("long").as("ym"))
-      .select((col("xm").cast("double") / lit(1000000000.0)).as("x"),
-        (col("ym").cast("double") / lit(1000000000.0)).as("y"), col("xm"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    graft.Ckpt.scoped { sc =>
+      val pts = sc.persist(raw.select(
+          round((col("x") - mx) / sx * lit(1000000000.0), 0).cast("long").as("xm"),
+          round((col("y") - my) / sy * lit(1000000000.0), 0).cast("long").as("ym"))
+        .select((col("xm").cast("double") / lit(1000000000.0)).as("x"),
+          (col("ym").cast("double") / lit(1000000000.0)).as("y"), col("xm")))
       import s.implicits._
       val tot = pts.agg(sum(col("xm"))).collect()(0)
       val sAll = tot.getLong(0).toDouble
@@ -1507,7 +1504,7 @@ object Linkage {
         }
       }
       (ab.toMap, (mx, sx, my, sy))
-    } finally pts.unpersist(false)
+    }
   }
 
   /** mining_quantile_reg's oracle: exact standardization moments,

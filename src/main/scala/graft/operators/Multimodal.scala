@@ -613,18 +613,20 @@ object Multimodal {
         if (b.length > 4) b(b.length / 2) = (b(b.length / 2) ^ 0x01).toByte
         (id + PhashVariantOffset, b)
       }.toDF("doc_id", "payload")
-    val idx = phashIndex(s, base.unionAll(variants)).localCheckpoint(eager = true)
-    val pairs = phashPairs(idx, maxHamming = 6).localCheckpoint(eager = true)
-    val cc = graft.operators.Dedup.connectedComponents(
-      pairs.select(col("a").as("id1"), col("b").as("id2")))
-    val sizes = cc.groupBy(col("label").as("cluster_rep"))
-      .agg(count(lit(1)).as("n_members"))
-    val maxHam = pairs
-      .join(cc.select(col("id").as("a"), col("label").as("cl")), "a")
-      .groupBy(col("cl")).agg(max(col("hamming")).as("max_hamming"))
-    sizes.join(maxHam, col("cluster_rep") === col("cl"))
-      .select(col("cluster_rep"), col("n_members"), col("max_hamming"))
-      .orderBy(col("cluster_rep"))
+    graft.Ckpt.scoped { sc =>
+      val idx = sc.checkpoint(phashIndex(s, base.unionAll(variants)))
+      val pairs = sc.keep(phashPairs(idx, maxHamming = 6))
+      val cc = graft.operators.Dedup.connectedComponents(
+        pairs.select(col("a").as("id1"), col("b").as("id2")))
+      val sizes = cc.groupBy(col("label").as("cluster_rep"))
+        .agg(count(lit(1)).as("n_members"))
+      val maxHam = pairs
+        .join(cc.select(col("id").as("a"), col("label").as("cl")), "a")
+        .groupBy(col("cl")).agg(max(col("hamming")).as("max_hamming"))
+      sizes.join(maxHam, col("cluster_rep") === col("cl"))
+        .select(col("cluster_rep"), col("n_members"), col("max_hamming"))
+        .orderBy(col("cluster_rep"))
+    }
   }
 
   // ---- audio energy / silence detection ------------------------------

@@ -732,10 +732,9 @@ object Profile {
       |  round(hx.h, 6) AS h_x, round(hy.h, 6) AS h_y,
       |  round(2 * mi.mi / (hx.h + hy.h), 6) AS uncertainty_coef
       |FROM mi, hx, hy""".stripMargin) { (s, d) =>
-    val cells = Tables.orders(s, d)
+    val cells = graft.Ckpt.keep(Tables.orders(s, d)
       .groupBy(col("o_orderpriority").as("x"), col("o_orderstatus").as("y"))
-      .agg(count(lit(1)).as("n"))
-      .localCheckpoint(eager = true) // tiny; marginals re-aggregate from it
+      .agg(count(lit(1)).as("n"))) // tiny; marginals re-aggregate from it
     val tot = cells.agg(sum(col("n")).cast("double").as("total"))
     val mx = cells.groupBy(col("x")).agg(sum(col("n")).as("nx"))
     val my = cells.groupBy(col("y")).agg(sum(col("n")).as("ny"))
@@ -925,64 +924,65 @@ object Profile {
        |ORDER BY lof DESC, id LIMIT 20""".stripMargin
 
   val profileLof: QueryDef = QueryDef.sql("profile_lof", lofOracle(5)) { (s, d) =>
-    val k = 5
-    // md5-derived ids over exact-cent coordinates (doubles stringify
-    // differently across engines; integers don't)
-    val raw = KMeans.points(Tables.lineitem(s, d))
-      .select(conv(substring(md5(concat_ws(",",
-          col("l_orderkey"), col("l_linenumber"),
-          round(col("x") * 100.0, 0).cast("long"),
-          round(col("y") * 100.0, 0).cast("long"))), 1, 13), 16, 10)
-        .cast("long").as("id"), col("x"), col("y"))
-      .distinct()
+    graft.Ckpt.scoped { sc =>
+      val k = 5
+      // md5-derived ids over exact-cent coordinates (doubles stringify
+      // differently across engines; integers don't)
+      val raw = sc.persist(KMeans.points(Tables.lineitem(s, d))
+        .select(conv(substring(md5(concat_ws(",",
+            col("l_orderkey"), col("l_linenumber"),
+            round(col("x") * 100.0, 0).cast("long"),
+            round(col("y") * 100.0, 0).cast("long"))), 1, 13), 16, 10)
+          .cast("long").as("id"), col("x"), col("y"))
+        .distinct())
       // one scan+md5+distinct serves the stats aggregate and every
       // consumer below. persist, NOT localCheckpoint: a checkpointed
       // RDD scan comes back with UnknownPartitioning, which forfeits
       // every exchange reuse downstream; the cached plan keeps its
       // partitioning. The stats collect materializes it eagerly.
-      .persist()
-    // normalization + grid constants (and the strategy pick below)
-    // resolve driver-side from ONE O(1)-row aggregate and land in the
-    // plan as LITERALS — no broadcast crossJoin
-    val st = raw.agg(
-      min(col("x")), max(col("x")), min(col("y")), max(col("y")),
-      count(lit(1)).cast("double"),
-      approx_count_distinct(struct(col("x"), col("y")))).collect()(0)
-    val (xmin, xmax, ymin, ymax, n) = (st.getDouble(0), st.getDouble(1),
-      st.getDouble(2), st.getDouble(3), st.getDouble(4))
-    val dupRatio = n / math.max(1.0, st.getLong(5).toDouble)
-    val h = math.sqrt(4.0 / n)
-    val pts = raw.select(col("id"),
-      ((col("x") - xmin) / math.max(xmax - xmin, 1e-12)).as("u"),
-      ((col("y") - ymin) / math.max(ymax - ymin, 1e-12)).as("v"))
-    // DENSITY-ADAPTIVE STRATEGY PICK (the sf1 fix). The h = √(4/n)
-    // grid pitch assumes continuous coordinates; duplicated corpora
-    // (x = l_quantity is ~50-valued, and replicated corpora repeat
-    // whole points) saturate cells and the per-id pair stage goes
-    // quadratic in cell population (OOMed at sf1 under 8 GiB). Both
-    // strategies below compute the IDENTICAL result (the pooled path
-    // is an exact algebraic factoring of the per-id path, ScalaTest-
-    // pinned equal); the pick — an AQE-style plan-time decision off
-    // the same one-row aggregate that already feeds h — trades the
-    // per-id path's lean plumbing for duplicate collapse only when
-    // duplication is actually present (>1.25× ids per coordinate;
-    // approx_count_distinct's ~2% error is far from the decision
-    // boundary on any corpus where the choice matters).
-    // second plan-time pick off the SAME one-row aggregate: whether
-    // the cell-join build side (and, pooled, the kd/lrdB lookups)
-    // fits a broadcast — see Regime; both regimes plan-locked in
-    // Round9LofSpec. Estimates: per-id cells n × the (id, u, v, cx,
-    // cy) row; pooled lookups nCoords·(k+1) × 32 B (long+double
-    // UnsafeRows); pooled cells nCoords × ~120 B (u, v, ids6[6], cx,
-    // cy). nCoords is constant in SF (replication never adds
-    // coordinates), which is why these are bytes, not rows.
-    val nCoords = st.getLong(5)
-    if (dupRatio <= 1.25) lofPerId(pts, h, k, broadcastCells =
-      Regime.fits(s, "profile_lof.per_id.cells", n.toLong * Regime.rowBytes(5)))
-    else lofPooled(pts, h, k,
-      broadcastLookups = Regime.fits(s, "profile_lof.pooled.lookups",
-        nCoords * (k + 1) * Regime.rowBytes(2)),
-      broadcastCells = Regime.fits(s, "profile_lof.pooled.cells", nCoords * 120L))
+      // normalization + grid constants (and the strategy pick below)
+      // resolve driver-side from ONE O(1)-row aggregate and land in the
+      // plan as LITERALS — no broadcast crossJoin
+      val st = raw.agg(
+        min(col("x")), max(col("x")), min(col("y")), max(col("y")),
+        count(lit(1)).cast("double"),
+        approx_count_distinct(struct(col("x"), col("y")))).collect()(0)
+      val (xmin, xmax, ymin, ymax, n) = (st.getDouble(0), st.getDouble(1),
+        st.getDouble(2), st.getDouble(3), st.getDouble(4))
+      val dupRatio = n / math.max(1.0, st.getLong(5).toDouble)
+      val h = math.sqrt(4.0 / n)
+      val pts = raw.select(col("id"),
+        ((col("x") - xmin) / math.max(xmax - xmin, 1e-12)).as("u"),
+        ((col("y") - ymin) / math.max(ymax - ymin, 1e-12)).as("v"))
+      // DENSITY-ADAPTIVE STRATEGY PICK (the sf1 fix). The h = √(4/n)
+      // grid pitch assumes continuous coordinates; duplicated corpora
+      // (x = l_quantity is ~50-valued, and replicated corpora repeat
+      // whole points) saturate cells and the per-id pair stage goes
+      // quadratic in cell population (OOMed at sf1 under 8 GiB). Both
+      // strategies below compute the IDENTICAL result (the pooled path
+      // is an exact algebraic factoring of the per-id path, ScalaTest-
+      // pinned equal); the pick — an AQE-style plan-time decision off
+      // the same one-row aggregate that already feeds h — trades the
+      // per-id path's lean plumbing for duplicate collapse only when
+      // duplication is actually present (>1.25× ids per coordinate;
+      // approx_count_distinct's ~2% error is far from the decision
+      // boundary on any corpus where the choice matters).
+      // second plan-time pick off the SAME one-row aggregate: whether
+      // the cell-join build side (and, pooled, the kd/lrdB lookups)
+      // fits a broadcast — see Regime; both regimes plan-locked in
+      // Round9LofSpec. Estimates: per-id cells n × the (id, u, v, cx,
+      // cy) row; pooled lookups nCoords·(k+1) × 32 B (long+double
+      // UnsafeRows); pooled cells nCoords × ~120 B (u, v, ids6[6], cx,
+      // cy). nCoords is constant in SF (replication never adds
+      // coordinates), which is why these are bytes, not rows.
+      val nCoords = st.getLong(5)
+      sc.keep(if (dupRatio <= 1.25) lofPerId(sc, pts, h, k, broadcastCells =
+        Regime.fits(s, "profile_lof.per_id.cells", n.toLong * Regime.rowBytes(5)))
+      else lofPooled(sc, pts, h, k,
+        broadcastLookups = Regime.fits(s, "profile_lof.pooled.lookups",
+          nCoords * (k + 1) * Regime.rowBytes(2)),
+        broadcastCells = Regime.fits(s, "profile_lof.pooled.cells", nCoords * 120L)))
+    }
   }
 
   /** Per-id LOF path for ~distinct coordinates: candidate pairs from
@@ -991,16 +991,16 @@ object Profile {
     * LOF algebra as three id-keyed hash joins over the O(k·n) kNN
     * relation. Candidate work is Σ|cell|·9c ≈ 9c·n — linear while the
     * grid's uniformity assumption holds (distinct coordinates), which
-    * is exactly when this path is selected.
+    * is exactly when this path is selected. The cached intermediates
+    * live in the caller's scope `sc`, which the returned plan reads.
     */
-  private[graft] def lofPerId(pts: DataFrame, h: Double, k: Int,
+  private[graft] def lofPerId(sc: graft.Ckpt.Scope, pts: DataFrame, h: Double, k: Int,
       broadcastCells: Boolean = true): DataFrame = {
     // materialize once: the probe and build sides of the cell join
     // would otherwise EACH re-run the scan + hash + distinct chain
-    val cells = pts
+    val cells = sc.persist(pts
       .withColumn("cx", floor(col("u") / h).cast("long"))
-      .withColumn("cy", floor(col("v") / h).cast("long"))
-      .persist()
+      .withColumn("cy", floor(col("v") / h).cast("long")))
     // probe side explodes to the 9-cell neighborhood (map-side O(9n))
     val probe = cells.select(col("id").as("a"), col("u").as("ua"),
         col("v").as("va"),
@@ -1052,10 +1052,9 @@ object Profile {
     // preserved) for its three consumers (kdist, reach, lof) so the
     // grid-pair stage never re-runs and the groupBy(a)s are
     // exchange-free.
-    val knn = org.apache.spark.sql.graft.TopKOps.topKPerKey(
+    val knn = sc.persist(org.apache.spark.sql.graft.TopKOps.topKPerKey(
         pairs, Seq(col("a")), Seq(col("dist").asc, col("b").asc), k)
-      .select(col("a"), col("b"), col("dist"))
-      .persist()
+      .select(col("a"), col("b"), col("dist")))
     val kdist = knn.groupBy(col("a"))
       .agg(max(col("dist")).as("kdist"), count(lit(1)).as("ka"))
     // same size-adaptive regime for the reach/lof NEIGHBOR lookups:
@@ -1076,14 +1075,13 @@ object Profile {
     // lofPooled, where duplicated corpora actually hit it). It never
     // binds here: nonzero quantized reaches are ≥ ~10⁵ at any corpus
     // this path is selected for, so oracle hashes are untouched.
-    val lrd = reach.groupBy(col("a"))
+    val lrd = sc.persist(reach.groupBy(col("a"))
       .agg((count(lit(1)).cast("double") /
         (greatest(
           sum(round(col("reach") * lit(1000000000000.0), 0).cast("long")),
           count(lit(1)) * lit(1000L))
-          .cast("double") / lit(1000000000000.0))).as("lrd"))
-      // two consumers (neighbor lookup + final ratio): computed once
-      .persist()
+          .cast("double") / lit(1000000000000.0))).as("lrd")))
+    // two consumers (neighbor lookup + final ratio): computed once
     val lof = knn.join(
         bc(lrd.select(col("a").as("b"), col("lrd").as("lrd_b"))), Seq("b"))
       .groupBy(col("a"))
@@ -1118,21 +1116,21 @@ object Profile {
     * reach the global top-20 under the (lof DESC, id ASC) order.
     * Candidate work is Σ|cell|·9c over DISTINCT coordinates — the
     * duplication factor squares out of the pair stage entirely (the
-    * per-id path OOMed at sf1; this path is ~linear in ids).
+    * per-id path OOMed at sf1; this path is ~linear in ids). Cached
+    * intermediates live in the caller's scope `sc`, as in lofPerId.
     */
-  private[graft] def lofPooled(pts: DataFrame, h: Double, k: Int,
+  private[graft] def lofPooled(sc: graft.Ckpt.Scope, pts: DataFrame, h: Double, k: Int,
       broadcastLookups: Boolean = true,
       broadcastCells: Boolean = true): DataFrame = {
     val ids26 = org.apache.spark.sql.graft.TopKOps.topKPerKey(
       pts, Seq(col("u"), col("v")), Seq(col("id").asc), k + 21)
-    val coords = ids26.groupBy(col("u"), col("v"))
+    val coords = sc.persist(ids26.groupBy(col("u"), col("v"))
       .agg(sort_array(collect_list(col("id"))).as("ids"))
       .withColumn("cx", floor(col("u") / h).cast("long"))
-      .withColumn("cy", floor(col("v") / h).cast("long"))
-      // materialized once: probe and build sides of the cell join;
-      // cached (partitioning-preserving), hash(u, v) from the top-k
-      // exchange
-      .persist()
+      .withColumn("cy", floor(col("v") / h).cast("long")))
+    // materialized once: probe and build sides of the cell join;
+    // cached (partitioning-preserving), hash(u, v) from the top-k
+    // exchange
     // probe side explodes to the 9-cell neighborhood (map-side O(9·
     // distinct coords)); build side carries only the k+1 pool-eligible
     // ids so the join output stays slim.
@@ -1191,7 +1189,7 @@ object Profile {
     // hash partitioning from the pool exchange survives into the
     // tail: every groupBy below clusters on a superset of (ua, va)
     // and plans with ZERO additional exchanges.
-    val classes = pool
+    val classes = sc.persist(pool
       .select(col("ua"), col("va"), explode(concat(
         transform(slice(col("ids"), 1, k + 1), p =>
           struct(p.as("myid"),
@@ -1203,10 +1201,9 @@ object Profile {
           lit(1), when(size(col("ids")) > k + 1, 1).otherwise(0)))).as("c"))
       .select(col("ua"), col("va"), col("c.myid").as("myid"),
         col("c.knn").as("knn"))
-      .filter(size(col("knn")) > 0)
-      // one materialization for the three consumers below (kdist and
-      // the two explode passes)
-      .persist()
+      .filter(size(col("knn")) > 0))
+    // one materialization for the three consumers below (kdist and
+    // the two explode passes)
     // k-distance per pool-eligible id: pool order is (dist ASC, b
     // ASC), so the last kNN entry carries the max dist. Every id that
     // appears as someone's neighbor is pool-eligible at its own
@@ -1237,17 +1234,16 @@ object Profile {
     // caller's bound the shuffled joins are the fallback — identical
     // values, both regimes pinned in Round9LofSpec.
     def bc(df: DataFrame): DataFrame = if (broadcastLookups) broadcast(df) else df
-    val lrd = ex.join(bc(kd), Seq("b"))
+    val lrd = sc.persist(ex.join(bc(kd), Seq("b"))
       .groupBy(col("ua"), col("va"), col("myid"))
       .agg((count(lit(1)).cast("double") /
         (greatest(
           sum(round(greatest(col("kdist_b"), col("dist"))
             * lit(1000000000000.0), 0).cast("long")),
           count(lit(1)) * lit(1000L))
-          .cast("double") / lit(1000000000000.0))).as("lrd"))
-      // two consumers (the neighbor lookup and the final ratio):
-      // without this the ex⋈kd aggregation pipeline runs twice
-      .persist()
+          .cast("double") / lit(1000000000000.0))).as("lrd")))
+    // two consumers (the neighbor lookup and the final ratio):
+    // without this the ex⋈kd aggregation pipeline runs twice
     val lrdB = lrd.filter(col("myid") =!= -1L)
       .select(col("myid").as("b"), col("lrd").as("lrd_b"))
     val lof = ex.join(bc(lrdB), Seq("b"))

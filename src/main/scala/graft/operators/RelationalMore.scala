@@ -176,11 +176,11 @@ object RelationalMore {
     val prev = s.conf.getOption(InferTopKFromWindow.Flag)
     s.conf.set(InferTopKFromWindow.Flag, "true")
     try {
-      Tables.orders(s, d).select("o_custkey", "o_orderkey", "o_totalprice")
+      // kept: executes under the flag, NOW
+      graft.Ckpt.keep(Tables.orders(s, d).select("o_custkey", "o_orderkey", "o_totalprice")
         .withColumn("rk", row_number().over(w))
         .filter(col("rk") <= 2).drop("rk")
-        .orderBy(col("o_custkey"), col("o_orderkey"))
-        .localCheckpoint(eager = true) // executes under the flag, NOW
+        .orderBy(col("o_custkey"), col("o_orderkey")))
     } finally prev match {
       case Some(v) => s.conf.set(InferTopKFromWindow.Flag, v)
       case None => s.conf.set(InferTopKFromWindow.Flag, "false")

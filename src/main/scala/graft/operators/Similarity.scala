@@ -272,12 +272,12 @@ object Similarity {
       // corpus: cap the fit set (first-N is fine for synthetic data;
       // use .sample at production skew). Runs graft's own n-D Lloyd
       // over the unit sphere — deterministic first-NLists init.
-      val sample = e.limit(4096).select(unit(col("v")).as("v")).persist()
-      try {
+      graft.Ckpt.scoped { sc =>
+        val sample = sc.persist(e.limit(4096).select(unit(col("v")).as("v")))
         val init = sample.limit(NLists).collect()
           .map(_.getSeq[Double](0).toArray)
         KMeans.ndLloyd(sample, init, iters = 3)._1
-      } finally sample.unpersist(false)
+      }
     }
     def loadOrFit(): Array[Array[Double]] =
       loadIndexPart(e.sparkSession, cacheKey, "centroids")
@@ -355,9 +355,9 @@ object Similarity {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.DurationInt
     implicit val ec: ExecutionContext = ExecutionContext.global
-    val sample = sampleU.persist()
-    sample.count()
-    try {
+    graft.Ckpt.scoped { sc =>
+      val sample = sc.persist(sampleU)
+      sample.count()
       val fits = (0 until PqM).map { m =>
         Future {
           val sub = sample.select(slice(col("u"), m * SubDim + 1, SubDim).as("v"))
@@ -366,7 +366,7 @@ object Similarity {
         }
       }
       Await.result(Future.sequence(fits), 10.minutes).toArray
-    } finally sample.unpersist(false)
+    }
   }
 
   /** Squared L2 distance of two equal-length arrays (driver-side). */
@@ -1079,72 +1079,70 @@ object Similarity {
     val withUnit = e
       .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
       .withColumn("u", scaled(col("v"), col("nrm")))
-    val assigned = withUnit
-      .withColumn("list",
-        array_min(array(centroidStructs(cs, col("u")): _*)).getField("list"))
-      .select(col("vec_id").as("dst"), col("v").as("v2"),
-        col("nrm").as("nrm2"), col("list"))
-      .localCheckpoint(eager = true) // one assignment pass, reused by all probes
-    // a kNN-GRAPH build probes deeper than a point query (it runs
-    // once per corpus and its recall gates everything downstream):
-    // 8 of 16 lists here; at production NLists (√n) the probe
-    // fraction keeps shrinking while absolute probes stay constant
-    val graphProbes = 8
-    val probes = withUnit
-      .withColumn("probe", explode(slice(
-        array_sort(array(centroidStructs(cs, col("u")): _*)), 1, graphProbes)))
-      .select(col("vec_id").as("src"), col("v").as("qv"),
-        col("nrm").as("qnrm"), col("probe.list").as("list"))
-    val cand = probes.join(assigned, Seq("list"))
-      .filter(col("src") =!= col("dst"))
-      .select(col("src"), col("dst"),
-        (floor((dot(col("qv"), col("v2")) / (col("qnrm") * col("nrm2"))) * 10000 + 0.5) / 10000.0)
-          .as("cos_sim"))
-    // keep a WIDER intermediate list (top-8) for the refinement round
-    // — the extra candidates are exactly the pool NN-descent mines —
-    // and cut to the final 4 after it
-    val top = org.apache.spark.sql.graft.TopKOps.topKPerKey(
-        cand, Seq(col("src")), Seq(col("cos_sim").desc, col("dst").asc), 8)
-      .localCheckpoint(eager = true) // read 3x below (two self-join arms + union)
-    // ONE NN-DESCENT refinement round (Dong et al. WWW 2011): a
-    // vector's true neighbors are usually neighbors of its current
-    // neighbors, so candidates ∪= neighbors-of-neighbors from the
-    // top-4 graph — one self-join on the middle vertex (O(n·16)
-    // pairs), score, union with the kept edges, re-cut. Closes the
-    // misrouted-probe recall gap (0.84 → ≥0.9 pinned) for one cheap
-    // equality-join round; production ANN builds iterate this to a
-    // fixpoint.
-    val vecs = withUnit.select(col("vec_id"), col("v"), col("nrm"))
-    // SYMMETRIZED adjacency (forward ∪ reverse neighbors) — the
-    // NN-descent neighborhood: being someone's neighbor is as
-    // informative as having one
-    val adj = top.select(col("src"), col("dst"))
-      .unionAll(top.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-    val nn2 = adj.select(col("src"), col("dst").as("mid"))
-      .join(adj.select(col("src").as("mid"), col("dst").as("dst2")), "mid")
-      .select(col("src"), col("dst2").as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .distinct()
-    val extra = nn2
-      .join(vecs.select(col("vec_id").as("src"), col("v").as("qv"),
-        col("nrm").as("qnrm")), "src")
-      .join(vecs.select(col("vec_id").as("dst"), col("v").as("v2"),
-        col("nrm").as("nrm2")), "dst")
-      .select(col("src"), col("dst"),
-        (floor((dot(col("qv"), col("v2")) / (col("qnrm") * col("nrm2"))) * 10000 + 0.5) / 10000.0)
-          .as("cos_sim"))
-    val refined = top.select("src", "dst", "cos_sim").unionAll(extra)
-      .dropDuplicates("src", "dst")
-    val top2 = org.apache.spark.sql.graft.TopKOps.topKPerKey(
-      refined, Seq(col("src")), Seq(col("cos_sim").desc, col("dst").asc), 4)
-    val w = Window.partitionBy(col("src")).orderBy(col("cos_sim").desc, col("dst"))
-    val out = top2.withColumn("rank", row_number().over(w))
-      .select(col("src"), col("rank"), col("dst"), col("cos_sim"))
-      .orderBy(col("src"), col("rank"))
-      .localCheckpoint(eager = true)
-    graft.Ckpt.free(top); graft.Ckpt.free(assigned)
-    out
+    graft.Ckpt.scoped { sc =>
+      val assigned = sc.checkpoint(withUnit
+        .withColumn("list",
+          array_min(array(centroidStructs(cs, col("u")): _*)).getField("list"))
+        .select(col("vec_id").as("dst"), col("v").as("v2"),
+          col("nrm").as("nrm2"), col("list"))) // one assignment pass, reused by all probes
+      // a kNN-GRAPH build probes deeper than a point query (it runs
+      // once per corpus and its recall gates everything downstream):
+      // 8 of 16 lists here; at production NLists (√n) the probe
+      // fraction keeps shrinking while absolute probes stay constant
+      val graphProbes = 8
+      val probes = withUnit
+        .withColumn("probe", explode(slice(
+          array_sort(array(centroidStructs(cs, col("u")): _*)), 1, graphProbes)))
+        .select(col("vec_id").as("src"), col("v").as("qv"),
+          col("nrm").as("qnrm"), col("probe.list").as("list"))
+      val cand = probes.join(assigned, Seq("list"))
+        .filter(col("src") =!= col("dst"))
+        .select(col("src"), col("dst"),
+          (floor((dot(col("qv"), col("v2")) / (col("qnrm") * col("nrm2"))) * 10000 + 0.5) / 10000.0)
+            .as("cos_sim"))
+      // keep a WIDER intermediate list (top-8) for the refinement round
+      // — the extra candidates are exactly the pool NN-descent mines —
+      // and cut to the final 4 after it
+      // read 3x below (two self-join arms + union)
+      val top = sc.checkpoint(org.apache.spark.sql.graft.TopKOps.topKPerKey(
+          cand, Seq(col("src")), Seq(col("cos_sim").desc, col("dst").asc), 8))
+      // ONE NN-DESCENT refinement round (Dong et al. WWW 2011): a
+      // vector's true neighbors are usually neighbors of its current
+      // neighbors, so candidates ∪= neighbors-of-neighbors from the
+      // top-4 graph — one self-join on the middle vertex (O(n·16)
+      // pairs), score, union with the kept edges, re-cut. Closes the
+      // misrouted-probe recall gap (0.84 → ≥0.9 pinned) for one cheap
+      // equality-join round; production ANN builds iterate this to a
+      // fixpoint.
+      val vecs = withUnit.select(col("vec_id"), col("v"), col("nrm"))
+      // SYMMETRIZED adjacency (forward ∪ reverse neighbors) — the
+      // NN-descent neighborhood: being someone's neighbor is as
+      // informative as having one
+      val adj = top.select(col("src"), col("dst"))
+        .unionAll(top.select(col("dst").as("src"), col("src").as("dst")))
+        .distinct()
+      val nn2 = adj.select(col("src"), col("dst").as("mid"))
+        .join(adj.select(col("src").as("mid"), col("dst").as("dst2")), "mid")
+        .select(col("src"), col("dst2").as("dst"))
+        .filter(col("src") =!= col("dst"))
+        .distinct()
+      val extra = nn2
+        .join(vecs.select(col("vec_id").as("src"), col("v").as("qv"),
+          col("nrm").as("qnrm")), "src")
+        .join(vecs.select(col("vec_id").as("dst"), col("v").as("v2"),
+          col("nrm").as("nrm2")), "dst")
+        .select(col("src"), col("dst"),
+          (floor((dot(col("qv"), col("v2")) / (col("qnrm") * col("nrm2"))) * 10000 + 0.5) / 10000.0)
+            .as("cos_sim"))
+      val refined = top.select("src", "dst", "cos_sim").unionAll(extra)
+        .dropDuplicates("src", "dst")
+      val top2 = org.apache.spark.sql.graft.TopKOps.topKPerKey(
+        refined, Seq(col("src")), Seq(col("cos_sim").desc, col("dst").asc), 4)
+      val w = Window.partitionBy(col("src")).orderBy(col("cos_sim").desc, col("dst"))
+      sc.keep(top2.withColumn("rank", row_number().over(w))
+        .select(col("src"), col("rank"), col("dst"), col("cos_sim"))
+        .orderBy(col("src"), col("rank")))
+    }
   }
 
   /** IVF INDEX-QUALITY report — the health check a production ANN

@@ -513,10 +513,9 @@ object TextAnalysis {
     // result (one row per DISTINCT bigram — tiny), not from a second
     // full explode. The grouped table is persisted so the total and
     // the top-K read the same aggregation.
-    val grouped = bigramsOf(docs)
-      .groupBy("bg").agg(count(lit(1)).as("n"))
-      .persist()
-    try {
+    graft.Ckpt.scoped { sc =>
+      val grouped = sc.persist(bigramsOf(docs)
+        .groupBy("bg").agg(count(lit(1)).as("n")))
       val totalRow = grouped.agg(sum(col("n"))).collect()(0)
       if (totalRow.isNullAt(0)) Map.empty
       else {
@@ -527,7 +526,7 @@ object TextAnalysis {
           .map(r => r.getString(0) -> math.log(r.getLong(1) / total))
           .toMap
       }
-    } finally grouped.unpersist(false)
+    }
   }
 
   /** Mean bigram log-prob of a text column under a driver-built
@@ -654,13 +653,12 @@ object TextAnalysis {
       val table = bigramLogProbMicros(docs)
       import s.implicits._
       val tableDf = table.toSeq.sortBy(_._1).toDF("bg", "lp")
-      val scored = bigramsOf(docs, carry = Seq(col("doc_id")))
-        .join(broadcast(tableDf), Seq("bg"), "left")
-        .groupBy(col("doc_id"))
-        .agg(round(sum(coalesce(col("lp"), lit(LmFloorMicro))).cast("double")
-          / lit(1000000.0) / count(lit(1)), 4).as("lm_score"))
-        .persist()
-      try {
+      graft.Ckpt.scoped { sc =>
+        val scored = sc.persist(bigramsOf(docs, carry = Seq(col("doc_id")))
+          .join(broadcast(tableDf), Seq("bg"), "left")
+          .groupBy(col("doc_id"))
+          .agg(round(sum(coalesce(col("lp"), lit(LmFloorMicro))).cast("double")
+            / lit(1000000.0) / count(lit(1)), 4).as("lm_score")))
         // exact decile thresholds over the per-doc scored relation —
         // the oracle-pinned rung (DuckDB quantile_cont is exact); at
         // 100 TB swap in the percentile_approx GK sketch, which the
@@ -673,15 +671,14 @@ object TextAnalysis {
         }
         val toks = docs.select(col("doc_id"),
           tokenCount(col("text")).cast("long").as("n_tokens"))
-        scored.join(toks, "doc_id")
+        sc.keep(scored.join(toks, "doc_id")
           .withColumn("bucket", bucket.cast("long"))
           .groupBy(col("bucket"))
           .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("sum_tokens"),
             round(min(col("lm_score")), 4).as("min_score"),
             round(max(col("lm_score")), 4).as("max_score"))
-          .orderBy(col("bucket"))
-          .localCheckpoint(eager = true)
-      } finally scored.unpersist(false)
+          .orderBy(col("bucket")))
+      }
     }
 
   val WinnowK = 16 // character k-gram length
@@ -1305,11 +1302,11 @@ object TextAnalysis {
     * normalization ScalaTest.
     */
   def knModel(docs: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    val bgc = docs.select(explode(wordBigrams(col("text"))).as("b"))
+    // the result's own checkpoint: all three model relations read it
+    val bgc = graft.Ckpt.keep(docs.select(explode(wordBigrams(col("text"))).as("b"))
       .select(col("b.v").as("v"), col("b.w").as("w"))
       .filter(length(col("v")) > 0 && length(col("w")) > 0)
-      .groupBy(col("v"), col("w")).agg(count(lit(1)).cast("double").as("c_vw"))
-      .persist()
+      .groupBy(col("v"), col("w")).agg(count(lit(1)).cast("double").as("c_vw")))
     val ctx = bgc.groupBy(col("v"))
       .agg(sum(col("c_vw")).as("c_v"), count(lit(1)).cast("double").as("n1p_v"))
     val n1pp = bgc.count().toDouble // distinct bigram types
@@ -1428,31 +1425,30 @@ object TextAnalysis {
       .select(col("p.a").as("w1"), col("p.b").as("w2"))
       .filter(col("w1") =!= col("w2"))
     // undirected: each pair contributes both directions
-    val edges = pairs
-      .unionAll(pairs.select(col("w2").as("w1"), col("w1").as("w2")))
-      .groupBy(col("w1"), col("w2")).agg(count(lit(1)).cast("double").as("wt"))
-      .cache() // O(|E|) relation drives every iteration
-    val wdeg = edges.groupBy(col("w1")).agg(sum(col("wt")).as("wdeg"))
-    val out = edges.join(wdeg, "w1")
-      .select(col("w1"), col("w2"), (col("wt") / col("wdeg")).as("share"))
-      .cache()
-    var ranks = out.select(col("w1").as("word")).distinct()
-      .withColumn("rank", lit(1.0))
-    for (_ <- 1 to 10) {
+    graft.Ckpt.scoped { sc =>
+      // O(|E|) relation drives every iteration
+      val edges = sc.persist(pairs
+        .unionAll(pairs.select(col("w2").as("w1"), col("w1").as("w2")))
+        .groupBy(col("w1"), col("w2")).agg(count(lit(1)).cast("double").as("wt")))
+      val wdeg = edges.groupBy(col("w1")).agg(sum(col("wt")).as("wdeg"))
+      val out = sc.persist(edges.join(wdeg, "w1")
+        .select(col("w1"), col("w2"), (col("wt") / col("wdeg")).as("share")))
+      val init = out.select(col("w1").as("word")).distinct()
+        .withColumn("rank", lit(1.0))
       // per-term contributions quantize to exact pico-unit longs
       // BEFORE the neighbor sum (the Round-7 rule): the sum is then
       // partition-order invariant and engine-exact, which is what
       // lets the chained-CTE oracle replay all 10 rounds
       // hash-identically. The 1e-12 grid sits 8 orders below the
-      // output rounding.
-      ranks = out.join(ranks, col("w1") === col("word"))
-        .groupBy(col("w2").as("word"))
-        .agg((lit((1.0 - damping)) + lit(damping) *
-          (sum(round(col("share") * col("rank") * lit(1e12), 0).cast("long"))
-            .cast("double") / lit(1e12))).as("rank"))
-      ranks = ranks.localCheckpoint(eager = false) // cut the iteration lineage
+      // output rounding. Lineage is cut every 3 rounds.
+      sc.keep(sc.iterate(init, 10, 3) { (ranks, _) =>
+        out.join(ranks, col("w1") === col("word"))
+          .groupBy(col("w2").as("word"))
+          .agg((lit((1.0 - damping)) + lit(damping) *
+            (sum(round(col("share") * col("rank") * lit(1e12), 0).cast("long"))
+              .cast("double") / lit(1e12))).as("rank"))
+      })
     }
-    ranks
   }
 
   /** text_textrank's oracle: rebuild the co-occurrence graph and
@@ -1670,9 +1666,9 @@ object TextAnalysis {
       : (Map[String, Long], Map[String, Double], Seq[Double]) =
     uniFitCache.getOrElseUpdate(d, {
       import s.implicits._
-      val words = uniWords(Tables.documents(s, d))
-        .as[(String, Long)].persist()
-      try {
+      graft.Ckpt.scoped { sc =>
+        val words = sc.persist(uniWords(Tables.documents(s, d))
+          .as[(String, Long)])
         words.count()
         val multi = words.flatMap { case (w, cnt) =>
           for {
@@ -1722,7 +1718,7 @@ object TextAnalysis {
           bc.destroy()
         }
         (counts, logp, lls.toSeq)
-      } finally words.unpersist(false)
+      }
     })
 
   /** Unigram-LM (SentencePiece-style) tokenizer training — BPE's

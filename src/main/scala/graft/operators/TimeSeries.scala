@@ -311,10 +311,9 @@ object TimeSeries {
       |FROM test t JOIN model m
       |  ON m.event_type = t.event_type AND m.dow = dayofweek(t.day)
       |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-    val daily = Tables.events(s, d)
+    val daily = graft.Ckpt.keep(Tables.events(s, d)
       .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-      .agg(count(lit(1)).as("n"))
-      .cache()
+      .agg(count(lit(1)).as("n")))
     val cutoff = daily.agg((max(col("day")) - expr("INTERVAL 7 DAY")).as("cut"))
     val withCut = daily.crossJoin(broadcast(cutoff)) // single-row literal
     val train = withCut.filter(col("day") <= col("cut"))
@@ -665,10 +664,9 @@ object TimeSeries {
       |JOIN direct d ON d.dow = dayofweek(tt.day)
       |JOIN bu ON bu.day = tt.day
       |ORDER BY tt.day""".stripMargin) { (s, d) =>
-    val daily = Tables.events(s, d)
+    val daily = graft.Ckpt.keep(Tables.events(s, d)
       .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-      .agg(count(lit(1)).as("n"))
-      .cache()
+      .agg(count(lit(1)).as("n")))
     val cutoff = daily.agg((max(col("day")) - expr("INTERVAL 7 DAY")).as("cut"))
     val withCut = daily.crossJoin(broadcast(cutoff))
     val train = withCut.filter(col("day") <= col("cut"))
@@ -1477,10 +1475,9 @@ object TimeSeries {
       |               / sqrt(CAST(var18 AS DOUBLE) / 18)
       |             ELSE 0.0 END, 4) AS z
       |FROM v ORDER BY event_type""".stripMargin) { (s, d) =>
-    val daily = Tables.events(s, d)
+    val daily = graft.Ckpt.keep(Tables.events(s, d)
       .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-      .agg(count(lit(1)).as("n"))
-      .cache()
+      .agg(count(lit(1)).as("n")))
     val y = daily.select(col("event_type").as("yt"), col("day").as("yday"),
       col("n").as("yn"))
     val sRel = daily.join(y,

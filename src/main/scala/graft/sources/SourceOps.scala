@@ -340,28 +340,29 @@ object SourceOps {
     val affected = layout.filter(col("user_id") % 97 === 0)
       .select(col("ub")).distinct().collect().map(_.getAs[Number](0).longValue)
     if (affected.nonEmpty) {
-      val survivors = layout.filter(col("ub").isin(affected.toIndexedSeq: _*))
-        .filter(col("user_id") % 97 =!= 0)
-        .localCheckpoint(eager = true)
-      // dynamic overwrite replaces exactly the partitions present in
-      // the written data — a bucket whose rows ALL belonged to the
-      // requester produces no output partition and would silently
-      // keep its old files (found the hard way at sf0.001, where a
-      // bucket held a single user); such buckets are dropped
-      // explicitly, which is what a lakehouse DELETE's commit does.
-      val nonEmpty = survivors.select(col("ub")).distinct().collect()
-        .map(_.getAs[Number](0).longValue).toSet
-      val prev = s.conf.get("spark.sql.sources.partitionOverwriteMode")
-      s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try {
-        if (nonEmpty.nonEmpty)
-          survivors.filter(col("ub").isin(nonEmpty.toSeq: _*))
-            .write.mode("overwrite").partitionBy("ub").parquet(root)
-      } finally s.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      affected.filterNot(nonEmpty).foreach { b =>
-        fs.delete(new org.apache.hadoop.fs.Path(root, s"ub=$b"), true)
+      graft.Ckpt.scoped { sc =>
+        val survivors = sc.checkpoint(layout.filter(col("ub").isin(affected.toIndexedSeq: _*))
+          .filter(col("user_id") % 97 =!= 0))
+        // dynamic overwrite replaces exactly the partitions present in
+        // the written data — a bucket whose rows ALL belonged to the
+        // requester produces no output partition and would silently
+        // keep its old files (found the hard way at sf0.001, where a
+        // bucket held a single user); such buckets are dropped
+        // explicitly, which is what a lakehouse DELETE's commit does.
+        val nonEmpty = survivors.select(col("ub")).distinct().collect()
+          .map(_.getAs[Number](0).longValue).toSet
+        val prev = s.conf.get("spark.sql.sources.partitionOverwriteMode")
+        s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        try {
+          if (nonEmpty.nonEmpty)
+            survivors.filter(col("ub").isin(nonEmpty.toSeq: _*))
+              .write.mode("overwrite").partitionBy("ub").parquet(root)
+        } finally s.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        val fs = new org.apache.hadoop.fs.Path(root)
+          .getFileSystem(s.sparkContext.hadoopConfiguration)
+        affected.filterNot(nonEmpty).foreach { b =>
+          fs.delete(new org.apache.hadoop.fs.Path(root, s"ub=$b"), true)
+        }
       }
     }
   }
@@ -920,10 +921,9 @@ object SourceOps {
     // AFTER the overwrite below and "before" would equal "after".
     // Partition-column type inference turns day into DATE on read;
     // cast back so the day key stays one type end-to-end.
-    val before = s.read.parquet(dir)
+    val before = graft.Ckpt.keep(s.read.parquet(dir)
       .groupBy(col("day").cast("string").as("day"))
-      .agg(count(lit(1)).as("n_before"))
-      .localCheckpoint(true)
+      .agg(count(lit(1)).as("n_before")))
     // backfill: recompute the 2 lexicographically-first days without
     // "bot" traffic (here: drop a deterministic 10% of users)
     val days = before.orderBy(col("day")).limit(2)

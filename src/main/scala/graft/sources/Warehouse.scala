@@ -124,7 +124,9 @@ object Warehouse {
     val dir = new org.apache.hadoop.fs.Path(wh, s"graft_${name}_$h")
     val fs = wh.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (!fs.exists(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"))) {
-      build.write.mode("overwrite").parquet(dir.toString)
+      // the artifact is the parquet: storage the build's frame reads
+      // (a kept checkpoint) is freed once it is written
+      graft.Ckpt.scoped(sc => sc.adopt(build).write.mode("overwrite").parquet(dir.toString))
       writeMeta(s, dir, d, tables, "")
       gcStale(s) // a build miss means a fingerprint moved: sweep now
     }

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 /** Structured Streaming over the events/documents tables: windowed
@@ -97,26 +98,38 @@ object EventStreams {
     finally walk.close()
   }
 
-  /** Run `out` into a named memory sink to completion, then delete the
-    * staged temp dir. Pins shuffle partitions to
-    * [[StreamStatePartitions]] for the duration of the stream and
-    * restores the session value after.
+  /** The one stream lifecycle: pins shuffle partitions to
+    * [[StreamStatePartitions]], starts the query, drains it — and
+    * drains again after each `between` step (a late file, a
+    * watermark-advancing sentinel) — then stops it, deletes the
+    * `cleanup` dirs and restores the session's partition count.
+    * Returns the stopped query (its progress log stays readable).
     */
-  private def runToTable(s: SparkSession, name: String, mode: String,
-      out: DataFrame, tmp: java.nio.file.Path): DataFrame = {
-    s.streams.active.filter(_.name == name).foreach(_.stop())
+  private def drain(s: SparkSession, cleanup: Seq[java.nio.file.Path],
+      between: (() => Unit)*)(start: => StreamingQuery): StreamingQuery = {
     val prevParts = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", StreamStatePartitions.toString)
     try {
-      val q = out.writeStream.format("memory").queryName(name).outputMode(mode)
-        .start()
+      val q = start
       try {
         q.processAllAvailable()
+        between.foreach { step => step(); q.processAllAvailable() }
+        q
       } finally {
         q.stop()
-        deleteRecursively(tmp)
+        cleanup.foreach(deleteRecursively)
       }
     } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+  }
+
+  /** [[drain]] `out` into a named memory sink (replacing any stream
+    * still running under that name), deleting the staged temp dir.
+    */
+  private def runToTable(s: SparkSession, name: String, mode: String,
+      out: DataFrame, tmp: java.nio.file.Path, between: (() => Unit)*): DataFrame = {
+    s.streams.active.filter(_.name == name).foreach(_.stop())
+    drain(s, Seq(tmp), between: _*)(
+      out.writeStream.format("memory").queryName(name).outputMode(mode).start())
     s.table(name)
   }
 
@@ -153,28 +166,17 @@ object EventStreams {
     import s.implicits._
     val (src, tmp) = eventsStream3(s, dir)
     val chk = java.nio.file.Files.createTempDirectory("graft_progress_chk")
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", StreamStatePartitions.toString)
-    val progress = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-    try {
-      val q = hourlyAgg(src).writeStream
-        .outputMode("complete")
-        .option("checkpointLocation", chk.toString)
-        .format("noop")
-        .start()
-      try {
-        q.processAllAvailable()
-        q.recentProgress.foreach { p =>
-          val stateRows =
-            if (p.stateOperators.nonEmpty) p.stateOperators.map(_.numRowsTotal).sum
-            else 0L
-          progress += ((p.batchId, p.numInputRows, stateRows))
-        }
-      } finally {
-        q.stop(); deleteRecursively(tmp); deleteRecursively(chk)
-      }
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    progress.toSeq
+    val q = drain(s, Seq(tmp, chk))(hourlyAgg(src).writeStream
+      .outputMode("complete")
+      .option("checkpointLocation", chk.toString)
+      .format("noop")
+      .start())
+    q.recentProgress.toSeq.map { p =>
+      val stateRows =
+        if (p.stateOperators.nonEmpty) p.stateOperators.map(_.numRowsTotal).sum
+        else 0L
+      (p.batchId, p.numInputRows, stateRows)
+    }
       .filter(_._2 > 0) // trailing empty no-data batches carry no signal
       .toDF("batch_id", "input_rows", "state_rows")
       .orderBy(col("batch_id"))
@@ -387,7 +389,8 @@ object EventStreams {
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("batch_id").parquet(dataDir)
-    val q = events.select(col("event_id"), col("ts"), col("event_type"), col("value"))
+    drain(s, Seq(tmp, chk))(events
+      .select(col("event_id"), col("ts"), col("event_type"), col("value"))
       .writeStream
       .outputMode("append")
       .option("checkpointLocation", chk.toString)
@@ -395,12 +398,7 @@ object EventStreams {
         writeBatch(batch, id)
         maxBatch.updateAndGet(m => math.max(m, id)): Unit
       }
-      .start()
-    try q.processAllAvailable() finally {
-      q.stop()
-      deleteRecursively(tmp)
-      deleteRecursively(chk)
-    }
+      .start())
     // simulate the crash-recovery re-delivery of the newest batch
     val last = maxBatch.get()
     val replay = s.read.parquet(dataDir)
@@ -416,25 +414,16 @@ object EventStreams {
   def streamSinkRoundtrip(s: SparkSession, dir: String): DataFrame = {
     val (src, tmp) = eventsStream(s, dir)
     val dataDir = sinkRoot.resolve("hourly").toString
+    // checkpoints are per-run; a stale one would replay offsets
+    // against a staged dir that no longer exists
     val chk = java.nio.file.Files.createTempDirectory("graft_sink_chk")
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", StreamStatePartitions.toString)
-    try {
-      val q = hourlyAgg(src).writeStream
-        .outputMode("complete")
-        .option("checkpointLocation", chk.toString)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          batch.write.mode("overwrite").parquet(dataDir)
-        }
-        .start()
-      try q.processAllAvailable() finally {
-        q.stop()
-        deleteRecursively(tmp)
-        // checkpoints are per-run; a stale one would replay offsets
-        // against a staged dir that no longer exists
-        deleteRecursively(chk)
+    drain(s, Seq(tmp, chk))(hourlyAgg(src).writeStream
+      .outputMode("complete")
+      .option("checkpointLocation", chk.toString)
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+        batch.write.mode("overwrite").parquet(dataDir)
       }
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      .start())
     s.read.parquet(dataDir).orderBy(col("hour"), col("event_type"))
   }
 
@@ -506,25 +495,10 @@ object EventStreams {
     // drain again. Both sides' watermarks then pass every real
     // deadline (the global watermark is their MIN) and the extra
     // cycles flush all remaining outer rows from state.
-    val name = "stream_join_outer_sink"
-    s.streams.active.filter(_.name == name).foreach(_.stop())
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", StreamStatePartitions.toString)
-    try {
-      val q = joined.writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try {
-        q.processAllAvailable()
-        appendSentinel(s, tmp, rawEventSchema(s, dir)("ts").dataType,
-          maxTs.toInstant.plusSeconds(24 * 3600),
-          Seq((-1L, -1L, "click"), (-2L, -1L, "purchase")))
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-        deleteRecursively(tmp)
-      }
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    s.table(name)
+    runToTable(s, "stream_join_outer_sink", "append", joined, tmp,
+      () => appendSentinel(s, tmp, rawEventSchema(s, dir)("ts").dataType,
+        maxTs.toInstant.plusSeconds(24 * 3600),
+        Seq((-1L, -1L, "click"), (-2L, -1L, "purchase"))))
       .filter(col("purchase_id") >= 0)
       .orderBy(col("purchase_id"), col("click_id"))
   }
@@ -562,25 +536,10 @@ object EventStreams {
         "fullOuter")
       .select(col("purchase_id"), col("click_id"),
         coalesce(col("p_user"), col("c_user")).as("user_id"))
-    val name = "stream_join_full_sink"
-    s.streams.active.filter(_.name == name).foreach(_.stop())
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", StreamStatePartitions.toString)
-    try {
-      val q = joined.writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try {
-        q.processAllAvailable()
-        appendSentinel(s, tmp, rawEventSchema(s, dir)("ts").dataType,
-          maxTs.toInstant.plusSeconds(24 * 3600),
-          Seq((-1L, -1L, "click"), (-2L, -1L, "purchase")))
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-        deleteRecursively(tmp)
-      }
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    s.table(name)
+    runToTable(s, "stream_join_full_sink", "append", joined, tmp,
+      () => appendSentinel(s, tmp, rawEventSchema(s, dir)("ts").dataType,
+        maxTs.toInstant.plusSeconds(24 * 3600),
+        Seq((-1L, -1L, "click"), (-2L, -1L, "purchase"))))
       .filter(col("user_id") >= 0)
       .orderBy(col("purchase_id").asc_nulls_first, col("click_id").asc_nulls_first)
   }
@@ -646,25 +605,10 @@ object EventStreams {
           }
       }
       .toDF("user_id", "start_us", "n_events")
-    val name = "stream_sessions_state_sink"
-    s.streams.active.filter(_.name == name).foreach(_.stop())
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", StreamStatePartitions.toString)
-    try {
-      val q = sessions.writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try {
-        q.processAllAvailable()
-        appendSentinel(s, tmp, rawEventSchema(s, dir)("ts").dataType,
-          maxTs.toInstant.plusSeconds(24 * 3600),
-          Seq((-1L, -1L, "view")))
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-        deleteRecursively(tmp)
-      }
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    s.table(name)
+    runToTable(s, "stream_sessions_state_sink", "append", sessions, tmp,
+      () => appendSentinel(s, tmp, rawEventSchema(s, dir)("ts").dataType,
+        maxTs.toInstant.plusSeconds(24 * 3600),
+        Seq((-1L, -1L, "view"))))
       .filter(col("user_id") >= 0)
       .select(col("user_id"),
         date_trunc("minute", timestamp_micros(col("start_us"))).as("start_min"),
@@ -700,24 +644,10 @@ object EventStreams {
       .groupBy(window(col("window"), "1 day"))
       .agg(sum(col("n")).as("n"), count(lit(1)).as("n_hours"))
       .select(col("window.start").as("day"), col("n"), col("n_hours"))
-    val name = "stream_two_level_sink"
-    s.streams.active.filter(_.name == name).foreach(_.stop())
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", StreamStatePartitions.toString)
-    try {
-      val q = daily.writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try {
-        q.processAllAvailable()
-        appendSentinel(s, tmp, rawEventSchema(s, dir)("ts").dataType,
-          maxTs.toInstant.plusSeconds(72 * 3600), Seq((-1L, -1L, "wm_probe")))
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-        deleteRecursively(tmp)
-      }
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    s.table(name).orderBy(col("day"))
+    runToTable(s, "stream_two_level_sink", "append", daily, tmp,
+      () => appendSentinel(s, tmp, rawEventSchema(s, dir)("ts").dataType,
+        maxTs.toInstant.plusSeconds(72 * 3600), Seq((-1L, -1L, "wm_probe"))))
+      .orderBy(col("day"))
   }
 
   /** State API v2 processor for the per-user running stats: one
@@ -813,27 +743,14 @@ object EventStreams {
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").as("hour"), col("event_type"), col("n"))
-    val name = "stream_late_sink"
-    s.streams.active.filter(_.name == name).foreach(_.stop())
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", StreamStatePartitions.toString)
-    try {
-      val q = agg.writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try {
-        q.processAllAvailable() // batch 1 → watermark = max1 − 1 h
-        raw.filter(col("event_id") % 3 === 0)
-          .coalesce(1).write.mode("append").parquet(tmp.toString)
-        q.processAllAvailable() // batch 2 arrives late
-        appendSentinel(s, tmp, rawEventSchema(s, dir)("ts").dataType,
-          maxTs.toInstant.plusSeconds(24 * 3600), Seq((-1L, -1L, "wm_probe")))
-        q.processAllAvailable() // flush all real windows
-      } finally {
-        q.stop()
-        deleteRecursively(tmp)
-      }
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    s.table(name).orderBy(col("hour"), col("event_type"))
+    // batch 1 drains first (watermark = max1 − 1 h); batch 2 arrives
+    // late; the sentinel then flushes all real windows
+    runToTable(s, "stream_late_sink", "append", agg, tmp,
+      () => raw.filter(col("event_id") % 3 === 0)
+        .coalesce(1).write.mode("append").parquet(tmp.toString),
+      () => appendSentinel(s, tmp, rawEventSchema(s, dir)("ts").dataType,
+        maxTs.toInstant.plusSeconds(24 * 3600), Seq((-1L, -1L, "wm_probe"))))
+      .orderBy(col("hour"), col("event_type"))
   }
 
   /** Incremental batch ETL via Trigger.AvailableNow + a persistent
@@ -874,12 +791,11 @@ object EventStreams {
     orders.filter(col("o_orderkey") % 2 === 1)
       .coalesce(1).write.mode("append").parquet(srcDir.toString)
     runOnce()
-    val out = s.read.parquet(sinkDir.toString)
+    val out = graft.Ckpt.keep(s.read.parquet(sinkDir.toString)
       .groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("n"),
         round(sum(col("o_totalprice")), 2).as("total"))
-      .orderBy(col("o_orderpriority"))
-      .localCheckpoint(eager = true)
+      .orderBy(col("o_orderpriority")))
     (out, counts.toSeq)
   }
 

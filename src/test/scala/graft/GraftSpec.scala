@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.{CheckpointBridge, SessionHygiene}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM, forked by sbt):
@@ -34,10 +35,24 @@ class ContractSpec extends AnyFunSuite {
     assert(SparkEntry.defs.map(_.name).distinct.size == SparkEntry.defs.size)
   }
 
+  // Each entry starts from a clean session; after its count() every
+  // persistent RDD it created must be one of its result's own
+  // checkpoint blocks (CheckpointBridge.rddIds). Anything else is a
+  // cached frame or a dead checkpoint generation the operator leaked.
   test("all queries run at sf0.001") {
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val n = fn(spark, sf).count()
-      withClue(s"query $name:") { assert(n >= 0) }
+    val leaks = SparkEntry.defs.flatMap { d =>
+      SessionHygiene.deepClear(spark)
+      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      val out = d.fn(spark, sf)
+      val n = out.count()
+      withClue(s"query ${d.name}:") { assert(n >= 0) }
+      val stray = spark.sparkContext.getPersistentRDDs.keySet.toSet --
+        before -- CheckpointBridge.rddIds(out)
+      if (stray.isEmpty) None
+      else Some(s"${d.name} (${stray.size}: ${stray.toSeq.sorted.mkString(",")})")
     }
+    assert(leaks.isEmpty,
+      s"${leaks.size} entries leave storage their result does not read:\n" +
+        leaks.mkString("\n"))
   }
 }

@@ -211,6 +211,27 @@ class DedupSpec extends AnyFunSuite {
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 
+  test("CurateApp.run leaves no persistent RDDs behind") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_curate_clean")
+    val ctx = spark.sparkContext
+    // pin every RDD the run persists: the driver GC must not get to
+    // reap a leaked one (ContextCleaner) before the check sees it
+    val pinned = java.util.concurrent.ConcurrentHashMap.newKeySet[AnyRef]()
+    val running = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val pin = new Thread(() =>
+      while (running.get) { ctx.getPersistentRDDs.values.foreach(pinned.add); Thread.sleep(2) })
+    try {
+      org.apache.spark.sql.graft.SessionHygiene.deepClear(spark)
+      val before = ctx.getPersistentRDDs.keySet.toSet
+      pin.start()
+      try assert(CurateApp.run(spark, s"$sf/documents.parquet", s"$dir/curated") > 0)
+      finally { running.set(false); pin.join() }
+      val left = ctx.getPersistentRDDs.keySet.toSet -- before
+      assert(pinned.size > 0, "the run persisted nothing: the check is vacuous")
+      assert(left.isEmpty, s"CurateApp.run left RDDs ${left.toSeq.sorted}")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
   test("NFC-normalized dedup collapses composed and decomposed encodings") {
     import spark.implicits._
     val composed = "café résumé"          // U+00E9

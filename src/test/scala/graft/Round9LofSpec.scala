@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -29,21 +30,18 @@ class Round9LofSpec extends AnyFunSuite {
     val pts = cloud(coords, dup)
     val n = pts.count().toDouble
     val h = math.sqrt(4.0 / n)
-    val a = Profile.lofPerId(pts, h, 5, broadcastCells = true)
-      .collect().map(_.toString).toSeq
+    def rows(lof: Ckpt.Scope => DataFrame) =
+      Ckpt.scoped(sc => lof(sc).collect().map(_.toString).toSeq)
+    val a = rows(Profile.lofPerId(_, pts, h, 5, broadcastCells = true))
     // the shuffle fallback regime must stay value-identical too
-    val a2 = Profile.lofPerId(pts, h, 5, broadcastCells = false)
-      .collect().map(_.toString).toSeq
-    val b = Profile.lofPooled(pts, h, 5, broadcastLookups = true)
-      .collect().map(_.toString).toSeq
-    val b2 = Profile.lofPooled(pts, h, 5, broadcastLookups = false)
-      .collect().map(_.toString).toSeq
+    val a2 = rows(Profile.lofPerId(_, pts, h, 5, broadcastCells = false))
+    val b = rows(Profile.lofPooled(_, pts, h, 5, broadcastLookups = true))
+    val b2 = rows(Profile.lofPooled(_, pts, h, 5, broadcastLookups = false))
     // r11: the pooled CELL join's shuffled fallback regime must stay
     // value-identical too (broadcastCells=false ⇒ semi-join prune +
     // shuffled candidate join)
-    val b3 = Profile.lofPooled(pts, h, 5, broadcastLookups = true,
-        broadcastCells = false)
-      .collect().map(_.toString).toSeq
+    val b3 = rows(Profile.lofPooled(_, pts, h, 5, broadcastLookups = true,
+      broadcastCells = false))
     assert(a == a2, s"broadcast:\n${a.mkString("\n")}\nshuffle:\n${a2.mkString("\n")}")
     assert(b == b2, s"pooled-bc:\n${b.mkString("\n")}\npooled-sh:\n${b2.mkString("\n")}")
     assert(b == b3, s"pooled-bc:\n${b.mkString("\n")}\npooled-cells-sh:\n${b3.mkString("\n")}")
@@ -83,7 +81,8 @@ class Round9LofSpec extends AnyFunSuite {
     import graft.operators.Profile
     val pts = cloud(100, _ => 6)
     val h = math.sqrt(4.0 / 600.0)
-    val plan = Profile.lofPooled(pts, h, 5).queryExecution.optimizedPlan.toString
+    val plan = Ckpt.scoped(sc =>
+      Profile.lofPooled(sc, pts, h, 5).queryExecution.optimizedPlan.toString)
     assert(plan.contains("TopKPerKey"))
   }
 
@@ -100,8 +99,8 @@ class Round9LofSpec extends AnyFunSuite {
     import graft.operators.Profile
     val pts = cloud(300, _ => 1)
     val h = math.sqrt(4.0 / 300.0)
-    val plan = Profile.lofPerId(pts, h, 5, broadcastCells = true)
-      .queryExecution.executedPlan.toString
+    val plan = Ckpt.scoped(sc => Profile.lofPerId(sc, pts, h, 5, broadcastCells = true)
+      .queryExecution.executedPlan.toString)
     assert(countIn(plan, "BroadcastHashJoin") >= 3, plan.take(4000))
     assert(!plan.contains("LeftSemi"), "broadcast regime must elide the prune")
     assert(plan.contains("TopKPerKeyPartial"))
@@ -111,8 +110,8 @@ class Round9LofSpec extends AnyFunSuite {
     import graft.operators.Profile
     val pts = cloud(300, _ => 1)
     val h = math.sqrt(4.0 / 300.0)
-    val plan = Profile.lofPerId(pts, h, 5, broadcastCells = false)
-      .queryExecution.executedPlan.toString
+    val plan = Ckpt.scoped(sc => Profile.lofPerId(sc, pts, h, 5, broadcastCells = false)
+      .queryExecution.executedPlan.toString)
     assert(plan.contains("LeftSemi"), plan.take(4000))
     assert(plan.contains("TopKPerKeyPartial"))
   }
@@ -131,8 +130,8 @@ class Round9LofSpec extends AnyFunSuite {
     import graft.operators.Profile
     val pts = cloud(100, _ => 6)
     val h = math.sqrt(4.0 / 600.0)
-    val df = Profile.lofPooled(pts, h, 5, broadcastCells = false)
-    val plan = df.queryExecution.executedPlan.toString
+    val plan = Ckpt.scoped(sc => Profile.lofPooled(sc, pts, h, 5, broadcastCells = false)
+      .queryExecution.executedPlan.toString)
     assert(plan.contains("LeftSemi"), plan.take(4000))
     val tail = plan.substring(0, plan.indexOf("TopKPerKeyFinal"))
     assert(!tail.contains("SortMergeJoin [b#"),
@@ -151,8 +150,8 @@ class Round9LofSpec extends AnyFunSuite {
     import graft.operators.Profile
     val pts = cloud(100, _ => 6)
     val h = math.sqrt(4.0 / 600.0)
-    val df = Profile.lofPooled(pts, h, 5)
-    val plan = df.queryExecution.executedPlan.toString
+    val plan = Ckpt.scoped(sc =>
+      Profile.lofPooled(sc, pts, h, 5).queryExecution.executedPlan.toString)
     assert(!plan.contains("LeftSemi"),
       s"broadcast regime must elide the prune:\n${plan.take(4000)}")
     val head = plan.substring(plan.indexOf("TopKPerKeyFinal"))
