@@ -15,7 +15,8 @@ import graft.sources.PointsText
   *
   * The reference runs one Hadoop job per iteration, re-reading the
   * input from HDFS 20×; here the parsed points are cached once and
-  * each iteration is a map-side assignment plus a k-group mean.
+  * each iteration is one map+combine job (`KMeans.sweep`): tasks
+  * assign and sum per cluster, the driver merges and divides.
   */
 object KMeansApp {
   def main(args: Array[String]): Unit = {

@@ -22,12 +22,16 @@ import org.apache.spark.sql.graft.{ColumnBridge, NearestCentroid}
   *    /root/reference/src/KMeans.java:119-146
   *
   * Spark-first design: centroids are O(k) driver-side values (the
-  * reference ships them in the job Configuration; we ship them as one
-  * reference object of the codegen'd NearestCentroid kernel, so the
-  * generated code is the same every iteration). Each iteration is one
-  * map-side assignment (zero shuffle) plus one partial-aggregated
-  * groupBy of k groups — the same shape that holds at 100 TB:
-  * per-iteration cluster traffic is O(k · partitions), never O(rows).
+  * reference ships them in the job Configuration; we ship them in the
+  * task closure). Each iteration is ONE map+combine job (`sweep`) over
+  * a plan built once per loop: every task assigns its points to the
+  * nearest centroid and sums them per cluster (the mapper and the
+  * combiner), and the driver adds the k per-partition partials and
+  * divides (the reducer). No shuffle, no per-iteration planning or
+  * codegen — the same shape that holds at 100 TB: per-iteration
+  * cluster traffic is O(k · partitions), never O(rows). The SQL-side
+  * entries (assignment counts, costs) use the NearestCentroid kernel,
+  * whose argmin the sweep calls too.
   *
   * Points are 2-D, as in the reference: x = l_quantity,
   * y = l_extendedprice from lineitem. Deterministic init (so the
@@ -72,49 +76,113 @@ object KMeans {
       ColumnBridge.expression(x), ColumnBridge.expression(y),
       cs.toIndexedSeq.flatMap { case (cx, cy) => Seq(cx, cy) }, distance))
 
-  /** One Lloyd update: mean of assigned points per cluster (empty
-    * clusters produce no row; caller decides stale-keep semantics).
-    * Map-side partial aggregation → single k-group shuffle.
-    *
-    * The centroids reach the assignment as a reference object of the
-    * NearestCentroid kernel, not as literals: literals are written
-    * into the generated source, so each iteration used to compile a
-    * new class (janino) that then ran in the bytecode interpreter.
-    * With the kernel the plan's code is the same every iteration and
-    * every job, so it hits Spark's codegen cache. On perfbench
-    * kmeans_lloyd (250k points, k=8, 20 iterations, a 4-core VM) that
-    * took codegen compiles per job 40 → 0, executor CPU 7.0 → 1.2 s,
-    * the Lloyd loop 7.2 → 2.5 s and the median job 7.1 → 2.6 s. An
-    * earlier attempt at plan reuse was 7× slower, but that came from a
-    * higher-order transform() evaluated per row and a one-row
-    * crossJoin breaking whole-stage codegen, not from keeping the
-    * centroids out of the code.
-    */
-  def step(pts: DataFrame, cs: Array[(Double, Double)]): DataFrame =
-    pts.withColumn("cid", assignExpr(cs, col("x"), col("y")))
-      .groupBy(col("cid"))
-      .agg(avg(col("x")).as("x"), avg(col("y")).as("y"), count(lit(1)).as("n"))
+  // ---- the Lloyd loop ------------------------------------------------
 
-  /** n chained Lloyd iterations, dropping empty clusters (matches the
-    * generated SQL oracle). Returns final centroids keyed by cid.
-    * Caller should persist `pts` (each iteration is a full pass).
-    * `stepFn` is the update: `step`, or `weightedStep` for weighted
-    * Lloyd.
+  /** The (x, y, w, m) rows a sweep reads: coordinates, weight and
+    * membership mask (`-1L`: every row in every sweep). Planned once
+    * per loop: every sweep over the returned frame reuses its
+    * `queryExecution.toRdd`, so an iteration plans and compiles
+    * nothing.
     */
-  def iterate(pts: DataFrame, init: Array[(Double, Double)], iters: Int,
-      stepFn: (DataFrame, Array[(Double, Double)]) => DataFrame = step): Map[Int, (Double, Double)] = {
-    var centroids: Map[Int, (Double, Double)] = init.zipWithIndex.map { case (c, i) => i -> c }.toMap
+  private[graft] def sweepRows(pts: DataFrame, w: Column = lit(1.0),
+      m: Column = lit(-1L)): DataFrame =
+    pts.select(col("x").cast("double"), col("y").cast("double"), w.cast("double"),
+      m.cast("long"))
+
+  /** One map+combine pass — the reference's mapper and combiner in one
+    * job with no shuffle. Each task takes the rows whose mask has
+    * `bit` set, assigns each to its nearest centroid in every set
+    * (`NearestCentroid.argmin`, the SQL kernel's own) and sums
+    * (Σw·x, Σw·y, Σw, n) per cluster; the driver adds the
+    * per-partition partials in partition order, so the result does not
+    * depend on task timing. A row with a null x, y or w takes no part.
+    * Returns one array per set, four numbers per cluster; with w = 1,
+    * Σw·x = Σx and Σw = n exactly.
+    */
+  private[graft] def sweep(rows: DataFrame, sets: Seq[Array[(Double, Double)]],
+      bit: Long): Seq[Array[Double]] = {
+    val flat = sets.map(_.flatMap { case (x, y) => Array(x, y) }).toArray
+    val parts = rows.queryExecution.toRdd.mapPartitions { it =>
+      val acc = flat.map(cs => new Array[Double](2 * cs.length))
+      it.foreach { r =>
+        if ((r.getLong(3) & bit) != 0L && !r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2)) {
+          val x = r.getDouble(0)
+          val y = r.getDouble(1)
+          val w = r.getDouble(2)
+          var s = 0
+          while (s < flat.length) {
+            val o = 4 * NearestCentroid.argmin(flat(s), x, y)
+            val a = acc(s)
+            a(o) += w * x; a(o + 1) += w * y; a(o + 2) += w; a(o + 3) += 1
+            s += 1
+          }
+        }
+      }
+      Iterator.single(acc)
+    }.collect()
+    flat.indices.map { s =>
+      val sum = new Array[Double](2 * flat(s).length)
+      parts.foreach(p => sum.indices.foreach(i => sum(i) += p(s)(i)))
+      sum
+    }
+  }
+
+  /** One centroid set of a Lloyd loop: its centroids, the cid each
+    * started as, the iterations it ran and whether it converged.
+    */
+  private[graft] final case class Fit(cs: Array[(Double, Double)], ids: Array[Int],
+      iters: Int, converged: Boolean) {
+
+    /** The Lloyd update from a sweep's sums: each centroid moves to
+      * Σw·x / Σw. An empty cluster keeps its centroid, or leaves the
+      * set if `drop`. Converged when every remaining centroid moved
+      * less than `tol` on both axes (so tol 0 never converges).
+      */
+    def next(sums: Array[Double], tol: Double, drop: Boolean): Fit = {
+      def n(c: Int) = sums(4 * c + 3)
+      val kept = cs.indices.filter(c => !drop || n(c) > 0)
+      val moved = kept.map(c =>
+        if (n(c) == 0) cs(c) else (sums(4 * c) / sums(4 * c + 2), sums(4 * c + 1) / sums(4 * c + 2)))
+      val still = kept.map(cs(_)).zip(moved).forall { case ((ox, oy), (nx, ny)) =>
+        math.abs(ox - nx) < tol && math.abs(oy - ny) < tol
+      }
+      Fit(moved.toArray, kept.map(ids(_)).toArray, iters + 1, still)
+    }
+  }
+
+  /** Lloyd over several centroid sets at once: one sweep per
+    * iteration serves every set still running. A set stops on its own
+    * after `maxIter` iterations or once it converges (per-axis `tol`,
+    * KMeans.java:104-115), and drops out of later sweeps. Empty
+    * clusters keep their centroid, as the reference does, or with
+    * `drop` leave the set, as the fixed-iteration SQL oracles do.
+    * Iteration i reads the rows whose mask has `bit(i)` set.
+    */
+  private[graft] def lloydSets(rows: DataFrame, inits: Seq[Array[(Double, Double)]],
+      tol: Double, maxIter: Int, drop: Boolean = false,
+      bit: Int => Long = _ => -1L): Seq[Fit] = {
+    var fits = inits.map(cs => Fit(cs.clone(), cs.indices.toArray, 0, converged = false))
     var i = 0
-    while (i < iters) {
-      val ordered = centroids.toSeq.sortBy(_._1)
-      val cs = ordered.map(_._2).toArray
-      val ids = ordered.map(_._1).toArray
-      val updated = stepFn(pts, cs).select("cid", "x", "y").collect()
-        .map(r => ids(r.getInt(0)) -> (r.getDouble(1), r.getDouble(2))).toMap
-      centroids = updated
+    while (i < maxIter && fits.exists(!_.converged)) {
+      val active = fits.indices.filterNot(fits(_).converged)
+      sweep(rows, active.map(fits(_).cs), bit(i)).zip(active).foreach { case (sums, f) =>
+        fits = fits.updated(f, fits(f).next(sums, tol, drop))
+      }
       i += 1
     }
-    centroids
+    fits
+  }
+
+  /** `iters` Lloyd iterations with no early stop, dropping empty
+    * clusters (matches the generated SQL oracle). Returns the final
+    * centroids keyed by their first cid. `weight` turns each mean into
+    * Σw·x / Σw (weighted Lloyd). Caller should persist `pts`: each
+    * iteration is a full pass.
+    */
+  def iterate(pts: DataFrame, init: Array[(Double, Double)], iters: Int,
+      weight: Column = lit(1.0)): Map[Int, (Double, Double)] = {
+    val f = lloydSets(sweepRows(pts, weight), Seq(init), tol = 0, iters, drop = true).head
+    f.ids.zip(f.cs).toMap
   }
 
   /** Full reference semantics: iterate until every centroid moves
@@ -122,28 +190,9 @@ object KMeans {
     * empty clusters keep their previous centroid.
     */
   def lloyd(pts: DataFrame, init: Array[(Double, Double)],
-      tol: Double = 1e-3, maxIter: Int = 20): (Array[(Double, Double)], Int, Boolean) =
-    lloydLoop(_ => pts, init, tol, maxIter)
-
-  /** The Lloyd loop over a per-iteration input: `batch(iter)` is the
-    * relation iteration `iter` averages (all points, or a mini-batch).
-    */
-  private def lloydLoop(batch: Int => DataFrame, init: Array[(Double, Double)],
-      tol: Double, maxIter: Int): (Array[(Double, Double)], Int, Boolean) = {
-    var centroids = init.clone()
-    var iter = 0
-    var converged = false
-    while (iter < maxIter && !converged) {
-      val updated = step(batch(iter), centroids).select("cid", "x", "y").collect()
-        .map(r => r.getInt(0) -> (r.getDouble(1), r.getDouble(2))).toMap
-      val next = centroids.zipWithIndex.map { case (old, i) => updated.getOrElse(i, old) }
-      converged = centroids.zip(next).forall { case ((ox, oy), (nx, ny)) =>
-        math.abs(ox - nx) < tol && math.abs(oy - ny) < tol
-      }
-      centroids = next
-      iter += 1
-    }
-    (centroids, iter, converged)
+      tol: Double = 1e-3, maxIter: Int = 20): (Array[(Double, Double)], Int, Boolean) = {
+    val f = lloydSets(sweepRows(pts), Seq(init), tol, maxIter).head
+    (f.cs, f.iters, f.converged)
   }
 
   /** Mini-batch k-means (after Sculley, WWW 2010 — simplified to a
@@ -158,13 +207,16 @@ object KMeans {
     */
   def minibatchLloyd(pts: DataFrame, init: Array[(Double, Double)],
       tol: Double = 1e-3, maxIter: Int = 20, frac: Int = 5): (Array[(Double, Double)], Int, Boolean) = {
+    // two md5s carry 20 slices, one batch per iteration
+    require(1 <= maxIter && maxIter <= 20 && frac >= 1,
+      s"minibatchLloyd needs 1 <= maxIter <= 20 and frac >= 1, got maxIter=$maxIter, frac=$frac")
     // md5-derived rotating batches (not xxhash64) so the DuckDB
     // oracle replays the identical samples — hashed ONCE per row:
     // two md5 strings carry twenty 12-bit slices, folded at
     // materialization into a single 20-BIT MEMBERSHIP MASK long
-    // (bit i set ⇔ row in iteration i's batch), so each of the 20
-    // iteration filters is one cached bitwise test instead of a
-    // per-row string hash or substring+conv.
+    // (bit i set ⇔ row in iteration i's batch), so iteration i's sweep
+    // reads the rows with bit i set: no per-iteration filter plan, and
+    // no per-row string hash or substring+conv.
     //
     // The slices come out via FOUR 60-bit conv parses (15 hex chars
     // each) + codegen'd shift/and, not twenty per-slice
@@ -190,8 +242,9 @@ object KMeans {
     }.reduce(_ + _)
     graft.Ckpt.scoped { sc =>
       val hashed = sc.persist(halves.select(col("x"), col("y"), mask.as("bmask")))
-      lloydLoop(iter => hashed.filter(col("bmask").bitwiseAND(lit(1L << iter)) =!= 0L),
-        init, tol, maxIter)
+      val f = lloydSets(sweepRows(hashed, m = col("bmask")), Seq(init), tol, maxIter,
+        bit = i => 1L << i).head
+      (f.cs, f.iters, f.converged)
     }
   }
 
@@ -343,10 +396,7 @@ object KMeans {
     lloydCtes(K, 1) +
       "\nSELECT cid, round(x, 3) AS cx, round(y, 3) AS cy FROM c1 ORDER BY cid") { (s, d) =>
     val pts = points(Tables.lineitem(s, d))
-    val cs = initCentroids(pts)
-    step(pts, cs)
-      .select(col("cid").cast("long"), round(col("x"), 3).as("cx"), round(col("y"), 3).as("cy"))
-      .orderBy(col("cid"))
+    centroidRows(s, iterate(pts, initCentroids(pts), 1))
   }
 
   /** Centroids after three chained Lloyd iterations — oracle SQL is
@@ -358,7 +408,11 @@ object KMeans {
       "\nSELECT cid, round(x, 3) AS cx, round(y, 3) AS cy FROM c3 ORDER BY cid") { (s, d) =>
     val all = points(Tables.lineitem(s, d))
     val init = initCentroids(all)
-    val fin = graft.Ckpt.scoped(sc => iterate(sc.persist(all.select("x", "y")), init, 3))
+    centroidRows(s, graft.Ckpt.scoped(sc => iterate(sc.persist(all.select("x", "y")), init, 3)))
+  }
+
+  /** (cid, cx, cy) rows of an `iterate` result, rounded as the oracle rounds. */
+  private def centroidRows(s: SparkSession, fin: Map[Int, (Double, Double)]): DataFrame = {
     import s.implicits._
     fin.toSeq.sortBy(_._1)
       .map { case (cid, (x, y)) => (cid.toLong, x, y) }
@@ -640,18 +694,20 @@ object KMeans {
     graft.Ckpt.scoped { sc =>
       val withU = sc.persist(pts.select(
         col("x") +: col("y") +: (0 until k).map(j => uExpr(j).as(s"u$j")): _*))
-      val first = withU.orderBy(col("u0").asc, col("x"), col("y")).limit(1)
-        .select("x", "y").collect()(0)
+      def pick(ordered: DataFrame): (Double, Double) = {
+        val r = ordered.limit(1).select("x", "y").collect()
+        require(r.nonEmpty, s"ppInit needs k=$k distinct points, found " +
+          withU.select("x", "y").distinct().count())
+        (r(0).getDouble(0), r(0).getDouble(1))
+      }
       val chosen = scala.collection.mutable.ArrayBuffer(
-        (first.getDouble(0), first.getDouble(1)))
+        pick(withU.orderBy(col("u0").asc, col("x"), col("y"))))
       var j = 1
       while (j < k) {
         val d2 = minDistExpr(chosen.toArray, col("x"), col("y"))
-        val next = withU
+        chosen += pick(withU
           .filter(d2 > 0) // never re-pick a chosen point
-          .orderBy((col(s"u$j") / d2).asc, col("x"), col("y")).limit(1)
-          .select("x", "y").collect()(0)
-        chosen += ((next.getDouble(0), next.getDouble(1)))
+          .orderBy((col(s"u$j") / d2).asc, col("x"), col("y")))
         j += 1
       }
       chosen.toArray
@@ -735,17 +791,15 @@ object KMeans {
     * long before per-axis convergence.
     *
     * FUSED SWEEP: the four k's share every corpus pass instead of
-    * running 4 independent Lloyd loops (up to 80 passes). Each
-    * iteration is ONE scan evaluating all still-active k's
-    * assignments (their 30 centroid structs are one codegen'd
-    * expression set) and ONE flat aggregate of 3 conditional columns
-    * per (k, cid) — the kmeans_fuzzy many-column trick — so the whole
-    * sweep costs max-iterations scans, not Σ per-k iterations. Each
-    * k's update trajectory only reads its own centroids, so per-k
-    * centroids / iteration counts / convergence flags are IDENTICAL
-    * to independent runs (parity pinned in ScalaTest); a k that
-    * converges drops out of the scan while the others continue. The
-    * 4 final costs fuse into one last scan the same way.
+    * running 4 independent Lloyd loops (up to 80 passes): one
+    * `lloydSets` call, so each iteration is ONE map+combine job that
+    * assigns every point in all still-running k's — the whole sweep
+    * costs max-iterations jobs, not Σ per-k iterations. Each k's
+    * update only reads its own centroids, so per-k centroids /
+    * iteration counts / convergence flags are IDENTICAL to
+    * independent runs (parity pinned in ScalaTest); a k that
+    * converges drops out while the others continue. The 4 final
+    * costs fuse into one last scan.
     *
     * Cost is reported in millions, from an EXACT integer sum: each
     * point's min squared distance quantizes to centi-units
@@ -787,85 +841,19 @@ object KMeans {
       // k points of one fixed ordering — so all four inits come from
       // ONE TakeOrdered pass instead of four
       val first = initCentroids(allPts, ks.max)
-      val results = fusedLloydSweep(pts, ks.map(k => k -> first.take(k)).toMap,
-        tol = 1e-3, maxIter = 8)
+      val fits = lloydSets(sweepRows(pts), ks.map(first.take), tol = 1e-3, maxIter = 8)
       // all 4 final quantized costs in ONE scan, summed as exact int64
-      val costAggs = ks.map { k =>
-        sum(floor(minDistExpr(results(k)._1, col("x"), col("y")) * 100)
-          .cast("long")).as(s"cost_$k")
+      val costAggs = ks.zip(fits).map { case (k, f) =>
+        sum(floor(minDistExpr(f.cs, col("x"), col("y")) * 100).cast("long")).as(s"cost_$k")
       }
       val crow = pts.agg(costAggs.head, costAggs.tail: _*).head()
-      val rows = ks.map { k =>
-        val (_, iters, converged) = results(k)
-        (k.toLong, iters.toLong, converged,
+      val rows = ks.zip(fits).map { case (k, f) =>
+        (k.toLong, f.iters.toLong, f.converged,
           math.floor(crow.getAs[Long](s"cost_$k") / 100.0 / 1000000 * 1000 + 0.5) / 1000)
       }
       import s.implicits._
       rows.toDF("k", "n_iters", "converged", "cost_m")
     }
-  }
-
-  /** Lloyd for SEVERAL k at once over one stream of scans: per
-    * iteration, one projection computes each active k's assignment
-    * (one NearestCentroid kernel per k) and one flat aggregate computes
-    * Σx / Σy / n per (k, cid) as conditional columns — all
-    * partial-aggregable, so the shuffle is a single 1-row exchange
-    * regardless of corpus size. Per-k semantics are exactly
-    * `lloyd`'s: mean update, stale-keep empty clusters, per-axis
-    * tol, per-k maxIter. Returns (centroids, iterations, converged)
-    * per k.
-    */
-  def fusedLloydSweep(pts: DataFrame,
-      inits: Map[Int, Array[(Double, Double)]],
-      tol: Double, maxIter: Int): Map[Int, (Array[(Double, Double)], Int, Boolean)] = {
-    val ks = inits.keys.toSeq.sorted
-    val cents = scala.collection.mutable.Map(ks.map(k => k -> inits(k).clone()): _*)
-    val iters = scala.collection.mutable.Map(ks.map(_ -> 0): _*)
-    val conv = scala.collection.mutable.Map(ks.map(_ -> false): _*)
-    var round = 0
-    while (round < maxIter && !ks.forall(conv)) {
-      val active = ks.filterNot(conv)
-      // one pass: per-row assignment per active k (computed once
-      // each), then ONE fine-grained group aggregate over the
-      // assignment TUPLE — ≤ Πk groups (1024 for {2,4,8,16}), 3
-      // accumulators per row instead of 3·Σk conditional columns;
-      // per-k moments marginalize on the driver over the (sorted,
-      // so FP-deterministic) group rows.
-      val withCids = pts.select(
-        col("x") +: col("y") +:
-          active.map(k => assignExpr(cents(k), col("x"), col("y")).as(s"cid_$k")): _*)
-      val groups = withCids
-        .groupBy(active.map(k => col(s"cid_$k")): _*)
-        .agg(sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-          count(lit(1)).as("n"))
-        .collect()
-        .map { r =>
-          (active.indices.map(r.getInt).toArray,
-            r.getAs[Double]("sx"), r.getAs[Double]("sy"), r.getAs[Long]("n"))
-        }
-        .sortBy(_._1.toSeq.mkString(","))
-      active.zipWithIndex.foreach { case (k, ki) =>
-        val cs = cents(k)
-        val sx = Array.fill(cs.length)(0.0)
-        val sy = Array.fill(cs.length)(0.0)
-        val nn = Array.fill(cs.length)(0L)
-        groups.foreach { case (cids, gx, gy, gn) =>
-          val c = cids(ki)
-          sx(c) += gx; sy(c) += gy; nn(c) += gn
-        }
-        val next = cs.indices.map { c =>
-          if (nn(c) == 0L) cs(c) // stale-keep, as the reference
-          else (sx(c) / nn(c), sy(c) / nn(c))
-        }.toArray
-        conv(k) = cs.zip(next).forall { case ((ox, oy), (nx, ny)) =>
-          math.abs(ox - nx) < tol && math.abs(oy - ny) < tol
-        }
-        cents(k) = next
-        iters(k) += 1
-      }
-      round += 1
-    }
-    ks.map(k => k -> ((cents(k), iters(k), conv(k)))).toMap
   }
 
   /** Simplified silhouette (Hruschka et al.): per point, a = distance
@@ -924,23 +912,6 @@ object KMeans {
       .orderBy(col("cid"))
   }
 
-  /** Weighted Lloyd: centroid = Σw·x / Σw — the variant that fits
-    * when points carry mass (pre-aggregated micro-clusters, sample
-    * weights, dedup multiplicities). Weight = l_quantity here. Same
-    * plan shape as the unweighted step (map-side assignment + one
-    * k-group partially-aggregated shuffle; the weighted mean is two
-    * sums, both partial-aggregable), so the 100 TB posture is
-    * unchanged. The oracle replays 3 weighted iterations in
-    * generated SQL. Weighted-mean identity (k=1 ⇒ centroid =
-    * global weighted mean) pinned in ScalaTest.
-    */
-  def weightedStep(pts: DataFrame, cs: Array[(Double, Double)]): DataFrame =
-    pts.withColumn("cid", assignExpr(cs, col("x"), col("y")))
-      .groupBy(col("cid"))
-      .agg((sum(col("w") * col("x")) / sum(col("w"))).as("x"),
-        (sum(col("w") * col("y")) / sum(col("w"))).as("y"),
-        count(lit(1)).as("n"))
-
   private def weightedLloydCtes(k: Int, iters: Int): String = {
     val sb = new StringBuilder
     sb.append(
@@ -965,31 +936,53 @@ object KMeans {
     sb.toString
   }
 
+  /** Weighted Lloyd: centroid = Σw·x / Σw — the variant that fits
+    * when points carry mass (pre-aggregated micro-clusters, sample
+    * weights, dedup multiplicities). Weight = l_quantity here. Same
+    * job shape as the unweighted loop (`iterate` with a weight column:
+    * the sweep sums w·x, w·y and w), so the 100 TB posture is
+    * unchanged. The oracle replays 3 weighted iterations in
+    * generated SQL. Weighted-mean identity (k=1 ⇒ centroid =
+    * global weighted mean) pinned in ScalaTest.
+    */
   val kmeansWeighted: QueryDef = QueryDef.sql(
     "kmeans_weighted",
     weightedLloydCtes(K, 3) +
       "\nSELECT cid, round(x, 3) AS cx, round(y, 3) AS cy FROM c3 ORDER BY cid") { (s, d) =>
     val all = points(Tables.lineitem(s, d))
     val init = initCentroids(all)
-    val fin = graft.Ckpt.scoped { sc =>
-      iterate(sc.persist(all.select(col("x"), col("y"), col("x").as("w"))), init, 3, weightedStep)
-    }
-    import s.implicits._
-    fin.toSeq.sortBy(_._1)
-      .map { case (cid, (x, y)) => (cid.toLong, x, y) }
-      .toDF("cid", "cx", "cy")
-      .select(col("cid"), round(col("cx"), 3).as("cx"), round(col("cy"), 3).as("cy"))
+    // weight = l_quantity = x
+    centroidRows(s, graft.Ckpt.scoped(sc =>
+      iterate(sc.persist(all.select("x", "y")), init, 3, weight = col("x"))))
   }
 
   /** Streaming k-means: centroids maintained across micro-batches by
     * count-weighted blending (the Sculley mini-batch rule with the
     * per-cluster history count as the learning-rate denominator —
-    * MLlib's StreamingKMeans update with decay 1). The events stream
-    * stages as 3 deterministic files in a fixed order, so the run is
-    * reproducible; each batch is one map-side assignment + k-group
-    * aggregate over ONLY that batch's rows. Rows-only; convergence
-    * (final WSSSE ≤ init WSSSE) and determinism pinned.
+    * MLlib's StreamingKMeans update with decay 1). Batch b is the rows
+    * whose mask has bit b set, blended in order, each one sweep over
+    * ONLY that batch's rows. Returns the centroids and the points each
+    * has seen.
     */
+  private[graft] def streamBlend(rows: DataFrame, init: Array[(Double, Double)],
+      batches: Int): (Array[(Double, Double)], Array[Long]) = {
+    val cs = init.clone()
+    val counts = Array.fill(cs.length)(0L)
+    (0 until batches).foreach { b =>
+      val sums = sweep(rows, Seq(cs), 1L << b).head
+      cs.indices.foreach { c =>
+        val bn = sums(4 * c + 3).toLong
+        if (bn > 0) {
+          val (bx, by) = (sums(4 * c) / sums(4 * c + 2), sums(4 * c + 1) / sums(4 * c + 2))
+          val tot = counts(c) + bn
+          cs(c) = ((cs(c)._1 * counts(c) + bx * bn) / tot, (cs(c)._2 * counts(c) + by * bn) / tot)
+          counts(c) = tot
+        }
+      }
+    }
+    (cs, counts)
+  }
+
   /** DuckDB replay of the streaming blend: md5-derived arrival
     * slices, per-batch assignment + batch means, and the
     * count-weighted blend in the Scala expression order, chained as
@@ -1037,31 +1030,19 @@ object KMeans {
     sb.toString
   }
 
+  /** Streaming k-means on the lineitem points: 3 deterministic md5
+    * arrival slices blended in order by `streamBlend`. Determinism and
+    * n_seen conservation are pinned in ScalaTest.
+    */
   val kmeansStream: QueryDef = QueryDef.sql(
     "kmeans_stream", streamKmeansOracle(K, 3)) { (s, d) =>
     val all = points(Tables.lineitem(s, d))
-    val init = initCentroids(all)
-    var cs = init.clone()
-    val counts = Array.fill(K)(0L)
     // 3 deterministic "arrival" slices by row hash (md5-derived so
-    // the oracle replays the identical slices)
-    (0 until 3).foreach { b =>
-      val batch = all
-        .filter(pmod(conv(substring(
-            md5(concat_ws(",", col("l_orderkey"), col("l_linenumber"))), 1, 13),
-          16, 10).cast("long"), lit(3)) === b)
-        .select("x", "y")
-      val upd = step(batch, cs).select("cid", "x", "y", "n").collect()
-      upd.foreach { r =>
-        val (cid, bx, by, bn) =
-          (r.getInt(0), r.getDouble(1), r.getDouble(2), r.getLong(3))
-        val tot = counts(cid) + bn
-        cs(cid) = (
-          (cs(cid)._1 * counts(cid) + bx * bn) / tot,
-          (cs(cid)._2 * counts(cid) + by * bn) / tot)
-        counts(cid) = tot
-      }
-    }
+    // the oracle replays the identical slices): batch b is mask bit b
+    val batch = pmod(conv(substring(
+      md5(concat_ws(",", col("l_orderkey"), col("l_linenumber"))), 1, 13), 16, 10).cast("long"), lit(3))
+    val (cs, counts) = streamBlend(sweepRows(all, m = pow(lit(2), batch).cast("long")),
+      initCentroids(all), batches = 3)
     import s.implicits._
     cs.zipWithIndex.map { case ((x, y), i) =>
       (i.toLong, math.floor(x * 1000 + 0.5) / 1000,
@@ -1215,11 +1196,8 @@ object KMeans {
       }
     }
     val cs = chosen.toArray
-    // candidate weights: nearest-point population
-    val w = pts.withColumn("cid", assignExpr(cs, col("x"), col("y")))
-      .groupBy("cid").agg(count(lit(1)).as("w")).collect()
-      .map(row => row.getInt(0) -> row.getLong(1)).toMap
-    val wts = cs.indices.map(i => w.getOrElse(i, 0L).toDouble).toArray
+    // candidate weights: nearest-point population, one sweep
+    val wts = sweep(sweepRows(pts), Seq(cs), -1L).head.grouped(4).map(_(3)).toArray
     // driver-side weighted greedy ++ seeding over the candidate set
     def d2p(a: (Double, Double), b: (Double, Double)): Double = {
       val dx = a._1 - b._1; val dy = a._2 - b._2; dx * dx + dy * dy

@@ -7,8 +7,10 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, 
 import org.apache.spark.sql.types.{AbstractDataType, DataType, DoubleType, IntegerType}
 
 /** Nearest 2-D centroid of (x, y): the argmin cid (`distance` =
-  * false) or the minimum squared distance (`distance` = true), as
-  * one primitive loop.
+  * false) or the minimum squared distance (`distance` = true), both
+  * from `NearestCentroid.argmin` — the same function the Lloyd sweep's
+  * tasks call, so SQL and the loop cannot disagree on a tie, a NaN or
+  * the lowest cid.
   *
   * Engine rationale: the centroids change every Lloyd iteration. As
   * literals they are written into the generated Java source, so each
@@ -50,20 +52,8 @@ case class NearestCentroid(left: Expression, right: Expression,
     } else {
       val x = xv.asInstanceOf[Double]
       val y = yv.asInstanceOf[Double]
-      var dx = x - flat(0)
-      var dy = y - flat(1)
-      var best = dx * dx + dy * dy
-      var bestJ = 0
-      var j = 2
-      while (j < flat.length) {
-        dx = x - flat(j)
-        dy = y - flat(j + 1)
-        val d = dx * dx + dy * dy
-        // SQL ordering: NaN is greater than every number
-        if (d < best || (best.isNaN && !d.isNaN)) { best = d; bestJ = j }
-        j += 2
-      }
-      if (distance) best else bestJ >> 1
+      val c = NearestCentroid.argmin(flat, x, y)
+      if (distance) NearestCentroid.sqDist(flat, c, x, y) else c
     }
   }
 
@@ -71,15 +61,10 @@ case class NearestCentroid(left: Expression, right: Expression,
     val ref = ctx.addReferenceObj("centroids", flat, "double[]")
     val xe = left.genCode(ctx)
     val ye = right.genCode(ctx)
-    val cs = ctx.freshName("cs")
-    val dx = ctx.freshName("dx")
-    val dy = ctx.freshName("dy")
-    val d = ctx.freshName("d")
-    val best = ctx.freshName("best")
-    val bestJ = ctx.freshName("bestJ")
-    val j = ctx.freshName("j")
+    val nc = classOf[NearestCentroid].getName
+    val c = s"$nc.argmin($ref, ${xe.value}, ${ye.value})"
     val onNull = if (distance) s"${ev.isNull} = true;" else s"${ev.value} = 0;"
-    val result = if (distance) best else s"$bestJ >> 1"
+    val result = if (distance) s"$nc.sqDist($ref, $c, ${xe.value}, ${ye.value})" else c
     ev.copy(code = code"""
       |${xe.code}
       |${ye.code}
@@ -88,17 +73,6 @@ case class NearestCentroid(left: Expression, right: Expression,
       |if (${xe.isNull} || ${ye.isNull}) {
       |  $onNull
       |} else {
-      |  double[] $cs = $ref;
-      |  double $dx = ${xe.value} - $cs[0];
-      |  double $dy = ${ye.value} - $cs[1];
-      |  double $best = $dx * $dx + $dy * $dy;
-      |  int $bestJ = 0;
-      |  for (int $j = 2; $j < $cs.length; $j += 2) {
-      |    $dx = ${xe.value} - $cs[$j];
-      |    $dy = ${ye.value} - $cs[$j + 1];
-      |    double $d = $dx * $dx + $dy * $dy;
-      |    if ($d < $best || ($best != $best && $d == $d)) { $best = $d; $bestJ = $j; }
-      |  }
       |  ${ev.value} = $result;
       |}
       """.stripMargin)
@@ -107,4 +81,32 @@ case class NearestCentroid(left: Expression, right: Expression,
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
+}
+
+object NearestCentroid {
+
+  /** The one nearest-centroid argmin, shared by the SQL kernel (eval
+    * and generated code) and the Lloyd sweep's tasks: the index of the
+    * centroid in `cs` = (cx0, cy0, cx1, cy1, …) nearest (x, y). The
+    * first minimum wins, so ties go to the lowest index; NaN orders
+    * after every number, as in Spark's SQL ordering.
+    */
+  def argmin(cs: Array[Double], x: Double, y: Double): Int = {
+    var best = sqDist(cs, 0, x, y)
+    var bestC = 0
+    var c = 1
+    while (2 * c < cs.length) {
+      val d = sqDist(cs, c, x, y)
+      if (d < best || (best.isNaN && !d.isNaN)) { best = d; bestC = c }
+      c += 1
+    }
+    bestC
+  }
+
+  /** (x−cx)·(x−cx) + (y−cy)·(y−cy) to centroid `c` of `cs`. */
+  def sqDist(cs: Array[Double], c: Int, x: Double, y: Double): Double = {
+    val dx = x - cs(2 * c)
+    val dy = y - cs(2 * c + 1)
+    dx * dx + dy * dy
+  }
 }

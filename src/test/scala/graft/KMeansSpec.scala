@@ -85,4 +85,17 @@ class KMeansSpec extends AnyFunSuite {
       assert(mb.toSeq == mb2.toSeq, "hash-sampled batches must be reproducible")
     } finally cached.unpersist(false)
   }
+
+  test("mini-batch k-means rejects more than the 20 iterations its masks carry") {
+    val e = intercept[IllegalArgumentException](KMeans.minibatchLloyd(pts.select("x", "y"), init, maxIter = 21))
+    assert(e.getMessage.contains("maxIter=21"), e.getMessage)
+    intercept[IllegalArgumentException](KMeans.minibatchLloyd(pts.select("x", "y"), init, frac = 0))
+  }
+
+  test("k-means++ init on fewer distinct points than k names k and the count found") {
+    import spark.implicits._
+    val three = Seq((1.0, 1.0), (2.0, 2.0), (3.0, 3.0), (2.0, 2.0)).toDF("x", "y")
+    val e = intercept[IllegalArgumentException](KMeans.ppInit(three, 4))
+    assert(e.getMessage.contains("k=4") && e.getMessage.contains("found 3"), e.getMessage)
+  }
 }

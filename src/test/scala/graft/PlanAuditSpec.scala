@@ -39,13 +39,18 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(plan("q_topk").contains("TakeOrderedAndProject"))
   }
 
-  test("kmeans assignment is map-side: one hash shuffle total") {
-    val pts = KMeans.points(graft.sources.Tables.lineitem(spark, sf))
-    val cs = KMeans.initCentroids(pts)
-    val p = KMeans.step(pts, cs).queryExecution.executedPlan.toString
-    val shuffles = "Exchange hashpartitioning".r.findAllIn(p).length
-    assert(shuffles == 1, s"expected 1 shuffle, plan:\n$p")
+  test("kmeans assignment is map-side: no shuffle") {
+    // a Lloyd iteration is one sweep job over this plan: the assignment
+    // and the per-cluster sums run in its tasks, the merge on the driver
+    val rows = KMeans.sweepRows(KMeans.points(graft.sources.Tables.lineitem(spark, sf)))
+    val p = rows.queryExecution.executedPlan.toString
+    assert(!p.contains("Exchange"), s"expected no shuffle, plan:\n$p")
     assert(!p.toLowerCase.contains("udf"))
+    def shuffles(r: org.apache.spark.rdd.RDD[_]): Int = r.dependencies.map {
+      case d: org.apache.spark.ShuffleDependency[_, _, _] => 1 + shuffles(d.rdd)
+      case d => shuffles(d.rdd)
+    }.sum
+    assert(shuffles(rows.queryExecution.toRdd) == 0)
   }
 
   test("partitioned scan prunes partitions at file listing") {

@@ -434,7 +434,7 @@ class Round5cOpsSpec extends AnyFunSuite {
     val pts = KMeans.points(Tables.lineitem(spark, sf))
       .select(col("x"), col("y"), col("x").as("w"))
     val one = KMeans.iterate(pts,
-      Array((0.0, 0.0)), iters = 1, KMeans.weightedStep)(0)
+      Array((0.0, 0.0)), iters = 1, weight = col("w"))(0)
     val g = pts.agg(
       (sum(col("w") * col("x")) / sum(col("w"))).as("mx"),
       (sum(col("w") * col("y")) / sum(col("w"))).as("my")).collect()(0)
