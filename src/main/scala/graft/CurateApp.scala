@@ -17,9 +17,14 @@ import graft.sources.Tables
   * the job runs on the submitted `spark.master`, and only a direct
   * invocation falls back to `local[SPARK_GRAFT_CPUS]`.
   *
-  * Scoring and filtering fuse into the scan; the shuffles are the
-  * signature aggregation, the LSH bucket join, the component rounds,
-  * and the survivor anti-join — none of them O(corpus²).
+  * One pass scores each document: the `TextStats` kernel runs once
+  * per row, and the quality and language filter reads its output.
+  * `run` persists the curated, exact-deduped corpus once; shingling
+  * and the survivor write both read that copy, so the scan and the
+  * scoring run once per run. The shuffles are the exact-dedup
+  * fingerprint window, the signature aggregation, the LSH bucket
+  * join, the component rounds and the survivor anti-join — none of
+  * them O(corpus²).
   */
 object CurateApp {
 
@@ -41,18 +46,17 @@ object CurateApp {
     qualityInputs(docs, keep = extra)
       .filter(col("n_chars") > 0 && col("n_tokens") > 0)
       .select(Seq(col("doc_id"), col("text")) ++ extra.map(col) ++
-        Seq(qualityCol.as("quality")) ++ markerCols: _*)
-      .withColumn("pred_lang", predLangCol)
+        Seq(qualityCol.as("quality"), predLangCol.as("pred_lang")): _*)
       .filter(col("quality") >= qualityMin && col("pred_lang") === lang)
       .select(Seq(col("doc_id"), col("text")) ++ extra.map(col) :+ col("quality"): _*)
   }
 
-  /** Near-dedup the (already filtered) corpus: exact dedup first
-    * (cheap fingerprint shuffle), then MinHash+LSH pairs resolved to
-    * components, one survivor each.
+  /** The near-dedup survivors of a curated, exact-deduped corpus:
+    * MinHash+LSH pairs resolved to components, one survivor each. The
+    * scope holds the shingles and the verified pairs; the result may
+    * read component labels that `Dedup.nearDedupedCorpus` kept.
     */
-  def nearDedup(docs: DataFrame): DataFrame = Ckpt.scoped { sc =>
-    val exact = Dedup.dedupedCorpus(docs)
+  private def nearDedup(sc: Ckpt.Scope, exact: DataFrame): DataFrame = {
     val sh = sc.persist(Dedup.shinglesHashed(exact))
     val pairs = sc.checkpoint(sc.adopt(Dedup.jaccardVerify(sh,
       Dedup.lshCandidates(Dedup.minhashSignatures(sh)), 0.8)).select("id1", "id2"))
@@ -69,8 +73,10 @@ object CurateApp {
       qualityMin: Double = 0.75, lang: String = "en"): Long = {
     val docs = Tables.parquet(spark, input)
     Ckpt.scoped { sc =>
-      // the curated plan may read component labels nearDedup kept
-      val curated = sc.adopt(nearDedup(curate(docs, qualityMin, lang)))
+      // one copy of the curated corpus: shingling and the survivor
+      // write both read it, so neither rescans and rescores the input
+      val exact = sc.persist(Dedup.dedupedCorpus(curate(docs, qualityMin, lang)))
+      val curated = sc.adopt(nearDedup(sc, exact))
       curated.write.mode("overwrite").parquet(output)
       spark.read.schema(curated.schema).parquet(output).count()
     }

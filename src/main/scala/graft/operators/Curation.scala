@@ -42,14 +42,10 @@ object Curation {
        |SELECT doc_id, n_tokens, quality FROM d WHERE rn = 1
        |ORDER BY doc_id""".stripMargin) { (s, d) =>
     import org.apache.spark.sql.expressions.Window
-    val m = qualityInputs(Tables.documents(s, d))
-      .select(
-        Seq(col("doc_id"), col("n_chars"), col("n_tokens"),
-          col("alpha_chars"), col("n_stops"),
-          md5(trim(regexp_replace(lower(col("text")), "\\s+", " "))).as("fp")) ++
-        markerCols: _*)
-    val q = m.filter(col("n_chars") > 0 && col("n_tokens") > 0)
-      .select(col("doc_id"), col("n_tokens"), col("fp"),
+    val q = qualityInputs(Tables.documents(s, d))
+      .filter(col("n_chars") > 0 && col("n_tokens") > 0)
+      .select(col("doc_id"), col("n_tokens"),
+        md5(trim(regexp_replace(lower(col("text")), "\\s+", " "))).as("fp"),
         qualityCol.as("quality"), predLangCol.as("pred_lang"))
     val f = q.filter(col("quality") >= QualityMin && col("pred_lang") === "en")
     val w = Window.partitionBy(col("fp")).orderBy(col("doc_id"))

@@ -795,11 +795,10 @@ object Linkage {
     val stacked = docs.select(
         explode(array(
           struct(lit("c_en").as("feature"),
-            regexp_count(lower(col("text")), lit("\\b(the|and|of|to|is)\\b"))
-              .cast("double").as("value")),
+            TextAnalysis.textStats(col("text")).getField("c_en").cast("double").as("value")),
           struct(lit("n_chars").as("feature"), col("n_chars").cast("double").as("value")),
           struct(lit("n_tokens").as("feature"),
-            regexp_count(col("text"), lit("\\S+")).cast("double").as("value"))))
+            TextAnalysis.tokenCount(col("text")).cast("double").as("value"))))
           .as("f"),
         when(col("lang") === "en", 1).otherwise(0).as("y"))
       .select(col("f.feature").as("feature"), col("f.value").as("value"), col("y"))

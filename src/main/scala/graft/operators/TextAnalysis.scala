@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.{ColumnBridge, TextStats}
 import graft.QueryDef
 import graft.sources.Tables
 
@@ -11,26 +12,43 @@ import graft.sources.Tables
   * trees (whole-stage codegen, no UDFs) except the final aggregates —
   * the shape that scales to 100 TB: per-document work is embarrassingly
   * parallel, shuffles only carry tiny aggregate keys.
+  *
+  * The per-document measures (length, `\S+` tokens, ASCII letters,
+  * stop words and the four language-marker counts) come from one
+  * native kernel, `TextStats`, in one pass over the string: every
+  * Spark-side user reads its fields through `qualityInputs`,
+  * `markerCols` or `tokenCount`. The regex spellings of those
+  * measures live on only in the DuckDB oracle SQL (`*Sql`), built
+  * from the same word lists.
   */
 object TextAnalysis {
 
-  /** Non-whitespace token count as a codegen'd expression. */
-  def tokenCount(text: Column): Column = regexp_count(text, lit("\\S+"))
-
-  val stopPattern = "\\b(the|a|an|of|to|in|and|is|it|for)\\b"
-
-  /** Per-language marker-word patterns — the single source for
-    * text_langid, text_langid_eval, and the curation pipeline.
+  /** The one-pass text measures of a string column: a struct with
+    * the fields `TextStats.Fields` (see
+    * org.apache.spark.sql.graft.TextStats).
     */
-  val markers: Seq[(String, String)] = Seq(
-    "en" -> "\\b(the|and|of|to|is)\\b",
-    "es" -> "\\b(el|la|de|que|y)\\b",
-    "de" -> "\\b(der|die|das|und|ist)\\b",
-    "fr" -> "\\b(le|les|et|des|est)\\b")
+  def textStats(text: Column): Column =
+    ColumnBridge.column(TextStats(ColumnBridge.expression(text)))
+
+  /** Non-whitespace (`\S+`) token count: TextStats' n_tokens. */
+  def tokenCount(text: Column): Column = textStats(text).getField("n_tokens")
+
+  /** The oracle-side regex of a word list: `\b(w1|w2|…)\b`. */
+  private def wordsPattern(ws: Seq[String]): String = ws.mkString("\\b(", "|", ")\\b")
+
+  val stopPattern: String = wordsPattern(TextStats.StopWords)
+
+  /** Per-language marker-word patterns (the DuckDB spelling of
+    * `TextStats.Markers`), for the oracle SQL of text_langid,
+    * text_langid_eval, text_code_switch and the curation pipeline.
+    */
+  val markers: Seq[(String, String)] =
+    TextStats.Markers.map { case (l, ws) => l -> wordsPattern(ws) }
 
   /** Marker-hit count columns c_en..c_fr (Column and SQL forms). */
-  def markerCols: Seq[Column] = markers.map { case (l, p) =>
-    regexp_count(lower(col("text")), lit(p)).cast("long").as(s"c_$l")
+  def markerCols: Seq[Column] = {
+    val st = textStats(col("text"))
+    markers.map { case (l, _) => st.getField(s"c_$l").as(s"c_$l") }
   }
   def markerCountsSql(indent: String): String = markers.map { case (l, p) =>
     s"CAST(length(regexp_extract_all(lower(text), '$p')) AS BIGINT) AS c_$l"
@@ -70,7 +88,7 @@ object TextAnalysis {
     * source, doc count, exact median/p90/max token counts, and how
     * many docs exceed the candidate 64-token context (those must
     * chunk — text_chunks — or truncate). One map-side token count
-    * (codegen'd regexp_count) into an O(sources) aggregate; exact
+    * (TextStats' n_tokens) into an O(sources) aggregate; exact
     * percentile ↔ quantile_cont parity as q_median.
     */
   val textSeqLenProfile: QueryDef = QueryDef.sql(
@@ -109,19 +127,22 @@ object TextAnalysis {
       .orderBy(col("doc_id"))
   }
 
-  /** Quality scoring: length, alpha ratio, stopword ratio → score.
-    * Every ratio is an exact int/int double division so the oracle
-    * reproduces it bit-for-bit.
-    */
-  /** doc_id + the four quality-input measures (shared select); pass
-    * `keep` to carry extra document columns through.
+  /** doc_id, text, the `keep` columns, then every TextStats field as
+    * its own column: n_chars, n_tokens, alpha_chars, n_stops and
+    * c_en..c_fr. Every ratio a caller forms over them is an exact
+    * int/int double division, so the oracle reproduces it
+    * bit-for-bit.
+    *
+    * The kernel runs once per row, in a Generate
+    * (`inline(array(stats))`). A filter on these columns reads the
+    * Generate's output and cannot be pushed below it. Selected as
+    * struct fields from a Project instead, the optimizer's filter
+    * pushdown would copy the kernel into the pushed-down Filter and
+    * the Project would run it again.
     */
   def qualityInputs(docs: DataFrame, keep: Seq[String] = Nil): DataFrame = docs.select(
-    Seq(col("doc_id"), col("text")) ++ keep.map(col) ++ Seq(
-      length(col("text")).cast("long").as("n_chars"),
-      tokenCount(col("text")).cast("long").as("n_tokens"),
-      length(regexp_replace(col("text"), "[^a-zA-Z]", "")).cast("long").as("alpha_chars"),
-      regexp_count(lower(col("text")), lit(stopPattern)).cast("long").as("n_stops")): _*)
+    Seq(col("doc_id"), col("text")) ++ keep.map(col) :+
+      inline(array(textStats(col("text")))): _*)
   def qualityInputsSql(indent: String): String = Seq(
     "CAST(length(text) AS BIGINT) AS n_chars",
     "CAST(length(regexp_extract_all(text, '\\S+')) AS BIGINT) AS n_tokens",
@@ -129,6 +150,7 @@ object TextAnalysis {
     s"CAST(length(regexp_extract_all(lower(text), '$stopPattern')) AS BIGINT) AS n_stops")
     .mkString(",\n" + indent)
 
+  /** Quality scoring: length, alpha ratio, stopword ratio → score. */
   val textQuality: QueryDef = QueryDef.sql(
     "text_quality",
     s"""WITH m AS (
@@ -914,8 +936,7 @@ object TextAnalysis {
       |FROM f GROUP BY source ORDER BY source""".stripMargin) { (s, d) =>
     val scored = Tables.documents(s, d).select(
       col("doc_id"), col("source"),
-      greatest(size(regexp_extract_all(trim(col("text")), lit("\\S+"), lit(0))), lit(1))
-        .as("n_words"),
+      greatest(tokenCount(trim(col("text"))), lit(1L)).as("n_words"),
       greatest(size(regexp_extract_all(col("text"), lit("[.!?]+"), lit(0))), lit(1))
         .as("n_sentences"),
       greatest(size(regexp_extract_all(lower(col("text")), lit("[aeiouy]+"), lit(0))), lit(1))
@@ -1355,9 +1376,9 @@ object TextAnalysis {
         |SELECT lang_a, lang_b, count(*) AS n_docs,
         |  CASE WHEN lang_a <> lang_b THEN 1 ELSE 0 END AS mixed
         |FROM l GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, d) =>
-      def halfCounts(which: String, c: Column): Seq[Column] = markers.map {
-        case (l, p) =>
-          regexp_count(lower(c), lit(p)).cast("long").as(s"${which}_$l")
+      def halfCounts(which: String, c: Column): Seq[Column] = {
+        val st = textStats(c)
+        markers.map { case (l, _) => st.getField(s"c_$l").as(s"${which}_$l") }
       }
       def argmax(w: String): Column =
         when(greatest(col(s"${w}_en"), col(s"${w}_es"), col(s"${w}_de"),
@@ -1585,12 +1606,14 @@ object TextAnalysis {
       |    AND 10 * n_symbols <= n_words
       |    AND n_stops >= 2 AS BOOLEAN) AS passes
       |FROM f ORDER BY doc_id""".stripMargin) { (s, d) =>
+    val st = textStats(col("text"))
     val f = Tables.documents(s, d).select(col("doc_id"),
-      regexp_count(col("text"), lit("\\S+")).cast("long").as("n_words"),
-      regexp_count(col("text"), lit("[A-Za-z]")).cast("long").as("alpha_chars"),
+      st.getField("n_tokens").as("n_words"),
+      // counting [A-Za-z] matches = TextStats' ASCII-letter count
+      st.getField("alpha_chars").as("alpha_chars"),
       regexp_count(col("text"), lit("\\S*[A-Za-z]\\S*")).cast("long").as("alpha_words"),
       regexp_count(col("text"), lit("[#…]")).cast("long").as("n_symbols"),
-      regexp_count(lower(col("text")), lit(stopPattern)).cast("long").as("n_stops"))
+      st.getField("n_stops").as("n_stops"))
     val okWords = col("n_words").between(10, 100000)
     // mean word length in [3, 12] as integer cross-multiplication
     val okLen = col("alpha_chars") >= lit(3) * col("n_words") &&

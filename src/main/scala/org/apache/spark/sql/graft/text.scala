@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.types.{AbstractDataType, DataType, StringType}
@@ -280,4 +281,213 @@ case class WordGrams(child: Expression, n: Int)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
+}
+
+/** The per-document text measures behind quality scoring, language
+  * ID and token accounting, from one pass over the string:
+  * struct<n_chars, n_tokens, alpha_chars, n_stops, c_en, c_es, c_de,
+  * c_fr>, all longs. `TextStats.stats` is the one implementation;
+  * `eval` and the generated code both call it.
+  *
+  * Each field equals the Spark spelling it replaced (pinned in
+  * TextStatsSpec, codegen'd and interpreted):
+  *  - n_chars = `length(text)`;
+  *  - n_tokens = `regexp_count(text, '\S+')`;
+  *  - alpha_chars = `length(regexp_replace(text, '[^a-zA-Z]', ''))`;
+  *  - n_stops and c_* = `regexp_count(lower(text), '\b(w1|…)\b')` over
+  *    `TextStats.StopWords` and `TextStats.Markers`.
+  *
+  * Engine rationale: those spellings make seven regex passes per
+  * document, six of them over a decoded (and for four, lower-cased)
+  * copy of the string. Here ASCII text is read once from its UTF-8
+  * bytes with no decode; only a document with a non-ASCII byte is
+  * lower-cased (with Spark's own `lower`, under the same ICU conf)
+  * and its word counts taken by a port of java.util.regex's `\b`
+  * (JDK 17, default flags): a word char is a letter, a digit or `_`,
+  * and a non-spacing mark after one also counts as a word char.
+  * `\s` is `[ \t\n\x0B\f\r]` only, so NBSP and other Unicode spaces
+  * are token characters.
+  */
+case class TextStats(child: Expression) extends UnaryExpression with ExpectsInputTypes {
+
+  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
+  override def dataType: DataType = TextStats.Schema
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "graft_text_stats"
+
+  // read the way Spark's Lower reads it, so non-ASCII text lowers alike
+  private lazy val useICU: Boolean = org.apache.spark.sql.internal.SQLConf.get
+    .getConf(org.apache.spark.sql.internal.SQLConf.ICU_CASE_MAPPINGS_ENABLED)
+
+  override def nullSafeEval(s: Any): Any = TextStats.stats(s.asInstanceOf[UTF8String], useICU)
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = ${classOf[TextStats].getName}.stats($c, $useICU);")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object TextStats {
+
+  /** The stop-word list behind n_stops. */
+  val StopWords: Seq[String] = Seq("the", "a", "an", "of", "to", "in", "and", "is", "it", "for")
+
+  /** Per-language marker words behind c_en..c_fr, in field order. */
+  val Markers: Seq[(String, Seq[String])] = Seq(
+    "en" -> Seq("the", "and", "of", "to", "is"),
+    "es" -> Seq("el", "la", "de", "que", "y"),
+    "de" -> Seq("der", "die", "das", "und", "ist"),
+    "fr" -> Seq("le", "les", "et", "des", "est"))
+
+  val Fields: Seq[String] =
+    Seq("n_chars", "n_tokens", "alpha_chars", "n_stops") ++ Markers.map("c_" + _._1)
+
+  val Schema: org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.StructType(Fields.map(f =>
+      org.apache.spark.sql.types.StructField(f, org.apache.spark.sql.types.LongType,
+        nullable = false)))
+
+  // every listed word once, with one bit per field it counts toward
+  // (bit 3 = n_stops, bit 4 + i = marker language i, i.e. field index)
+  private val (words: Array[String], wordBits: Array[Int]) = {
+    val all = (StopWords ++ Markers.flatMap(_._2)).distinct
+    (all.toArray, all.map { w =>
+      (if (StopWords.contains(w)) 1 << 3 else 0) |
+        Markers.indices.filter(i => Markers(i)._2.contains(w)).map(i => 1 << (4 + i)).sum
+    }.toArray)
+  }
+  private val MaxWordLen = words.map(_.length).max
+  require(words.forall(w => w.nonEmpty && w.forall(c => c >= 'a' && c <= 'z')) &&
+    MaxWordLen <= 7, "listed words must be 1-7 lower-case ASCII letters")
+
+  // a word's letters packed one byte each: the ASCII path looks a
+  // word-char run up without building a String
+  private def key(w: String): Long = w.foldLeft(0L)((k, c) => k << 8 | c)
+  private val (sortedKeys: Array[Long], keyBits: Array[Int]) = {
+    val byKey = words.indices.map(i => key(words(i)) -> wordBits(i)).sortBy(_._1)
+    (byKey.map(_._1).toArray, byKey.map(_._2).toArray)
+  }
+
+  private def count(bits: Int, out: Array[Long]): Unit = {
+    var f = 3
+    while (f < out.length) {
+      if ((bits & (1 << f)) != 0) out(f) += 1
+      f += 1
+    }
+  }
+
+  /** The TextStats row of `u`. In ASCII text `\b` falls exactly at
+    * the ends of each run of [A-Za-z0-9_], so a listed word matches
+    * where it is a whole run, compared case-folded; any other text is
+    * recounted on its lower-cased string by `wordCounts`.
+    */
+  def stats(u: UTF8String, useICU: Boolean): InternalRow = {
+    val base = u.getBaseObject
+    val off = u.getBaseOffset
+    val n = u.numBytes
+    val out = new Array[Long](Fields.length)
+    var ascii = true
+    var inToken = false
+    // the current run of ASCII word chars [A-Za-z0-9_]
+    var runLen = 0
+    var runKey = 0L
+    var runLetters = true
+    var i = 0
+    // one step past the end, where a space closes the last run
+    while (i <= n) {
+      val b: Int = if (i < n) org.apache.spark.unsafe.Platform.getByte(base, off + i) else ' '
+      val lower = b | 0x20
+      val letter = lower >= 'a' && lower <= 'z'
+      if (i < n) {
+        val space = b == ' ' || (b >= '\t' && b <= '\r')
+        if (!space && !inToken) out(1) += 1
+        inToken = !space
+        if (letter) out(2) += 1
+        if (b < 0) ascii = false
+      }
+      if (letter || (b >= '0' && b <= '9') || b == '_') {
+        if (runLen < MaxWordLen) runKey = runKey << 8 | lower
+        runLen += 1
+        runLetters &&= letter
+      } else if (runLen > 0) {
+        if (runLetters && runLen <= MaxWordLen) {
+          val k = java.util.Arrays.binarySearch(sortedKeys, runKey)
+          if (k >= 0) count(keyBits(k), out)
+        }
+        runLen = 0
+        runKey = 0L
+        runLetters = true
+      }
+      i += 1
+    }
+    if (ascii) out(0) = n
+    else {
+      out(0) = u.numChars()
+      // the byte loop's word counts hold for ASCII text only
+      java.util.Arrays.fill(out, 3, out.length, 0L)
+      wordCounts(org.apache.spark.sql.catalyst.util.CollationSupport.Lower.exec(u,
+        org.apache.spark.sql.catalyst.util.CollationFactory.UTF8_BINARY_COLLATION_ID,
+        useICU).toString, out)
+    }
+    val row = new org.apache.spark.sql.catalyst.expressions.UnsafeRow(out.length)
+    val size = org.apache.spark.sql.catalyst.expressions.UnsafeRow
+      .calculateBitSetWidthInBytes(out.length) + 8 * out.length
+    row.pointTo(new Array[Byte](size), size)
+    var f = 0
+    while (f < out.length) { row.setLong(f, out(f)); f += 1 }
+    row
+  }
+
+  /** n_stops and c_* of a lower-cased non-ASCII document: what
+    * `Matcher.find` does for `\b(w1|…)\b`, one scan for all lists. A
+    * match starts only where `\b` holds before a letter, and no `\b`
+    * falls inside a matched word, so the lists' matches never overlap
+    * and at most one listed word matches at a position.
+    */
+  private def wordCounts(s: String, out: Array[Long]): Unit = {
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      var hit = -1
+      if (c >= 'a' && c <= 'z' && bound(s, i)) {
+        var w = 0
+        while (hit < 0 && w < words.length) {
+          if (s.startsWith(words(w), i) && bound(s, i + words(w).length)) hit = w
+          w += 1
+        }
+      }
+      if (hit >= 0) { count(wordBits(hit), out); i += words(hit).length }
+      else i += 1
+    }
+  }
+
+  // java.util.regex.Pattern.Bound.check (JDK 17, no flags) at index i
+  private def bound(s: String, i: Int): Boolean = {
+    val left = i > 0 && {
+      val cp = Character.codePointBefore(s, i)
+      isWord(cp) || (Character.getType(cp) == Character.NON_SPACING_MARK && hasBase(s, i - 1))
+    }
+    val right = i < s.length && {
+      val cp = Character.codePointAt(s, i)
+      isWord(cp) || (Character.getType(cp) == Character.NON_SPACING_MARK && hasBase(s, i))
+    }
+    left != right
+  }
+
+  private def isWord(cp: Int): Boolean = cp == '_' || Character.isLetterOrDigit(cp)
+
+  // java.util.regex.Pattern.hasBaseCharacter: a letter or digit before
+  // a run of non-spacing marks ending at index `from`
+  private def hasBase(s: String, from: Int): Boolean = {
+    var x = from
+    while (x >= 0) {
+      val cp = Character.codePointAt(s, x)
+      if (Character.isLetterOrDigit(cp)) return true
+      if (Character.getType(cp) != Character.NON_SPACING_MARK) return false
+      x -= 1
+    }
+    false
+  }
 }

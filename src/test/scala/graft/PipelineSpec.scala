@@ -232,6 +232,111 @@ class DedupSpec extends AnyFunSuite {
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 
+  // CurateApp's quality/language filter and near-dedup as they were
+  // before the TextStats kernel: the regex spellings of the four
+  // quality inputs and the four marker counts, and a near-dedup that
+  // reads an unpersisted exact-dedup plan (reference)
+  private def regexCurate(docs: org.apache.spark.sql.DataFrame, qualityMin: Double,
+      lang: String): org.apache.spark.sql.DataFrame = {
+    val stops = "\\b(the|a|an|of|to|in|and|is|it|for)\\b"
+    val markers = Seq("en" -> "\\b(the|and|of|to|is)\\b", "es" -> "\\b(el|la|de|que|y)\\b",
+      "de" -> "\\b(der|die|das|und|ist)\\b", "fr" -> "\\b(le|les|et|des|est)\\b")
+    val derived = Set("n_chars", "n_tokens", "alpha_chars", "n_stops", "quality",
+      "pred_lang") ++ markers.map { case (l, _) => s"c_$l" }
+    val extra = docs.columns.filterNot(c => Seq("doc_id", "text").contains(c) || derived(c)).toSeq
+    docs.select(Seq(col("doc_id"), col("text")) ++ extra.map(col) ++ Seq(
+        length(col("text")).cast("long").as("n_chars"),
+        regexp_count(col("text"), lit("\\S+")).cast("long").as("n_tokens"),
+        length(regexp_replace(col("text"), "[^a-zA-Z]", "")).cast("long").as("alpha_chars"),
+        regexp_count(lower(col("text")), lit(stops)).cast("long").as("n_stops")): _*)
+      .filter(col("n_chars") > 0 && col("n_tokens") > 0)
+      .select(Seq(col("doc_id"), col("text")) ++ extra.map(col) ++
+        Seq(TextAnalysis.qualityCol.as("quality")) ++ markers.map { case (l, p) =>
+          regexp_count(lower(col("text")), lit(p)).cast("long").as(s"c_$l")
+        }: _*)
+      .withColumn("pred_lang", TextAnalysis.predLangCol)
+      .filter(col("quality") >= qualityMin && col("pred_lang") === lang)
+      .select(Seq(col("doc_id"), col("text")) ++ extra.map(col) :+ col("quality"): _*)
+  }
+
+  private def regexCurateRows(input: String): Set[(Long, Double)] = Ckpt.scoped { sc =>
+    val exact = Dedup.dedupedCorpus(regexCurate(spark.read.parquet(input), 0.75, "en"))
+    val sh = sc.persist(Dedup.shinglesHashed(exact))
+    val pairs = sc.checkpoint(sc.adopt(Dedup.jaccardVerify(sh,
+      Dedup.lshCandidates(Dedup.minhashSignatures(sh)), 0.8)).select("id1", "id2"))
+    sc.adopt(Dedup.nearDedupedCorpus(exact, pairs)).select("doc_id", "quality")
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
+  }
+
+  private val sf01Docs = s"${new java.io.File(sf).getParent}/sf0.01/documents.parquet"
+
+  test("CurateApp.run writes exactly the rows of the regex-scored pipeline at sf0.01") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_curate_lock")
+    try {
+      val want = regexCurateRows(sf01Docs)
+      val n = CurateApp.run(spark, sf01Docs, s"$dir/curated")
+      val got = spark.read.parquet(s"$dir/curated").select("doc_id", "quality")
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
+      val input = spark.read.parquet(sf01Docs).count()
+      assert(want.nonEmpty && want.size < input, s"${want.size} of $input kept: no filtering")
+      assert(n == want.size && got == want,
+        s"missing ${want.diff(got).take(5)}, extra ${got.diff(want).take(5)}")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
+  test("CurateApp.run scans its input parquet once") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val dir = java.nio.file.Files.createTempDirectory("graft_curate_scan")
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val barriers = new java.util.concurrent.ConcurrentLinkedQueue[AnyRef]
+    val bus = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        barriers.add(e)
+    }
+    // every scan node of the input, also those inside a cached plan;
+    // a cached plan shows up in each query that reads it, so the nodes
+    // are collected by identity
+    val helper = new AdaptiveSparkPlanHelper {}
+    def inputScans(p: SparkPlan): Seq[SparkPlan] = helper.flatMap(p) {
+      case s: FileSourceScanExec
+          if s.relation.location.rootPaths.exists(_.toString.endsWith("documents.parquet")) => Seq(s)
+      case m: InMemoryTableScanExec => inputScans(m.relation.cachedPlan)
+      case _ => Nil
+    }
+    try {
+      val rows = spark.read.parquet(sf01Docs).count()
+      spark.listenerManager.register(listener)
+      spark.sparkContext.addSparkListener(bus)
+      try {
+        assert(CurateApp.run(spark, sf01Docs, s"$dir/curated") > 0)
+        // the bus delivers in order: once this arrives, every query
+        // the run finished has been recorded
+        val barrier = org.apache.spark.sql.graft.RegimePick("barrier", "", 0L, 0L)
+        barrier.post(spark)
+        val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+        while (!barriers.contains(barrier) && System.nanoTime() < deadline) Thread.sleep(10)
+        assert(barriers.contains(barrier), "listener bus did not drain")
+      } finally {
+        spark.listenerManager.unregister(listener)
+        spark.sparkContext.removeSparkListener(bus)
+      }
+      val scans = java.util.Collections.newSetFromMap(
+        new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean])
+      plans.forEach(qe => inputScans(qe.executedPlan).foreach(scans.add))
+      var read = 0L
+      scans.forEach(s => read += s.metrics("numOutputRows").value)
+      assert(!scans.isEmpty, "no scan of the input was seen")
+      assert(read == rows, s"the run read $read input rows; the input has $rows")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
   test("NFC-normalized dedup collapses composed and decomposed encodings") {
     import spark.implicits._
     val composed = "café résumé"          // U+00E9

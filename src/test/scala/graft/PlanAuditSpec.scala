@@ -22,6 +22,25 @@ class PlanAuditSpec extends AnyFunSuite {
       org.apache.spark.sql.execution.FormattedMode)
   }
 
+  test("curate and text_quality run TextStats once per row and no regex") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val helper = new AdaptiveSparkPlanHelper {}
+    def audit(label: String, df: org.apache.spark.sql.DataFrame): Unit = {
+      df.collect()
+      val exprs = helper.flatMap(df.queryExecution.executedPlan)(_.expressions.flatMap(_.collect {
+        case e => e
+      }))
+      val kernels = exprs.count(_.isInstanceOf[org.apache.spark.sql.graft.TextStats])
+      val regex = exprs.map(_.prettyName).filter(_.startsWith("regexp")).distinct
+      val plan = df.queryExecution.executedPlan.toString
+      assert(kernels == 1, s"$label: TextStats appears $kernels times in\n$plan")
+      assert(regex.isEmpty, s"$label: ${regex.mkString(", ")} in\n$plan")
+    }
+    val docs = graft.sources.Tables.documents(spark, sf)
+    audit("CurateApp.curate", CurateApp.curate(docs, 0.75, "en"))
+    audit("text_quality", SparkEntry.queries("text_quality")(spark, sf))
+  }
+
   test("q1_pricing pushes the date filter and prunes columns") {
     val p = formatted("q1_pricing")
     assert(p.contains("PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate"))
