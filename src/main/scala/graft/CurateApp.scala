@@ -51,18 +51,6 @@ object CurateApp {
       .select(Seq(col("doc_id"), col("text")) ++ extra.map(col) :+ col("quality"): _*)
   }
 
-  /** The near-dedup survivors of a curated, exact-deduped corpus:
-    * MinHash+LSH pairs resolved to components, one survivor each. The
-    * scope holds the shingles and the verified pairs; the result may
-    * read component labels that `Dedup.nearDedupedCorpus` kept.
-    */
-  private def nearDedup(sc: Ckpt.Scope, exact: DataFrame): DataFrame = {
-    val sh = sc.persist(Dedup.shinglesHashed(exact))
-    val pairs = sc.checkpoint(sc.adopt(Dedup.jaccardVerify(sh,
-      Dedup.lshCandidates(Dedup.minhashSignatures(sh)), 0.8)).select("id1", "id2"))
-    Dedup.nearDedupedCorpus(exact, pairs)
-  }
-
   /** The full job against an existing session (what main and tests
     * both drive). Returns the curated row count. The input goes
     * through `Tables.parquet` (schema inferred once per content); the
@@ -76,7 +64,13 @@ object CurateApp {
       // one copy of the curated corpus: shingling and the survivor
       // write both read it, so neither rescans and rescores the input
       val exact = sc.persist(Dedup.dedupedCorpus(curate(docs, qualityMin, lang)))
-      val curated = sc.adopt(nearDedup(sc, exact))
+      // near-dedup: MinHash+LSH pairs resolved to components, one
+      // survivor each; the survivors may read component labels that
+      // nearDedupedCorpus kept, which the scope adopts
+      val sh = sc.persist(Dedup.shinglesHashed(exact))
+      val pairs = sc.checkpoint(sc.adopt(Dedup.jaccardVerify(sh,
+        Dedup.lshCandidates(Dedup.minhashSignatures(sh)), 0.8)).select("id1", "id2"))
+      val curated = sc.adopt(Dedup.nearDedupedCorpus(exact, pairs))
       curated.write.mode("overwrite").parquet(output)
       spark.read.schema(curated.schema).parquet(output).count()
     }

@@ -30,8 +30,12 @@ object TextAnalysis {
   def textStats(text: Column): Column =
     ColumnBridge.column(TextStats(ColumnBridge.expression(text)))
 
-  /** Non-whitespace (`\S+`) token count: TextStats' n_tokens. */
-  def tokenCount(text: Column): Column = textStats(text).getField("n_tokens")
+  /** Non-whitespace (`\S+`) token count: TextStats' n_tokens, from a
+    * kernel that skips the word-list counts.
+    */
+  def tokenCount(text: Column): Column =
+    ColumnBridge.column(TextStats(ColumnBridge.expression(text), words = false))
+      .getField("n_tokens")
 
   /** The oracle-side regex of a word list: `\b(w1|w2|…)\b`. */
   private def wordsPattern(ws: Seq[String]): String = ws.mkString("\\b(", "|", ")\\b")
@@ -910,10 +914,11 @@ object TextAnalysis {
     * (terminator runs), syllables (vowel-group approximation — the
     * standard dictionary-free estimator), then
     * 206.835 − 1.015·(words/sentences) − 84.6·(syllables/words),
-    * plus per-source difficulty averages. Pure codegen'd regexp
-    * counting — one corpus pass, no shuffle before the tiny
-    * per-source aggregate; the identical regexes run on both
-    * engines.
+    * plus per-source difficulty averages. One corpus pass, no
+    * shuffle before the tiny per-source aggregate. n_words is
+    * `tokenCount` (TextStats' n_tokens, equal to the oracle's `\S+`
+    * count); the sentence and syllable counts are the same regexes
+    * on both engines.
     */
   val textReadability: QueryDef = QueryDef.sql(
     "text_readability",
@@ -1576,8 +1581,9 @@ object TextAnalysis {
     * in [3, 12]; ≥ 80% of words contain an alphabetic character;
     * symbol-to-word ratio (#, …) ≤ 0.1; ≥ 2 stopword hits) plus the
     * conjunction. Per-rule flags are what let an operator see WHY a
-    * feed's pass rate dropped. Pure map-side codegen'd regexp
-    * arithmetic — zero shuffle at any scale; integer counts only,
+    * feed's pass rate dropped. Map-side only — zero shuffle at any
+    * scale: n_words, alpha_chars and n_stops are TextStats fields,
+    * alpha_words and n_symbols are regex counts; integer counts only,
     * with the two ratio rules phrased as cross-multiplied integer
     * comparisons so no float ever enters the predicate.
     */

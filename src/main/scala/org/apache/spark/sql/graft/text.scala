@@ -286,8 +286,10 @@ case class WordGrams(child: Expression, n: Int)
 /** The per-document text measures behind quality scoring, language
   * ID and token accounting, from one pass over the string:
   * struct<n_chars, n_tokens, alpha_chars, n_stops, c_en, c_es, c_de,
-  * c_fr>, all longs. `TextStats.stats` is the one implementation;
-  * `eval` and the generated code both call it.
+  * c_fr>, all longs. With `words = false` the struct ends at
+  * alpha_chars and the word lists are not counted (what
+  * `TextAnalysis.tokenCount` builds). `TextStats.stats` is the one
+  * implementation; `eval` and the generated code both call it.
   *
   * Each field equals the Spark spelling it replaced (pinned in
   * TextStatsSpec, codegen'd and interpreted):
@@ -299,31 +301,34 @@ case class WordGrams(child: Expression, n: Int)
   *
   * Engine rationale: those spellings make seven regex passes per
   * document, six of them over a decoded (and for four, lower-cased)
-  * copy of the string. Here ASCII text is read once from its UTF-8
-  * bytes with no decode; only a document with a non-ASCII byte is
-  * lower-cased (with Spark's own `lower`, under the same ICU conf)
-  * and its word counts taken by a port of java.util.regex's `\b`
+  * copy of the string. Here n_chars, n_tokens and alpha_chars come
+  * from one loop over the UTF-8 bytes with no decode (`\s` is
+  * `[ \t\n\x0B\f\r]` only, so NBSP and other Unicode spaces are token
+  * characters). The word counts come from one scan of the string
+  * lower-cased by Spark's own `lower` (under the same ICU conf) for
+  * all five lists at once, with a port of java.util.regex's `\b`
   * (JDK 17, default flags): a word char is a letter, a digit or `_`,
   * and a non-spacing mark after one also counts as a word char.
-  * `\s` is `[ \t\n\x0B\f\r]` only, so NBSP and other Unicode spaces
-  * are token characters.
   */
-case class TextStats(child: Expression) extends UnaryExpression with ExpectsInputTypes {
+case class TextStats(child: Expression, words: Boolean = true)
+    extends UnaryExpression with ExpectsInputTypes {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = TextStats.Schema
+  override def dataType: DataType = if (words) TextStats.Schema else TextStats.ByteSchema
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "graft_text_stats"
 
-  // read the way Spark's Lower reads it, so non-ASCII text lowers alike
+  // read the way Spark's Lower reads it, so the word counts see the
+  // string `lower()` returns
   private lazy val useICU: Boolean = org.apache.spark.sql.internal.SQLConf.get
     .getConf(org.apache.spark.sql.internal.SQLConf.ICU_CASE_MAPPINGS_ENABLED)
 
-  override def nullSafeEval(s: Any): Any = TextStats.stats(s.asInstanceOf[UTF8String], useICU)
+  override def nullSafeEval(s: Any): Any =
+    TextStats.stats(s.asInstanceOf[UTF8String], words, useICU)
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = ${classOf[TextStats].getName}.stats($c, $useICU);")
+      s"${ev.value} = ${classOf[TextStats].getName}.stats($c, $words, $useICU);")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -349,84 +354,49 @@ object TextStats {
       org.apache.spark.sql.types.StructField(f, org.apache.spark.sql.types.LongType,
         nullable = false)))
 
+  /** The fields of the byte loop alone: n_chars, n_tokens, alpha_chars. */
+  val ByteSchema: org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.StructType(Schema.take(3))
+
   // every listed word once, with one bit per field it counts toward
   // (bit 3 = n_stops, bit 4 + i = marker language i, i.e. field index)
-  private val (words: Array[String], wordBits: Array[Int]) = {
+  private val (wordList: Array[String], wordBits: Array[Int]) = {
     val all = (StopWords ++ Markers.flatMap(_._2)).distinct
     (all.toArray, all.map { w =>
       (if (StopWords.contains(w)) 1 << 3 else 0) |
         Markers.indices.filter(i => Markers(i)._2.contains(w)).map(i => 1 << (4 + i)).sum
     }.toArray)
   }
-  private val MaxWordLen = words.map(_.length).max
-  require(words.forall(w => w.nonEmpty && w.forall(c => c >= 'a' && c <= 'z')) &&
-    MaxWordLen <= 7, "listed words must be 1-7 lower-case ASCII letters")
+  require(wordList.forall(w => w.nonEmpty && w.forall(c => c >= 'a' && c <= 'z')),
+    "listed words must be lower-case ASCII letters")
+  // the indices of the listed words by first letter ('a' = 0)
+  private val byFirst: Array[Array[Int]] =
+    Array.tabulate(26)(l => wordList.indices.filter(wordList(_).charAt(0) == 'a' + l).toArray)
 
-  // a word's letters packed one byte each: the ASCII path looks a
-  // word-char run up without building a String
-  private def key(w: String): Long = w.foldLeft(0L)((k, c) => k << 8 | c)
-  private val (sortedKeys: Array[Long], keyBits: Array[Int]) = {
-    val byKey = words.indices.map(i => key(words(i)) -> wordBits(i)).sortBy(_._1)
-    (byKey.map(_._1).toArray, byKey.map(_._2).toArray)
-  }
-
-  private def count(bits: Int, out: Array[Long]): Unit = {
-    var f = 3
-    while (f < out.length) {
-      if ((bits & (1 << f)) != 0) out(f) += 1
-      f += 1
-    }
-  }
-
-  /** The TextStats row of `u`. In ASCII text `\b` falls exactly at
-    * the ends of each run of [A-Za-z0-9_], so a listed word matches
-    * where it is a whole run, compared case-folded; any other text is
-    * recounted on its lower-cased string by `wordCounts`.
+  /** The TextStats row of `u`: n_chars, n_tokens and alpha_chars from
+    * its UTF-8 bytes, then, when `words`, the word-list counts of its
+    * lower-cased string.
     */
-  def stats(u: UTF8String, useICU: Boolean): InternalRow = {
+  def stats(u: UTF8String, words: Boolean, useICU: Boolean): InternalRow = {
     val base = u.getBaseObject
     val off = u.getBaseOffset
     val n = u.numBytes
-    val out = new Array[Long](Fields.length)
+    val out = new Array[Long](if (words) Fields.length else ByteSchema.length)
     var ascii = true
     var inToken = false
-    // the current run of ASCII word chars [A-Za-z0-9_]
-    var runLen = 0
-    var runKey = 0L
-    var runLetters = true
     var i = 0
-    // one step past the end, where a space closes the last run
-    while (i <= n) {
-      val b: Int = if (i < n) org.apache.spark.unsafe.Platform.getByte(base, off + i) else ' '
+    while (i < n) {
+      val b = org.apache.spark.unsafe.Platform.getByte(base, off + i)
+      val space = b == ' ' || (b >= '\t' && b <= '\r')
+      if (!space && !inToken) out(1) += 1
+      inToken = !space
       val lower = b | 0x20
-      val letter = lower >= 'a' && lower <= 'z'
-      if (i < n) {
-        val space = b == ' ' || (b >= '\t' && b <= '\r')
-        if (!space && !inToken) out(1) += 1
-        inToken = !space
-        if (letter) out(2) += 1
-        if (b < 0) ascii = false
-      }
-      if (letter || (b >= '0' && b <= '9') || b == '_') {
-        if (runLen < MaxWordLen) runKey = runKey << 8 | lower
-        runLen += 1
-        runLetters &&= letter
-      } else if (runLen > 0) {
-        if (runLetters && runLen <= MaxWordLen) {
-          val k = java.util.Arrays.binarySearch(sortedKeys, runKey)
-          if (k >= 0) count(keyBits(k), out)
-        }
-        runLen = 0
-        runKey = 0L
-        runLetters = true
-      }
+      if (lower >= 'a' && lower <= 'z') out(2) += 1
+      if (b < 0) ascii = false
       i += 1
     }
-    if (ascii) out(0) = n
-    else {
-      out(0) = u.numChars()
-      // the byte loop's word counts hold for ASCII text only
-      java.util.Arrays.fill(out, 3, out.length, 0L)
+    out(0) = if (ascii) n else u.numChars()
+    if (words) {
       wordCounts(org.apache.spark.sql.catalyst.util.CollationSupport.Lower.exec(u,
         org.apache.spark.sql.catalyst.util.CollationFactory.UTF8_BINARY_COLLATION_ID,
         useICU).toString, out)
@@ -440,26 +410,42 @@ object TextStats {
     row
   }
 
-  /** n_stops and c_* of a lower-cased non-ASCII document: what
-    * `Matcher.find` does for `\b(w1|…)\b`, one scan for all lists. A
-    * match starts only where `\b` holds before a letter, and no `\b`
-    * falls inside a matched word, so the lists' matches never overlap
-    * and at most one listed word matches at a position.
+  /** n_stops and c_* of a lower-cased document: what `Matcher.find`
+    * does for `\b(w1|…)\b`, one scan for all lists. A match starts
+    * only where `\b` holds before a letter, and no `\b` falls inside
+    * a matched word, so the lists' matches never overlap and at most
+    * one listed word matches at a position.
     */
   private def wordCounts(s: String, out: Array[Long]): Unit = {
     var i = 0
+    // s(i - 1) is in [A-Za-z0-9_]: then no `\b` falls before a letter at i
+    var afterWord = false
     while (i < s.length) {
       val c = s.charAt(i)
       var hit = -1
-      if (c >= 'a' && c <= 'z' && bound(s, i)) {
-        var w = 0
-        while (hit < 0 && w < words.length) {
-          if (s.startsWith(words(w), i) && bound(s, i + words(w).length)) hit = w
-          w += 1
+      if (c >= 'a' && c <= 'z' && !afterWord && bound(s, i)) {
+        val cands = byFirst(c - 'a')
+        var k = 0
+        while (hit < 0 && k < cands.length) {
+          val w = cands(k)
+          if (s.startsWith(wordList(w), i) && bound(s, i + wordList(w).length)) hit = w
+          k += 1
         }
       }
-      if (hit >= 0) { count(wordBits(hit), out); i += words(hit).length }
-      else i += 1
+      if (hit >= 0) {
+        val bits = wordBits(hit)
+        var f = 3
+        while (f < out.length) {
+          if ((bits & (1 << f)) != 0) out(f) += 1
+          f += 1
+        }
+        i += wordList(hit).length
+        afterWord = true
+      } else {
+        val l = c | 0x20
+        afterWord = (l >= 'a' && l <= 'z') || (c >= '0' && c <= '9') || c == '_'
+        i += 1
+      }
     }
   }
 

@@ -5,13 +5,14 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.graft.TextStats
+import org.apache.spark.sql.graft.{ColumnBridge, TextStats}
 import graft.operators.TextAnalysis
 
 /** The TextStats kernel behind `TextAnalysis.qualityInputs`,
-  * `markerCols` and `tokenCount`: every field value-locked against
-  * the regex spelling it replaced, under whole-stage codegen and
-  * interpreted, with both settings of Spark's ICU case-mapping conf.
+  * `markerCols` and `tokenCount`: every field, with and without the
+  * word lists, value-locked against the regex spelling it replaced,
+  * under whole-stage codegen and interpreted, with both settings of
+  * Spark's ICU case-mapping conf.
   */
 class TextStatsSpec extends AnyFunSuite {
   import TestSpark._
@@ -98,23 +99,29 @@ class TextStatsSpec extends AnyFunSuite {
       try body finally spark.conf.unset(SQLConf.ICU_CASE_MAPPINGS_ENABLED.key)
     }
 
+  // every field of the full kernel, then the fields of the kernel
+  // that skips the word lists (`tokenCount`'s), each paired with the
+  // regex spelling of the same name
   private def assertSameAsRegex(label: String, ts: Seq[Option[String]]): Unit = {
     val text = col("text")
     val st = TextAnalysis.textStats(text)
-    val ref = reference(text)
-    val rows = frame(ts).select(col("id") +:
-      (TextStats.Fields.map(f => st.getField(f)) ++ ref.map(_._2)): _*).collect()
+    val bytes = ColumnBridge.column(TextStats(ColumnBridge.expression(text), words = false))
+    val ref = reference(text).toMap
+    val pairs = TextStats.Fields.map(f => (f, st.getField(f), ref(f))) ++
+      TextStats.ByteSchema.fieldNames.map(f => (s"$f (no words)", bytes.getField(f), ref(f))) :+
+      (("tokenCount", TextAnalysis.tokenCount(text), ref("n_tokens")))
+    val rows = frame(ts).select(col("id") +: pairs.flatMap(p => Seq(p._2, p._3)): _*).collect()
     assert(rows.length == ts.length)
-    val n = TextStats.Fields.length
     rows.foreach { r =>
       val at = s"$label, text ${ts(r.getInt(0)).map(s => s.flatMap(c =>
         if (c < 0x80 && c >= 0x20) c.toString else f"\\u${c.toInt}%04X"))}"
-      TextStats.Fields.zipWithIndex.foreach { case (f, j) =>
-        assert(r.get(1 + j) == r.get(1 + n + j), s"$f: $at")
+      pairs.zipWithIndex.foreach { case ((f, _, _), j) =>
+        assert(r.get(1 + 2 * j) == r.get(2 + 2 * j), s"$f: $at")
       }
     }
     val nullRow = rows.find(r => ts(r.getInt(0)).isEmpty)
-    nullRow.foreach(r => assert((1 to 2 * n).forall(r.isNullAt), s"$label: null text"))
+    nullRow.foreach(r =>
+      assert((1 to 2 * pairs.length).forall(r.isNullAt), s"$label: null text"))
   }
 
   test("the kernel's fields are the regex spellings' order and names") {
