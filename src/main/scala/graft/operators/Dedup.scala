@@ -756,8 +756,7 @@ object Dedup {
         col("band") === col("band2") && col("sig") === col("sig2")
           && col("id1") < col("id2"))
       .select("id1", "id2")
-    jaccardVerify(corpusSh.union(incSh),
-      cross.union(self).distinct(), threshold)
+    jaccardVerify(corpusSh.union(incSh), cross.union(self), threshold)
   }
 
   /** Write the LSH bucket index (doc_id, band, sig) of a corpus to
@@ -1185,7 +1184,7 @@ object Dedup {
     val cand = prefix.toDF("id1", "sh")
       .join(prefix.toDF("id2", "sh2"),
         col("sh") === col("sh2") && col("id1") < col("id2"))
-      .select(col("id1"), col("id2")).distinct()
+      .select(col("id1"), col("id2"))
     jaccardVerify(toks, cand, threshold)
   }
 

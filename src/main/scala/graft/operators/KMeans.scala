@@ -89,64 +89,140 @@ object KMeans {
     pts.select(col("x").cast("double"), col("y").cast("double"), w.cast("double"),
       m.cast("long"))
 
-  /** One map+combine pass — the reference's mapper and combiner in one
-    * job with no shuffle. Each task takes the rows whose mask has
-    * `bit` set, assigns each to its nearest centroid in every set
-    * (`NearestCentroid.argmin`, the SQL kernel's own) and sums
-    * (Σw·x, Σw·y, Σw, n) per cluster; the driver adds the
-    * per-partition partials in partition order, so the result does not
-    * depend on task timing. A row with a null x, y or w takes no part.
-    * Returns one array per set, four numbers per cluster; with w = 1,
-    * Σw·x = Σx and Σw = n exactly.
+  /** `sweepRows` for n-D points: (v: array<double>, w, m). */
+  private[graft] def vectorRows(pts: DataFrame, v: Column, w: Column = lit(1.0),
+      m: Column = lit(-1L)): DataFrame =
+    pts.select(v.cast("array<double>"), w.cast("double"), m.cast("long"))
+
+  /** How a sweep scores a row against a centroid; the nearest is the
+    * first minimum (lowest cid on ties), NaN after every number, as in
+    * Spark's SQL ordering. `Planar`: (x−cx)² + (y−cy)², by the 2-D SQL
+    * kernel's `NearestCentroid.argmin`. `Euclid`: ‖v‖² − 2·v·c + ‖c‖²,
+    * every dot summed left to right from 0 as `graft_dot` and DuckDB's
+    * list_dot_product do, so the n-D oracles replay each assignment.
+    * `Cosine`: −v·c (spherical k-means).
     */
-  private[graft] def sweep(rows: DataFrame, sets: Seq[Array[(Double, Double)]],
-      bit: Long): Seq[Array[Double]] = {
-    val flat = sets.map(_.flatMap { case (x, y) => Array(x, y) }).toArray
+  private[graft] sealed trait Rule
+  private[graft] case object Planar extends Rule
+  private[graft] case object Euclid extends Rule
+  private[graft] case object Cosine extends Rule
+
+  /** One centroid set of a sweep: k centroids of `dim` coordinates,
+    * flat (c0's, then c1's, …), scored by `rule` against coordinates
+    * `off` until `off + dim` of each row.
+    */
+  private[graft] final case class Centroids(cs: Array[Double], dim: Int,
+      rule: Rule = Planar, off: Int = 0) {
+    require(dim > 0 && cs.nonEmpty && cs.length % dim == 0 && (rule != Planar || dim == 2),
+      s"$rule centroids need k·$dim coordinates, got ${cs.length}")
+    def k: Int = cs.length / dim
+    def apply(c: Int): Array[Double] = cs.slice(c * dim, (c + 1) * dim)
+    def vectors: Array[Array[Double]] = Array.tabulate(k)(apply)
+    def pairs: Array[(Double, Double)] = Array.tabulate(k)(c => (cs(2 * c), cs(2 * c + 1)))
+
+    @transient private lazy val norms = Array.tabulate(k)(c => dot(cs, c * dim, cs, c * dim))
+
+    private def dot(a: Array[Double], ao: Int, b: Array[Double], bo: Int): Double = {
+      var s = 0.0
+      var j = 0
+      while (j < dim) { s += a(ao + j) * b(bo + j); j += 1 }
+      s
+    }
+
+    /** The cid nearest the row coordinates `v` under `rule`. */
+    def nearest(v: Array[Double]): Int =
+      if (rule == Planar) NearestCentroid.argmin(cs, v(off), v(off + 1))
+      else {
+        val vv = if (rule == Euclid) dot(v, off, v, off) else 0.0
+        var best = 0.0
+        var bestC = 0
+        var c = 0
+        while (c < k) {
+          val vc = dot(v, off, cs, c * dim)
+          val d = if (rule == Euclid) vv - 2.0 * vc + norms(c) else 0.0 - vc
+          if (c == 0 || d < best || (best.isNaN && !d.isNaN)) { best = d; bestC = c }
+          c += 1
+        }
+        bestC
+      }
+  }
+  private[graft] object Centroids {
+    def planar(cs: Array[(Double, Double)]): Centroids =
+      Centroids(cs.flatMap { case (x, y) => Array(x, y) }, 2)
+    def of(cs: Array[Array[Double]], rule: Rule = Euclid, off: Int = 0): Centroids =
+      Centroids(cs.flatten, cs.head.length, rule, off)
+  }
+
+  /** One map+combine pass over `sweepRows` or `vectorRows` — the
+    * reference's mapper and combiner in one job with no shuffle. Each
+    * task takes the rows whose mask has `bit` set, assigns each to its
+    * nearest centroid in every set and sums (Σw·v…, Σw, n) per cluster
+    * over the set's coordinates; the driver adds the per-partition
+    * partials in partition order, so the result does not depend on
+    * task timing. A row with a null coordinate or weight column takes
+    * no part. Returns per set, per cluster, those dim + 2 numbers.
+    */
+  private[graft] def sweep(rows: DataFrame, sets: Seq[Centroids],
+      bit: Long): Seq[Array[Array[Double]]] = {
+    val ss = sets.toArray
+    val vec = rows.schema.head.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType]
+    val (wi, need) = if (vec) (1, ss.map(s => s.off + s.dim).max) else (2, 2)
     val parts = rows.queryExecution.toRdd.mapPartitions { it =>
-      val acc = flat.map(cs => new Array[Double](2 * cs.length))
+      val acc = ss.map(s => Array.fill(s.k)(new Array[Double](s.dim + 2)))
+      val v = new Array[Double](need)
       it.foreach { r =>
-        if ((r.getLong(3) & bit) != 0L && !r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2)) {
-          val x = r.getDouble(0)
-          val y = r.getDouble(1)
-          val w = r.getDouble(2)
+        if ((r.getLong(wi + 1) & bit) != 0L && !r.isNullAt(0) && !r.isNullAt(wi) &&
+            (vec || !r.isNullAt(1))) {
+          if (vec) {
+            val a = r.getArray(0)
+            require(a.numElements() >= need, s"a sweep row has ${a.numElements()} coordinates, need $need")
+            var j = 0
+            while (j < need) { v(j) = a.getDouble(j); j += 1 }
+          } else { v(0) = r.getDouble(0); v(1) = r.getDouble(1) }
+          val w = r.getDouble(wi)
           var s = 0
-          while (s < flat.length) {
-            val o = 4 * NearestCentroid.argmin(flat(s), x, y)
-            val a = acc(s)
-            a(o) += w * x; a(o + 1) += w * y; a(o + 2) += w; a(o + 3) += 1
+          while (s < ss.length) {
+            val set = ss(s)
+            val a = acc(s)(set.nearest(v))
+            var j = 0
+            while (j < set.dim) { a(j) += w * v(set.off + j); j += 1 }
+            a(set.dim) += w; a(set.dim + 1) += 1
             s += 1
           }
         }
       }
       Iterator.single(acc)
     }.collect()
-    flat.indices.map { s =>
-      val sum = new Array[Double](2 * flat(s).length)
-      parts.foreach(p => sum.indices.foreach(i => sum(i) += p(s)(i)))
+    ss.indices.map(s => Array.tabulate(ss(s).k) { c =>
+      val sum = new Array[Double](ss(s).dim + 2)
+      parts.foreach(p => sum.indices.foreach(i => sum(i) += p(s)(c)(i)))
       sum
-    }
+    })
   }
 
   /** One centroid set of a Lloyd loop: its centroids, the cid each
-    * started as, the iterations it ran and whether it converged.
+    * started as, the iterations it ran, whether it converged, and the
+    * cluster sizes of its last sweep.
     */
-  private[graft] final case class Fit(cs: Array[(Double, Double)], ids: Array[Int],
-      iters: Int, converged: Boolean) {
+  private[graft] final case class Fit(set: Centroids, ids: Array[Int], iters: Int,
+      converged: Boolean, sizes: Array[Long]) {
 
     /** The Lloyd update from a sweep's sums: each centroid moves to
-      * Σw·x / Σw. An empty cluster keeps its centroid, or leaves the
+      * Σw·v / Σw. An empty cluster keeps its centroid, or leaves the
       * set if `drop`. Converged when every remaining centroid moved
-      * less than `tol` on both axes (so tol 0 never converges).
+      * less than `tol` on every axis (so tol 0 never converges).
       */
-    def next(sums: Array[Double], tol: Double, drop: Boolean): Fit = {
-      def n(c: Int) = sums(4 * c + 3)
-      val kept = cs.indices.filter(c => !drop || n(c) > 0)
-      val moved = kept.map(c =>
-        if (n(c) == 0) cs(c) else (sums(4 * c) / sums(4 * c + 2), sums(4 * c + 1) / sums(4 * c + 2)))
-      val still = kept.map(cs(_)).zip(moved).forall { case ((ox, oy), (nx, ny)) =>
-        math.abs(ox - nx) < tol && math.abs(oy - ny) < tol
+    def next(sums: Array[Array[Double]], tol: Double, drop: Boolean): Fit = {
+      val d = set.dim
+      val kept = sums.indices.filter(c => !drop || sums(c)(d + 1) > 0)
+      val moved = kept.map { c =>
+        if (sums(c)(d + 1) == 0) set(c) else Array.tabulate(d)(j => sums(c)(j) / sums(c)(d))
       }
-      Fit(moved.toArray, kept.map(ids(_)).toArray, iters + 1, still)
+      val still = kept.zip(moved).forall { case (c, m) =>
+        m.indices.forall(j => math.abs(set.cs(c * d + j) - m(j)) < tol)
+      }
+      Fit(set.copy(cs = moved.flatten.toArray), kept.map(ids(_)).toArray, iters + 1, still,
+        kept.map(c => sums(c)(d + 1).toLong).toArray)
     }
   }
 
@@ -158,14 +234,15 @@ object KMeans {
     * `drop` leave the set, as the fixed-iteration SQL oracles do.
     * Iteration i reads the rows whose mask has `bit(i)` set.
     */
-  private[graft] def lloydSets(rows: DataFrame, inits: Seq[Array[(Double, Double)]],
+  private[graft] def lloydSets(rows: DataFrame, inits: Seq[Centroids],
       tol: Double, maxIter: Int, drop: Boolean = false,
       bit: Int => Long = _ => -1L): Seq[Fit] = {
-    var fits = inits.map(cs => Fit(cs.clone(), cs.indices.toArray, 0, converged = false))
+    var fits = inits.map(cs =>
+      Fit(cs, (0 until cs.k).toArray, 0, converged = false, new Array[Long](cs.k)))
     var i = 0
     while (i < maxIter && fits.exists(!_.converged)) {
       val active = fits.indices.filterNot(fits(_).converged)
-      sweep(rows, active.map(fits(_).cs), bit(i)).zip(active).foreach { case (sums, f) =>
+      sweep(rows, active.map(fits(_).set), bit(i)).zip(active).foreach { case (sums, f) =>
         fits = fits.updated(f, fits(f).next(sums, tol, drop))
       }
       i += 1
@@ -181,8 +258,9 @@ object KMeans {
     */
   def iterate(pts: DataFrame, init: Array[(Double, Double)], iters: Int,
       weight: Column = lit(1.0)): Map[Int, (Double, Double)] = {
-    val f = lloydSets(sweepRows(pts, weight), Seq(init), tol = 0, iters, drop = true).head
-    f.ids.zip(f.cs).toMap
+    val f = lloydSets(sweepRows(pts, weight), Seq(Centroids.planar(init)), tol = 0, iters,
+      drop = true).head
+    f.ids.zip(f.set.pairs).toMap
   }
 
   /** Full reference semantics: iterate until every centroid moves
@@ -191,8 +269,8 @@ object KMeans {
     */
   def lloyd(pts: DataFrame, init: Array[(Double, Double)],
       tol: Double = 1e-3, maxIter: Int = 20): (Array[(Double, Double)], Int, Boolean) = {
-    val f = lloydSets(sweepRows(pts), Seq(init), tol, maxIter).head
-    (f.cs, f.iters, f.converged)
+    val f = lloydSets(sweepRows(pts), Seq(Centroids.planar(init)), tol, maxIter).head
+    (f.set.pairs, f.iters, f.converged)
   }
 
   /** Mini-batch k-means (after Sculley, WWW 2010 — simplified to a
@@ -242,9 +320,9 @@ object KMeans {
     }.reduce(_ + _)
     graft.Ckpt.scoped { sc =>
       val hashed = sc.persist(halves.select(col("x"), col("y"), mask.as("bmask")))
-      val f = lloydSets(sweepRows(hashed, m = col("bmask")), Seq(init), tol, maxIter,
-        bit = i => 1L << i).head
-      (f.cs, f.iters, f.converged)
+      val f = lloydSets(sweepRows(hashed, m = col("bmask")), Seq(Centroids.planar(init)), tol,
+        maxIter, bit = i => 1L << i).head
+      (f.set.pairs, f.iters, f.converged)
     }
   }
 
@@ -339,39 +417,6 @@ object KMeans {
          |${q}nit AS (SELECT coalesce(min(iter), $maxIter) AS n_iters,
          |               coalesce(min(iter), ${maxIter + 1}) <= $maxIter AS converged
          |        FROM ${q}convs WHERE conv)""".stripMargin)
-    sb.toString
-  }
-
-  /** CTE chain for the n-dimensional Lloyd on the embeddings table —
-    * the list-typed mirror of lloydFullCtes (fixed iterations, stale
-    * empty clusters): element-wise centroid means via a position
-    * unnest + per-(cid, pos) avg, reassembled with an ordered list().
-    */
-  private def ndLloydCtes(k: Int, iters: Int): String = {
-    val sb = new StringBuilder
-    sb.append(
-      s"""WITH e AS MATERIALIZED (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         |init AS (SELECT vec_id, v FROM e ORDER BY vec_id LIMIT $k),
-         |c0 AS MATERIALIZED (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, v AS c FROM init)""".stripMargin)
-    for (i <- 1 to iters) {
-      val p = i - 1
-      sb.append(
-        s""",
-           |a$i AS (SELECT e.vec_id, e.v, c.cid,
-           |         row_number() OVER (PARTITION BY e.vec_id
-           |           ORDER BY list_dot_product(e.v, e.v) - 2*list_dot_product(e.v, c.c)
-           |                    + list_dot_product(c.c, c.c), c.cid) AS rn
-           |       FROM e CROSS JOIN c$p c),
-           |s$i AS MATERIALIZED (SELECT vec_id, v, cid FROM a$i WHERE rn = 1),
-           |n$i AS (SELECT cid, count(*) AS n FROM s$i GROUP BY cid),
-           |x$i AS (SELECT cid, pos, avg(v[pos]) AS val
-           |       FROM s$i, UNNEST(generate_series(1, len(v))) AS t(pos)
-           |       GROUP BY cid, pos),
-           |m$i AS (SELECT cid, list(val ORDER BY pos) AS c FROM x$i GROUP BY cid),
-           |c$i AS MATERIALIZED (SELECT cid, c FROM m$i
-           |       UNION ALL
-           |       SELECT cid, c FROM c$p WHERE cid NOT IN (SELECT cid FROM m$i))""".stripMargin)
-    }
     sb.toString
   }
 
@@ -481,63 +526,29 @@ object KMeans {
     }
   }
 
-  // ---- n-dimensional Lloyd (DataFrame-native) ------------------------
+  // ---- n-dimensional Lloyd -------------------------------------------
 
-  /** Nearest-centroid id over array<double> points: ‖v‖² − 2·v·c + ‖c‖²
-    * per centroid (native graft_dot against array literals), struct
-    * min for the lowest-cid tie-break. Map-side only, like the 2-D
-    * path.
-    */
-  def ndAssignExpr(cs: Array[Array[Double]], v: Column): Column = {
-    val vv = Similarity.dot(v, v)
-    val candidates = cs.zipWithIndex.map { case (c, i) =>
-      val cl = array(c.map(lit): _*)
-      val dist = vv - lit(2.0) * Similarity.dot(v, cl) + lit(c.map(x => x * x).sum)
-      struct(dist.as("dist"), lit(i).as("cid"))
-    }
-    array_min(array(candidates: _*)).getField("cid")
-  }
-
-  /** One n-D Lloyd update: per-cluster mean vector via Summarizer
-    * (a true partial aggregator — one k-group shuffle, O(k·dim) per
-    * partition on the wire, same shape as the 2-D step).
-    */
-  def ndStep(pts: DataFrame, cs: Array[Array[Double]]): Array[(Int, Array[Double], Long)] = {
-    import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
-    import org.apache.spark.ml.stat.Summarizer
-    pts.withColumn("cid", ndAssignExpr(cs, col("v")))
-      .groupBy(col("cid"))
-      .agg(Summarizer.mean(array_to_vector(col("v"))).as("c"), count(lit(1)).as("n"))
-      .select(col("cid"), vector_to_array(col("c")).as("c"), col("n"))
-      .collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray, r.getLong(2)))
-  }
-
-  /** n-D Lloyd over the embedding corpus: deterministic init (first k
-    * vectors by vec_id), fixed iterations, stale empty clusters —
-    * the reference's semantics lifted to any dimension.
+  /** n-D Lloyd over the array<double> column `v`: fixed iterations,
+    * stale empty clusters, `Euclid` rule. Returns the centroids and
+    * the cluster sizes of the last sweep.
     */
   def ndLloyd(pts: DataFrame, init: Array[Array[Double]], iters: Int): (Array[Array[Double]], Array[Long]) = {
-    var cs = init.map(_.clone())
-    val sizes = Array.fill(init.length)(0L)
-    var i = 0
-    while (i < iters) {
-      java.util.Arrays.fill(sizes, 0L)
-      val updated = ndStep(pts, cs)
-      updated.foreach { case (cid, c, n) => cs(cid) = c; sizes(cid) = n }
-      i += 1
-    }
-    (cs, sizes)
+    val f = lloydSets(vectorRows(pts, col("v")), Seq(Centroids.of(init)), tol = 0, iters).head
+    (f.set.vectors, f.sizes)
   }
 
-  /** 64-dim K-Means on the embeddings table (3 iterations). */
+  /** 64-dim K-Means on the embeddings table (3 iterations); the
+    * oracle is the IVF/PQ oracles' n-D Lloyd chain over every vector.
+    */
   val kmeansNd: QueryDef = QueryDef.sql(
     "kmeans_nd",
-    ndLloydCtes(K, 3) +
-      """
-        |SELECT c3.cid, coalesce(n3.n, 0) AS n,
-        |  round(c3.c[1], 4) AS c0, round(c3.c[2], 4) AS c1
-        |FROM c3 LEFT JOIN n3 USING (cid) ORDER BY cid""".stripMargin) { (s, d) =>
+    s"""WITH samp AS MATERIALIZED (
+       |  SELECT row_number() OVER (ORDER BY vec_id) AS rn, embedding::DOUBLE[] AS v
+       |  FROM embeddings),
+       |${Similarity.lloydChainCtes("", K, 3)}
+       |SELECT c.cid, coalesce(n.n, 0) AS n, round(c.c[1], 4) AS c0, round(c.c[2], 4) AS c1
+       |FROM fc3 c LEFT JOIN (SELECT cid, count(*) AS n FROM fs3 GROUP BY cid) n USING (cid)
+       |ORDER BY cid""".stripMargin) { (s, d) =>
     graft.Ckpt.scoped { sc =>
       val pts = sc.persist(Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v")))
@@ -841,10 +852,11 @@ object KMeans {
       // k points of one fixed ordering — so all four inits come from
       // ONE TakeOrdered pass instead of four
       val first = initCentroids(allPts, ks.max)
-      val fits = lloydSets(sweepRows(pts), ks.map(first.take), tol = 1e-3, maxIter = 8)
+      val fits = lloydSets(sweepRows(pts), ks.map(k => Centroids.planar(first.take(k))),
+        tol = 1e-3, maxIter = 8)
       // all 4 final quantized costs in ONE scan, summed as exact int64
       val costAggs = ks.zip(fits).map { case (k, f) =>
-        sum(floor(minDistExpr(f.cs, col("x"), col("y")) * 100).cast("long")).as(s"cost_$k")
+        sum(floor(minDistExpr(f.set.pairs, col("x"), col("y")) * 100).cast("long")).as(s"cost_$k")
       }
       val crow = pts.agg(costAggs.head, costAggs.tail: _*).head()
       val rows = ks.zip(fits).map { case (k, f) =>
@@ -969,11 +981,12 @@ object KMeans {
     val cs = init.clone()
     val counts = Array.fill(cs.length)(0L)
     (0 until batches).foreach { b =>
-      val sums = sweep(rows, Seq(cs), 1L << b).head
+      val sums = sweep(rows, Seq(Centroids.planar(cs)), 1L << b).head
       cs.indices.foreach { c =>
-        val bn = sums(4 * c + 3).toLong
+        val Array(sx, sy, sw, n) = sums(c)
+        val bn = n.toLong
         if (bn > 0) {
-          val (bx, by) = (sums(4 * c) / sums(4 * c + 2), sums(4 * c + 1) / sums(4 * c + 2))
+          val (bx, by) = (sx / sw, sy / sw)
           val tot = counts(c) + bn
           cs(c) = ((cs(c)._1 * counts(c) + bx * bn) / tot, (cs(c)._2 * counts(c) + by * bn) / tot)
           counts(c) = tot
@@ -1197,7 +1210,7 @@ object KMeans {
     }
     val cs = chosen.toArray
     // candidate weights: nearest-point population, one sweep
-    val wts = sweep(sweepRows(pts), Seq(cs), -1L).head.grouped(4).map(_(3)).toArray
+    val wts = sweep(sweepRows(pts), Seq(Centroids.planar(cs)), -1L).head.map(_(3))
     // driver-side weighted greedy ++ seeding over the candidate set
     def d2p(a: (Double, Double), b: (Double, Double)): Double = {
       val dx = a._1 - b._1; val dy = a._2 - b._2; dx * dx + dy * dy
@@ -1370,19 +1383,19 @@ object KMeans {
   /** Spherical k-means (Dhillon & Modha 2001) on the embedding corpus
     * — COSINE clustering, the variant text/embedding pipelines use
     * where direction carries meaning and magnitude is nuisance:
-    * vectors L2-normalized once, assignment = argmax dot (map-side
-    * codegen'd struct-min, kmeans_nd's shape), centroid = the
-    * RE-NORMALIZED member mean (the closed-form maximizer of Σ cos on
-    * the sphere, so the objective is monotone by construction). Each
-    * iteration is ONE Summarizer partial-agg shuffle of O(k·dim);
-    * normalization is O(k·dim) driver arithmetic. Rows-only;
-    * ScalaTest pins unit-norm centroids, monotone mean-cosine,
-    * mass conservation, and determinism.
+    * vectors L2-normalized once, assignment = argmax dot (the sweep's
+    * `Cosine` rule), centroid = the RE-NORMALIZED member mean (the
+    * closed-form maximizer of Σ cos on the sphere, so the objective is
+    * monotone by construction). Each iteration is ONE sweep job with
+    * no shuffle, O(k·dim) per partition to the driver; the mean,
+    * normalization and mean cosine are O(k·dim) driver arithmetic.
+    * The oracle replays it; ScalaTest pins unit-norm centroids,
+    * monotone mean-cosine, mass conservation, and determinism.
     */
   /** DuckDB replay of sphericalFit: list_dot_product accumulates in
     * the same left-to-right order as the codegen'd dot, the argmax
     * uses the identical (−dot, cid) ordering, and the per-dim member
-    * means + renormalization mirror Summarizer.mean + l2norm. n is
+    * means + renormalization mirror the sweep's Σv / n + l2norm. n is
     * exact; mean_cos floors at 1e-4 (assignment flips would need a
     * sub-ulp dot margin).
     */
@@ -1444,54 +1457,49 @@ object KMeans {
     if (n == 0) a else a.map(_ / n)
   }
 
-  /** Shared with the spec: (unit centroids, sizes, per-cluster mean
-    * cosine from the FINAL assignment, per-iteration global objective
-    * trajectory — avg max-cosine measured at assignment time, which
-    * alternating maximization makes non-decreasing).
-    */
+  /** `spherical` over the unit embeddings, from the first k by vec_id. */
   private[graft] def sphericalFit(s: SparkSession, d: String, k: Int, iters: Int)
-      : (Array[Array[Double]], Array[Long], Array[Double], Seq[Double]) = {
-    import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
-    import org.apache.spark.ml.stat.Summarizer
+      : (Array[Array[Double]], Array[Long], Array[Double], Seq[Double]) =
     graft.Ckpt.scoped { sc =>
       val pts = sc.persist(Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("raw"))
         .withColumn("nrm", sqrt(Similarity.dot(col("raw"), col("raw"))))
         .filter(col("nrm") > 0)
         .select(col("vec_id"), expr("transform(raw, x -> x / nrm)").as("v")))
-      val cs = pts.orderBy(col("vec_id")).limit(k)
+      val init = pts.orderBy(col("vec_id")).limit(k)
         .select("v").collect().map(r => l2norm(r.getSeq[Double](0).toArray))
-      val sizes = Array.fill(k)(0L)
-      val cos = Array.fill(k)(0.0)
-      val traj = scala.collection.mutable.ArrayBuffer.empty[Double]
-      for (_ <- 1 to iters) {
-        java.util.Arrays.fill(sizes, 0L)
-        // the struct-min carries the winning dot for free — the same
-        // pass yields assignment, objective, and the update statistics
-        val candidates = cs.zipWithIndex.map { case (c, i) =>
-          struct((lit(0.0) - Similarity.dot(col("v"), array(c.map(lit): _*)))
-            .as("negdot"), lit(i).as("cid"))
-        }
-        val rows = pts
-          .withColumn("a", array_min(array(candidates: _*)))
-          .select(col("v"), col("a.cid").as("cid"),
-            (lit(0.0) - col("a.negdot")).as("dotc"))
-          .groupBy(col("cid"))
-          .agg(Summarizer.mean(array_to_vector(col("v"))).as("c"),
-            count(lit(1)).as("n"), avg(col("dotc")).as("mc"))
-          .select(col("cid"), vector_to_array(col("c")).as("c"), col("n"),
-            col("mc"))
-          .collect()
-        rows.foreach { r =>
-          cs(r.getInt(0)) = l2norm(r.getSeq[Double](1).toArray)
-          sizes(r.getInt(0)) = r.getLong(2)
-          cos(r.getInt(0)) = r.getDouble(3)
-        }
-        val total = rows.map(_.getLong(2)).sum
-        traj += rows.map(r => r.getDouble(3) * r.getLong(2)).sum / total
-      }
-      (cs, sizes, cos, traj.toSeq)
+      spherical(pts, init, iters)
     }
+
+  /** Spherical Lloyd over the unit vectors `v` of `pts`: one `Cosine`
+    * sweep per iteration, each centroid to its re-normalized mean Σv/n.
+    * Returns (unit centroids, sizes, per-cluster mean cosine Σv·c/n of
+    * the FINAL assignment, per-iteration avg max-cosine, which
+    * alternating maximization makes non-decreasing). An empty cluster
+    * keeps its centroid and last mean cosine, with size 0.
+    */
+  private[graft] def spherical(pts: DataFrame, init: Array[Array[Double]], iters: Int)
+      : (Array[Array[Double]], Array[Long], Array[Double], Seq[Double]) = {
+    var cs = init
+    val dim = cs.head.length
+    val sizes = new Array[Long](cs.length)
+    val cos = new Array[Double](cs.length)
+    val rows = vectorRows(pts, col("v"))
+    val traj = (1 to iters).map { _ =>
+      val sums = sweep(rows, Seq(Centroids.of(cs, Cosine)), -1L).head
+      cs = cs.indices.map { c =>
+        val n = sums(c)(dim + 1)
+        sizes(c) = n.toLong
+        if (n == 0) cs(c)
+        else {
+          val sv = sums(c).take(dim)
+          cos(c) = sv.indices.map(j => sv(j) * cs(c)(j)).sum / n
+          l2norm(sv.map(_ / n))
+        }
+      }.toArray
+      cs.indices.filter(sizes(_) > 0).map(c => cos(c) * sizes(c)).sum / sizes.sum
+    }
+    (cs, sizes, cos, traj)
   }
 
   val all: Seq[QueryDef] = Seq(

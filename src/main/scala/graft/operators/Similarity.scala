@@ -345,29 +345,36 @@ object Similarity {
   private val pqCache =
     scala.collection.concurrent.TrieMap.empty[String, Array[Array[Array[Double]]]]
 
-  /** Concurrent per-subspace Lloyd fits over a sample exposing the
-    * vector to quantize as column `u` — shared by raw-vector PQ and
-    * residual IVF-PQ. The 16 fits are independent driver loops over
-    * tiny jobs, so they run concurrently to overlap scheduler
-    * overhead; the sample materializes once first.
+  /** The PqM per-subspace codebooks over a sample exposing the vector
+    * to quantize as column `u` — shared by raw-vector PQ and residual
+    * IVF-PQ. Subspace m is one centroid set reading coordinates
+    * m·SubDim until (m+1)·SubDim, seeded from the first PqK sample
+    * rows (one collect), so all PqM fits share one n-D Lloyd sweep
+    * per iteration: 1 + 3 jobs for the whole codebook.
     */
-  private def fitSubspaceCodebooks(sampleU: DataFrame): Array[Array[Array[Double]]] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.DurationInt
-    implicit val ec: ExecutionContext = ExecutionContext.global
+  private[graft] def fitSubspaceCodebooks(sampleU: DataFrame): Array[Array[Array[Double]]] =
     graft.Ckpt.scoped { sc =>
       val sample = sc.persist(sampleU)
-      sample.count()
-      val fits = (0 until PqM).map { m =>
-        Future {
-          val sub = sample.select(slice(col("u"), m * SubDim + 1, SubDim).as("v"))
-          val init = sub.limit(PqK).collect().map(_.getSeq[Double](0).toArray)
-          KMeans.ndLloyd(sub, init, iters = 3)._1
-        }
+      val first = sample.limit(PqK).collect().map(_.getSeq[Double](0).toArray)
+      val inits = (0 until PqM).map { m =>
+        KMeans.Centroids.of(first.map(_.slice(m * SubDim, (m + 1) * SubDim)),
+          off = m * SubDim)
       }
-      Await.result(Future.sequence(fits), 10.minutes).toArray
+      KMeans.lloydSets(KMeans.vectorRows(sample, col("u")), inits, tol = 0, maxIter = 3)
+        .map(_.set.vectors).toArray
     }
-  }
+
+  /** The codebooks persisted under `sub` of the index, if they have
+    * the current PqM × PqK × SubDim shape.
+    */
+  private def loadCodebooks(s: SparkSession, d: String,
+      sub: String): Option[Array[Array[Array[Double]]]] =
+    loadIndexPart(s, d, sub).flatMap { rows =>
+      val m = rows.map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2).toArray).toMap
+      if (m.size == PqM * PqK && m.values.forall(_.length == SubDim))
+        Some(Array.tabulate(PqM, PqK)((i, j) => m((i, j))))
+      else None
+    }
 
   /** Squared L2 distance of two equal-length arrays (driver-side). */
   private def dist2(a: Array[Double], b: Array[Double]): Double = {
@@ -397,17 +404,9 @@ object Similarity {
   def pqCodebooks(e: DataFrame, cacheKey: String = ""): Array[Array[Array[Double]]] = {
     def fit(): Array[Array[Array[Double]]] =
       fitSubspaceCodebooks(e.limit(4096).select(unit(col("v")).as("u")))
-    def loadOrFit(): Array[Array[Array[Double]]] =
-      loadIndexPart(e.sparkSession, cacheKey, "codebooks_raw")
-        .map { rows =>
-          val m = rows.map(r =>
-            (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2).toArray).toMap
-          if (m.size == PqM * PqK && m.values.forall(_.length == SubDim))
-            Some(Array.tabulate(PqM, PqK)((i, j) => m((i, j))))
-          else None
-        }.flatten.getOrElse(fit())
     if (cacheKey.isEmpty) fit()
-    else pqCache.getOrElseUpdate(cacheKey, loadOrFit())
+    else pqCache.getOrElseUpdate(cacheKey,
+      loadCodebooks(e.sparkSession, cacheKey, "codebooks_raw").getOrElse(fit()))
   }
 
   /** All PqM codeword ids of a vector column as c0..c{PqM-1}, via the
@@ -612,17 +611,9 @@ object Similarity {
         .withColumn("list",
           array_min(array(centroidStructs(cs, col("u0")): _*)).getField("list"))
         .select(residualExpr(cs, col("u0"), col("list")).as("u")))
-    def loadOrFit(): Array[Array[Array[Double]]] =
-      loadIndexPart(e.sparkSession, cacheKey, "codebooks")
-        .map { rows =>
-          val m = rows.map(r =>
-            (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2).toArray).toMap
-          if (m.size == PqM * PqK && m.values.forall(_.length == SubDim))
-            Some(Array.tabulate(PqM, PqK)((i, j) => m((i, j))))
-          else None
-        }.flatten.getOrElse(fit())
     if (cacheKey.isEmpty) fit()
-    else ivfPqCache.getOrElseUpdate(cacheKey, loadOrFit())
+    else ivfPqCache.getOrElseUpdate(cacheKey,
+      loadCodebooks(e.sparkSession, cacheKey, "codebooks").getOrElse(fit()))
   }
 
   /** IVF-PQ ANN — the production index layout (Jégou et al.; FAISS
@@ -1161,7 +1152,7 @@ object Similarity {
     */
   /** DuckDB replay of the IVF health report: re-fit the coarse
     * quantizer (unit sample, first-NLists init, 3 n-D Lloyd rounds —
-    * the ndLloydCtes machinery over list ops), then one assignment
+    * lloydChainCtes over list ops), then one assignment
     * pass with the identical shifted-distance expression
     * ‖c‖² − 2u·c and the per-list population/share/residual rollup.
     */
@@ -1173,10 +1164,11 @@ object Similarity {
   /** One deterministic n-D Lloyd chain as CTE text: consumes a CTE
     * named `samp$sfx` holding (rn, v) rows, seeds from its first
     * `nClusters` rows, runs `iters` rounds, and emits
-    * `fc$iters$sfx` — the exact ndLloyd replay the IVF oracles
-    * proved, reused per PQ subspace with a suffix.
+    * `fc$iters$sfx` (assignments in `fs$i$sfx`) — the exact
+    * `KMeans.ndLloyd` replay of kmeans_nd and the IVF oracles,
+    * reused per PQ subspace with a suffix.
     */
-  private def lloydChainCtes(sfx: String, nClusters: Int, iters: Int): String = {
+  private[graft] def lloydChainCtes(sfx: String, nClusters: Int, iters: Int): String = {
     val chain = (1 to iters).map { i =>
       val p = i - 1
       s"""fa$i$sfx AS (

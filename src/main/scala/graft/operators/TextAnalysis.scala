@@ -810,9 +810,9 @@ object TextAnalysis {
       .orderBy(col("doc_id"))
   }
 
-  /** Type-token ratio (vocabulary richness) — fully map-side: token
-    * extraction, distinct, and the ratio are one codegen'd projection
-    * per document; no shuffle at any scale.
+  /** Type-token ratio (vocabulary richness) — fully map-side, no
+    * shuffle at any scale. Tokenized once per document, in a Generate
+    * as in qualityInputs, so filter pushdown cannot copy it.
     */
   val textTtr: QueryDef = QueryDef.sql(
     "text_ttr",
@@ -825,10 +825,10 @@ object TextAnalysis {
       |  FROM documents)
       |WHERE n_tokens > 0 ORDER BY doc_id""".stripMargin) { (s, d) =>
     Tables.documents(s, d)
-      .select(col("doc_id"),
-        size(array_distinct(regexp_extract_all(lower(col("text")), lit("\\S+"), lit(0))))
-          .cast("long").as("n_types"),
-        tokenCount(lower(col("text"))).cast("long").as("n_tokens"))
+      .select(col("doc_id"), inline(array(struct(
+        regexp_extract_all(lower(col("text")), lit("\\S+"), lit(0)).as("toks")))))
+      .select(col("doc_id"), size(array_distinct(col("toks"))).cast("long").as("n_types"),
+        size(col("toks")).cast("long").as("n_tokens"))
       .filter(col("n_tokens") > 0)
       .withColumn("ttr", round(col("n_types").cast("double") / col("n_tokens"), 4))
       .orderBy(col("doc_id"))

@@ -253,10 +253,10 @@ class CorpusStatsSpec extends AnyFunSuite {
       val ks = Seq(2, 4, 8)
       val inits = ks.map(k => k -> operators.KMeans.initCentroids(allPts, k)).toMap
       val fused = operators.KMeans.lloydSets(operators.KMeans.sweepRows(pts),
-        ks.map(inits), tol = 1e-3, maxIter = 8)
+        ks.map(k => operators.KMeans.Centroids.planar(inits(k))), tol = 1e-3, maxIter = 8)
       ks.zip(fused).foreach { case (k, f) =>
         val (ics, iiters, iconv) = operators.KMeans.lloyd(pts, inits(k), maxIter = 8)
-        val (fcs, fiters, fconv) = (f.cs, f.iters, f.converged)
+        val (fcs, fiters, fconv) = (f.set.pairs, f.iters, f.converged)
         assert(fiters === iiters, s"k=$k iteration count diverged")
         assert(fconv === iconv, s"k=$k convergence flag diverged")
         ics.zip(fcs).zipWithIndex.foreach { case (((ix, iy), (fx, fy)), c) =>

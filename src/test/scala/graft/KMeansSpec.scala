@@ -57,13 +57,10 @@ class KMeansSpec extends AnyFunSuite {
       .select(col("embedding").cast("array<double>").as("v")).persist()
     try {
       val init = e.limit(KMeans.K).collect().map(_.getSeq[Double](0).toArray)
+      val vs = e.collect().map(_.getSeq[Double](0).toArray)
+      // squared distance of every vector to its nearest centroid
       def cost(cs: Array[Array[Double]]): Double =
-        e.select(KMeans.ndAssignExpr(cs, col("v")).as("cid"), col("v"))
-          .collect().map { r =>
-            val v = r.getSeq[Double](1).toArray
-            val c = cs(r.getInt(0))
-            v.zip(c).map { case (a, b) => (a - b) * (a - b) }.sum
-          }.sum
+        vs.map(v => cs.map(c => v.zip(c).map { case (a, b) => (a - b) * (a - b) }.sum).min).sum
       val (c3, sizes) = KMeans.ndLloyd(e, init, 3)
       assert(sizes.sum == e.count())
       assert(cost(c3) <= cost(init))

@@ -1,17 +1,20 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
+import org.apache.spark.ml.stat.Summarizer
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.KMeans
+import graft.operators.{KMeans, Similarity}
 
 /** The one Lloyd loop (`KMeans.lloydSets` over `KMeans.sweep`) value-
   * locked against the DataFrame loops it replaced — a per-iteration
-  * assignment + groupBy mean, copied here as the reference. Unrounded
-  * centroids agree to 1e-9 relative; iteration counts and convergence
-  * flags agree exactly. Inputs plant exact ties, a duplicated centroid
-  * (an empty cluster) and a NaN coordinate.
+  * assignment + groupBy mean (2-D) or Summarizer mean (n-D, spherical,
+  * PQ), copied here as the reference. Unrounded centroids agree to
+  * 1e-9 relative; iteration counts, convergence flags and cluster sizes
+  * agree exactly. Inputs plant exact ties, a duplicated centroid (an
+  * empty cluster) and a NaN coordinate.
   */
 class LloydValueLockSpec extends AnyFunSuite {
   import TestSpark._
@@ -215,13 +218,170 @@ class LloydValueLockSpec extends AnyFunSuite {
     eachCase { (label, pts, cs) =>
       val first = pts.select("x", "y").head(16).map(r => (r.getDouble(0), r.getDouble(1)))
       val inits = Seq(2, 4, 8, 16).map(k => (cs ++ first).take(k))
-      val fits = KMeans.lloydSets(KMeans.sweepRows(pts), inits, tol = 1e-3, maxIter = 8)
+      val fits = KMeans.lloydSets(KMeans.sweepRows(pts), inits.map(KMeans.Centroids.planar),
+        tol = 1e-3, maxIter = 8)
       inits.zip(fits).foreach { case (i0, f) =>
         val at = s"$label, k=${i0.length}"
         val (rc, ri, rconv) = refLloyd(_ => pts, i0, 1e-3, 8)
         assert(f.iters == ri && f.converged == rconv, s"$at: (${f.iters}, ${f.converged}) vs ($ri, $rconv)")
-        assertSame(at, rc.toSeq, f.cs.toSeq)
+        assertSame(at, rc.toSeq, f.set.pairs.toSeq)
       }
     }
+  }
+
+  // ---- the Summarizer loops the n-D sweep replaced (reference) --------
+
+  /** ‖v‖² − 2·v·c + ‖c‖² per centroid, struct min for the lowest cid. */
+  private def ndAssignExpr(cs: Array[Array[Double]], v: Column): Column = {
+    val vv = Similarity.dot(v, v)
+    val candidates = cs.zipWithIndex.map { case (c, i) =>
+      val cl = array(c.map(lit): _*)
+      val dist = vv - lit(2.0) * Similarity.dot(v, cl) + lit(c.map(x => x * x).sum)
+      struct(dist.as("dist"), lit(i).as("cid"))
+    }
+    array_min(array(candidates: _*)).getField("cid")
+  }
+
+  private def refNdLloyd(pts: DataFrame, init: Array[Array[Double]],
+      iters: Int): (Array[Array[Double]], Array[Long]) = {
+    val cs = init.map(_.clone())
+    val sizes = Array.fill(init.length)(0L)
+    (0 until iters).foreach { _ =>
+      java.util.Arrays.fill(sizes, 0L)
+      pts.withColumn("cid", ndAssignExpr(cs, col("v")))
+        .groupBy(col("cid"))
+        .agg(Summarizer.mean(array_to_vector(col("v"))).as("c"), count(lit(1)).as("n"))
+        .select(col("cid"), vector_to_array(col("c")).as("c"), col("n"))
+        .collect()
+        .foreach { r => cs(r.getInt(0)) = r.getSeq[Double](1).toArray; sizes(r.getInt(0)) = r.getLong(2) }
+    }
+    (cs, sizes)
+  }
+
+  private def l2norm(a: Array[Double]): Array[Double] = {
+    val n = math.sqrt(a.map(x => x * x).sum)
+    if (n == 0) a else a.map(_ / n)
+  }
+
+  private def refSpherical(pts: DataFrame, init: Array[Array[Double]], iters: Int)
+      : (Array[Array[Double]], Array[Long], Array[Double], Seq[Double]) = {
+    val cs = init.clone()
+    val sizes = Array.fill(cs.length)(0L)
+    val cos = Array.fill(cs.length)(0.0)
+    val traj = (1 to iters).map { _ =>
+      java.util.Arrays.fill(sizes, 0L)
+      val candidates = cs.zipWithIndex.map { case (c, i) =>
+        struct((lit(0.0) - Similarity.dot(col("v"), array(c.map(lit): _*))).as("negdot"),
+          lit(i).as("cid"))
+      }
+      val rows = pts
+        .withColumn("a", array_min(array(candidates: _*)))
+        .select(col("v"), col("a.cid").as("cid"), (lit(0.0) - col("a.negdot")).as("dotc"))
+        .groupBy(col("cid"))
+        .agg(Summarizer.mean(array_to_vector(col("v"))).as("c"),
+          count(lit(1)).as("n"), avg(col("dotc")).as("mc"))
+        .select(col("cid"), vector_to_array(col("c")).as("c"), col("n"), col("mc"))
+        .collect()
+      rows.foreach { r =>
+        cs(r.getInt(0)) = l2norm(r.getSeq[Double](1).toArray)
+        sizes(r.getInt(0)) = r.getLong(2)
+        cos(r.getInt(0)) = r.getDouble(3)
+      }
+      rows.map(r => r.getDouble(3) * r.getLong(2)).sum / rows.map(_.getLong(2)).sum
+    }
+    (cs, sizes, cos, traj)
+  }
+
+  /** The per-subspace fit: each subspace sliced out and fitted alone. */
+  private def refCodebooks(sample: DataFrame): Array[Array[Array[Double]]] =
+    (0 until Similarity.PqM).map { m =>
+      val sub = sample.select(slice(col("u"), m * Similarity.SubDim + 1, Similarity.SubDim).as("v"))
+      refNdLloyd(sub, sub.limit(Similarity.PqK).collect().map(_.getSeq[Double](0).toArray), 3)._1
+    }.toArray
+
+  // ---- n-D inputs -----------------------------------------------------
+
+  /** 4-D vectors in four blobs on a half-unit grid, plus points planted
+    * exactly between initial centroids: (0, 1, 0, 0) is as near (and
+    * as similar to) (1, 0, 0, 0) as (−1, 0, 0, 0) … (0.5, 0.5, 0, 0)
+    * as (1, 0, 0, 0) and (0, 1, 0, 0).
+    */
+  private val ndBlobs: Seq[Array[Double]] = {
+    val r = new scala.util.Random(17L)
+    val axes = Seq(Array(1.0, 0, 0, 0), Array(0.0, 1, 0, 0), Array(-1.0, 0, 0, 0), Array(0.0, 0, 1, 1))
+    Seq.tabulate(600) { i =>
+      axes(i % 4).map(a => math.round((4 * a + r.nextGaussian()) * 2) / 2.0)
+    } ++ Seq.fill(10)(Array(0.0, 1, 0, 0)) ++ Seq.fill(10)(Array(0.5, 0.5, 0, 0))
+  }
+
+  // (1, 0, 0, 0) twice: the second copy loses every tie and starts empty
+  private val ndInit = Array(Array(1.0, 0, 0, 0), Array(-1.0, 0, 0, 0), Array(1.0, 0, 0, 0),
+    Array(0.0, 1, 0, 0), Array(0.0, 0, 1, 1))
+
+  private def vecFrame(vs: Seq[Array[Double]]): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(
+      vs.zipWithIndex.map { case (v, i) => Row(i.toLong, v.toSeq) }, 4),
+      StructType(Seq(StructField("vec_id", org.apache.spark.sql.types.LongType),
+        StructField("v", ArrayType(DoubleType)))))
+
+  private lazy val ndCases: Seq[(String, Seq[Array[Double]])] = Seq(
+    ("ties and a duplicated centroid", ndBlobs),
+    ("a NaN coordinate", ndBlobs :+ Array(0.5, Double.NaN, 0, 0)))
+
+  private def assertSameVecs(at: String, ref: Seq[Array[Double]], got: Seq[Array[Double]]): Unit = {
+    assert(ref.length == got.length, s"$at: ${ref.length} vs ${got.length} centroids")
+    ref.zip(got).zipWithIndex.foreach { case ((r, g), c) =>
+      // relative to the centroid's largest coordinate: a mean axis near
+      // 0 carries the summation order's absolute error
+      val scale = (r ++ g).filterNot(_.isNaN).map(math.abs).foldLeft(0.0)(math.max)
+      assert(r.length == g.length && r.zip(g).forall { case (a, b) =>
+        (a.isNaN && b.isNaN) || math.abs(a - b) <= 1e-9 * scale
+      }, s"$at, centroid $c: ${r.mkString(",")} vs ${g.mkString(",")}")
+    }
+  }
+
+  test("ndLloyd equals the Summarizer loop: centroids and sizes") {
+    val corpus = sources.Tables.embeddings(spark, sf)
+      .select(col("embedding").cast("array<double>").as("v"))
+    val all = ndCases.map { case (l, vs) => (l, vecFrame(vs), ndInit) } :+
+      (("embeddings", corpus, corpus.limit(KMeans.K).collect().map(_.getSeq[Double](0).toArray)))
+    Ckpt.scoped { sc =>
+      all.foreach { case (label, df, init) =>
+        val pts = sc.persist(df)
+        val (rc, rn) = refNdLloyd(pts, init, 3)
+        val (gc, gn) = KMeans.ndLloyd(pts, init, 3)
+        assert(gn.toSeq == rn.toSeq, s"$label: sizes")
+        assertSameVecs(label, rc.toSeq, gc.toSeq)
+      }
+    }
+  }
+
+  test("the spherical loop equals the Summarizer loop: centroids, sizes, cosines, objective") {
+    val corpus = sources.Tables.embeddings(spark, sf)
+      .select(Similarity.unit(col("embedding").cast("array<double>")).as("v"))
+    val all = ndCases.map { case (l, vs) => (l, vecFrame(vs.map(l2norm)), ndInit.map(l2norm)) } :+
+      (("embeddings", corpus, corpus.limit(KMeans.K).collect().map(r => l2norm(r.getSeq[Double](0).toArray))))
+    Ckpt.scoped { sc =>
+      all.foreach { case (label, df, init) =>
+        val pts = sc.persist(df)
+        val (rc, rn, rcos, rtraj) = refSpherical(pts, init, 3)
+        val (gc, gn, gcos, gtraj) = KMeans.spherical(pts, init, 3)
+        assert(gn.toSeq == rn.toSeq, s"$label: sizes")
+        assertSameVecs(label, rc.toSeq, gc.toSeq)
+        assertSameVecs(s"$label, mean cosines", Seq(rcos), Seq(gcos))
+        assertSameVecs(s"$label, objective", Seq(rtraj.toArray), Seq(gtraj.toArray))
+      }
+    }
+  }
+
+  test("the one-sweep PQ codebook fit equals sixteen per-subspace fits") {
+    val u = Similarity.vectors(spark, sf).limit(4096)
+      .select(Similarity.unit(col("v")).as("u")).collect().map(_.getSeq[Double](0))
+    val sample = spark.createDataFrame(spark.sparkContext.parallelize(u.map(Row(_)), 4),
+      StructType(Seq(StructField("u", ArrayType(DoubleType)))))
+    val ref = Ckpt.scoped(sc => refCodebooks(sc.persist(sample)))
+    val got = Similarity.fitSubspaceCodebooks(sample)
+    assert(got.length == Similarity.PqM)
+    ref.zip(got).zipWithIndex.foreach { case ((r, g), m) => assertSameVecs(s"subspace $m", r.toSeq, g.toSeq) }
   }
 }

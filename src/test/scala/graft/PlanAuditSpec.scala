@@ -22,14 +22,20 @@ class PlanAuditSpec extends AnyFunSuite {
       org.apache.spark.sql.execution.FormattedMode)
   }
 
-  test("curate and text_quality run TextStats once per row and no regex") {
+  /** Every expression node of `df`'s executed plan (run first, so AQE's
+    * final plan).
+    */
+  private def executedExprs(df: org.apache.spark.sql.DataFrame)
+      : Seq[org.apache.spark.sql.catalyst.expressions.Expression] = {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    val helper = new AdaptiveSparkPlanHelper {}
+    df.collect()
+    new AdaptiveSparkPlanHelper {}.flatMap(df.queryExecution.executedPlan)(
+      _.expressions.flatMap(_.collect { case e => e }))
+  }
+
+  test("curate and text_quality run TextStats once per row and no regex") {
     def audit(label: String, df: org.apache.spark.sql.DataFrame): Unit = {
-      df.collect()
-      val exprs = helper.flatMap(df.queryExecution.executedPlan)(_.expressions.flatMap(_.collect {
-        case e => e
-      }))
+      val exprs = executedExprs(df)
       val kernels = exprs.count(_.isInstanceOf[org.apache.spark.sql.graft.TextStats])
       val regex = exprs.map(_.prettyName).filter(_.startsWith("regexp")).distinct
       val plan = df.queryExecution.executedPlan.toString
@@ -39,6 +45,15 @@ class PlanAuditSpec extends AnyFunSuite {
     val docs = graft.sources.Tables.documents(spark, sf)
     audit("CurateApp.curate", CurateApp.curate(docs, 0.75, "en"))
     audit("text_quality", SparkEntry.queries("text_quality")(spark, sf))
+  }
+
+  test("text_ttr tokenizes each document once") {
+    val df = SparkEntry.queries("text_ttr")(spark, sf)
+    val exprs = executedExprs(df)
+    val toks = exprs.count(_.prettyName == "regexp_extract_all")
+    val plan = df.queryExecution.executedPlan.toString
+    assert(toks == 1, s"regexp_extract_all appears $toks times in\n$plan")
+    assert(!exprs.exists(_.isInstanceOf[org.apache.spark.sql.graft.TextStats]), plan)
   }
 
   test("q1_pricing pushes the date filter and prunes columns") {
