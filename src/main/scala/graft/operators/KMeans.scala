@@ -89,10 +89,11 @@ object KMeans {
     pts.select(col("x").cast("double"), col("y").cast("double"), w.cast("double"),
       m.cast("long"))
 
-  /** `sweepRows` for n-D points: (v: array<double>, w, m). */
-  private[graft] def vectorRows(pts: DataFrame, v: Column, w: Column = lit(1.0),
-      m: Column = lit(-1L)): DataFrame =
-    pts.select(v.cast("array<double>"), w.cast("double"), m.cast("long"))
+  /** `sweepRows` for n-D points: (v: array<double>, 1.0, -1L), every
+    * row weight 1 and in every sweep.
+    */
+  private[graft] def vectorRows(pts: DataFrame, v: Column): DataFrame =
+    pts.select(v.cast("array<double>"), lit(1.0), lit(-1L))
 
   /** How a sweep scores a row against a centroid; the nearest is the
     * first minimum (lowest cid on ties), NaN after every number, as in
