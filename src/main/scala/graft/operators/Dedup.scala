@@ -420,30 +420,6 @@ object Dedup {
 
   // ---- Near-dup group resolution (connected components) --------------
 
-  /** Connected components over an undirected pair graph
-    * (columns id1, id2) → (id, label) where label = the component's
-    * minimum id. Iterative min-label propagation: each round every
-    * node takes the minimum label among itself and its neighbors —
-    * one equality join + one min-aggregation per round, both plain
-    * shuffles on node id, so a round costs O(|edges|) regardless of
-    * cluster count. Rounds needed = graph diameter; near-dup
-    * components are near-cliques (every member pair tends to collide),
-    * so diameter is tiny in practice. Labels are monotonically
-    * non-increasing, hence an unchanged label sum is a fixpoint —
-    * the O(1) convergence probe collected per round.
-    *
-    * Lineage is truncated per round (localCheckpoint) so the plan
-    * doesn't grow with iterations; the label table is O(nodes in the
-    * pair graph), far smaller than the corpus.
-    *
-    * SIZE-ADAPTIVE (Regime): while the collected graph fits the
-    * budget, a driver union-find answers in one pass — the candidate
-    * graph is small relative to the corpus by LSH construction, and
-    * each distributed round costs two joins + a checkpoint + a
-    * convergence collect, a fixed overhead a tiny graph never
-    * amortizes. The distributed loop is the scale path, with the same
-    * labels.
-    */
   /** Driver heap per collected edge on the union-find path, measured
     * on JDK 17 (compressed oops) by retained heap after GC over 1M
     * disjoint edges: 101 B for the collected Row, 44 B for its
@@ -476,6 +452,30 @@ object Dedup {
     parent.keys.toSeq.sorted.map(id => (id, find(id))).toDF("id", "label")
   }
 
+  /** Connected components over an undirected pair graph
+    * (columns id1, id2) → (id, label) where label = the component's
+    * minimum id. Iterative min-label propagation: each round every
+    * node takes the minimum label among itself and its neighbors —
+    * one equality join + one min-aggregation per round, both plain
+    * shuffles on node id, so a round costs O(|edges|) regardless of
+    * cluster count. Rounds needed = graph diameter; near-dup
+    * components are near-cliques (every member pair tends to collide),
+    * so diameter is tiny in practice. Labels are monotonically
+    * non-increasing, hence an unchanged label sum is a fixpoint —
+    * the O(1) convergence probe collected per round.
+    *
+    * Lineage is truncated per round (localCheckpoint) so the plan
+    * doesn't grow with iterations; the label table is O(nodes in the
+    * pair graph), far smaller than the corpus.
+    *
+    * SIZE-ADAPTIVE (Regime): while the collected graph fits the
+    * budget, a driver union-find answers in one pass — the candidate
+    * graph is small relative to the corpus by LSH construction, and
+    * each distributed round costs two joins + a checkpoint + a
+    * convergence collect, a fixed overhead a tiny graph never
+    * amortizes. The distributed loop is the scale path, with the same
+    * labels.
+    */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 30): DataFrame =
     graft.Ckpt.scoped { sc =>
       // the pair plan feeds three edge branches — materialize it once,
@@ -723,16 +723,6 @@ object Dedup {
     minhashIncrementPairsWithIndex(
       lshBuckets(minhashSignatures(corpusSh)), corpusSh, incSh, threshold)
 
-  /** The same increment-vs-corpus pairing, but against an ALREADY
-    * MATERIALIZED corpus bucket table (the stored index below) — the
-    * corpus is never re-shingled or re-signed for candidate
-    * generation. The increment side (a daily ingest — small relative
-    * to the corpus) is broadcast, so the index join is map-side: the
-    * stored buckets stream through executors with ZERO corpus
-    * shuffle. Corpus shingles are still needed for the exact-Jaccard
-    * verification, but jaccardVerify restricts them to candidate ids
-    * before any work.
-    */
   /** LSH cross candidates: increment buckets (broadcast — a daily
     * ingest is small) against the corpus bucket table, map-side with
     * zero corpus shuffle. Returns (id1 < id2).
@@ -746,6 +736,16 @@ object Dedup {
       .select(least(col("ia"), col("ib")).as("id1"),
         greatest(col("ia"), col("ib")).as("id2"))
 
+  /** The same increment-vs-corpus pairing, but against an ALREADY
+    * MATERIALIZED corpus bucket table (the stored index below) — the
+    * corpus is never re-shingled or re-signed for candidate
+    * generation. The increment side (a daily ingest — small relative
+    * to the corpus) is broadcast, so the index join is map-side: the
+    * stored buckets stream through executors with ZERO corpus
+    * shuffle. Corpus shingles are still needed for the exact-Jaccard
+    * verification, but jaccardVerify restricts them to candidate ids
+    * before any work.
+    */
   def minhashIncrementPairsWithIndex(corpusBuckets: DataFrame,
       corpusSh: DataFrame, incSh: DataFrame,
       threshold: Double = 0.8): DataFrame = {
@@ -769,33 +769,27 @@ object Dedup {
     lshBuckets(minhashSignatures(shinglesHashed(corpusDocs)))
       .write.mode("overwrite").parquet(path)
 
-  /** Once-per-corpus index materialization under the warehouse dir,
-    * keyed by a hash of the source dir (same contract as
-    * RelationalExt.bucketedTables): a fresh session finds complete
-    * index files on disk and reuses them.
+  /** The LSH bucket index of the corpus below `split` (documents
+    * with a smaller doc_id): a Warehouse artifact over documents,
+    * salted with the split and the signature shape, built once per
+    * corpus and reused by any later session.
     */
-  def dedupIndexDir(s: SparkSession, d: String,
-      corpusDocs: => DataFrame): String = synchronized {
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    val wh = new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir"))
-    val dir = new org.apache.hadoop.fs.Path(wh, s"graft_dedup_idx_$h")
-    val fs = wh.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(dir, "_SUCCESS")))
-      writeDedupIndex(corpusDocs, dir.toString)
-    dir.toString
-  }
+  def dedupIndexDir(s: SparkSession, d: String, split: Long): String =
+    graft.sources.Warehouse.artifact(s, d, "dedup_idx", Seq("documents.parquet"),
+        s"|split$split|perm$NumPerm|bands$Bands") { dir =>
+      writeDedupIndex(Tables.documents(s, d).filter(col("doc_id") < split), dir)
+    }
 
-  /** The daily-ingest entry: the newest 40% of documents deduped
-    * against the older 60% corpus. Test-pinned to equal the full
-    * minhash pairs touching the increment.
-    */
   /** The corpus/increment boundary the incremental entries share:
     * newest 40% of doc ids are "today's ingest".
     */
   def incrementSplit(docs: DataFrame): Long =
     docs.agg((max(col("doc_id")) * 0.6).cast("long")).collect()(0).getLong(0)
 
+  /** The daily-ingest entry: the newest 40% of documents deduped
+    * against the older 60% corpus. Test-pinned to equal the full
+    * minhash pairs touching the increment.
+    */
   val dedupIncremental: QueryDef = QueryDef.rowsOnly("dedup_incremental") { (s, d) =>
     val docs = Tables.documents(s, d)
     val split = incrementSplit(docs)
@@ -818,12 +812,12 @@ object Dedup {
     QueryDef.rowsOnly("dedup_incremental_indexed") { (s, d) =>
       val docs = Tables.documents(s, d)
       val split = incrementSplit(docs)
-      val idx = dedupIndexDir(s, d, docs.filter(col("doc_id") < split))
+      val idx = dedupIndexDir(s, d, split)
       graft.Ckpt.scoped { sc =>
         val incSh = sc.persist(stagedShingles(s, d).filter(col("doc_id") >= split))
         val corpusSh = stagedShingles(s, d).filter(col("doc_id") < split)
         sc.keep(sc.adopt(
-          minhashIncrementPairsWithIndex(s.read.parquet(idx), corpusSh, incSh)))
+          minhashIncrementPairsWithIndex(Tables.parquet(s, idx), corpusSh, incSh)))
       }
     }
 
@@ -841,18 +835,6 @@ object Dedup {
     }
   }
 
-  /** STREAMING ingest against the STORED dedup index: documents
-    * arrive as micro-batches (2 files, maxFilesPerTrigger=1 — a real
-    * multi-batch run), and every batch's buckets broadcast-join the
-    * persisted corpus bucket table, Jaccard-verify, and append the
-    * confirmed near-dup pairs to a parquet sink — the always-on
-    * front door of the daily-ingest story (cross-vs-corpus only;
-    * intra-increment self pairs belong to the daily batch job).
-    * Per-batch cost is O(batch · bands) against a corpus-sized scan,
-    * zero corpus shuffle; state lives in the index, not the stream.
-    * Test-pinned equal to the batch cross-only path on the same
-    * split.
-    */
   /** The streamed increment PLUS one planted cross-batch near-dup of
     * the LONGEST corpus document (tie-break lowest id; append one
     * token): for an m-token donor the shingle Jaccard is ~(m-2)/(m-1),
@@ -876,12 +858,23 @@ object Dedup {
       .unionAll(planted)
   }
 
+  /** STREAMING ingest against the STORED dedup index: documents
+    * arrive as micro-batches (2 files, maxFilesPerTrigger=1 — a real
+    * multi-batch run), and every batch's buckets broadcast-join the
+    * persisted corpus bucket table, Jaccard-verify, and append the
+    * confirmed near-dup pairs to a parquet sink — the always-on
+    * front door of the daily-ingest story (cross-vs-corpus only;
+    * intra-increment self pairs belong to the daily batch job).
+    * Per-batch cost is O(batch · bands) against a corpus-sized scan,
+    * zero corpus shuffle; state lives in the index, not the stream.
+    * Test-pinned equal to the batch cross-only path on the same
+    * split.
+    */
   val streamDedupIndexed: QueryDef =
     QueryDef.rowsOnly("stream_dedup_indexed") { (s, d) =>
       val docs = Tables.documents(s, d)
       val split = incrementSplit(docs)
-      val corpus = docs.filter(col("doc_id") < split)
-      val idx = dedupIndexDir(s, d, corpus)
+      val idx = dedupIndexDir(s, d, split)
       val tmp = java.nio.file.Files.createTempDirectory("graft_stream_idx")
       try {
         val srcDir = s"$tmp/src"; val sinkDir = s"$tmp/sink"
@@ -896,7 +889,7 @@ object Dedup {
           .option("checkpointLocation", s"$tmp/chk")
           .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
             val batchSh = shinglesHashed(batch.toDF())
-            val cand = incrementCrossCandidates(s.read.parquet(idx),
+            val cand = incrementCrossCandidates(Tables.parquet(s, idx),
               lshBuckets(minhashSignatures(batchSh)))
             graft.Ckpt.scoped { sc =>
               sc.adopt(jaccardVerify(

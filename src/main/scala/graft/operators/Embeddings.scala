@@ -126,7 +126,7 @@ object Embeddings {
     "emb_cluster", embClusterOracle) { (s, d) =>
     val e = Similarity.vectors(s, d)
     val pairs = Similarity.embeddingIvfPairs(
-        e, Similarity.coarseCentroids(e, cacheKey = d), 0.35, probes = 2)
+        e, Similarity.coarseCentroids(e, Similarity.annIndex(s, d)), 0.35, probes = 2)
       .select(col("id1"), col("id2"))
     Dedup.connectedComponents(pairs)
       .groupBy(col("label").as("cluster_rep"))

@@ -22,9 +22,9 @@ import graft.sources.Tables
   */
 object Graph {
 
-  /** Once-per-corpus persisted edge artifact under the warehouse dir
-    * (the dedupIndexDir / bucketedTables contract, keyed by a hash of
-    * the source dir): ~40 graph entries share these three edge
+  /** Once-per-corpus persisted edge artifact (a Warehouse artifact,
+    * content-keyed on the four base tables it joins, so regenerating
+    * them in place invalidates it): ~40 graph entries share these three edge
     * relations, and each used to re-derive the same orders⋈lineitem
     * join from the base tables — at 100 TB that's the full corpus
     * join paid ~40 times for an |edges|-sized result. One graph
@@ -34,8 +34,6 @@ object Graph {
     */
   private def stagedEdges(s: SparkSession, d: String, name: String)
       (build: => DataFrame): DataFrame =
-    // content-fingerprinted once-per-corpus artifact (Warehouse):
-    // regenerating corpus data in place invalidates the derived edges
     graft.sources.Warehouse.staged(s, d, s"edges_$name",
       Seq("lineitem.parquet", "orders.parquet",
         "customer.parquet", "supplier.parquet"))(build)

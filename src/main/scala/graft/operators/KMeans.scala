@@ -1268,27 +1268,6 @@ object KMeans {
 
   private val FuzzyIters = 5
 
-  /** Fuzzy c-means (Bezdek 1981, fuzzifier m=2) — SOFT clustering on
-    * the reference's own point set: every point belongs to every
-    * cluster with membership u_j ∝ 1/d_j² (normalized), centroids
-    * are u²-weighted means, and the objective J = ΣΣ u_j²·d_j² is
-    * guaranteed non-increasing under the alternating update (the EM
-    * counterpart of Lloyd's hard assignment; mining_gmm's
-    * geometric sibling without the covariance model). Distributed
-    * shape identical to kmeans_step: centroids are O(k) driver
-    * literals inside ONE codegen'd aggregate per iteration — all 8
-    * memberships, their squares, weighted coordinates and the
-    * objective reduce map-side to a single 1-row collect (5k+1
-    * partial-agg columns, zero shuffle of point rows), so
-    * per-iteration cluster traffic is O(k·partitions) at any scale.
-    * d²=0 guarded by an epsilon floor. Same deterministic init as
-    * the Lloyd family. Output: per (iter, cluster) the updated
-    * centroid, fuzzy mass Σu, and the objective entering the
-    * iteration. Rows-only; ScalaTest pins monotone J, membership
-    * conservation (Σ masses == n exactly, since each point's
-    * memberships sum to 1), J consistency with a driver replay at
-    * sf0.001, and determinism.
-    */
   /** Generated DuckDB replay of the fuzzy loop: iteration i expands
     * pts × c{i-1} to per-(rid, cid) distances, normalizes the inverse
     * distances per rid (a window sum — 8 terms, so float order noise
@@ -1335,6 +1314,27 @@ object KMeans {
     sb.append(s"\n$rows\nORDER BY iter, cid").toString
   }
 
+  /** Fuzzy c-means (Bezdek 1981, fuzzifier m=2) — SOFT clustering on
+    * the reference's own point set: every point belongs to every
+    * cluster with membership u_j ∝ 1/d_j² (normalized), centroids
+    * are u²-weighted means, and the objective J = ΣΣ u_j²·d_j² is
+    * guaranteed non-increasing under the alternating update (the EM
+    * counterpart of Lloyd's hard assignment; mining_gmm's
+    * geometric sibling without the covariance model). Distributed
+    * shape identical to kmeans_step: centroids are O(k) driver
+    * literals inside ONE codegen'd aggregate per iteration — all 8
+    * memberships, their squares, weighted coordinates and the
+    * objective reduce map-side to a single 1-row collect (5k+1
+    * partial-agg columns, zero shuffle of point rows), so
+    * per-iteration cluster traffic is O(k·partitions) at any scale.
+    * d²=0 guarded by an epsilon floor. Same deterministic init as
+    * the Lloyd family. Output: per (iter, cluster) the updated
+    * centroid, fuzzy mass Σu, and the objective entering the
+    * iteration. Rows-only; ScalaTest pins monotone J, membership
+    * conservation (Σ masses == n exactly, since each point's
+    * memberships sum to 1), J consistency with a driver replay at
+    * sf0.001, and determinism.
+    */
   val kmeansFuzzy: QueryDef = QueryDef.sql(
     "kmeans_fuzzy", fuzzyOracle(K, FuzzyIters)) { (s, d) =>
     import s.implicits._
@@ -1381,18 +1381,6 @@ object KMeans {
     }
   }
 
-  /** Spherical k-means (Dhillon & Modha 2001) on the embedding corpus
-    * — COSINE clustering, the variant text/embedding pipelines use
-    * where direction carries meaning and magnitude is nuisance:
-    * vectors L2-normalized once, assignment = argmax dot (the sweep's
-    * `Cosine` rule), centroid = the RE-NORMALIZED member mean (the
-    * closed-form maximizer of Σ cos on the sphere, so the objective is
-    * monotone by construction). Each iteration is ONE sweep job with
-    * no shuffle, O(k·dim) per partition to the driver; the mean,
-    * normalization and mean cosine are O(k·dim) driver arithmetic.
-    * The oracle replays it; ScalaTest pins unit-norm centroids,
-    * monotone mean-cosine, mass conservation, and determinism.
-    */
   /** DuckDB replay of sphericalFit: list_dot_product accumulates in
     * the same left-to-right order as the codegen'd dot, the argmax
     * uses the identical (−dot, cid) ordering, and the per-dim member
@@ -1442,6 +1430,18 @@ object KMeans {
        |ORDER BY cid""".stripMargin
   }
 
+  /** Spherical k-means (Dhillon & Modha 2001) on the embedding corpus
+    * — COSINE clustering, the variant text/embedding pipelines use
+    * where direction carries meaning and magnitude is nuisance:
+    * vectors L2-normalized once, assignment = argmax dot (the sweep's
+    * `Cosine` rule), centroid = the RE-NORMALIZED member mean (the
+    * closed-form maximizer of Σ cos on the sphere, so the objective is
+    * monotone by construction). Each iteration is ONE sweep job with
+    * no shuffle, O(k·dim) per partition to the driver; the mean,
+    * normalization and mean cosine are O(k·dim) driver arithmetic.
+    * The oracle replays it; ScalaTest pins unit-norm centroids,
+    * monotone mean-cosine, mass conservation, and determinism.
+    */
   val kmeansSpherical: QueryDef = QueryDef.sql(
     "kmeans_spherical", sphericalOracle(K, 3)) { (s, d) =>
     val (cs, sizes, cos, _) = sphericalFit(s, d, K, iters = 3)
@@ -1458,15 +1458,22 @@ object KMeans {
     if (n == 0) a else a.map(_ / n)
   }
 
+  /** The nonzero embeddings as unit vectors `v`, divided by the
+    * native `vec_div` (the transform() HOF is CodegenFallback and
+    * would evict the projection from whole-stage codegen).
+    */
+  private[graft] def unitEmbeddings(s: SparkSession, d: String): DataFrame =
+    Tables.embeddings(s, d)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("raw"))
+      .withColumn("nrm", sqrt(Similarity.dot(col("raw"), col("raw"))))
+      .filter(col("nrm") > 0)
+      .select(col("vec_id"), graft.functions.VectorFunctions.vec_div(col("raw"), col("nrm")).as("v"))
+
   /** `spherical` over the unit embeddings, from the first k by vec_id. */
   private[graft] def sphericalFit(s: SparkSession, d: String, k: Int, iters: Int)
       : (Array[Array[Double]], Array[Long], Array[Double], Seq[Double]) =
     graft.Ckpt.scoped { sc =>
-      val pts = sc.persist(Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("raw"))
-        .withColumn("nrm", sqrt(Similarity.dot(col("raw"), col("raw"))))
-        .filter(col("nrm") > 0)
-        .select(col("vec_id"), expr("transform(raw, x -> x / nrm)").as("v")))
+      val pts = sc.persist(unitEmbeddings(s, d))
       val init = pts.orderBy(col("vec_id")).limit(k)
         .select("v").collect().map(r => l2norm(r.getSeq[Double](0).toArray))
       spherical(pts, init, iters)

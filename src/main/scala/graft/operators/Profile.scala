@@ -219,30 +219,19 @@ object Profile {
       .orderBy(col("type_a"), col("type_b"))
   }
 
-  private def kmvTableDir(s: SparkSession, d: String): org.apache.hadoop.fs.Path = {
-    val h = Integer.toHexString(d.hashCode)
-    new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir")),
-      s"graft_kmv_$h")
-  }
-
   /** Builds (once) the per-(day, type) KMV sketch table over events
     * — the ingest-time artifact (kilobytes per cell) that answers
     * any distinct-user rollup, at any coarser grain, without
     * rescanning the fact table.
     */
-  def kmvSketchTable(s: SparkSession, d: String): DataFrame = synchronized {
-    val dir = kmvTableDir(s, d)
-    val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"))) {
+  def kmvSketchTable(s: SparkSession, d: String): DataFrame =
+    Tables.parquet(s, graft.sources.Warehouse.artifact(s, d, "kmv", Seq("events.parquet"), s"|k$KmvK") { dir =>
       Tables.events(s, d)
         .groupBy(date_trunc("day", col("ts")).as("day"), col("event_type"))
         .agg(graft.functions.SketchFunctions.kmv(col("user_id"), KmvK).as("sk"),
           count(lit(1)).as("n_events"))
-        .write.mode("overwrite").parquet(dir.toString)
-    }
-    s.read.parquet(dir.toString)
-  }
+        .write.mode("overwrite").parquet(dir)
+    })
 
   /** Distinct users per event type answered from the STORED daily
     * sketch table alone via the second-level KmvMergeAgg — bottom-k

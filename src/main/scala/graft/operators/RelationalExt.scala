@@ -148,49 +148,16 @@ object RelationalExt {
     * 100 TB this is the difference between re-shuffling the fact
     * table per query and shuffling once at ingest.
     */
-  // Bucketed "ingest" is per-corpus, so table names are keyed by a
-  // hash of the source dir: different SFs coexist in the warehouse,
-  // and a fresh session (each driver run is a new JVM) finds the
-  // bucket files of ITS corpus already on disk and re-registers them
-  // as external tables instead of rewriting — ingest happens once per
-  // corpus ever, not once per process. If the bucket spec below ever
-  // changes, these names must change with it (the DDL must describe
-  // the files actually on disk).
-  private def bucketedNames(d: String): (String, String) = {
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    (s"graft_li_b_$h", s"graft_ord_b_$h")
-  }
-
-  def bucketedTables(s: SparkSession, d: String): (String, String) = synchronized {
-    val (liName, ordName) = bucketedNames(d)
-    if (s.catalog.tableExists(liName) && s.catalog.tableExists(ordName))
-      return (liName, ordName)
-    val wh = new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir"))
-    val fs = wh.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val specs = Seq(
-      (liName, Tables.lineitem(s, d)
-        .select("l_orderkey", "l_extendedprice", "l_discount"), "l_orderkey"),
-      (ordName, Tables.orders(s, d)
-        .select("o_orderkey", "o_orderstatus"), "o_orderkey"))
-    specs.foreach { case (t, df, key) =>
-      val dir = new org.apache.hadoop.fs.Path(wh, t)
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      if (fs.exists(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"))) {
-        // complete bucket files from a previous session: register the
-        // catalog entry over them (the files carry Spark's bucket-id
-        // naming, so the DDL's CLUSTERED BY is honored shuffle-free)
-        s.sql(s"CREATE TABLE $t (${df.schema.toDDL}) USING parquet " +
-          s"CLUSTERED BY ($key) SORTED BY ($key) INTO 8 BUCKETS " +
-          s"LOCATION '$dir'")
-      } else {
-        fs.delete(dir, true)
-        df.write.bucketBy(8, key).sortBy(key)
-          .mode("overwrite").saveAsTable(t)
-      }
-    }
-    (liName, ordName)
-  }
+  /** The bucketed lineitem and orders tables: Warehouse artifacts,
+    * ingested once per corpus, not once per process.
+    */
+  def bucketedTables(s: SparkSession, d: String): (String, String) = (
+    graft.sources.Warehouse.bucketed(s, d, "li_b", Seq("lineitem.parquet"), 8, Seq("l_orderkey")) {
+      Tables.lineitem(s, d).select("l_orderkey", "l_extendedprice", "l_discount")
+    },
+    graft.sources.Warehouse.bucketed(s, d, "ord_b", Seq("orders.parquet"), 8, Seq("o_orderkey")) {
+      Tables.orders(s, d).select("o_orderkey", "o_orderstatus")
+    })
 
   val qBucketedJoin: QueryDef = QueryDef.sql(
     "q_bucketed_join",

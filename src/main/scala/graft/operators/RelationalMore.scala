@@ -82,32 +82,20 @@ object RelationalMore {
       .orderBy(col("o_orderstatus"))
   }
 
-  // hash of the source dir so different SFs coexist in the warehouse
-  private def sketchTableDir(s: SparkSession, d: String): org.apache.hadoop.fs.Path = {
-    val h = Integer.toHexString(d.hashCode)
-    new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir")),
-      s"graft_hll_$h")
-  }
-
   /** Builds (once) the per-month HLL sketch table over orders:
     * one 2^12-register Datasketches HLL per (month) of o_custkey.
     * At 100 TB this is the ingest-time artifact — kilobytes per
     * partition — that answers any distinct-count rollup without
     * rescanning the fact table.
     */
-  def hllSketchTable(s: SparkSession, d: String): DataFrame = synchronized {
-    val dir = sketchTableDir(s, d)
-    val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"))) {
+  def hllSketchTable(s: SparkSession, d: String): DataFrame =
+    Tables.parquet(s, graft.sources.Warehouse.artifact(s, d, "hll", Seq("orders.parquet"), "|lgk12") { dir =>
       Tables.orders(s, d)
         .groupBy(date_trunc("month", col("o_orderdate")).as("month"))
         .agg(hll_sketch_agg(col("o_custkey"), lit(12)).as("sk"),
           count(lit(1)).as("n_orders"))
-        .write.mode("overwrite").parquet(dir.toString)
-    }
-    s.read.parquet(dir.toString)
-  }
+        .write.mode("overwrite").parquet(dir)
+    })
 
   /** Distinct customers per quarter answered from the STORED sketch
     * table alone: `hll_union_agg` merges the month sketches (sketch

@@ -117,21 +117,14 @@ object Retrieval {
     bm25Rank(postingsFor(Tables.documents(s, d), QueryTerms), dl, n, avgdl)
   }
 
-  /** Once-per-corpus inverted-index materialization under the
-    * warehouse dir (same contract as the ANN / dedup indexes): full
-    * postings (word, doc_id, tf) sorted by word so parquet row-group
-    * min/max stats prune non-query terms, plus the doc-length table
-    * and the one-row corpus stats.
+  /** Once-per-corpus inverted index, a Warehouse artifact over
+    * documents: full postings (word, doc_id, tf) sorted by word so
+    * parquet row-group min/max stats prune non-query terms, plus the
+    * doc-length table and the one-row corpus stats.
     */
-  def invIndexDir(s: SparkSession, d: String): String = synchronized {
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    val wh = new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir"))
-    val dir = new org.apache.hadoop.fs.Path(wh, s"graft_inv_idx_$h")
-    val fs = wh.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/postings/_SUCCESS"))) {
-      val docs = Tables.documents(s, d)
-      docs
+  def invIndexDir(s: SparkSession, d: String): String =
+    graft.sources.Warehouse.artifact(s, d, "inv_idx", Seq("documents.parquet"), "|range8") { dir =>
+      Tables.documents(s, d)
         .select(col("doc_id"),
           explode(regexp_extract_all(lower(col("text")), lit("[a-z]+"), lit(0))).as("word"))
         .groupBy(col("word"), col("doc_id")).agg(count(lit(1)).as("tf"))
@@ -143,8 +136,6 @@ object Retrieval {
       docLengths(s, d).agg(count(lit(1)).as("n"), sum(col("dl")).as("sum_dl"))
         .repartition(1).write.mode("overwrite").parquet(s"$dir/stats")
     }
-    dir.toString
-  }
 
   /** BM25 against the STORED inverted index: the postings scan
     * carries a pushed `word IN (...)` parquet filter (range-sorted
@@ -154,11 +145,11 @@ object Retrieval {
     */
   val textBm25Indexed: QueryDef = QueryDef.sql("text_bm25_indexed", bm25Oracle) { (s, d) =>
     val idx = invIndexDir(s, d)
-    val Array(stats) = s.read.parquet(s"$idx/stats").collect()
+    val Array(stats) = Tables.parquet(s, s"$idx/stats").collect()
     val n = stats.getLong(0)
     val avgdl = stats.getLong(1).toDouble / n
-    val tf = s.read.parquet(s"$idx/postings").filter(col("word").isin(QueryTerms: _*))
-    bm25Rank(tf, s.read.parquet(s"$idx/doclen"), n, avgdl)
+    val tf = Tables.parquet(s, s"$idx/postings").filter(col("word").isin(QueryTerms: _*))
+    bm25Rank(tf, Tables.parquet(s, s"$idx/doclen"), n, avgdl)
   }
 
   /** Hybrid retrieval with reciprocal-rank fusion (Cormack, Clarke &

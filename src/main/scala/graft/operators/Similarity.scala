@@ -241,32 +241,28 @@ object Similarity {
   private val quantizerCache =
     scala.collection.concurrent.TrieMap.empty[String, Array[Array[Double]]]
 
-  /** Warehouse path of the persisted ANN index for a source dir
-    * (same source-dir-hash contract as the other index/table names).
-    */
-  private def annIndexPath(s: SparkSession, d: String): String = {
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    val wh = new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir"))
-    new org.apache.hadoop.fs.Path(wh, s"graft_ann_idx_$h").toString
-  }
+  /** Every constant the persisted ANN index's fits depend on. */
+  private def annSalt: String = s"|lists$NLists|dim$Dim|pq${PqM}x$PqK|sample4096|iters3"
 
-  /** Read `sub` of the persisted index iff its _SUCCESS exists —
-    * fitted index artifacts are reused by FRESH sessions, not refit
-    * per process (fits are deterministic, so a load equals a refit;
-    * shape is validated in case index constants changed since the
-    * files were written).
+  /** The corpus's persisted ANN index dir, built or not: its Warehouse
+    * content key, which the ANN fit caches key on too, so a corpus
+    * regenerated in place refits in the same JVM.
     */
-  private def loadIndexPart(s: SparkSession, d: String, sub: String):
-      Option[Array[org.apache.spark.sql.Row]] = {
-    val dir = new org.apache.hadoop.fs.Path(s"${annIndexPath(s, d)}/$sub")
-    val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(dir, "_SUCCESS")))
-      Some(s.read.parquet(dir.toString).collect())
+  def annIndex(s: SparkSession, d: String): String =
+    graft.sources.Warehouse.locate(s, d, "ann_idx", Seq("embeddings.parquet"), annSalt)
+
+  /** Read `sub` of the persisted index `key` iff the index is complete
+    * — fitted index artifacts are reused by FRESH sessions, not refit
+    * per process (fits are deterministic, so a load equals a refit,
+    * and every constant that shapes them is salted into the key).
+    */
+  private def loadIndexPart(s: SparkSession, key: String, sub: String):
+      Option[Array[org.apache.spark.sql.Row]] =
+    if (graft.sources.Warehouse.complete(s, key))
+      Some(graft.sources.Tables.parquet(s, s"$key/$sub").collect())
     else None
-  }
 
-  def coarseCentroids(e: DataFrame, cacheKey: String = ""): Array[Array[Double]] = {
+  def coarseCentroids(e: DataFrame, key: String = ""): Array[Array[Double]] = {
     def fit(): Array[Array[Double]] = {
       // a coarse quantizer needs a representative sample, not the
       // corpus: cap the fit set (first-N is fine for synthetic data;
@@ -280,13 +276,12 @@ object Similarity {
       }
     }
     def loadOrFit(): Array[Array[Double]] =
-      loadIndexPart(e.sparkSession, cacheKey, "centroids")
+      loadIndexPart(e.sparkSession, key, "centroids")
         .map(_.map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
           .sortBy(_._1).map(_._2))
-        .filter(cs => cs.length == NLists && cs.forall(_.length == Dim))
         .getOrElse(fit())
-    if (cacheKey.isEmpty) fit()
-    else quantizerCache.getOrElseUpdate(cacheKey, loadOrFit())
+    if (key.isEmpty) fit()
+    else quantizerCache.getOrElseUpdate(key, loadOrFit())
   }
 
   /** IVF ANN: assign every vector to its nearest coarse centroid
@@ -304,7 +299,7 @@ object Similarity {
   val annIvf: QueryDef = QueryDef.sql("ann_ivf", ivfTopOracle(NLists, NProbe, 3, 4096)) { (s, d) =>
     import org.apache.spark.sql.expressions.Window
     val e = vectors(s, d)
-    val cs = coarseCentroids(e, cacheKey = d)
+    val cs = coarseCentroids(e, annIndex(s, d))
     // norm and unit vector computed once per row as columns — the
     // normalization never re-enters the 16 per-centroid dist exprs
     val withUnit = e
@@ -364,16 +359,12 @@ object Similarity {
         .map(_.set.vectors).toArray
     }
 
-  /** The codebooks persisted under `sub` of the index, if they have
-    * the current PqM × PqK × SubDim shape.
-    */
-  private def loadCodebooks(s: SparkSession, d: String,
+  /** The codebooks persisted under `sub` of the index, if built. */
+  private def loadCodebooks(s: SparkSession, key: String,
       sub: String): Option[Array[Array[Array[Double]]]] =
-    loadIndexPart(s, d, sub).flatMap { rows =>
+    loadIndexPart(s, key, sub).map { rows =>
       val m = rows.map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2).toArray).toMap
-      if (m.size == PqM * PqK && m.values.forall(_.length == SubDim))
-        Some(Array.tabulate(PqM, PqK)((i, j) => m((i, j))))
-      else None
+      Array.tabulate(PqM, PqK)((i, j) => m((i, j)))
     }
 
   /** Squared L2 distance of two equal-length arrays (driver-side). */
@@ -401,12 +392,12 @@ object Similarity {
       .limit(10)
   }
 
-  def pqCodebooks(e: DataFrame, cacheKey: String = ""): Array[Array[Array[Double]]] = {
+  def pqCodebooks(e: DataFrame, key: String = ""): Array[Array[Array[Double]]] = {
     def fit(): Array[Array[Array[Double]]] =
       fitSubspaceCodebooks(e.limit(4096).select(unit(col("v")).as("u")))
-    if (cacheKey.isEmpty) fit()
-    else pqCache.getOrElseUpdate(cacheKey,
-      loadCodebooks(e.sparkSession, cacheKey, "codebooks_raw").getOrElse(fit()))
+    if (key.isEmpty) fit()
+    else pqCache.getOrElseUpdate(key,
+      loadCodebooks(e.sparkSession, key, "codebooks_raw").getOrElse(fit()))
   }
 
   /** All PqM codeword ids of a vector column as c0..c{PqM-1}, via the
@@ -438,7 +429,7 @@ object Similarity {
     */
   val annPq: QueryDef = QueryDef.sql("ann_pq", pqOracle(4096, PqShortlist)) { (s, d) =>
     val e = vectors(s, d)
-    val cb = pqCodebooks(e, cacheKey = d)
+    val cb = pqCodebooks(e, annIndex(s, d))
     val withU = e.withColumn("u", unit(col("v")))
     val codes = withPqCodes(withU, cb, col("u"), keep = Seq(col("vec_id")))
     // query = vec 0's unit vector; LUT entry [m][j] = ||q_m - c_mj||^2
@@ -604,28 +595,18 @@ object Similarity {
     * centroid) on a capped sample, fits shared with pqCodebooks.
     */
   def ivfPqCodebooks(e: DataFrame, cs: Array[Array[Double]],
-      cacheKey: String = ""): Array[Array[Array[Double]]] = {
+      key: String = ""): Array[Array[Array[Double]]] = {
     def fit(): Array[Array[Array[Double]]] =
       fitSubspaceCodebooks(e.limit(4096)
         .withColumn("u0", unit(col("v")))
         .withColumn("list",
           array_min(array(centroidStructs(cs, col("u0")): _*)).getField("list"))
         .select(residualExpr(cs, col("u0"), col("list")).as("u")))
-    if (cacheKey.isEmpty) fit()
-    else ivfPqCache.getOrElseUpdate(cacheKey,
-      loadCodebooks(e.sparkSession, cacheKey, "codebooks").getOrElse(fit()))
+    if (key.isEmpty) fit()
+    else ivfPqCache.getOrElseUpdate(key,
+      loadCodebooks(e.sparkSession, key, "codebooks").getOrElse(fit()))
   }
 
-  /** IVF-PQ ANN — the production index layout (Jégou et al.; FAISS
-    * IVFPQ): the coarse quantizer routes each vector to one of NLists
-    * inverted lists, PQ encodes its RESIDUAL in 8 bytes, and a query
-    * touches only its NProbe nearest lists, scanning codes with a
-    * per-list lookup table (the query residual differs per probed
-    * list) before an exact re-rank of the shortlist. Candidate
-    * selection is a partition-pruning filter on the list id; the ADC
-    * scan is map-side literal lookups; the only vector math on the
-    * corpus is the final 100-row re-rank.
-    */
   /** The IVF-PQ code table (vec_id, list, c0..c{PqM-1}) for a corpus
     * under given centroids + residual codebooks — what the persisted
     * index stores, 8 B of codes + a list id per vector.
@@ -639,11 +620,6 @@ object Similarity {
     withPqCodes(withU, cb, col("res"), keep = Seq(col("vec_id"), col("list")))
   }
 
-  /** Search-only IVF-PQ: probe the query's NProbe nearest lists over
-    * an EXISTING code table (in-memory plan or parquet scan — the
-    * persisted path gets partition pruning for free when codes are
-    * partitioned by list), ADC-scan with per-list LUTs, exact re-rank.
-    */
   /** The IVF-PQ shortlist (pre-re-rank): probe filter on the list id
     * (partition pruning over a persisted code table), ADC scan with
     * per-list LUTs, TakeOrdered to PqShortlist ids. Exposed so the
@@ -676,6 +652,11 @@ object Similarity {
       .select("vec_id")
   }
 
+  /** Search-only IVF-PQ: probe the query's NProbe nearest lists over
+    * an EXISTING code table (in-memory plan or parquet scan — the
+    * persisted path gets partition pruning for free when codes are
+    * partitioned by list), ADC-scan with per-list LUTs, exact re-rank.
+    */
   def ivfPqSearchFromCodes(e: DataFrame, codes: DataFrame,
       cs: Array[Array[Double]], cb: Array[Array[Array[Double]]],
       q: Array[Double]): DataFrame =
@@ -690,7 +671,7 @@ object Similarity {
     val (cs, cb) = loadAnnCodebooks(s, idx)
     val q = e.filter(col("vec_id") === 0)
       .select(unit(col("v"))).collect()(0).getSeq[Double](0).toArray
-    ivfPqShortlist(s.read.parquet(s"$idx/codes"), cs, cb, q)
+    ivfPqShortlist(graft.sources.Tables.parquet(s, s"$idx/codes"), cs, cb, q)
   }
 
   /** The IVF-PQ replay shared by ann_ivfpq and its persisted twin
@@ -784,11 +765,22 @@ object Similarity {
        |ORDER BY cos_sim DESC, eu.vec_id LIMIT 10""".stripMargin
   }
 
+  /** IVF-PQ ANN — the production index layout (Jégou et al.; FAISS
+    * IVFPQ): the coarse quantizer routes each vector to one of NLists
+    * inverted lists, PQ encodes its RESIDUAL in 8 bytes, and a query
+    * touches only its NProbe nearest lists, scanning codes with a
+    * per-list lookup table (the query residual differs per probed
+    * list) before an exact re-rank of the shortlist. Candidate
+    * selection is a partition-pruning filter on the list id; the ADC
+    * scan is map-side literal lookups; the only vector math on the
+    * corpus is the final 100-row re-rank.
+    */
   val annIvfPq: QueryDef = QueryDef.sql(
     "ann_ivfpq", ivfpqOracle(4096, PqShortlist)) { (s, d) =>
     val e = vectors(s, d)
-    val cs = coarseCentroids(e, cacheKey = d)
-    val cb = ivfPqCodebooks(e, cs, cacheKey = d)
+    val key = annIndex(s, d)
+    val cs = coarseCentroids(e, key)
+    val cb = ivfPqCodebooks(e, cs, key)
     val q = e.filter(col("vec_id") === 0)
       .select(unit(col("v"))).collect()(0).getSeq[Double](0).toArray
     ivfPqSearchFromCodes(e, ivfPqCodes(e, cs, cb), cs, cb, q)
@@ -804,10 +796,10 @@ object Similarity {
     * the codes are the real payload at 8 B + a list id per vector.
     */
   def writeAnnIndex(s: SparkSession, e: DataFrame, path: String,
-      cacheKey: String = ""): Unit = {
+      key: String = ""): Unit = {
     import s.implicits._
-    val cs = coarseCentroids(e, cacheKey)
-    val cb = ivfPqCodebooks(e, cs, cacheKey)
+    val cs = coarseCentroids(e, key)
+    val cb = ivfPqCodebooks(e, cs, key)
     cs.zipWithIndex.toSeq.map { case (c, i) => (i, c.toSeq) }
       .toDF("list", "c").repartition(1)
       .write.mode("overwrite").parquet(s"$path/centroids")
@@ -816,7 +808,7 @@ object Similarity {
       .write.mode("overwrite").parquet(s"$path/codebooks")
     // raw-vector PQ codebooks too (ann_pq's flavor — trained on unit
     // vectors, not residuals), so no ANN entry refits per process
-    val cbRaw = pqCodebooks(e, cacheKey)
+    val cbRaw = pqCodebooks(e, key)
     (for { m <- 0 until PqM; j <- 0 until PqK } yield (m, j, cbRaw(m)(j).toSeq))
       .toDF("m", "j", "c").repartition(1)
       .write.mode("overwrite").parquet(s"$path/codebooks_raw")
@@ -829,30 +821,22 @@ object Similarity {
     */
   def loadAnnCodebooks(s: SparkSession, path: String):
       (Array[Array[Double]], Array[Array[Array[Double]]]) = {
-    val cs = s.read.parquet(s"$path/centroids").collect()
+    val cs = graft.sources.Tables.parquet(s, s"$path/centroids").collect()
       .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
       .sortBy(_._1).map(_._2)
-    val cbRows = s.read.parquet(s"$path/codebooks").collect()
+    val cbRows = graft.sources.Tables.parquet(s, s"$path/codebooks").collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
     val cb = Array.tabulate(PqM, PqK)((m, j) => cbRows
       .find(t => t._1 == m && t._2 == j).get._3)
     (cs, cb)
   }
 
-  /** Once-per-corpus index materialization under the warehouse dir
-    * (same contract as the dedup index): a fresh session reuses
-    * complete index files on disk.
+  /** Once-per-corpus index materialization: the Warehouse artifact
+    * at `annIndex`, which a fresh session reuses from disk.
     */
   def annIndexDir(s: SparkSession, d: String, e: => DataFrame): String =
-    synchronized {
-      val h = java.security.MessageDigest.getInstance("MD5")
-        .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-      val wh = new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir"))
-      val dir = new org.apache.hadoop.fs.Path(wh, s"graft_ann_idx_$h")
-      val fs = wh.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/codes/_SUCCESS")))
-        writeAnnIndex(s, e, dir.toString, cacheKey = d)
-      dir.toString
+    graft.sources.Warehouse.artifact(s, d, "ann_idx", Seq("embeddings.parquet"), annSalt) { dir =>
+      writeAnnIndex(s, e, dir, key = dir)
     }
 
   /** IVF-PQ search against the STORED index: codebooks load from
@@ -866,7 +850,7 @@ object Similarity {
       val e = vectors(s, d)
       val idx = annIndexDir(s, d, e)
       val (cs, cb) = loadAnnCodebooks(s, idx)
-      val codes = s.read.parquet(s"$idx/codes")
+      val codes = graft.sources.Tables.parquet(s, s"$idx/codes")
       val q = e.filter(col("vec_id") === 0)
         .select(unit(col("v"))).collect()(0).getSeq[Double](0).toArray
       ivfPqSearchFromCodes(e, codes, cs, cb, q)
@@ -893,15 +877,6 @@ object Similarity {
       .orderBy(col("id1"), col("id2"))
   }
 
-  /** Unbounded-scale embedding near-dup — the scale path for
-    * dedup_embedding's bounded exact pairwise. Precision is exact
-    * (every emitted pair is cosine-verified); recall is probe-
-    * bounded: TRUE near-duplicates (cos ≥ ~0.99) share their nearest
-    * coarse list virtually surely (planted-duplicate recall pinned
-    * at 100% in ScalaTest), while the 0.35 corpus-calibrated demo
-    * threshold (~69° apart — far beyond near-dup) recalls only
-    * what happens to co-bucket, as any sub-quadratic scheme must.
-    */
   /** The probed-pair CTEs over the fitted quantizer (`eu`, `fc3`
     * from ivfFitCtes): per-vector 2 nearest lists, within-list pairs,
     * rounded-cosine threshold — emb_cluster and dedup_embedding_ivf
@@ -925,13 +900,22 @@ object Similarity {
   private[graft] def ivfPairsOraclePrefix: String =
     s"${ivfFitCtes(NLists, 3, 4096)},\n${ivfPairsCtes(0.35, 2)}"
 
+  /** Unbounded-scale embedding near-dup — the scale path for
+    * dedup_embedding's bounded exact pairwise. Precision is exact
+    * (every emitted pair is cosine-verified); recall is probe-
+    * bounded: TRUE near-duplicates (cos ≥ ~0.99) share their nearest
+    * coarse list virtually surely (planted-duplicate recall pinned
+    * at 100% in ScalaTest), while the 0.35 corpus-calibrated demo
+    * threshold (~69° apart — far beyond near-dup) recalls only
+    * what happens to co-bucket, as any sub-quadratic scheme must.
+    */
   val dedupEmbeddingIvf: QueryDef =
     QueryDef.sql(
       "dedup_embedding_ivf",
       s"""WITH $ivfPairsOraclePrefix
          |SELECT id1, id2, cos_sim FROM pairs ORDER BY id1, id2""".stripMargin) { (s, d) =>
       val e = vectors(s, d)
-      embeddingIvfPairs(e, coarseCentroids(e, cacheKey = d), 0.35, probes = 2)
+      embeddingIvfPairs(e, coarseCentroids(e, annIndex(s, d)), 0.35, probes = 2)
     }
 
   /** Exact cosine k-NN graph (k=4) over the whole embedding corpus
@@ -1066,7 +1050,7 @@ object Similarity {
     "emb_knn_graph_ivf", knnGraphIvfOracle(NLists, 8, 3, 4096)) { (s, d) =>
     import org.apache.spark.sql.expressions.Window
     val e = vectors(s, d)
-    val cs = coarseCentroids(e, cacheKey = d)
+    val cs = coarseCentroids(e, annIndex(s, d))
     val withUnit = e
       .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
       .withColumn("u", scaled(col("v"), col("nrm")))
@@ -1136,31 +1120,6 @@ object Similarity {
     }
   }
 
-  /** IVF INDEX-QUALITY report — the health check a production ANN
-    * deployment runs before trusting an index (and re-runs as the
-    * corpus drifts): per coarse list its population, share, and mean
-    * L2 residual to the centroid (the quantization error that upper-
-    * bounds how badly a probe can misroute). List-size skew is the
-    * number that matters operationally — a hot list makes every
-    * probe that touches it scan a corpus-sized bucket; the balance
-    * factor (max/mean population) is the alarm. One map-side
-    * assignment pass (the same broadcast-literal centroid structs as
-    * the index itself) + one 16-group aggregate; centroidStructs'
-    * dist is the shifted ‖u−c‖²−1, so the true residual is
-    * √(dist+1) for unit u. Rows-only; population conservation,
-    * share-sum=1, residual bounds, and determinism pinned.
-    */
-  /** DuckDB replay of the IVF health report: re-fit the coarse
-    * quantizer (unit sample, first-NLists init, 3 n-D Lloyd rounds —
-    * lloydChainCtes over list ops), then one assignment
-    * pass with the identical shifted-distance expression
-    * ‖c‖² − 2u·c and the per-list population/share/residual rollup.
-    */
-  /** The IVF coarse-quantizer fit as CTE text (unit corpus `eu`,
-    * first-N sample, `iters` n-D Lloyd rounds → `fc<iters>`),
-    * WITHOUT the leading WITH — shared by the ann_ivf_stats,
-    * emb_cluster, and dedup_embedding_ivf oracles.
-    */
   /** One deterministic n-D Lloyd chain as CTE text: consumes a CTE
     * named `samp$sfx` holding (rn, v) rows, seeds from its first
     * `nClusters` rows, runs `iters` rounds, and emits
@@ -1202,6 +1161,11 @@ object Similarity {
        |    SELECT u, row_number() OVER (ORDER BY vec_id) AS rn FROM eu)
        |  WHERE rn <= $sampleCap)""".stripMargin
 
+  /** The IVF coarse-quantizer fit as CTE text (unit corpus `eu`,
+    * first-N sample, `iters` n-D Lloyd rounds → `fc<iters>`),
+    * WITHOUT the leading WITH — shared by the ann_ivf_stats,
+    * emb_cluster, and dedup_embedding_ivf oracles.
+    */
   private def ivfFitCtes(nLists: Int, iters: Int, sampleCap: Int): String =
     s"""${sampCtes(sampleCap)},
        |${lloydChainCtes("", nLists, iters)}""".stripMargin
@@ -1293,6 +1257,12 @@ object Similarity {
        |    row_number() OVER (PARTITION BY id1 ORDER BY cos_sim DESC, id2) AS rn
        |  FROM cand) WHERE rn = 1 ORDER BY id1""".stripMargin
 
+  /** DuckDB replay of the IVF health report: re-fit the coarse
+    * quantizer (unit sample, first-NLists init, 3 n-D Lloyd rounds —
+    * lloydChainCtes over list ops), then one assignment
+    * pass with the identical shifted-distance expression
+    * ‖c‖² − 2u·c and the per-list population/share/residual rollup.
+    */
   private def ivfStatsOracle(nLists: Int, iters: Int, sampleCap: Int): String = {
     s"""WITH ${ivfFitCtes(nLists, iters, sampleCap)},
        |asg AS (
@@ -1311,10 +1281,24 @@ object Similarity {
        |FROM asg GROUP BY list ORDER BY list""".stripMargin
   }
 
+  /** IVF INDEX-QUALITY report — the health check a production ANN
+    * deployment runs before trusting an index (and re-runs as the
+    * corpus drifts): per coarse list its population, share, and mean
+    * L2 residual to the centroid (the quantization error that upper-
+    * bounds how badly a probe can misroute). List-size skew is the
+    * number that matters operationally — a hot list makes every
+    * probe that touches it scan a corpus-sized bucket; the balance
+    * factor (max/mean population) is the alarm. One map-side
+    * assignment pass (the same broadcast-literal centroid structs as
+    * the index itself) + one 16-group aggregate; centroidStructs'
+    * dist is the shifted ‖u−c‖²−1, so the true residual is
+    * √(dist+1) for unit u. Rows-only; population conservation,
+    * share-sum=1, residual bounds, and determinism pinned.
+    */
   val annIvfStats: QueryDef = QueryDef.sql(
     "ann_ivf_stats", ivfStatsOracle(NLists, 3, 4096)) { (s, d) =>
     val e = vectors(s, d)
-    val cs = coarseCentroids(e, cacheKey = d)
+    val cs = coarseCentroids(e, annIndex(s, d))
     val n = e.count().toDouble
     val assigned = e
       .withColumn("u", unit(col("v")))

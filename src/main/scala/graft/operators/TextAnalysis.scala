@@ -275,7 +275,8 @@ object TextAnalysis {
 
   /** Merges trained once per corpus (driver-side over the
     * distributed piece-frequency table — the BPE-training contract;
-    * see graft.functions.Bpe).
+    * see graft.functions.Bpe), cached by the corpus's Warehouse
+    * content key.
     */
   private val bpeMergesCache =
     scala.collection.concurrent.TrieMap.empty[String, Map[(String, String), Int]]
@@ -294,7 +295,8 @@ object TextAnalysis {
     */
   val textBpeMerged: QueryDef = QueryDef.rowsOnly("text_bpe_merged") { (s, d) =>
     val docs = Tables.documents(s, d)
-    val ranks = bpeMerges(docs, cacheKey = d)
+    val ranks = bpeMerges(docs, graft.sources.Warehouse.key(s, d, "bpe_merges",
+      Seq("documents.parquet"), s"|vocab$BpeVocab|merges$BpeNumMerges"))
     docs.select(
       col("doc_id"),
       graft.functions.Bpe.bpe_token_count(col("text"), bpePattern, ranks)
@@ -1677,6 +1679,7 @@ object TextAnalysis {
     out.toSeq
   }
 
+  /** Unigram fits by the corpus's Warehouse content key. */
   private[graft] val uniFitCache =
     scala.collection.concurrent.TrieMap.empty[String, (Map[String, Long], Map[String, Double], Seq[Double])]
 
@@ -1693,7 +1696,8 @@ object TextAnalysis {
     */
   private[graft] def unigramFit(s: SparkSession, d: String)
       : (Map[String, Long], Map[String, Double], Seq[Double]) =
-    uniFitCache.getOrElseUpdate(d, {
+    uniFitCache.getOrElseUpdate(
+        graft.sources.Warehouse.key(s, d, "uni_fit", Seq("documents.parquet")), {
       import s.implicits._
       graft.Ckpt.scoped { sc =>
         val words = sc.persist(uniWords(Tables.documents(s, d))

@@ -148,7 +148,7 @@ object SourceOps {
       |  round(sum(l_extendedprice), 2) AS total
       |FROM lineitem
       |WHERE l_partkey BETWEEN 100 AND 300 AND l_suppkey BETWEEN 10 AND 40""".stripMargin) { (s, d) =>
-    s.read.parquet(zorderedLineitem(s, d))
+    Tables.parquet(s, zorderedLineitem(s, d))
       .filter(col("l_partkey").between(100, 300) &&
         col("l_suppkey").between(10, 40))
       .agg(count(lit(1)).as("n"),
@@ -156,17 +156,11 @@ object SourceOps {
         round(sum(col("l_extendedprice")), 2).as("total"))
   }
 
-  /** Once-per-corpus z-ordered rewrite under the warehouse dir (the
-    * same source-dir-hash reuse contract as the bucketed tables and
-    * dedup/ANN indexes).
+  /** Once-per-corpus z-ordered rewrite: a Warehouse artifact over
+    * lineitem, salted with the file count and the 16-bit key scaling.
     */
-  def zorderedLineitem(s: SparkSession, d: String): String = synchronized {
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    val wh = new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir"))
-    val dir = new org.apache.hadoop.fs.Path(wh, s"graft_li_zorder_$h")
-    val fs = wh.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"))) {
+  def zorderedLineitem(s: SparkSession, d: String): String =
+    Warehouse.artifact(s, d, "li_zorder", Seq("lineitem.parquet"), s"|z$ZFiles|16bit") { dir =>
       val li = Tables.lineitem(s, d)
         .select("l_orderkey", "l_partkey", "l_suppkey", "l_extendedprice")
       // scale both keys into 16-bit range by their observed max
@@ -180,10 +174,8 @@ object SourceOps {
         .repartitionByRange(ZFiles, col("graft_z"))
         .sortWithinPartitions(col("graft_z"))
         .drop("graft_z")
-        .write.mode("overwrite").parquet(dir.toString)
+        .write.mode("overwrite").parquet(dir)
     }
-    dir.toString
-  }
 
   /** HILBERT layout: the z-order rewrite with the Morton interleave
     * swapped for the Hilbert curve (native codegen'd HilbertIndex —
@@ -204,7 +196,7 @@ object SourceOps {
       |  round(sum(l_extendedprice), 2) AS total
       |FROM lineitem
       |WHERE l_partkey BETWEEN 400 AND 600 AND l_suppkey BETWEEN 50 AND 80""".stripMargin) { (s, d) =>
-    s.read.parquet(hilbertLineitem(s, d))
+    Tables.parquet(s, hilbertLineitem(s, d))
       .filter(col("l_partkey").between(400, 600) &&
         col("l_suppkey").between(50, 80))
       .agg(count(lit(1)).as("n"),
@@ -213,15 +205,10 @@ object SourceOps {
   }
 
   /** Once-per-corpus Hilbert-ordered rewrite (zorderedLineitem's
-    * contract with the curve swapped).
+    * artifact with the curve swapped).
     */
-  def hilbertLineitem(s: SparkSession, d: String): String = synchronized {
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    val wh = new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir"))
-    val dir = new org.apache.hadoop.fs.Path(wh, s"graft_li_hilbert_$h")
-    val fs = wh.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"))) {
+  def hilbertLineitem(s: SparkSession, d: String): String =
+    Warehouse.artifact(s, d, "li_hilbert", Seq("lineitem.parquet"), s"|h$ZFiles|16bit") { dir =>
       val li = Tables.lineitem(s, d)
         .select("l_orderkey", "l_partkey", "l_suppkey", "l_extendedprice")
       val (maxP, maxS) = {
@@ -235,10 +222,8 @@ object SourceOps {
         .repartitionByRange(ZFiles, col("graft_h"))
         .sortWithinPartitions(col("graft_h"))
         .drop("graft_h")
-        .write.mode("overwrite").parquet(dir.toString)
+        .write.mode("overwrite").parquet(dir)
     }
-    dir.toString
-  }
 
   val ManifestFiles = 8
 
@@ -267,11 +252,11 @@ object SourceOps {
       |WHERE l_shipdate BETWEEN DATE '1995-01-01' AND DATE '1995-03-31'""".stripMargin) { (s, d) =>
     val (dataDir, manDir) = manifestLineitem(s, d)
     val (lo, hi) = ("1995-01-01", "1995-03-31")
-    val pruned = s.read.parquet(manDir)
+    val pruned = Tables.parquet(s, manDir)
       .filter(col("min_ship") <= lit(hi).cast("date") &&
         col("max_ship") >= lit(lo).cast("date"))
       .select("file").collect().map(_.getString(0))
-    val src = if (pruned.isEmpty) s.read.parquet(dataDir)
+    val src = if (pruned.isEmpty) Tables.parquet(s, dataDir)
       else s.read.parquet(pruned.toIndexedSeq: _*)
     src.filter(col("l_shipdate").between(lit(lo).cast("date"), lit(hi).cast("date")))
       .agg(count(lit(1)).as("n"),
@@ -283,32 +268,32 @@ object SourceOps {
     * partitioned on l_shipdate (ManifestFiles files, sorted within
     * each so every file covers a tight date interval), plus the
     * per-file stats manifest derived in one scan of the laid-out
-    * table via the _metadata.file_path virtual column. Returns
-    * (dataDir, manifestDir); reused across runs by source-dir hash
-    * like the bucketed/z-order layouts.
+    * table via the _metadata.file_path virtual column. Two Warehouse
+    * artifacts: the manifest's base table is the data layout itself,
+    * so a rebuilt layout (new file names) can never be read through
+    * an old manifest. Returns (dataDir, manifestDir).
     */
-  def manifestLineitem(s: SparkSession, d: String): (String, String) = synchronized {
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    val wh = new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir"))
-    val dataDir = new org.apache.hadoop.fs.Path(wh, s"graft_li_mfdata_$h")
-    val manDir = new org.apache.hadoop.fs.Path(wh, s"graft_li_manifest_$h")
-    val fs = wh.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(manDir, "_SUCCESS"))) {
+  def manifestLineitem(s: SparkSession, d: String): (String, String) = {
+    val dataDir = Warehouse.artifact(s, d, "li_mfdata", Seq("lineitem.parquet"),
+        s"|range$ManifestFiles|l_shipdate") { dir =>
       Tables.lineitem(s, d)
         .select("l_orderkey", "l_suppkey", "l_shipdate", "l_extendedprice")
         .repartitionByRange(ManifestFiles, col("l_shipdate"))
         .sortWithinPartitions(col("l_shipdate"))
-        .write.mode("overwrite").parquet(dataDir.toString)
-      s.read.parquet(dataDir.toString)
+        .write.mode("overwrite").parquet(dir)
+    }
+    val data = new org.apache.hadoop.fs.Path(dataDir)
+    val manDir = Warehouse.artifact(s, data.getParent.toString, "li_manifest",
+        Seq(data.getName)) { dir =>
+      Tables.parquet(s, dataDir)
         .groupBy(col("_metadata.file_path").as("file"))
         .agg(min(col("l_shipdate")).as("min_ship"),
           max(col("l_shipdate")).as("max_ship"),
           count(lit(1)).as("n_rows"))
         .coalesce(1)
-        .write.mode("overwrite").parquet(manDir.toString)
+        .write.mode("overwrite").parquet(dir)
     }
-    (dataDir.toString, manDir.toString)
+    (dataDir, manDir)
   }
 
   val GdprBuckets = 16

@@ -110,7 +110,7 @@ class DedupSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, sf)
     val split = Dedup.incrementSplit(docs)
     val corpus = docs.filter(col("doc_id") < split)
-    val idx = Dedup.dedupIndexDir(spark, sf, corpus)
+    val idx = Dedup.dedupIndexDir(spark, sf, split)
     // the batch side plants the SAME cross-batch near-dup the stream
     // ingests, so parity also covers the planted pair
     val incSh = Dedup.shinglesHashed(Dedup.plantedIncrement(docs, split))
@@ -731,7 +731,7 @@ class MediaIndexClusterSpec extends AnyFunSuite {
   test("embedding clusters are consistent with the IVF pair graph") {
     val e = Similarity.vectors(spark, sf)
     val pairs = Similarity.embeddingIvfPairs(
-      e, Similarity.coarseCentroids(e, cacheKey = sf), 0.35, probes = 2)
+      e, Similarity.coarseCentroids(e, Similarity.annIndex(spark, sf)), 0.35, probes = 2)
     val clusters = graft.operators.Embeddings.embCluster.fn(spark, sf)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(clusters.nonEmpty)

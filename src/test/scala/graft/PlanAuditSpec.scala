@@ -56,6 +56,13 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(!exprs.exists(_.isInstanceOf[org.apache.spark.sql.graft.TextStats]), plan)
   }
 
+  test("the spherical fit's unit projection has no higher-order function") {
+    val df = KMeans.unitEmbeddings(spark, sf)
+    val hofs = executedExprs(df)
+      .collect { case h: org.apache.spark.sql.catalyst.expressions.HigherOrderFunction => h }
+    assert(hofs.isEmpty, s"${hofs.mkString(", ")} in\n${df.queryExecution.executedPlan}")
+  }
+
   test("q1_pricing pushes the date filter and prunes columns") {
     val p = formatted("q1_pricing")
     assert(p.contains("PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate"))

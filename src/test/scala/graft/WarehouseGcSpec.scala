@@ -1,16 +1,19 @@
 package graft
 
 import java.io.File
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.functions.{col, sum}
 import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.{Dedup, RelationalExt, RelationalMore}
+import graft.sources.Tables
 
-/** Round-10 (r9 verdict item 5): stale fingerprinted warehouse
-  * artifacts are garbage-collected. Every artifact now carries a
-  * `_graft_meta` provenance sidecar (corpus dir, base tables, hash
-  * salt); a build MISS triggers a sweep that drops any artifact
-  * whose recorded corpus no longer fingerprints to the hash in its
-  * name — the regenerate-the-corpus-forever leak (r9: 341 MB of
-  * dead `graft_*` variants from prior corpus generations).
+/** Stale warehouse artifacts are garbage-collected. Every artifact
+  * carries a `_graft_meta` provenance sidecar (corpus dir, base
+  * tables, hash salt); a build MISS triggers a sweep that drops any
+  * artifact whose recorded corpus no longer fingerprints to the hash
+  * in its name — the regenerate-the-corpus-forever leak (341 MB of
+  * dead `graft_*` variants from prior corpus generations once).
   */
 class WarehouseGcSpec extends AnyFunSuite {
   import TestSpark._
@@ -61,6 +64,88 @@ class WarehouseGcSpec extends AnyFunSuite {
     // again on the way out)
     graft.sources.Warehouse.gcStale(spark)
     assert(artifacts("graft_gcspec_").isEmpty)
+  }
+
+  /** The artifacts whose provenance names corpus `d`. */
+  private def artifactsOf(d: String): Set[String] =
+    Option(warehouseDir.listFiles()).getOrElse(Array.empty)
+      .filter(f => new File(f, "_graft_meta").exists())
+      .filter(f => Files.readAllLines(new File(f, "_graft_meta").toPath).asScala.headOption
+        .contains(d))
+      .map(_.getName).toSet
+
+  /** Rewrites the one-file table `t` of corpus `d` in place, keeping
+    * the rows `keep` selects.
+    */
+  private def rewrite(d: String, t: String, keep: org.apache.spark.sql.Column): Unit = {
+    val tmp = Files.createTempDirectory("graft_gc_rewrite").toFile
+    try {
+      spark.read.parquet(s"$d/$t").filter(keep).coalesce(1)
+        .write.mode("overwrite").parquet(s"$tmp/out")
+      val part = new File(s"$tmp/out").listFiles().filter(_.getName.endsWith(".parquet")).head
+      Files.delete(Paths.get(s"$d/$t"))
+      Files.move(part.toPath, Paths.get(s"$d/$t"))
+    } finally rmTree(tmp)
+  }
+
+  test("artifacts of a corpus regenerated in place answer for the new data; the old are swept") {
+    val d = Files.createTempDirectory("graft_gc_regen").toFile.getAbsolutePath
+    Seq("orders", "lineitem", "documents").foreach { t =>
+      Files.copy(Paths.get(s"$sf/$t.parquet"), Paths.get(s"$d/$t.parquet"))
+    }
+    // per artifact what it answers: HLL order total, bucketed orders
+    // rows, and the doc ids the dedup index holds
+    def answers() = {
+      val split = Dedup.incrementSplit(Tables.documents(spark, d))
+      val hll = RelationalMore.hllSketchTable(spark, d)
+        .agg(sum("n_orders")).head.getLong(0)
+      val ord = spark.table(RelationalExt.bucketedTables(spark, d)._2).count()
+      val idx = spark.read.parquet(Dedup.dedupIndexDir(spark, d, split))
+        .select(col("doc_id")).distinct().collect().map(_.getLong(0)).toSet
+      (hll, ord, idx, split)
+    }
+    def orderCount() = spark.read.parquet(s"$d/orders.parquet").count()
+    try {
+      val (hll1, ord1, idx1, split1) = answers()
+      assert(hll1 == orderCount() && ord1 == orderCount())
+      assert(idx1.nonEmpty && idx1.forall(_ < split1))
+      val arts1 = artifactsOf(d)
+      rewrite(d, "orders.parquet", col("o_orderkey") % 2 === 0)
+      rewrite(d, "documents.parquet", col("doc_id") % 2 === 0)
+      val (hll2, ord2, idx2, split2) = answers()
+      assert(hll2 == orderCount() && hll2 < hll1, s"hll answered $hll2 orders")
+      assert(ord2 == orderCount() && ord2 < ord1, s"bucketed orders answered $ord2 rows")
+      assert(idx2.nonEmpty && idx2.forall(i => i % 2 == 0 && i < split2),
+        s"dedup index still holds ${idx2.filter(_ % 2 != 0).take(5)}")
+      Seq("graft_hll_", "graft_li_b_", "graft_ord_b_", "graft_dedup_idx_").foreach { f =>
+        assert(arts1.count(_.startsWith(f)) == 1, s"$f in $arts1")
+      }
+      val arts2 = artifactsOf(d)
+      val gone = arts1 -- arts2
+      assert(gone.map(_.replaceAll("_[0-9a-f]{8}$", "")) ==
+        Set("graft_hll", "graft_ord_b", "graft_dedup_idx"), s"$arts1 -> $arts2")
+      gone.foreach { n =>
+        assert(!new File(warehouseDir, n).exists(), s"stale $n survived")
+        assert(!spark.catalog.tableExists(n), s"stale table $n still registered")
+      }
+    } finally rmTree(new File(d))
+    graft.sources.Warehouse.gcStale(spark)
+    assert(artifactsOf(d).isEmpty)
+  }
+
+  test("only Warehouse reads the warehouse dir") {
+    val needle = Seq("spark", "sql", "warehouse", "dir").mkString(".")
+    val root = Paths.get("src/main/scala/graft")
+    assert(Files.isDirectory(root), s"$root not found")
+    val files = {
+      val w = Files.walk(root)
+      try w.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally w.close()
+    }
+    val hits = files.filter(_.getFileName.toString != "Warehouse.scala")
+      .filter(p => Files.readString(p).contains(needle))
+      .map(_.getFileName.toString)
+    assert(files.size > 20 && hits.isEmpty, hits.mkString("\n"))
   }
 
   test("metaless complete artifacts (pre-provenance) are collected") {
