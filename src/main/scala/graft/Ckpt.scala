@@ -4,6 +4,7 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.graft.CheckpointBridge
+import org.apache.spark.storage.StorageLevel
 
 /** The one lifecycle for cached and checkpointed intermediates: this
   * file is the only code under `graft` that persists, checkpoints or
@@ -11,14 +12,14 @@ import org.apache.spark.sql.graft.CheckpointBridge
   *
   * The rule: an operator opens `Ckpt.scoped { sc => … }` and creates
   * every intermediate it wants stored through the scope —
-  * `sc.persist` (a lazy cache) or `sc.checkpoint` (an eager local
-  * checkpoint that cuts lineage). When the body returns or throws,
-  * the scope releases all of them with a BLOCKING unpersist: async
-  * removal pushes the eviction work into whatever runs next, which in
-  * a benchmark suite is the next entry's timed region. Storage left
-  * for the driver GC to find is the leak class that inflated late
-  * suite queries 9-12x (dead checkpoint generations filling the
-  * executor store).
+  * `sc.persist` (a lazy cache of a frame or an RDD) or
+  * `sc.checkpoint` (an eager local checkpoint that cuts lineage). When
+  * the body returns or throws, the scope releases all of them with a
+  * BLOCKING unpersist: async removal pushes the eviction work into
+  * whatever runs next, which in a benchmark suite is the next entry's
+  * timed region. Storage left for the driver GC to find is the leak
+  * class that inflated late suite queries 9-12x (dead checkpoint
+  * generations filling the executor store).
   *
   * A frame that must outlive the scope leaves through `sc.keep`: an
   * eager checkpoint the scope does not free, so the result owns its
@@ -54,6 +55,12 @@ object Ckpt {
       val p = ds.persist()
       cached += p
       p
+    }
+
+    /** Lazily caches `rdd` (memory, spilling to disk) until the scope ends. */
+    def persist[T](rdd: RDD[T]): RDD[T] = {
+      rdds += rdd.persist(StorageLevel.MEMORY_AND_DISK)
+      rdd
     }
 
     /** Eagerly checkpoints `ds` (cuts its lineage) until the scope ends. */

@@ -14,9 +14,14 @@ import graft.sources.PointsText
   * Usage: KMeansApp <k> <input> <output> [seed]
   *
   * The reference runs one Hadoop job per iteration, re-reading the
-  * input from HDFS 20×; here the parsed points are cached once and
-  * each iteration is one map+combine job (`KMeans.sweep`): tasks
-  * assign and sum per cluster, the driver merges and divides.
+  * input from HDFS 20×; here the text is read once, one byte range per
+  * core (`PointsText.read`), and decoded once into packed, cached
+  * coordinate blocks (`PointsText.points`). The job that fills them
+  * also counts each block's points; the init picks its k lines from
+  * those counts in one small job, and each iteration is one map+combine
+  * job over the blocks (`KMeans.sweep`): tasks assign and sum per
+  * cluster, the driver merges and divides. With the centroid write,
+  * a run is iterations + 3 Spark jobs.
   */
 object KMeansApp {
   def main(args: Array[String]): Unit = {
@@ -37,13 +42,13 @@ object KMeansApp {
     */
   def run(spark: SparkSession, k: Int, input: String, output: String,
       seed: Option[Long]): (Array[(Double, Double)], Int, Boolean) = {
-    val init = PointsText.sampleCentroids(spark, input, k, seed)
-    init.zipWithIndex.foreach { case ((x, y), i) =>
-      println(s"init centroid $i: $x, $y")
-    }
     Ckpt.scoped { sc =>
-      val pts = sc.persist(PointsText.read(spark, input))
-      val result @ (centroids, iters, converged) = KMeans.lloyd(pts, init)
+      val pts = sc.persist(PointsText.points(spark, input))
+      val init = PointsText.pickCentroids(pts, k, seed)
+      init.zipWithIndex.foreach { case ((x, y), i) =>
+        println(s"init centroid $i: $x, $y")
+      }
+      val result @ (centroids, iters, converged) = KMeans.lloydPacked(pts, init)
       PointsText.writeCentroids(spark, centroids, output)
       println(s"finished after $iters iterations, converged=$converged")
       centroids.zipWithIndex.foreach { case ((x, y), i) =>

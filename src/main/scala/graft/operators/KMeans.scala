@@ -1,7 +1,9 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.ArrayType
 import graft.QueryDef
 import graft.sources.Tables
 import org.apache.spark.sql.graft.{ColumnBridge, NearestCentroid}
@@ -23,13 +25,15 @@ import org.apache.spark.sql.graft.{ColumnBridge, NearestCentroid}
   *
   * Spark-first design: centroids are O(k) driver-side values (the
   * reference ships them in the job Configuration; we ship them in the
-  * task closure). Each iteration is ONE map+combine job (`sweep`) over
-  * a plan built once per loop: every task assigns its points to the
-  * nearest centroid and sums them per cluster (the mapper and the
-  * combiner), and the driver adds the k per-partition partials and
-  * divides (the reducer). No shuffle, no per-iteration planning or
-  * codegen — the same shape that holds at 100 TB: per-iteration
-  * cluster traffic is O(k · partitions), never O(rows). The SQL-side
+  * task closure). A loop decodes its points once (`pack`: flat
+  * `double[]` coordinate blocks, cached for the loop) and each
+  * iteration is ONE map+combine job (`sweep`) over those blocks:
+  * every task assigns its points to the nearest centroid and sums them
+  * per cluster (the mapper and the combiner), and the driver adds the
+  * k per-partition partials and divides (the reducer). No shuffle, no
+  * per-iteration planning, codegen or row decoding — the same shape
+  * that holds at 100 TB: per-iteration cluster traffic is
+  * O(k · partitions), never O(rows). The SQL-side
   * entries (assignment counts, costs) use the NearestCentroid kernel,
   * whose argmin the sweep calls too.
   *
@@ -78,11 +82,8 @@ object KMeans {
 
   // ---- the Lloyd loop ------------------------------------------------
 
-  /** The (x, y, w, m) rows a sweep reads: coordinates, weight and
-    * membership mask (`-1L`: every row in every sweep). Planned once
-    * per loop: every sweep over the returned frame reuses its
-    * `queryExecution.toRdd`, so an iteration plans and compiles
-    * nothing.
+  /** The (x, y, w, m) rows `pack` reads: coordinates, weight and
+    * membership mask (`-1L`: every row in every sweep).
     */
   private[graft] def sweepRows(pts: DataFrame, w: Column = lit(1.0),
       m: Column = lit(-1L)): DataFrame =
@@ -94,6 +95,68 @@ object KMeans {
     */
   private[graft] def vectorRows(pts: DataFrame, v: Column): DataFrame =
     pts.select(v.cast("array<double>"), lit(1.0), lit(-1L))
+
+  /** Rows per packed block: bounds one block's arrays (128 KB of 2-D
+    * coordinates) however large a partition is.
+    */
+  private val BlockRows = 1 << 13
+
+  /** `n` consecutive rows of one partition, packed: row i's `dim`
+    * coordinates at `v(i·dim)` until `v((i+1)·dim)`, its weight and its
+    * mask. `w` is null when every weight is 1 and `m` when every mask
+    * is `-1L`, so an unweighted 2-D block holds 16 bytes a point.
+    */
+  private[graft] final class Block(val dim: Int, val n: Int, val v: Array[Double],
+      w: Array[Double], m: Array[Long]) extends Serializable {
+    def weight(i: Int): Double = if (w == null) 1.0 else w(i)
+    def mask(i: Int): Long = if (m == null) -1L else m(i)
+    def xy(i: Int): (Double, Double) = (v(i * dim), v(i * dim + 1))
+  }
+
+  /** Decodes `sweepRows` or `vectorRows` once into blocks, in partition
+    * order and with the input's partitions, so a sweep over the blocks
+    * visits the rows a row sweep would, in the same order. A row with a
+    * null coordinate, weight or mask takes part in no sweep and is
+    * dropped; the rows of a block share one vector length.
+    */
+  private[graft] def pack(rows: DataFrame): RDD[Block] = {
+    val vec = rows.schema.head.dataType.isInstanceOf[ArrayType]
+    val wi = if (vec) 1 else 2
+    rows.queryExecution.toRdd.mapPartitions { it =>
+      val live = it.filter(r =>
+        !r.isNullAt(0) && (vec || !r.isNullAt(1)) && !r.isNullAt(wi) && !r.isNullAt(wi + 1))
+      new Iterator[Block] {
+        def hasNext: Boolean = live.hasNext
+        def next(): Block = {
+          var dim = 2
+          var v: Array[Double] = null
+          val w = new Array[Double](BlockRows)
+          val m = new Array[Long](BlockRows)
+          var n = 0
+          while (n < BlockRows && live.hasNext) {
+            val r = live.next()
+            if (vec) {
+              val a = r.getArray(0)
+              if (v == null) { dim = a.numElements(); v = new Array[Double](BlockRows * dim) }
+              require(a.numElements() == dim,
+                s"a sweep row has ${a.numElements()} coordinates, the block's first has $dim")
+              var j = 0
+              while (j < dim) { v(n * dim + j) = a.getDouble(j); j += 1 }
+            } else {
+              if (v == null) v = new Array[Double](BlockRows * 2)
+              v(2 * n) = r.getDouble(0); v(2 * n + 1) = r.getDouble(1)
+            }
+            w(n) = r.getDouble(wi); m(n) = r.getLong(wi + 1)
+            n += 1
+          }
+          val ws = java.util.Arrays.copyOf(w, n)
+          val ms = java.util.Arrays.copyOf(m, n)
+          new Block(dim, n, if (n == BlockRows) v else java.util.Arrays.copyOf(v, n * dim),
+            if (ws.forall(_ == 1.0)) null else ws, if (ms.forall(_ == -1L)) null else ms)
+        }
+      }
+    }
+  }
 
   /** How a sweep scores a row against a centroid; the nearest is the
     * first minimum (lowest cid on ties), NaN after every number, as in
@@ -130,22 +193,24 @@ object KMeans {
       s
     }
 
-    /** The cid nearest the row coordinates `v` under `rule`. */
-    def nearest(v: Array[Double]): Int =
-      if (rule == Planar) NearestCentroid.argmin(cs, v(off), v(off + 1))
+    /** The cid nearest the row whose coordinates start at `v(at)`. */
+    def nearest(v: Array[Double], at: Int): Int = {
+      val o = at + off
+      if (rule == Planar) NearestCentroid.argmin(cs, v(o), v(o + 1))
       else {
-        val vv = if (rule == Euclid) dot(v, off, v, off) else 0.0
+        val vv = if (rule == Euclid) dot(v, o, v, o) else 0.0
         var best = 0.0
         var bestC = 0
         var c = 0
         while (c < k) {
-          val vc = dot(v, off, cs, c * dim)
+          val vc = dot(v, o, cs, c * dim)
           val d = if (rule == Euclid) vv - 2.0 * vc + norms(c) else 0.0 - vc
           if (c == 0 || d < best || (best.isNaN && !d.isNaN)) { best = d; bestC = c }
           c += 1
         }
         bestC
       }
+    }
   }
   private[graft] object Centroids {
     def planar(cs: Array[(Double, Double)]): Centroids =
@@ -154,42 +219,40 @@ object KMeans {
       Centroids(cs.flatten, cs.head.length, rule, off)
   }
 
-  /** One map+combine pass over `sweepRows` or `vectorRows` — the
-    * reference's mapper and combiner in one job with no shuffle. Each
-    * task takes the rows whose mask has `bit` set, assigns each to its
-    * nearest centroid in every set and sums (Σw·v…, Σw, n) per cluster
-    * over the set's coordinates; the driver adds the per-partition
-    * partials in partition order, so the result does not depend on
-    * task timing. A row with a null coordinate or weight column takes
-    * no part. Returns per set, per cluster, those dim + 2 numbers.
+  /** One map+combine pass over packed points — the reference's mapper
+    * and combiner in one job with no shuffle. Each task takes the rows
+    * whose mask has `bit` set, assigns each to its nearest centroid in
+    * every set and sums (Σw·v…, Σw, n) per cluster over the set's
+    * coordinates; the driver adds the per-partition partials in
+    * partition order, so the result does not depend on task timing.
+    * Returns per set, per cluster, those dim + 2 numbers.
     */
-  private[graft] def sweep(rows: DataFrame, sets: Seq[Centroids],
+  private[graft] def sweep(pts: RDD[Block], sets: Seq[Centroids],
       bit: Long): Seq[Array[Array[Double]]] = {
     val ss = sets.toArray
-    val vec = rows.schema.head.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType]
-    val (wi, need) = if (vec) (1, ss.map(s => s.off + s.dim).max) else (2, 2)
-    val parts = rows.queryExecution.toRdd.mapPartitions { it =>
+    val need = ss.map(s => s.off + s.dim).max
+    val parts = pts.mapPartitions { it =>
       val acc = ss.map(s => Array.fill(s.k)(new Array[Double](s.dim + 2)))
-      val v = new Array[Double](need)
-      it.foreach { r =>
-        if ((r.getLong(wi + 1) & bit) != 0L && !r.isNullAt(0) && !r.isNullAt(wi) &&
-            (vec || !r.isNullAt(1))) {
-          if (vec) {
-            val a = r.getArray(0)
-            require(a.numElements() >= need, s"a sweep row has ${a.numElements()} coordinates, need $need")
-            var j = 0
-            while (j < need) { v(j) = a.getDouble(j); j += 1 }
-          } else { v(0) = r.getDouble(0); v(1) = r.getDouble(1) }
-          val w = r.getDouble(wi)
-          var s = 0
-          while (s < ss.length) {
-            val set = ss(s)
-            val a = acc(s)(set.nearest(v))
-            var j = 0
-            while (j < set.dim) { a(j) += w * v(set.off + j); j += 1 }
-            a(set.dim) += w; a(set.dim + 1) += 1
-            s += 1
+      it.foreach { b =>
+        require(b.dim >= need, s"a sweep row has ${b.dim} coordinates, need $need")
+        val v = b.v
+        var i = 0
+        while (i < b.n) {
+          if ((b.mask(i) & bit) != 0L) {
+            val at = i * b.dim
+            val w = b.weight(i)
+            var s = 0
+            while (s < ss.length) {
+              val set = ss(s)
+              val a = acc(s)(set.nearest(v, at))
+              val o = at + set.off
+              var j = 0
+              while (j < set.dim) { a(j) += w * v(o + j); j += 1 }
+              a(set.dim) += w; a(set.dim + 1) += 1
+              s += 1
+            }
           }
+          i += 1
         }
       }
       Iterator.single(acc)
@@ -227,7 +290,8 @@ object KMeans {
     }
   }
 
-  /** Lloyd over several centroid sets at once: one sweep per
+  /** Lloyd over several centroid sets at once on `rows` (`sweepRows` or
+    * `vectorRows`), packed once and cached for the loop: one sweep per
     * iteration serves every set still running. A set stops on its own
     * after `maxIter` iterations or once it converges (per-axis `tol`,
     * KMeans.java:104-115), and drops out of later sweeps. Empty
@@ -237,13 +301,19 @@ object KMeans {
     */
   private[graft] def lloydSets(rows: DataFrame, inits: Seq[Centroids],
       tol: Double, maxIter: Int, drop: Boolean = false,
+      bit: Int => Long = _ => -1L): Seq[Fit] =
+    graft.Ckpt.scoped(sc => fitSets(sc.persist(pack(rows)), inits, tol, maxIter, drop, bit))
+
+  /** `lloydSets` over points already packed. */
+  private[graft] def fitSets(pts: RDD[Block], inits: Seq[Centroids],
+      tol: Double, maxIter: Int, drop: Boolean = false,
       bit: Int => Long = _ => -1L): Seq[Fit] = {
     var fits = inits.map(cs =>
       Fit(cs, (0 until cs.k).toArray, 0, converged = false, new Array[Long](cs.k)))
     var i = 0
     while (i < maxIter && fits.exists(!_.converged)) {
       val active = fits.indices.filterNot(fits(_).converged)
-      sweep(rows, active.map(fits(_).set), bit(i)).zip(active).foreach { case (sums, f) =>
+      sweep(pts, active.map(fits(_).set), bit(i)).zip(active).foreach { case (sums, f) =>
         fits = fits.updated(f, fits(f).next(sums, tol, drop))
       }
       i += 1
@@ -254,8 +324,7 @@ object KMeans {
   /** `iters` Lloyd iterations with no early stop, dropping empty
     * clusters (matches the generated SQL oracle). Returns the final
     * centroids keyed by their first cid. `weight` turns each mean into
-    * Σw·x / Σw (weighted Lloyd). Caller should persist `pts`: each
-    * iteration is a full pass.
+    * Σw·x / Σw (weighted Lloyd).
     */
   def iterate(pts: DataFrame, init: Array[(Double, Double)], iters: Int,
       weight: Column = lit(1.0)): Map[Int, (Double, Double)] = {
@@ -269,8 +338,13 @@ object KMeans {
     * empty clusters keep their previous centroid.
     */
   def lloyd(pts: DataFrame, init: Array[(Double, Double)],
+      tol: Double = 1e-3, maxIter: Int = 20): (Array[(Double, Double)], Int, Boolean) =
+    graft.Ckpt.scoped(sc => lloydPacked(sc.persist(pack(sweepRows(pts))), init, tol, maxIter))
+
+  /** `lloyd` over 2-D points already packed. */
+  private[graft] def lloydPacked(pts: RDD[Block], init: Array[(Double, Double)],
       tol: Double = 1e-3, maxIter: Int = 20): (Array[(Double, Double)], Int, Boolean) = {
-    val f = lloydSets(sweepRows(pts), Seq(Centroids.planar(init)), tol, maxIter).head
+    val f = fitSets(pts, Seq(Centroids.planar(init)), tol, maxIter).head
     (f.set.pairs, f.iters, f.converged)
   }
 
@@ -291,8 +365,8 @@ object KMeans {
       s"minibatchLloyd needs 1 <= maxIter <= 20 and frac >= 1, got maxIter=$maxIter, frac=$frac")
     // md5-derived rotating batches (not xxhash64) so the DuckDB
     // oracle replays the identical samples — hashed ONCE per row:
-    // two md5 strings carry twenty 12-bit slices, folded at
-    // materialization into a single 20-BIT MEMBERSHIP MASK long
+    // two md5 strings carry twenty 12-bit slices, folded when the
+    // points are packed into a single 20-BIT MEMBERSHIP MASK long
     // (bit i set ⇔ row in iteration i's batch), so iteration i's sweep
     // reads the rows with bit i set: no per-iteration filter plan, and
     // no per-row string hash or substring+conv.
@@ -319,12 +393,9 @@ object KMeans {
       when(pmod(shiftright(half, sh).bitwiseAND(lit(4095L)), lit(frac)) === 0,
         lit(1L << i)).otherwise(lit(0L))
     }.reduce(_ + _)
-    graft.Ckpt.scoped { sc =>
-      val hashed = sc.persist(halves.select(col("x"), col("y"), mask.as("bmask")))
-      val f = lloydSets(sweepRows(hashed, m = col("bmask")), Seq(Centroids.planar(init)), tol,
-        maxIter, bit = i => 1L << i).head
-      (f.set.pairs, f.iters, f.converged)
-    }
+    val f = lloydSets(sweepRows(halves, m = mask), Seq(Centroids.planar(init)), tol,
+      maxIter, bit = i => 1L << i).head
+    (f.set.pairs, f.iters, f.converged)
   }
 
   // ---- DuckDB oracle generation --------------------------------------
@@ -454,7 +525,7 @@ object KMeans {
       "\nSELECT cid, round(x, 3) AS cx, round(y, 3) AS cy FROM c3 ORDER BY cid") { (s, d) =>
     val all = points(Tables.lineitem(s, d))
     val init = initCentroids(all)
-    centroidRows(s, graft.Ckpt.scoped(sc => iterate(sc.persist(all.select("x", "y")), init, 3)))
+    centroidRows(s, iterate(all, init, 3))
   }
 
   /** (cid, cx, cy) rows of an `iterate` result, rounded as the oracle rounds. */
@@ -491,9 +562,7 @@ object KMeans {
         |FROM allc a JOIN nit ON a.iter = nit.n_iters ORDER BY a.cid""".stripMargin) { (s, d) =>
     val all = points(Tables.lineitem(s, d))
     val init = initCentroids(all)
-    // cache only what the loop reads: 16 bytes/row
-    val (cs, iters, converged) =
-      graft.Ckpt.scoped(sc => lloyd(sc.persist(all.select("x", "y")), init))
+    val (cs, iters, converged) = lloyd(all, init)
     import s.implicits._
     cs.zipWithIndex.map { case ((x, y), i) =>
       (i.toLong, math.round(x * 1000) / 1000.0, math.round(y * 1000) / 1000.0,
@@ -632,11 +701,7 @@ object KMeans {
     "kmeans_minibatch", minibatchOracle(K, 20, 1e-3, 5)) { (s, d) =>
     val allPts = points(Tables.lineitem(s, d))
     val init = initCentroids(allPts)
-    // no outer persist: minibatchLloyd scans pts exactly once (to
-    // build its own cached mask frame) — a second cache here only
-    // paid materialization for a single read
-    val pts = allPts.select("x", "y")
-    val (cs, iters, converged) = minibatchLloyd(pts, init)
+    val (cs, iters, converged) = minibatchLloyd(allPts, init)
     import s.implicits._
     cs.zipWithIndex.map { case ((x, y), i) =>
       (i.toLong, math.round(x * 1000) / 1000.0, math.round(y * 1000) / 1000.0,
@@ -902,7 +967,7 @@ object KMeans {
         |FROM sil GROUP BY cid ORDER BY cid""".stripMargin) { (s, d) =>
     val all = points(Tables.lineitem(s, d))
     val init = initCentroids(all)
-    val fin = graft.Ckpt.scoped(sc => iterate(sc.persist(all.select("x", "y")), init, 3))
+    val fin = iterate(all, init, 3)
     val ordered = fin.toSeq.sortBy(_._1)
     val ids = ordered.map(_._1).toArray
     val cs = ordered.map(_._2).toArray
@@ -965,24 +1030,24 @@ object KMeans {
     val all = points(Tables.lineitem(s, d))
     val init = initCentroids(all)
     // weight = l_quantity = x
-    centroidRows(s, graft.Ckpt.scoped(sc =>
-      iterate(sc.persist(all.select("x", "y")), init, 3, weight = col("x"))))
+    centroidRows(s, iterate(all, init, 3, weight = col("x")))
   }
 
   /** Streaming k-means: centroids maintained across micro-batches by
     * count-weighted blending (the Sculley mini-batch rule with the
     * per-cluster history count as the learning-rate denominator —
     * MLlib's StreamingKMeans update with decay 1). Batch b is the rows
-    * whose mask has bit b set, blended in order, each one sweep over
-    * ONLY that batch's rows. Returns the centroids and the points each
-    * has seen.
+    * of `rows` (`sweepRows`, packed once) whose mask has bit b set,
+    * blended in order, each one sweep over ONLY that batch's rows.
+    * Returns the centroids and the points each has seen.
     */
   private[graft] def streamBlend(rows: DataFrame, init: Array[(Double, Double)],
-      batches: Int): (Array[(Double, Double)], Array[Long]) = {
+      batches: Int): (Array[(Double, Double)], Array[Long]) = graft.Ckpt.scoped { sc =>
+    val pts = sc.persist(pack(rows))
     val cs = init.clone()
     val counts = Array.fill(cs.length)(0L)
     (0 until batches).foreach { b =>
-      val sums = sweep(rows, Seq(Centroids.planar(cs)), 1L << b).head
+      val sums = sweep(pts, Seq(Centroids.planar(cs)), 1L << b).head
       cs.indices.foreach { c =>
         val Array(sx, sy, sw, n) = sums(c)
         val bn = n.toLong
@@ -1211,7 +1276,7 @@ object KMeans {
     }
     val cs = chosen.toArray
     // candidate weights: nearest-point population, one sweep
-    val wts = sweep(sweepRows(pts), Seq(Centroids.planar(cs)), -1L).head.map(_(3))
+    val wts = sweep(pack(sweepRows(pts)), Seq(Centroids.planar(cs)), -1L).head.map(_(3))
     // driver-side weighted greedy ++ seeding over the candidate set
     def d2p(a: (Double, Double), b: (Double, Double)): Double = {
       val dx = a._1 - b._1; val dy = a._2 - b._2; dx * dx + dy * dy
@@ -1479,20 +1544,21 @@ object KMeans {
       spherical(pts, init, iters)
     }
 
-  /** Spherical Lloyd over the unit vectors `v` of `pts`: one `Cosine`
-    * sweep per iteration, each centroid to its re-normalized mean Σv/n.
+  /** Spherical Lloyd over the unit vectors `v` of `pts`, packed once:
+    * one `Cosine` sweep per iteration, each centroid to its
+    * re-normalized mean Σv/n.
     * Returns (unit centroids, sizes, per-cluster mean cosine Σv·c/n of
     * the FINAL assignment, per-iteration avg max-cosine, which
     * alternating maximization makes non-decreasing). An empty cluster
     * keeps its centroid and last mean cosine, with size 0.
     */
   private[graft] def spherical(pts: DataFrame, init: Array[Array[Double]], iters: Int)
-      : (Array[Array[Double]], Array[Long], Array[Double], Seq[Double]) = {
+      : (Array[Array[Double]], Array[Long], Array[Double], Seq[Double]) = graft.Ckpt.scoped { sc =>
     var cs = init
     val dim = cs.head.length
     val sizes = new Array[Long](cs.length)
     val cos = new Array[Double](cs.length)
-    val rows = vectorRows(pts, col("v"))
+    val rows = sc.persist(pack(vectorRows(pts, col("v"))))
     val traj = (1 to iters).map { _ =>
       val sums = sweep(rows, Seq(Centroids.of(cs, Cosine)), -1L).head
       cs = cs.indices.map { c =>

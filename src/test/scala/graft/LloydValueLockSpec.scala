@@ -14,7 +14,10 @@ import graft.operators.{KMeans, Similarity}
   * PQ), copied here as the reference. Unrounded centroids agree to
   * 1e-9 relative; iteration counts, convergence flags and cluster sizes
   * agree exactly. Inputs plant exact ties, a duplicated centroid (an
-  * empty cluster) and a NaN coordinate.
+  * empty cluster) and a NaN coordinate. The sweep over packed blocks
+  * returns the row-decoding sweep's sums bit for bit, and KMeansApp's
+  * one-read text path picks the init the count + zipWithIndex path
+  * picked.
   */
 class LloydValueLockSpec extends AnyFunSuite {
   import TestSpark._
@@ -383,5 +386,158 @@ class LloydValueLockSpec extends AnyFunSuite {
     val got = Similarity.fitSubspaceCodebooks(sample)
     assert(got.length == Similarity.PqM)
     ref.zip(got).zipWithIndex.foreach { case ((r, g), m) => assertSameVecs(s"subspace $m", r.toSeq, g.toSeq) }
+  }
+
+  // ---- the row sweep the packed sweep replaced (reference) ------------
+
+  /** The sweep over `sweepRows`/`vectorRows` frames as it was before
+    * the points were packed: every row decoded from the frame's
+    * `queryExecution.toRdd` on every sweep.
+    */
+  private def rowSweep(rows: DataFrame, sets: Seq[KMeans.Centroids],
+      bit: Long): Seq[Array[Array[Double]]] = {
+    val ss = sets.toArray
+    val vec = rows.schema.head.dataType.isInstanceOf[ArrayType]
+    val (wi, need) = if (vec) (1, ss.map(s => s.off + s.dim).max) else (2, 2)
+    val parts = rows.queryExecution.toRdd.mapPartitions { it =>
+      val acc = ss.map(s => Array.fill(s.k)(new Array[Double](s.dim + 2)))
+      val v = new Array[Double](need)
+      it.foreach { r =>
+        if ((r.getLong(wi + 1) & bit) != 0L && !r.isNullAt(0) && !r.isNullAt(wi) &&
+            (vec || !r.isNullAt(1))) {
+          if (vec) {
+            val a = r.getArray(0)
+            var j = 0
+            while (j < need) { v(j) = a.getDouble(j); j += 1 }
+          } else { v(0) = r.getDouble(0); v(1) = r.getDouble(1) }
+          val w = r.getDouble(wi)
+          var s = 0
+          while (s < ss.length) {
+            val set = ss(s)
+            val a = acc(s)(set.nearest(v, 0))
+            var j = 0
+            while (j < set.dim) { a(j) += w * v(set.off + j); j += 1 }
+            a(set.dim) += w; a(set.dim + 1) += 1
+            s += 1
+          }
+        }
+      }
+      Iterator.single(acc)
+    }.collect()
+    ss.indices.map(s => Array.tabulate(ss(s).k) { c =>
+      val sum = new Array[Double](ss(s).dim + 2)
+      parts.foreach(p => sum.indices.foreach(i => sum(i) += p(s)(c)(i)))
+      sum
+    })
+  }
+
+  /** Bit for bit (NaN equals NaN, 0.0 differs from -0.0). */
+  private def assertExact(at: String, ref: Seq[Array[Array[Double]]],
+      got: Seq[Array[Array[Double]]]): Unit = {
+    def bits(sums: Seq[Array[Array[Double]]]) =
+      sums.map(_.map(_.map(java.lang.Double.doubleToLongBits).toSeq).toSeq)
+    assert(bits(got) == bits(ref), s"$at: ${got.map(_.map(_.mkString(",")).mkString("; "))} vs " +
+      ref.map(_.map(_.mkString(",")).mkString("; ")))
+  }
+
+  /** Each sweep of `sets` over `rows`, packed and row by row, for every
+    * bit in `bits`; the pack is built once, as a loop builds it.
+    */
+  private def assertSweepsExact(label: String, rows: DataFrame, sets: Seq[KMeans.Centroids],
+      bits: Seq[Long]): Unit = Ckpt.scoped { sc =>
+    val packed = sc.persist(KMeans.pack(rows))
+    bits.foreach { bit =>
+      assertExact(s"$label, bit $bit", rowSweep(rows, sets, bit), KMeans.sweep(packed, sets, bit))
+    }
+  }
+
+  test("the packed 2-D sweep returns the row sweep's sums exactly: weights, masks, nulls, NaN") {
+    val ps = blobs :+ ((Double.NaN, 3.0))
+    val rows = ps.zipWithIndex.map { case ((x, y), i) =>
+      Row(x, y, 0.5 + i % 5, 1L << (i % 3))
+    } ++ Seq(Row(null, 1.0, 1.0, -1L), Row(2.0, null, 1.0, -1L), Row(3.0, 4.0, null, -1L),
+      Row(5.0, 6.0, 1.0, null))
+    // null rows land in every partition
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(
+      rows.zipWithIndex.sortBy { case (_, i) => (i * 7919) % rows.length }.map(_._1), 4),
+      StructType(Seq(StructField("x", DoubleType), StructField("y", DoubleType),
+        StructField("w", DoubleType), StructField("m", org.apache.spark.sql.types.LongType))))
+    val sets = Seq(KMeans.Centroids.planar(init), KMeans.Centroids.planar(init.take(3)))
+    assertSweepsExact("weighted, masked", KMeans.sweepRows(df, col("w"), col("m")), sets,
+      Seq(-1L, 1L, 2L, 4L, 6L))
+    assertSweepsExact("unweighted", KMeans.sweepRows(df), sets, Seq(-1L))
+  }
+
+  test("the packed n-D sweep returns the row sweep's sums exactly: Euclid at an offset, Cosine") {
+    val r = new scala.util.Random(23L)
+    val vs = ndBlobs.map(a => a ++ a.map(_ * 0.5 + r.nextGaussian())) :+
+      Array(0.5, Double.NaN, 0, 0, 1, 2, 3, 4)
+    val rows = vs.map(v => Row(v.toSeq)) :+ Row(null)
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 4),
+      StructType(Seq(StructField("v", ArrayType(DoubleType)))))
+    val euclid = Seq(KMeans.Centroids.of(ndInit, off = 4), KMeans.Centroids.of(ndInit),
+      KMeans.Centroids.of(Array.tabulate(3, 8)((c, j) => c - j * 0.25)))
+    assertSweepsExact("Euclid", KMeans.vectorRows(df, col("v")), euclid, Seq(-1L))
+    val unit = spark.createDataFrame(spark.sparkContext.parallelize(
+      vs.map(v => Row(l2norm(v).toSeq)), 4), StructType(Seq(StructField("v", ArrayType(DoubleType)))))
+    assertSweepsExact("Cosine", KMeans.vectorRows(unit, col("v")),
+      Seq(KMeans.Centroids.of(ndInit.map(c => l2norm(c ++ c)), KMeans.Cosine)), Seq(-1L))
+  }
+
+  // ---- KMeansApp against the text path it replaced (reference) --------
+
+  /** `PointsText.read` as it was: Spark's own file splits. */
+  private def parentRead(path: String): DataFrame =
+    spark.read.text(path)
+      .select(split(col("value"), ",").as("p"))
+      .select(element_at(col("p"), 1).cast("double").as("x"),
+        element_at(col("p"), 2).cast("double").as("y"))
+
+  /** `PointsText.sampleCentroids` as it was: a count, then the picked
+    * line numbers found by `zipWithIndex` over the text.
+    */
+  private def parentSample(path: String, k: Int, seed: Long): Array[(Double, Double)] = {
+    val lines = spark.read.text(path)
+    val n = lines.count()
+    val rnd = new scala.util.Random(seed)
+    val picked = scala.collection.mutable.LinkedHashSet.empty[Long]
+    while (picked.size < k) picked += rnd.nextLong(n)
+    val wanted = picked.toSet
+    lines.rdd.zipWithIndex()
+      .filter { case (_, i) => wanted.contains(i) }
+      .map { case (r, i) =>
+        val p = r.getString(0).split(",")
+        (i, (p(0).trim.toDouble, p(1).trim.toDouble))
+      }
+      .collect().sortBy(_._1).map(_._2)
+  }
+
+  test("KMeansApp on one text file: the parent's init, and lloyd's centroids over the parent's read") {
+    val dir = java.nio.file.Files.createTempDirectory("km_app_lock")
+    val in = dir.resolve("points.txt")
+    val r = new scala.util.Random(5L)
+    java.nio.file.Files.write(in, Seq.tabulate(30000) { i =>
+      val (cx, cy) = centers(i % 4)
+      s"${cx + r.nextGaussian() * 4},${cy + r.nextGaussian() * 4}"
+    }.mkString("", "\n", "\n").getBytes("UTF-8"))
+    Seq(1L, 7L, 41L, 123L, 2024L).foreach { seed =>
+      val printed = new java.io.ByteArrayOutputStream
+      val (cs, iters, converged) = Console.withOut(printed) {
+        KMeansApp.run(spark, 8, in.toString, dir.resolve(s"out$seed").toString, Some(seed))
+      }
+      val appInit = printed.toString("UTF-8").linesIterator.collect {
+        case l if l.startsWith("init centroid ") =>
+          val Array(x, y) = l.substring(l.indexOf(':') + 1).split(",").map(_.trim.toDouble)
+          (x, y)
+      }.toSeq
+      val init = parentSample(in.toString, 8, seed)
+      assert(appInit == init.toSeq, s"seed $seed: init")
+      val (rc, ri, rconv) = Ckpt.scoped(sc => KMeans.lloyd(sc.persist(parentRead(in.toString)), init))
+      assert(iters == ri && converged == rconv, s"seed $seed: ($iters, $converged) vs ($ri, $rconv)")
+      rc.zip(cs).zipWithIndex.foreach { case (((rx, ry), (gx, gy)), c) =>
+        assert(math.abs(rx - gx) <= 1e-9 && math.abs(ry - gy) <= 1e-9,
+          s"seed $seed, centroid $c: ($rx, $ry) vs ($gx, $gy)")
+      }
+    }
   }
 }

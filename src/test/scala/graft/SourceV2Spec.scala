@@ -24,10 +24,14 @@ class SourceV2Spec extends AnyFunSuite {
     .option("path", dir).load()
 
   test("v2 read matches the v1 text parser exactly") {
-    val a = v2.agg(count(lit(1)), sum("x"), sum("y")).collect()(0)
-    val b = graft.sources.PointsText.read(spark, dir)
-      .agg(count(lit(1)), sum("x"), sum("y")).collect()(0)
-    assert(a == b)
+    // every parsed row, not an order-dependent float sum: the two
+    // readers split the files differently
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("x", "y").collect().map(r => (r.getDouble(0), r.getDouble(1)))
+        .sorted(Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Double.TotalOrdering)).toSeq
+    val a = rows(v2)
+    val b = rows(graft.sources.PointsText.read(spark, dir))
+    assert(a.nonEmpty && a == b)
   }
 
   test("comparison filter is pushed into the scan with no residual; pruning drops y") {
