@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.operators.{Dedup, TextAnalysis}
 import graft.sources.Tables
 
@@ -54,8 +56,7 @@ object CurateApp {
   /** The full job against an existing session (what main and tests
     * both drive). Returns the curated row count. The input goes
     * through `Tables.parquet` (schema inferred once per content); the
-    * count reads the output back with the schema it was written with,
-    * so neither read pays a schema-inference job on a repeated run.
+    * count is observed on the write (`writeCounted`), not read back.
     */
   def run(spark: SparkSession, input: String, output: String,
       qualityMin: Double = 0.75, lang: String = "en"): Long = {
@@ -68,12 +69,35 @@ object CurateApp {
       // survivor each; the survivors may read component labels that
       // nearDedupedCorpus kept, which the scope adopts
       val sh = sc.persist(Dedup.shinglesHashed(exact))
-      val pairs = sc.checkpoint(sc.adopt(Dedup.jaccardVerify(sh,
-        Dedup.lshCandidates(Dedup.minhashSignatures(sh)), 0.8)).select("id1", "id2"))
+      val pairs = sc.adopt(Dedup.jaccardVerify(sh,
+        Dedup.lshCandidates(Dedup.minhashSignatures(sh)), 0.8)).select("id1", "id2")
       val curated = sc.adopt(Dedup.nearDedupedCorpus(exact, pairs))
-      curated.write.mode("overwrite").parquet(output)
-      spark.read.schema(curated.schema).parquet(output).count()
+      writeCounted(curated, output)
     }
+  }
+
+  /** Writes `df` as parquet to `output` and returns the rows written,
+    * counted by a `Dataset.observe` metric on the write itself, so no
+    * job reads the output back. The metric reaches the driver with the
+    * write's query-execution event. (The `Observation` class waits for
+    * it the same way, but it leaves a non-serializable manager in the
+    * session, and any task closure that captures the session then
+    * fails to serialize — an MLlib model's training summary does.)
+    */
+  private def writeCounted(df: DataFrame, output: String): Long = {
+    val name = s"graft_rows_${java.util.UUID.randomUUID}"
+    val rows = scala.concurrent.Promise[Long]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        qe.observedMetrics.get(name).foreach(r => rows.trySuccess(r.getLong(0)))
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    df.sparkSession.listenerManager.register(listener)
+    try {
+      df.observe(name, count(lit(1))).write.mode("overwrite").parquet(output)
+      // the write has returned: only the event's delivery is left
+      scala.concurrent.Await.result(rows.future, scala.concurrent.duration.Duration(5, "min"))
+    } finally df.sparkSession.listenerManager.unregister(listener)
   }
 
   def main(args: Array[String]): Unit = {

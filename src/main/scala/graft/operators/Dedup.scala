@@ -77,12 +77,21 @@ object Dedup {
       .orderBy(col("n_copies"))
   }
 
+  /** doc_id → `toks`, the lower-cased whitespace tokens, computed once
+    * per row in a Generate (`inline(array(struct(toks)))`). A filter on
+    * `toks` reads the Generate's output and cannot be pushed below it;
+    * selected from a Project instead, the optimizer's filter pushdown
+    * would copy the tokenizer into the pushed-down Filter and every
+    * document would be tokenized twice.
+    */
+  private def tokens(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), inline(array(struct(
+      regexp_extract_all(lower(col("text")), lit("\\S+"), lit(0)).as("toks")))))
+
   /** doc_id → exploded distinct word-3-shingles. */
   def shingles(docs: DataFrame, bound: Option[Long] = None): DataFrame = {
     val base = bound.fold(docs)(b => docs.filter(col("doc_id") < b))
-    base
-      .select(col("doc_id"),
-        regexp_extract_all(lower(col("text")), lit("\\S+"), lit(0)).as("toks"))
+    tokens(base)
       .filter(size(col("toks")) >= 3)
       .select(col("doc_id"), explode(
         graft.functions.TextFunctions.word_grams(col("toks"), 3)).as("sh"))
@@ -90,7 +99,10 @@ object Dedup {
   }
 
   /** Exact pairwise Jaccard ≥ threshold over candidate pairs.
-    * `pairs` must have columns (id1, id2).
+    * `pairs` must have columns (id1, id2). The result (id1, id2,
+    * jaccard) is unordered: no pipeline consumer needs an order, and a
+    * global sort costs a sampling job plus an exchange, so an entry
+    * that returns the pairs sorts them itself.
     *
     * Join order matters at scale: candidates first, shingles second —
     * the co-occurrence work is O(|candidates| · shingles/doc). Joining
@@ -108,8 +120,9 @@ object Dedup {
     // denominator negative and silently rejects every true pair
     // (stream_dedup_indexed returned 0 rows for exactly this reason
     // until a planted cross-batch duplicate exposed it).
-    // The result reads this checkpoint: a caller that consumes the
-    // pairs inside a scope adopts the result so the scope frees it.
+    // The result reads this checkpoint (and, in the intersect shape,
+    // the arrays' one): a caller that consumes the pairs inside a
+    // scope adopts the result so the scope frees them.
     val p = graft.Ckpt.keep(pairs.select(col("id1"), col("id2")).distinct())
     // Candidate ids are small BY LSH CONSTRUCTION (only colliding
     // buckets pair up); the corpus is not. Everything broadcast below
@@ -146,14 +159,20 @@ object Dedup {
     val counted =
       if (Regime.fits(sh.sparkSession, "dedup.jaccard_verify",
           Regime.planBytes(sh) * 4, ("intersect", "join_expand"))) {
-        val arrays = sh.join(broadcast(candIds), Seq("doc_id"), "left_semi")
-          .groupBy(col("doc_id")).agg(collect_set(col("sh")).as("shs"))
-        p.join(broadcast(arrays.select(col("doc_id").as("id1"), col("shs").as("shs1"))), "id1")
-          .join(broadcast(arrays.select(col("doc_id").as("id2"), col("shs").as("shs2"))), "id2")
+        // The arrays are checkpointed so that both ids read one
+        // aggregate and one broadcast. Two references to a lazy plan
+        // would build them twice whenever `sh` is cached (as every
+        // pipeline caches it): AQE cannot reuse an exchange above a
+        // cached scan, whose table-cache stage is never shared. Over
+        // the checkpoint the two broadcasts are one exchange.
+        val arrays = graft.Ckpt.keep(sh.join(broadcast(candIds), Seq("doc_id"), "left_semi")
+          .groupBy(col("doc_id")).agg(collect_set(col("sh")).as("shs")))
+        p.join(broadcast(arrays.as("a1")), col("id1") === col("a1.doc_id"))
+          .join(broadcast(arrays.as("a2")), col("id2") === col("a2.doc_id"))
           .select(col("id1"), col("id2"),
-            size(array_intersect(col("shs1"), col("shs2"))).cast("long").as("inter"),
-            size(col("shs1")).cast("long").as("n1"),
-            size(col("shs2")).cast("long").as("n2"))
+            size(array_intersect(col("a1.shs"), col("a2.shs"))).cast("long").as("inter"),
+            size(col("a1.shs")).cast("long").as("n1"),
+            size(col("a2.shs")).cast("long").as("n2"))
           .filter(col("inter") >= 1L)
       } else {
         // scale fallback: the r10 join-expansion shape, unchanged
@@ -174,7 +193,6 @@ object Dedup {
         col("inter").cast("double") / (col("n1") + col("n2") - col("inter")))
       .filter(col("jaccard") >= threshold)
       .select(col("id1"), col("id2"), round(col("jaccard"), 4).as("jaccard"))
-      .orderBy(col("id1"), col("id2"))
   }
 
   /** Exact pairwise n-gram Jaccard ≥ threshold on a bounded id range:
@@ -282,9 +300,7 @@ object Dedup {
     * candidate-sized shuffle instead of a corpus-sized one).
     */
   def shinglesHashed(docs: DataFrame): DataFrame =
-    docs
-      .select(col("doc_id"),
-        regexp_extract_all(lower(col("text")), lit("\\S+"), lit(0)).as("toks"))
+    tokens(docs)
       .filter(size(col("toks")) >= 3)
       // native per-row loop over the exact multi-arg xxhash64 seed
       // chain — value-identical to the transform(sequence, xxhash64)
@@ -380,7 +396,7 @@ object Dedup {
     graft.Ckpt.scoped { sc =>
       val sh = sc.persist(stagedShingles(s, d))
       val cand = lshCandidates(minhashSignatures(sh))
-      sc.keep(sc.adopt(jaccardVerify(sh, cand, 0.8)))
+      sc.keep(sc.adopt(jaccardVerify(sh, cand, 0.8)).orderBy(col("id1"), col("id2")))
     }
   }
 
@@ -420,19 +436,67 @@ object Dedup {
 
   // ---- Near-dup group resolution (connected components) --------------
 
-  /** Driver heap per collected edge on the union-find path, measured
-    * on JDK 17 (compressed oops) by retained heap after GC over 1M
-    * disjoint edges: 101 B for the collected Row, 44 B for its
-    * (Long, Long) copy, 103 B for the union-find map entries of its
-    * two nodes — 248 B, rounded up.
+  /** Driver heap budgeted per collected edge on the union-find path:
+    * 16 B of packed ids (`packedEdges`) and 103 B for the union-find
+    * map entries of its two nodes, measured on JDK 17 (compressed
+    * oops) by retained heap after GC over 1M disjoint edges. The
+    * constant is the 256 B measured when an edge also arrived as a
+    * Row (101 B) with a (Long, Long) copy (44 B), kept so that the
+    * graph size at which the regime flips has not moved.
     */
   private val DriverBytesPerEdge = 256L
 
-  /** Driver-side union-find (path compression, min-id roots) — one
-    * collect, zero iterative Spark rounds. Returns the same
-    * (id, label = component min) contract as the distributed loop.
+  /** The edges of `pairs` (id1, id2), one array per partition with the
+    * two ids of each edge side by side: 16 bytes an edge, cached or
+    * shipped.
     */
-  private def localComponents(s: SparkSession, edges: Array[(Long, Long)]): DataFrame = {
+  private def packedEdges(pairs: DataFrame): org.apache.spark.rdd.RDD[Array[Long]] =
+    pairs.select(col("id1").cast("long"), col("id2").cast("long")).queryExecution.toRdd
+      .mapPartitions { rows =>
+        val ids = new scala.collection.mutable.ArrayBuilder.ofLong
+        rows.foreach { r =>
+          require(!r.isNullAt(0) && !r.isNullAt(1), "null id in the pair graph")
+          ids += r.getLong(0)
+          ids += r.getLong(1)
+        }
+        Iterator.single(ids.result())
+      }
+
+  /** The number of edges in `packed` and, when it is at most `cap`,
+    * the edges themselves. One job reads every partition (filling the
+    * cache of a persisted `packed`): each task returns its partition's
+    * edge count, and its edges only when that count is at most its
+    * share, cap / partitions + 1. So the driver receives at most
+    * cap + partitions edges, whatever the size of the graph. When the
+    * total fits but a skewed partition went over its share, a second
+    * job fetches just those partitions.
+    */
+  private def boundedEdges(packed: org.apache.spark.rdd.RDD[Array[Long]],
+      cap: Long): (Long, Option[Array[Long]]) = {
+    val share = cap / math.max(1, packed.getNumPartitions) + 1
+    val parts = packed.sparkContext.runJob(packed, (it: Iterator[Array[Long]]) => {
+      val ids = it.next()
+      val n = ids.length / 2L
+      (n, if (n <= share) ids else null)
+    })
+    val total = parts.map(_._1).sum
+    if (total > cap) (total, None)
+    else {
+      val over = parts.indices.filter(i => parts(i)._2 == null)
+      // (a job over no partition still posts a job start)
+      val fetched = if (over.isEmpty) Map.empty[Int, Array[Long]]
+        else over.zip(packed.sparkContext.runJob(packed,
+          (it: Iterator[Array[Long]]) => it.next(), over)).toMap
+      (total, Some(parts.indices.flatMap(i => fetched.getOrElse(i, parts(i)._2)).toArray))
+    }
+  }
+
+  /** Driver-side union-find (path compression, min-id roots) over
+    * packed edges (the two ids of each side by side) — zero iterative
+    * Spark rounds. Returns the same (id, label = component min)
+    * contract as the distributed loop.
+    */
+  private def localComponents(s: SparkSession, edges: Array[Long]): DataFrame = {
     val parent = scala.collection.mutable.LongMap.empty[Long]
     def find(x: Long): Long = {
       var r = x
@@ -441,7 +505,8 @@ object Dedup {
       while (parent.getOrElse(c, c) != r) { val n = parent(c); parent(c) = r; c = n }
       r
     }
-    edges.foreach { case (a, b) =>
+    for (i <- edges.indices by 2) {
+      val (a, b) = (edges(i), edges(i + 1))
       parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
       val (ra, rb) = (find(a), find(b))
       if (ra != rb) { // min root wins so the label IS the component min
@@ -474,18 +539,27 @@ object Dedup {
     * each distributed round costs two joins + a checkpoint + a
     * convergence collect, a fixed overhead a tiny graph never
     * amortizes. The distributed loop is the scale path, with the same
-    * labels.
+    * labels. The pick costs one bounded read (`boundedEdges`), not a
+    * count and then a collect: the read counts every edge and brings
+    * them to the driver only when there are at most budget /
+    * DriverBytesPerEdge of them.
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 30): DataFrame =
     graft.Ckpt.scoped { sc =>
-      // the pair plan feeds three edge branches — materialize it once,
-      // not once per branch (the caller may hand us an expensive join)
-      val p = sc.persist(pairs.select(col("id1"), col("id2")))
+      // the pair plan feeds the bounded read and, on the distributed
+      // path, three edge branches: materialize it once, not once per
+      // branch (the caller may hand us an expensive join)
+      val s = pairs.sparkSession
+      val packed = sc.persist(packedEdges(pairs))
+      val (n, read) = boundedEdges(packed, Regime.budget(s) / DriverBytesPerEdge)
       // estimate: edge count × driver bytes per collected edge
-      if (Regime.fits(p.sparkSession, "dedup.connected_components",
-          p.count() * DriverBytesPerEdge, ("driver_union_find", "distributed")))
-        localComponents(p.sparkSession, p.collect().map(r => (r.getLong(0), r.getLong(1))))
+      if (Regime.fits(s, "dedup.connected_components",
+          BigInt(n) * DriverBytesPerEdge, ("driver_union_find", "distributed")))
+        localComponents(s, read.get)
       else {
+        import s.implicits._
+        val p = packed.flatMap(ids => Iterator.range(0, ids.length, 2).map(i => (ids(i), ids(i + 1))))
+          .toDF("id1", "id2")
         val nodes = p.select(col("id1").as("src"))
           .union(p.select(col("id2").as("src"))).distinct()
         // symmetric closure + self-loops: min over neighbors then includes
@@ -796,7 +870,8 @@ object Dedup {
     graft.Ckpt.scoped { sc =>
       val sh = sc.persist(stagedShingles(s, d))
       sc.keep(sc.adopt(minhashIncrementPairs(
-        sh.filter(col("doc_id") < split), sh.filter(col("doc_id") >= split))))
+        sh.filter(col("doc_id") < split), sh.filter(col("doc_id") >= split)))
+        .orderBy(col("id1"), col("id2")))
     }
   }
 
@@ -817,7 +892,8 @@ object Dedup {
         val incSh = sc.persist(stagedShingles(s, d).filter(col("doc_id") >= split))
         val corpusSh = stagedShingles(s, d).filter(col("doc_id") < split)
         sc.keep(sc.adopt(
-          minhashIncrementPairsWithIndex(Tables.parquet(s, idx), corpusSh, incSh)))
+          minhashIncrementPairsWithIndex(Tables.parquet(s, idx), corpusSh, incSh))
+          .orderBy(col("id1"), col("id2")))
       }
     }
 
@@ -1200,6 +1276,7 @@ object Dedup {
       |ORDER BY id1, id2""".stripMargin) { (s, d) =>
     setSimPrefixPairs(
       Tables.documents(s, d).filter(col("doc_id") < 300L), SetSimThreshold)
+      .orderBy(col("id1"), col("id2"))
   }
 
   /** Sketch-pipeline CALIBRATION report — the QA gate a production

@@ -47,13 +47,16 @@ object Regime {
   def planBytes(df: DataFrame): BigInt =
     df.queryExecution.optimizedPlan.stats.sizeInBytes
 
+  /** The budget in bytes: the session conf, else `min(maxHeap / 16, 512 MB)`. */
+  def budget(s: SparkSession): Long = s.conf.getOption(BudgetConf).map(_.toLong)
+    .getOrElse(math.min(Runtime.getRuntime.maxMemory / 16L, 512L << 20))
+
   /** Whether `estimatedBytes` fits the budget; records the pick as
     * `regimes._1` (fits) or `regimes._2` (fallback).
     */
   def fits(s: SparkSession, site: String, estimatedBytes: BigInt,
       regimes: (String, String) = ("broadcast", "shuffled")): Boolean = {
-    val budget = s.conf.getOption(BudgetConf).map(_.toLong)
-      .getOrElse(math.min(Runtime.getRuntime.maxMemory / 16L, 512L << 20))
+    val budget = this.budget(s)
     val ok = estimatedBytes <= budget
     RegimePick(site, if (ok) regimes._1 else regimes._2,
       estimatedBytes.min(Long.MaxValue).toLong, budget).post(s)

@@ -26,15 +26,17 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *     InternalRow is built); fully-handled filters are removed from
   *     Spark's post-scan Filter, so the plan carries no residual.
   *   - byte-range `InputPartition`s with newline realignment: files
-  *     are split into ranges sized by the same discipline Spark's
-  *     own file sources use (`maxSplitBytes = min(maxPartitionBytes,
-  *     max(openCostInBytes, totalBytes/defaultParallelism))`), so a
-  *     single fat file fans out across the cluster instead of
-  *     serializing on one task. A reader whose range starts mid-file
-  *     seeks to its offset and discards the partial first line (it
-  *     belongs to the previous range, which reads one line past its
-  *     end) — the standard Hadoop LineRecordReader ownership rule,
-  *     so every line is parsed exactly once.
+  *     are split into ranges sized by the discipline Spark's own file
+  *     sources use (`maxSplitBytes = min(maxPartitionBytes,
+  *     max(openCostInBytes, totalBytes/defaultParallelism))`), except
+  *     that a file longer than openCostInBytes is cut on every core
+  *     (`PointsSourceV2.splitRanges`), so a single fat file fans out
+  *     across the cluster instead of serializing on one task. A
+  *     reader whose range starts mid-file seeks to its offset and
+  *     discards the partial first line (it belongs to the previous
+  *     range, which reads one line past its end) — the standard
+  *     Hadoop LineRecordReader ownership rule, so every line is
+  *     parsed exactly once.
   *   - `SupportsReportStatistics`: total byte size flows into
   *     Catalyst so join-side broadcast decisions see this source
   *     like any file scan.
@@ -69,9 +71,16 @@ object PointsSourceV2 {
   val format: String = classOf[PointsSourceV2].getName
 
   /** Byte-range splits over a file list, shared by the batch scan and
-    * the micro-batch stream: target = min(maxPartitionBytes,
-    * max(openCostInBytes, totalBytes/cores)) — Spark's FilePartition
-    * sizing rule — overridable via `spark.graft.points.splitBytes`.
+    * the micro-batch stream. Spark's FilePartition sizing rule, target
+    * = min(maxPartitionBytes, max(openCostInBytes, totalBytes/cores)),
+    * floors the range at openCostInBytes, which reads a single 4-8 MB
+    * file as 4 MB plus the remainder on any core count. So a file
+    * longer than openCostInBytes takes min(maxPartitionBytes,
+    * ⌈totalBytes / cores⌉) instead, and a shorter one keeps Spark's
+    * rule: it stays one range. `spark.graft.points.splitBytes`, when
+    * set, is the target for every file. Each file is cut into the
+    * fewest near-equal ranges (lengths differ by at most one byte) no
+    * longer than its target.
     */
   def splitRanges(fileList: Seq[(String, Long)]): Array[InputPartition] = {
     val session = org.apache.spark.sql.SparkSession.active
@@ -79,23 +88,24 @@ object PointsSourceV2 {
       org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
         session.conf.get(key, dflt))
     val openCost = bytesConf("spark.sql.files.openCostInBytes", "4MB")
-    val maxSplit = session.conf.getOption("spark.graft.points.splitBytes")
-      .map(_.toLong).getOrElse {
-        val maxPB = bytesConf("spark.sql.files.maxPartitionBytes", "128MB")
-        val parallelism =
-          math.max(1, session.sparkContext.defaultParallelism)
-        val totalBytes = fileList.map(_._2 + openCost).sum
-        math.min(maxPB, math.max(openCost, totalBytes / parallelism))
-      }
-    // One clamp used for BOTH the step and the length: a non-positive
-    // split (splitBytes=0/negative, or openCostInBytes=0 with tiny
-    // input) must not zero out the range length — that would silently
-    // read only the first line of each file.
-    val split = math.max(1L, maxSplit)
+    val splitBytes = session.conf.getOption("spark.graft.points.splitBytes").map(_.toLong)
+    val maxPB = bytesConf("spark.sql.files.maxPartitionBytes", "128MB")
+    val parallelism = math.max(1, session.sparkContext.defaultParallelism)
+    val sparkRule = math.min(maxPB,
+      math.max(openCost, fileList.map(_._2 + openCost).sum / parallelism))
+    val everyCore = math.min(maxPB, (fileList.map(_._2).sum + parallelism - 1) / parallelism)
     fileList.flatMap { case (f, len) =>
+      // a non-positive target (splitBytes=0/negative, or openCostInBytes=0
+      // with tiny input) must not zero out the range length — that
+      // would silently read only the first line of each file
+      val split = math.max(1L,
+        splitBytes.getOrElse(if (len > openCost) everyCore else sparkRule))
       if (len <= 0) Seq(PointsFilePartition(f, 0L, 0L))
-      else (0L until len by split).map { off =>
-        PointsFilePartition(f, off, math.min(split, len - off))
+      else {
+        val n = (len + split - 1) / split
+        val (q, r) = (len / n, len % n) // the first r ranges take one byte more
+        (0L until n).map(i =>
+          PointsFilePartition(f, i * q + math.min(i, r), q + (if (i < r) 1 else 0)))
       }
     }.map(p => p: InputPartition).toArray
   }
@@ -354,14 +364,13 @@ final class PointsV2Scan(
       .sortBy(_._1)
   }
 
-  /** Split every file into byte ranges using Spark's FilePartition
-    * sizing rule, so one fat text file becomes many tasks: target =
-    * min(maxPartitionBytes, max(openCostInBytes, totalBytes/cores)).
-    * On a laptop-scale corpus this yields a handful of multi-MB
-    * ranges; at 100 TB it converges to maxPartitionBytes (128 MB)
-    * ranges — the same curve the built-in file sources follow. An
-    * explicit `spark.graft.points.splitBytes` conf overrides for
-    * tests.
+  /** Split every file into byte ranges (`PointsSourceV2.splitRanges`,
+    * Spark's FilePartition sizing rule except that a file longer than
+    * openCostInBytes is cut on every core), so one fat text file
+    * becomes many tasks while a small one stays one. At 100 TB the
+    * ranges converge to maxPartitionBytes (128 MB), the same curve the
+    * built-in file sources follow. An explicit
+    * `spark.graft.points.splitBytes` conf overrides for tests.
     */
   override def planInputPartitions(): Array[InputPartition] =
     PointsSourceV2.splitRanges(files())

@@ -21,7 +21,8 @@ object Explain {
     SparkEntry.queries ++ Map(
       "lsh_candidates" -> lshCandidates _,
       "jaccard_verify" -> ((s: SparkSession, d: String) =>
-        Dedup.jaccardVerify(Dedup.stagedShingles(s, d), lshCandidates(s, d), 0.8)))
+        Dedup.jaccardVerify(Dedup.stagedShingles(s, d), lshCandidates(s, d), 0.8)
+          .orderBy("id1", "id2")))
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")

@@ -18,6 +18,29 @@ object TestSpark {
     spark.conf.set(graft.operators.Regime.BudgetConf, bytes)
     try body finally spark.conf.unset(graft.operators.Regime.BudgetConf)
   }
+
+  /** Returns once the listener bus has delivered every event posted
+    * so far, to SparkListeners and QueryExecutionListeners alike (both
+    * sit on its shared queue). The queue is ordered, so a query's
+    * events may still be in it after the query returns: a listener
+    * added then would see them, and one read or removed then would
+    * miss them. Call it before adding a listener and before reading it.
+    */
+  def drainBus(): Unit = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[AnyRef]
+    val probe = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        seen.add(e)
+    }
+    spark.sparkContext.addSparkListener(probe)
+    try {
+      val barrier = org.apache.spark.sql.graft.RegimePick("barrier", "", 0L, 0L)
+      barrier.post(spark)
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!seen.contains(barrier) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains(barrier), "listener bus did not drain")
+    } finally spark.sparkContext.removeSparkListener(probe)
+  }
 }
 
 class ContractSpec extends AnyFunSuite {

@@ -4,13 +4,9 @@ import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart,
-  SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.RegimePick
-import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.time.SpanSugar._
 import scala.jdk.CollectionConverters._
 import graft.operators.{KMeans, Similarity}
 import graft.sources.PointsText
@@ -30,7 +26,6 @@ class LloydGuardSpec extends AnyFunSuite {
     val jobTasks = new ConcurrentLinkedQueue[(Set[Int], Int)]
     /** (stage id, input bytes, input records) of every finished task. */
     val inputs = new ConcurrentLinkedQueue[(Int, Long, Long)]
-    val barriers = new ConcurrentLinkedQueue[SparkListenerEvent]
     override def onJobStart(js: SparkListenerJobStart): Unit = {
       jobs.incrementAndGet()
       // every stage but the job's result stage is a shuffle map stage
@@ -41,7 +36,6 @@ class LloydGuardSpec extends AnyFunSuite {
       val in = te.taskMetrics.inputMetrics
       inputs.add((te.stageId, in.bytesRead, in.recordsRead))
     }
-    override def onOtherEvent(e: SparkListenerEvent): Unit = barriers.add(e)
 
     /** (bytes, records) the tasks of one job read. */
     def input(job: (Set[Int], Int)): (Long, Long) = {
@@ -53,14 +47,12 @@ class LloydGuardSpec extends AnyFunSuite {
   /** What `body` started, once the bus has delivered all of it. */
   private def watched(body: => Any): Counter = {
     val c = new Counter
+    // jobs that finished before `body` may still be on the bus
+    drainBus()
     spark.sparkContext.addSparkListener(c)
     try {
       body
-      // the bus delivers in order: once this arrives, every job start
-      // and task end `body` posted has been counted
-      val barrier = RegimePick("barrier", "", 0L, 0L)
-      barrier.post(spark)
-      eventually(timeout(60.seconds)) { assert(c.barriers.contains(barrier)) }
+      drainBus()
       c
     } finally spark.sparkContext.removeSparkListener(c)
   }

@@ -295,11 +295,6 @@ class DedupSpec extends AnyFunSuite {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe)
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    val barriers = new java.util.concurrent.ConcurrentLinkedQueue[AnyRef]
-    val bus = new org.apache.spark.scheduler.SparkListener {
-      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
-        barriers.add(e)
-    }
     // every scan node of the input, also those inside a cached plan;
     // a cached plan shows up in each query that reads it, so the nodes
     // are collected by identity
@@ -312,21 +307,13 @@ class DedupSpec extends AnyFunSuite {
     }
     try {
       val rows = spark.read.parquet(sf01Docs).count()
+      // the count's own scan must not reach the listener
+      drainBus()
       spark.listenerManager.register(listener)
-      spark.sparkContext.addSparkListener(bus)
       try {
         assert(CurateApp.run(spark, sf01Docs, s"$dir/curated") > 0)
-        // the bus delivers in order: once this arrives, every query
-        // the run finished has been recorded
-        val barrier = org.apache.spark.sql.graft.RegimePick("barrier", "", 0L, 0L)
-        barrier.post(spark)
-        val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-        while (!barriers.contains(barrier) && System.nanoTime() < deadline) Thread.sleep(10)
-        assert(barriers.contains(barrier), "listener bus did not drain")
-      } finally {
-        spark.listenerManager.unregister(listener)
-        spark.sparkContext.removeSparkListener(bus)
-      }
+        drainBus()
+      } finally spark.listenerManager.unregister(listener)
       val scans = java.util.Collections.newSetFromMap(
         new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean])
       plans.forEach(qe => inputScans(qe.executedPlan).foreach(scans.add))
@@ -334,6 +321,56 @@ class DedupSpec extends AnyFunSuite {
       scans.forEach(s => read += s.metrics("numOutputRows").value)
       assert(!scans.isEmpty, "no scan of the input was seen")
       assert(read == rows, s"the run read $read input rows; the input has $rows")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
+  test("CurateApp.run starts 15 Spark jobs at sf0.01") {
+    // the pair pipeline 7 (its stages, two cache fills, the pair
+    // checkpoint), the verify 5 (candidate ids, their broadcast, one
+    // shingle-array aggregate, its checkpoint, one array broadcast),
+    // the components 1 (the bounded read), the write 2 (the losers'
+    // broadcast and the write); no read-back of the output
+    val dir = java.nio.file.Files.createTempDirectory("graft_curate_jobs")
+    val jobs = new java.util.concurrent.atomic.AtomicLong
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    try {
+      // warm: a first run also infers the input schema
+      CurateApp.run(spark, sf01Docs, s"$dir/warm")
+      drainBus()
+      spark.sparkContext.addSparkListener(counter)
+      try {
+        assert(CurateApp.run(spark, sf01Docs, s"$dir/curated") > 0)
+        drainBus()
+      } finally spark.sparkContext.removeSparkListener(counter)
+      assert(jobs.get == 15, s"CurateApp.run started ${jobs.get} jobs")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
+  test("CurateApp.run leaves the session serializable") {
+    // a task closure that captures the session (an MLlib model's
+    // training summary does) must still serialize after a run
+    val dir = java.nio.file.Files.createTempDirectory("graft_curate_ser")
+    try {
+      assert(CurateApp.run(spark, s"$sf/documents.parquet", s"$dir/curated") > 0)
+      new java.io.ObjectOutputStream(new java.io.ByteArrayOutputStream).writeObject(spark)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
+  test("CurateApp.run that keeps no document returns 0, the rows it wrote") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val dir = java.nio.file.Files.createTempDirectory("graft_curate_empty")
+    try {
+      val out = s"$dir/curated"
+      // quality is at most 1: every document fails the filter, and the
+      // count observed on the write must still arrive
+      val n = Await.result(Future(CurateApp.run(spark, s"$sf/documents.parquet", out,
+        qualityMin = 2.0)), 120.seconds)
+      assert(n == 0 && spark.read.parquet(out).count() == 0, s"returned $n")
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 

@@ -199,8 +199,8 @@ class PlanAuditSpec extends AnyFunSuite {
       graft.sources.Tables.documents(spark, sf))
     val cand = graft.operators.Dedup.lshCandidates(
       graft.operators.Dedup.minhashSignatures(sh))
-    val p = graft.operators.Dedup.jaccardVerify(sh, cand, 0.8)
-      .queryExecution.executedPlan.toString
+    val verified = graft.operators.Dedup.jaccardVerify(sh, cand, 0.8)
+    val p = verified.queryExecution.executedPlan.toString
     val lines = p.linesIterator.toVector
     def depth(l: String): Int = l.indexWhere(c => !" :+-".contains(c))
     val bIdx = lines.indices.filter(i => lines(i).contains("BroadcastExchange"))
@@ -213,6 +213,68 @@ class PlanAuditSpec extends AnyFunSuite {
       if (scansCorpus)
         assert(subtree.exists(_.contains("LeftSemi")),
           s"corpus-sized subtree under BroadcastExchange at line $i:\n$p")
+    }
+    // a broadcast that reads a checkpoint does not show the scan it
+    // was built from: no broadcast may hold more rows than there are
+    // candidate ids
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.functions.col
+    val ids = cand.select(col("id1").as("id")).union(cand.select(col("id2"))).distinct().count()
+    assert(ids < graft.sources.Tables.documents(spark, sf).count(), "every document is a candidate")
+    verified.collect()
+    val built = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(verified.queryExecution.executedPlan) { case b: BroadcastExchangeExec =>
+        b.metrics("numOutputRows").value }
+    assert(built.nonEmpty && built.forall(_ <= ids), s"broadcast rows $built, $ids candidate ids")
+  }
+
+  /** The executed plans (AQE's final plans) of every query `body` runs. */
+  private def queriesOf(body: => Any): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // queries that finished before `body` may still be on the bus
+    drainBus()
+    spark.listenerManager.register(listener)
+    try {
+      body
+      drainBus()
+    } finally spark.listenerManager.unregister(listener)
+    seen.toArray(Array.empty[QueryExecution]).toSeq.map(_.executedPlan)
+  }
+
+  test("jaccardVerify aggregates the shingle arrays once and never sorts globally") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, CollectSet, Final}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import graft.operators.Dedup
+    // cached, as every pipeline caches the shingles it signs and verifies
+    val sh = Dedup.shinglesHashed(graft.sources.Tables.documents(spark, sf)).persist()
+    try {
+      val cand = Dedup.lshCandidates(Dedup.minhashSignatures(sh))
+      val plans = queriesOf(Dedup.jaccardVerify(sh, cand, 0.8).collect())
+      val helper = new AdaptiveSparkPlanHelper {}
+      val sets = plans.flatMap(p => helper.flatMap(p)(_.expressions.flatMap(_.collect {
+        case a: AggregateExpression if a.mode == Final && a.aggregateFunction.isInstanceOf[CollectSet] => a
+      })))
+      val text = plans.mkString("\n")
+      assert(sets.size == 1, s"${sets.size} collect_set aggregates in\n$text")
+      // the arrays are built from candidate ids only
+      assert(plans.exists(p => p.toString.contains("collect_set") && p.toString.contains("LeftSemi")),
+        text)
+      assert(!text.contains("rangepartitioning"), text)
+    } finally sh.unpersist(blocking = true)
+  }
+
+  test("shinglesHashed and shingles tokenize each document once") {
+    val docs = graft.sources.Tables.documents(spark, sf)
+    for ((label, df) <- Seq("shinglesHashed" -> graft.operators.Dedup.shinglesHashed(docs),
+        "shingles" -> graft.operators.Dedup.shingles(docs, Some(300L)))) {
+      val toks = executedExprs(df).count(_.prettyName == "regexp_extract_all")
+      assert(toks == 1, s"$label: regexp_extract_all appears $toks times in\n" +
+        df.queryExecution.executedPlan)
     }
   }
 

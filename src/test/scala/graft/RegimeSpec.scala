@@ -5,6 +5,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.graft.RegimePick
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
@@ -117,6 +118,78 @@ class RegimeSpec extends AnyFunSuite {
     assert(localPicks.map(p => (p.site, p.regime, p.estimatedBytes)) ==
       Seq(("dedup.connected_components", "driver_union_find", 4L * 256)))
     assert(distPicks.map(_.regime) == Seq("distributed"))
+  }
+
+  test("connectedComponents: N edges fit a budget of N × 256 bytes, N + 1 take the distributed loop") {
+    import spark.implicits._
+    // chains of four nodes (three edges) 10 apart, over four partitions,
+    // or all in one of them: every node's label is its chain's first node
+    def graph(edges: Int, skewed: Boolean) = {
+      val df = (0 until edges).map { k =>
+        val a = k / 3 * 10L + k % 3
+        (a, a + 1)
+      }.toDF("id1", "id2")
+      if (skewed) df.repartition(4, lit(0)) else df.repartition(4)
+    }
+    def components(edges: Int, budget: Long, skewed: Boolean = false): (Seq[String], Seq[String]) = {
+      val (rows, picks, _) = run(fallback = false)(withBudget(budget)(
+        graft.operators.Dedup.connectedComponents(graph(edges, skewed))
+          .collect().map(_.toString).toSeq))
+      (rows, picks.map(p => s"${p.site} ${p.regime}"))
+    }
+    val n = 12
+    val (atCap, atCapPick) = components(n, n * 256L)
+    val (over, overPick) = components(n + 1, n * 256L)
+    assert(atCapPick == Seq("dedup.connected_components driver_union_find"))
+    assert(overPick == Seq("dedup.connected_components distributed"))
+    def truth(edges: Int) = (0 until edges).flatMap { k =>
+      val a = k / 3 * 10L + k % 3
+      Seq(a, a + 1)
+    }.distinct.map(id => s"[$id,${id / 10 * 10}]").sorted
+    assert(atCap == truth(n) && over == truth(n + 1))
+    // and each graph's labels are the same in the other regime
+    assert(components(n, 0L)._1 == atCap && components(n + 1, (n + 1) * 256L)._1 == over)
+    // a partition over its share (cap / 4 + 1 edges) of a graph that
+    // fits is fetched by a second read: the same pick, the same labels
+    val (skewed, skewedPick) = components(n, n * 256L, skewed = true)
+    assert(skewedPick == atCapPick && skewed == atCap)
+    assert(components(n + 1, n * 256L, skewed = true) == ((over, overPick)))
+  }
+
+  test("connectedComponents: its regime read ships at most about its budget to the driver") {
+    import spark.implicits._
+    // 30 000 two-node components over 32 partitions against a budget
+    // of 1 000 edges: a read that shipped each partition's edges up to
+    // the budget would bring every edge back
+    val (edges, cap) = (30000, 1000L)
+    val pairs = (0 until edges).map(i => (2L * i, 2L * i + 1)).toDF("id1", "id2").repartition(32)
+    // the bytes of every task result the driver received before the pick
+    val shipped = new java.util.concurrent.atomic.AtomicLong
+    val picked = new java.util.concurrent.atomic.AtomicBoolean
+    val sizes = new SparkListener {
+      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (te.taskMetrics != null && !picked.get) shipped.addAndGet(te.taskMetrics.resultSize)
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case p: RegimePick if p.site == "dedup.connected_components" => picked.set(true)
+        case _ => ()
+      }
+    }
+    val (rows, picks, _) = run(fallback = false) {
+      drainBus()
+      spark.sparkContext.addSparkListener(sizes)
+      try withBudget(cap * 256L) {
+        val out = graft.operators.Dedup.connectedComponents(pairs)
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+        drainBus()
+        out.map(_.toString)
+      } finally spark.sparkContext.removeSparkListener(sizes)
+    }
+    assert(picks.map(_.regime) == Seq("distributed") && picked.get)
+    assert(rows.length == 2 * edges && rows.forall { r =>
+      val Array(id, label) = r.stripPrefix("(").stripSuffix(")").split(',').map(_.toLong)
+      label == id - id % 2
+    })
+    assert(shipped.get <= cap * 256L, s"the regime read shipped ${shipped.get} bytes to the driver")
   }
 
   test("only Regime sizes a broadcast; the per-site knobs are gone") {

@@ -81,8 +81,10 @@ class Round11Spec extends AnyFunSuite {
     val sh = graft.operators.Dedup.shinglesHashed(docs)
     val cand = graft.operators.Dedup.lshCandidates(
       graft.operators.Dedup.minhashSignatures(sh))
+    // jaccardVerify returns its pairs unordered: both shapes are
+    // sorted here so that the comparison stays row for row
     val fastDf = graft.operators.Dedup.jaccardVerify(sh, cand, 0.8)
-    val fast = fastDf.collect().map(_.toString).toSeq
+    val fast = fastDf.orderBy(col("id1"), col("id2")).collect().map(_.toString).toSeq
     // legacy r10 join-expansion algebra, spelled out
     val p = cand.select(col("id1"), col("id2")).distinct()
     val candIds = p.select(col("id1").as("doc_id"))
@@ -112,7 +114,7 @@ class Round11Spec extends AnyFunSuite {
     val expandPlan = expand.queryExecution.executedPlan.toString
     assert(!expandPlan.contains("array_intersect"),
       s"budget 0 must take the join-expansion branch:\n${expandPlan.take(2000)}")
-    val expanded = expand.collect().map(_.toString).toSeq
+    val expanded = expand.orderBy(col("id1"), col("id2")).collect().map(_.toString).toSeq
     assert(fast == expanded,
       s"branches diverge:\n${fast.take(10)}\nvs\n${expanded.take(10)}")
   }

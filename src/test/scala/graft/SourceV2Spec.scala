@@ -94,6 +94,45 @@ class SourceV2Spec extends AnyFunSuite {
     } finally spark.conf.unset("spark.graft.points.splitBytes")
   }
 
+  test("a single 4-8 MB file reads as defaultParallelism near-equal ranges, the same rows") {
+    val one = java.nio.file.Files.createTempDirectory("v2onefile")
+    try {
+      val file = one.resolve("points.txt")
+      val w = java.nio.file.Files.newBufferedWriter(file)
+      val rnd = new scala.util.Random(7)
+      try (0 until 250000).foreach { _ =>
+        w.write("%.6f,%.6f\n".formatLocal(java.util.Locale.ROOT,
+          rnd.nextGaussian() * 10, rnd.nextGaussian() * 10))
+      } finally w.close()
+      val len = java.nio.file.Files.size(file)
+      // above Spark's 4 MB open cost, below two of it: the size its
+      // own split rule reads as 4 MB plus the remainder
+      assert(len > (4L << 20) && len < (8L << 20), s"$len bytes")
+      val ranges = graft.sources.v2.PointsSourceV2.splitRanges(Seq((file.toString, len)))
+        .map(_.asInstanceOf[graft.sources.v2.PointsFilePartition])
+      val cores = spark.sparkContext.defaultParallelism
+      assert(ranges.length >= cores, s"${ranges.length} ranges on $cores cores")
+      assert(ranges.map(_.length).max - ranges.map(_.length).min <= 1, ranges.toSeq)
+      assert(ranges.head.start == 0 && ranges.map(_.length).sum == len &&
+        ranges.sliding(2).forall { case Array(a, b) => a.start + a.length == b.start })
+      // a file no longer than the open cost keeps Spark's rule: one
+      // range, however many cores there are
+      assert(graft.sources.v2.PointsSourceV2.splitRanges(
+        Seq(("a.txt", 1L << 20), ("b.txt", 4L << 20))).length == 2)
+      def rows(splitBytes: Option[String]) = {
+        splitBytes.foreach(spark.conf.set("spark.graft.points.splitBytes", _))
+        try spark.read.format(graft.sources.v2.PointsSourceV2.format)
+          .option("path", one.toString).load()
+          .collect().map(r => (r.getDouble(0), r.getDouble(1))).toSeq
+          .sorted(Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Double.TotalOrdering))
+        finally spark.conf.unset("spark.graft.points.splitBytes")
+      }
+      val now = rows(None)
+      // the 4 MB + remainder cut of the old rule reads the same rows
+      assert(now.length == 250000 && now == rows(Some((4L << 20).toString)))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(one.toFile)
+  }
+
   test("pushed filter drops rows before Spark sees them (count under filter-only scan)") {
     val direct = graft.sources.PointsText.read(spark, dir)
       .filter(col("x") > 25).count()

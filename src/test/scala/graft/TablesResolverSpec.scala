@@ -2,11 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
-import org.apache.spark.sql.graft.RegimePick
-import org.scalatest.concurrent.Eventually._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.time.SpanSugar._
 
 import graft.sources.Tables
 
@@ -20,22 +17,18 @@ class TablesResolverSpec extends AnyFunSuite {
 
   private final class JobCounter extends SparkListener {
     val jobs = new AtomicLong
-    val barriers = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerEvent]
     override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    override def onOtherEvent(e: SparkListenerEvent): Unit = barriers.add(e)
   }
 
   /** Spark jobs started while `body` builds its value. */
   private def jobsOf(body: => Any): Long = {
     val c = new JobCounter
+    // jobs that finished before `body` may still be on the bus
+    drainBus()
     spark.sparkContext.addSparkListener(c)
     try {
       body
-      // the bus delivers in order: once this arrives, every job start
-      // `body` posted has been counted
-      val barrier = RegimePick("barrier", "", 0L, 0L)
-      barrier.post(spark)
-      eventually(timeout(60.seconds)) { assert(c.barriers.contains(barrier)) }
+      drainBus()
       c.jobs.get
     } finally spark.sparkContext.removeSparkListener(c)
   }
