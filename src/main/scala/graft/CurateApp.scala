@@ -69,8 +69,7 @@ object CurateApp {
       // survivor each; the survivors may read component labels that
       // nearDedupedCorpus kept, which the scope adopts
       val sh = sc.persist(Dedup.shinglesHashed(exact))
-      val pairs = sc.adopt(Dedup.jaccardVerify(sh,
-        Dedup.lshCandidates(Dedup.minhashSignatures(sh)), 0.8)).select("id1", "id2")
+      val pairs = sc.adopt(Dedup.minhashPairs(sh, 0.8)).select("id1", "id2")
       val curated = sc.adopt(Dedup.nearDedupedCorpus(exact, pairs))
       writeCounted(curated, output)
     }

@@ -99,10 +99,16 @@ object Dedup {
   }
 
   /** Exact pairwise Jaccard ≥ threshold over candidate pairs.
-    * `pairs` must have columns (id1, id2). The result (id1, id2,
-    * jaccard) is unordered: no pipeline consumer needs an order, and a
-    * global sort costs a sampling job plus an exchange, so an entry
-    * that returns the pairs sorts them itself.
+    * `pairs` must have columns (id1, id2) and hold each pair once, as
+    * `bucketPairs` emits them; a caller that unions or probes pairs
+    * dedups them itself. A duplicated pair row multiplies the
+    * intersection count of the join-expansion shape below — inter >
+    * n1+n2 makes the union denominator negative and silently rejects
+    * every true pair (stream_dedup_indexed once returned 0 rows for
+    * exactly this reason). The result (id1, id2, jaccard) is
+    * unordered: no pipeline consumer needs an order, and a global sort
+    * costs a sampling job plus an exchange, so an entry that returns
+    * the pairs sorts them itself.
     *
     * Join order matters at scale: candidates first, shingles second —
     * the co-occurrence work is O(|candidates| · shingles/doc). Joining
@@ -111,27 +117,13 @@ object Dedup {
     * to avoid (a single hot shingle shared by m docs costs m² there).
     */
   def jaccardVerify(sh: DataFrame, pairs: DataFrame, threshold: Double): DataFrame = {
-    // The pair plan is typically an expensive LSH self-join and feeds
+    // The pair plan is typically an expensive LSH expansion and feeds
     // three subtrees below (both id projections + the intersection
     // join) — materialize it once instead of replanning it per branch.
-    // DISTINCT is load-bearing: LSH candidates arrive once per
-    // colliding band, and a duplicated pair row multiplies the
-    // intersection count below — inter > n1+n2 makes the union
-    // denominator negative and silently rejects every true pair
-    // (stream_dedup_indexed returned 0 rows for exactly this reason
-    // until a planted cross-batch duplicate exposed it).
     // The result reads this checkpoint (and, in the intersect shape,
     // the arrays' one): a caller that consumes the pairs inside a
     // scope adopts the result so the scope frees them.
-    val p = graft.Ckpt.keep(pairs.select(col("id1"), col("id2")).distinct())
-    // Candidate ids are small BY LSH CONSTRUCTION (only colliding
-    // buckets pair up); the corpus is not. Everything broadcast below
-    // must therefore be restricted to candidate ids FIRST — a
-    // corpus-sized broadcast (one row per document) OOMs the driver
-    // and every executor at 100 TB. The LeftSemi here is the
-    // restriction PlanAuditSpec locks on.
-    val candIds = p.select(col("id1").as("doc_id"))
-      .union(p.select(col("id2").as("doc_id"))).distinct()
+    val p = graft.Ckpt.keep(pairs.select(col("id1"), col("id2")))
     // SIZE-ADAPTIVE INTERSECTION SHAPE (r11, verdict item 3). The
     // join-expansion formulation below (the r10 fallback) attaches
     // every candidate doc's shingles to every pair it is in — a
@@ -165,7 +157,7 @@ object Dedup {
         // pipeline caches it): AQE cannot reuse an exchange above a
         // cached scan, whose table-cache stage is never shared. Over
         // the checkpoint the two broadcasts are one exchange.
-        val arrays = graft.Ckpt.keep(sh.join(broadcast(candIds), Seq("doc_id"), "left_semi")
+        val arrays = graft.Ckpt.keep(candidateRows(sh, p)
           .groupBy(col("doc_id")).agg(collect_set(col("sh")).as("shs")))
         p.join(broadcast(arrays.as("a1")), col("id1") === col("a1.doc_id"))
           .join(broadcast(arrays.as("a2")), col("id2") === col("a2.doc_id"))
@@ -179,7 +171,7 @@ object Dedup {
         // distinct AFTER the candidate restriction: exact Jaccard needs
         // set semantics, but deduping only candidate shingles keeps the
         // shuffle candidate-sized (the input `sh` is intentionally raw)
-        val shCand = sh.join(broadcast(candIds), Seq("doc_id"), "left_semi").distinct()
+        val shCand = candidateRows(sh, p).distinct()
         val counts = shCand.groupBy("doc_id").agg(count(lit(1)).as("n"))
         p.join(shCand.toDF("id1", "sh"), "id1")
           .join(shCand.toDF("id2b", "sh2"),
@@ -193,6 +185,20 @@ object Dedup {
         col("inter").cast("double") / (col("n1") + col("n2") - col("inter")))
       .filter(col("jaccard") >= threshold)
       .select(col("id1"), col("id2"), round(col("jaccard"), 4).as("jaccard"))
+  }
+
+  /** The rows of `rel` (doc_id, …) whose doc_id is in a pair of `p`
+    * (id1, id2). Candidate ids are small BY LSH CONSTRUCTION (only
+    * colliding buckets pair up); the corpus is not. Everything a verify
+    * broadcasts must therefore be restricted to candidate ids FIRST — a
+    * corpus-sized broadcast (one row per document) OOMs the driver and
+    * every executor at 100 TB. This LeftSemi is the restriction
+    * PlanAuditSpec locks on.
+    */
+  private def candidateRows(rel: DataFrame, p: DataFrame): DataFrame = {
+    val ids = p.select(col("id1").as("doc_id"))
+      .union(p.select(col("id2").as("doc_id"))).distinct()
+    rel.join(broadcast(ids), Seq("doc_id"), "left_semi")
   }
 
   /** Exact pairwise n-gram Jaccard ≥ threshold on a bounded id range:
@@ -355,33 +361,63 @@ object Dedup {
       .select(col("doc_id"), col("bk.band").as("band"), col("bk.sig").as("sig"))
   }
 
-  /** LSH banding candidates: ids colliding in ≥1 bucket.
+  /** Candidate pairs from key collisions: the one bucket→pair
+    * expansion of the MinHash, SimHash, ICWS, set-sim prefix and IVF
+    * pair families. `rows` holds at most one row per (id, key): the
+    * `id` column, the `keys` columns and any `payload` columns. Every
+    * pair of ids (id1 < id2) that shares at least one key comes out
+    * exactly once, as the `out` columns, computed from id1, id2 and,
+    * for each payload column p, p1 and p2 (the two members' values),
+    * so that a site scores its pairs without joining the payload back.
+    * This is the one place a pair family dedups its pairs: a verify
+    * takes them as they come.
     *
-    * Shape (r11, guide §2 skew): GROUP the bucket rows by (band, sig)
-    * and expand each bucket's member list into its a<b pairs
-    * map-side, instead of the r10 bucket SELF-JOIN. The self-join
-    * exchanged the bucket relation twice and sort-merged on the
-    * bucket key — a hot bucket (the LSH skew case: a boilerplate
-    * band signature shared by m documents) was one SMJ key doing m²
-    * row emissions behind a sort. The groupBy exchanges the bucket
-    * rows ONCE (partial collect_list collapses per-partition), the
-    * m² expansion streams out of a generator with no sort and no
-    * join-key collision, and the pair relation flows straight into
-    * the distinct's partial aggregate. Identical pair set: a sorted
-    * member array paired each-with-later is exactly {(a, b) : a < b}
-    * per bucket, deduped across bands by the same distinct.
+    * Shape (r11, guide §2 skew): GROUP the rows by key and expand each
+    * bucket's member list into its a<b pairs map-side, instead of a
+    * bucket SELF-JOIN. The self-join exchanged the bucket relation
+    * twice and sort-merged on the bucket key — a hot bucket (the LSH
+    * skew case: a boilerplate band signature shared by m documents)
+    * was one SMJ key doing m² row emissions behind a sort. The groupBy
+    * exchanges the bucket rows ONCE (partial collect_list collapses
+    * per-partition), the m² expansion streams out of a generator with
+    * no sort and no join-key collision, and the pair relation flows
+    * straight into the distinct's partial aggregate. Same pair set: a
+    * sorted member array paired each-with-later is exactly
+    * {(a, b) : a < b} per bucket, deduped across buckets by the
+    * distinct. A filter on `out` columns runs before the distinct
+    * (the optimizer pushes it below), so only surviving pairs shuffle.
+    *
+    * The distinct costs an exchange of the pairs. A site whose payload
+    * tells which shared key is a pair's lowest passes `first`, a
+    * predicate over the key columns, id1, id2 and the p1/p2 columns
+    * that holds in exactly one of the buckets a pair shares; the pair
+    * is then emitted from that bucket only, and no distinct runs.
     */
-  def lshCandidates(sigs: DataFrame): DataFrame = {
-    val grouped = lshBuckets(sigs)
-      .groupBy(col("band"), col("sig"))
-      .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
+  def bucketPairs(rows: DataFrame, id: String, keys: Seq[String],
+      payload: Seq[String] = Nil, out: Seq[Column] = Seq(col("id1"), col("id2")),
+      first: Option[Column] = None): DataFrame = {
+    val k = keys.map(col)
+    val member = if (payload.isEmpty) col(id) else struct(col(id).as("id") +: payload.map(col): _*)
+    val pairs = rows.groupBy(k: _*)
+      .agg(sort_array(collect_list(member)).as("ids"))
       .filter(size(col("ids")) > 1)
-    grouped
-      .select(posexplode(col("ids")).as(Seq("i", "id1")), col("ids"))
-      .select(col("id1"),
-        explode(slice(col("ids"), col("i") + lit(2), size(col("ids")))).as("id2"))
-      .distinct()
+      .select(k :+ posexplode(col("ids")).as(Seq("i", "m1")) :+ col("ids"): _*)
+      .select(k :+ col("m1") :+ explode(slice(col("ids"), col("i") + lit(2), size(col("ids")))).as("m2"): _*)
+    val named = pairs.select(k ++ (if (payload.isEmpty) Seq(col("m1").as("id1"), col("m2").as("id2"))
+      else col("m1.id").as("id1") +: col("m2.id").as("id2") +: payload.flatMap(p =>
+        Seq(col(s"m1.$p").as(s"${p}1"), col(s"m2.$p").as(s"${p}2")))): _*)
+    first.fold(named.select(out: _*).distinct())(f => named.filter(f).select(out: _*))
   }
+
+  /** LSH banding candidates: ids colliding in ≥1 (band, sig) bucket. */
+  def lshCandidates(sigs: DataFrame): DataFrame =
+    bucketPairs(lshBuckets(sigs), "doc_id", Seq("band", "sig"))
+
+  /** MinHash+LSH near-dup pairs of `sh` (doc_id, sh), Jaccard-verified
+    * ≥ threshold: (id1, id2, jaccard), unordered.
+    */
+  def minhashPairs(sh: DataFrame, threshold: Double): DataFrame =
+    jaccardVerify(sh, lshCandidates(minhashSignatures(sh)), threshold)
 
   /** MinHash+LSH near-dup detection, Jaccard-verified ≥ 0.8.
     *
@@ -395,8 +431,7 @@ object Dedup {
   val dedupMinhash: QueryDef = QueryDef.rowsOnly("dedup_minhash") { (s, d) =>
     graft.Ckpt.scoped { sc =>
       val sh = sc.persist(stagedShingles(s, d))
-      val cand = lshCandidates(minhashSignatures(sh))
-      sc.keep(sc.adopt(jaccardVerify(sh, cand, 0.8)).orderBy(col("id1"), col("id2")))
+      sc.keep(sc.adopt(minhashPairs(sh, 0.8)).orderBy(col("id1"), col("id2")))
     }
   }
 
@@ -703,10 +738,12 @@ object Dedup {
     * signature splits into 4 × 16-bit bands; Hamming distance ≤ 3
     * can spread at most 3 differing bits over 4 bands, so by
     * pigeonhole every qualifying pair matches exactly in ≥ 1 band.
-    * Candidate generation is therefore one equality join on
-    * (band, band-value) — the same shuffle shape as MinHash banding —
-    * followed by an exact popcount verification. Returns exactly the
+    * Candidates are therefore the pairs sharing a (band, band-value)
+    * bucket — `bucketPairs`, as MinHash banding, carrying each side's
+    * signature — followed by an exact popcount verification. Returns exactly the
     * pairs the quadratic operator would (guarantee, not heuristic).
+    * The signatures also tell the lowest band a pair shares, so each
+    * pair comes out of that band's bucket only, with no distinct.
     *
     * Bucket sizing at scale: a 16-bit band has 2^16 values, so
     * in-bucket pairing grows ~ (n/2^16)² per band; beyond ~10^8 docs
@@ -720,13 +757,12 @@ object Dedup {
         explode(array((0 until 4).map(j => struct(lit(j).as("band"),
           shiftright(col("simhash"), j * 16).bitwiseAND(0xFFFF).as("bv"))): _*)).as("b"))
       .select(col("doc_id"), col("simhash"), col("b.band").as("band"), col("b.bv").as("bv"))
-    bands.toDF("id1", "h1", "band", "bv")
-      .join(bands.toDF("id2", "h2", "band2", "bv2"),
-        col("band") === col("band2") && col("bv") === col("bv2") && col("id1") < col("id2"))
-      .select("id1", "id2", "h1", "h2").distinct()
-      .withColumn("hamming", bit_count(col("h1").bitwiseXOR(col("h2"))))
+    val x = col("simhash1").bitwiseXOR(col("simhash2"))
+    val lowestShared = (0 until 3).map(j =>
+      col("band") <= j || shiftright(x, j * 16).bitwiseAND(0xFFFF) =!= 0).reduce(_ && _)
+    bucketPairs(bands, "doc_id", Seq("band", "bv"), Seq("simhash"),
+        Seq(col("id1"), col("id2"), bit_count(x).cast("long").as("hamming")), Some(lowestShared))
       .filter(col("hamming") <= 3)
-      .select(col("id1"), col("id2"), col("hamming").cast("long").as("hamming"))
       .orderBy(col("id1"), col("id2"))
   }
 
@@ -761,16 +797,15 @@ object Dedup {
   /** The deduplicated corpus itself: keep the lowest doc_id of every
     * exact-duplicate group, preserving all document columns — the
     * DataFrame a pipeline feeds downstream. One fingerprint-keyed
-    * shuffle (16-byte keys); rows never widen.
+    * aggregate (`min_by` doc_id, map-side combined); rows never widen.
+    * Nearly every document is its own group, so the aggregate holds
+    * about the whole corpus: it must be one that can spill, never an
+    * in-memory per-key map such as TopKPerKey's.
     */
-  def dedupedCorpus(docs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("graft_fp")).orderBy(col("doc_id"))
-    docs.withColumn("graft_fp", md5(norm(col("text"))))
-      .withColumn("graft_rn", row_number().over(w))
-      .filter(col("graft_rn") === 1)
-      .drop("graft_fp", "graft_rn")
-  }
+  def dedupedCorpus(docs: DataFrame): DataFrame =
+    docs.groupBy(md5(norm(col("text"))).as("graft_fp"))
+      .agg(min_by(struct(docs.columns.map(col): _*), col("doc_id")).as("graft_doc"))
+      .select(col("graft_doc.*"))
 
   /** Streaming exact dedup (dropDuplicates state) — per-source
     * unique-document counts, same oracle as a batch distinct.
@@ -825,12 +860,9 @@ object Dedup {
       threshold: Double = 0.8): DataFrame = {
     val bi = lshBuckets(minhashSignatures(incSh))
     val cross = incrementCrossCandidates(corpusBuckets, bi)
-    val self = bi.toDF("id1", "band", "sig")
-      .join(bi.toDF("id2", "band2", "sig2"),
-        col("band") === col("band2") && col("sig") === col("sig2")
-          && col("id1") < col("id2"))
-      .select("id1", "id2")
-    jaccardVerify(corpusSh.union(incSh), cross.union(self), threshold)
+    val self = bucketPairs(bi, "doc_id", Seq("band", "sig"))
+    // a cross pair arrives once per colliding band
+    jaccardVerify(corpusSh.union(incSh), cross.union(self).distinct(), threshold)
   }
 
   /** Write the LSH bucket index (doc_id, band, sig) of a corpus to
@@ -966,7 +998,7 @@ object Dedup {
           .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
             val batchSh = shinglesHashed(batch.toDF())
             val cand = incrementCrossCandidates(Tables.parquet(s, idx),
-              lshBuckets(minhashSignatures(batchSh)))
+              lshBuckets(minhashSignatures(batchSh))).distinct()
             graft.Ckpt.scoped { sc =>
               sc.adopt(jaccardVerify(
                 stagedShingles(s, d).filter(col("doc_id") < split).union(batchSh), cand, 0.8))
@@ -1012,12 +1044,8 @@ object Dedup {
       |       JOIN tot t2 ON p.id2 = t2.doc_id
       |WHERE imin / (t1.tw + t2.tw - imin) >= 0.5
       |ORDER BY id1, id2""".stripMargin) { (s, d) =>
-    val tf = graft.Ckpt.keep(Tables.documents(s, d).filter(col("doc_id") < 300L)
-      .select(col("doc_id"),
-        explode(regexp_extract_all(lower(col("text")), lit("\\S+"), lit(0)))
-          .as("tok"))
-      .groupBy(col("doc_id"), col("tok"))
-      .agg(count(lit(1)).cast("double").as("w"))) // pair join + totals share one scan
+    // pair join + totals share one scan
+    val tf = graft.Ckpt.keep(termFreqs(Tables.documents(s, d).filter(col("doc_id") < 300L)))
     val tot = tf.groupBy("doc_id").agg(sum(col("w")).as("tw"))
     tf.toDF("id1", "tok", "w1")
       .join(tf.toDF("id2", "tok2", "w2"),
@@ -1048,7 +1076,7 @@ object Dedup {
     * aggregate over the O(doc·vocab·K) relation.
     *
     * Candidates = docs agreeing on ≥1 of the K=16 (j, token, t)
-    * buckets (bucket join, never all-pairs: collision prob at
+    * buckets (bucketPairs, never all-pairs: collision prob at
     * J_w=0.5 is 1−0.5¹⁶ ≈ 0.99998); each candidate is then verified
     * with the EXACT weighted Jaccard over the tf relation restricted
     * to candidate ids (precision 1 by construction — same discipline
@@ -1062,17 +1090,21 @@ object Dedup {
     weightedMinhashPairs(docs, IcwsThreshold)
   }
 
+  /** (doc_id, tok, w): each document's lower-cased whitespace tokens
+    * with their counts (as doubles) — the weighted-dedup relation.
+    */
+  private def termFreqs(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"),
+        explode(regexp_extract_all(lower(col("text")), lit("\\S+"), lit(0))).as("tok"))
+      .groupBy(col("doc_id"), col("tok"))
+      .agg(count(lit(1)).cast("double").as("w"))
+
   /** The ICWS pipeline shared with the spec: tf weights → K ICWS
-    * samples → bucket-join candidates → exact weighted-Jaccard
+    * samples → bucket candidates → exact weighted-Jaccard
     * verify ≥ threshold. Returns (id1, id2, w_jaccard).
     */
   private[graft] def weightedMinhashPairs(docs: DataFrame, threshold: Double): DataFrame = {
-    val tf = graft.Ckpt.keep(docs
-      .select(col("doc_id"),
-        explode(regexp_extract_all(lower(col("text")), lit("\\S+"), lit(0)))
-          .as("tok"))
-      .groupBy(col("doc_id"), col("tok"))
-      .agg(count(lit(1)).cast("double").as("w"))) // feeds samples AND the exact verify
+    val tf = graft.Ckpt.keep(termFreqs(docs)) // feeds samples AND the exact verify
     // u ∈ (0, 1]: top 53 hash bits + 1 — never 0, so ln is total
     def u(salt: Int): Column =
       (shiftrightunsigned(xxhash64(col("tok"), col("j"), lit(salt)), 11) + 1L)
@@ -1088,15 +1120,9 @@ object Dedup {
       .agg(min(struct(a.as("a"), col("tok").as("tok"), t.as("t"))).as("p"))
       .select(col("doc_id"), col("j"),
         col("p.tok").as("btok"), col("p.t").as("bt"))
-    val cand = graft.Ckpt.keep(sig.toDF("id1", "j", "btok", "bt")
-      .join(sig.toDF("id2", "j2", "btok2", "bt2"),
-        col("j") === col("j2") && col("btok") === col("btok2")
-          && col("bt") === col("bt2") && col("id1") < col("id2"))
-      .select("id1", "id2").distinct())
+    val cand = graft.Ckpt.keep(bucketPairs(sig, "doc_id", Seq("j", "btok", "bt")))
     // exact weighted Jaccard, candidate-restricted before any work
-    val candIds = cand.select(col("id1").as("doc_id"))
-      .union(cand.select(col("id2").as("doc_id"))).distinct()
-    val tfCand = tf.join(broadcast(candIds), Seq("doc_id"), "left_semi")
+    val tfCand = candidateRows(tf, cand)
     val totals = tfCand.groupBy("doc_id").agg(sum(col("w")).as("tw"))
     val interMin = cand
       .join(tfCand.toDF("id1", "tok", "w1"), "id1")
@@ -1228,7 +1254,7 @@ object Dedup {
     * and WITHOUT the all-pairs join. Under a global rarest-first
     * token order (df asc, token asc), any pair with Jaccard ≥ t must
     * share a token within each side's first m − ⌈t·m⌉ + 1 tokens —
-    * so candidates come from equi-joining only those PREFIX tokens
+    * so candidates are the pairs sharing one of those PREFIX tokens
     * (rare by construction → tiny buckets), then exact verification
     * runs on candidates alone. No global row_number is needed: the
     * (df, token) pair itself is the total order, so the only
@@ -1250,11 +1276,7 @@ object Dedup {
         Window.partitionBy(col("doc_id")).orderBy(col("df"), col("sh"))))
       .filter(col("pos") <= col("m") - ceil(lit(threshold) * col("m")) + 1)
       .select(col("doc_id"), col("sh"))
-    val cand = prefix.toDF("id1", "sh")
-      .join(prefix.toDF("id2", "sh2"),
-        col("sh") === col("sh2") && col("id1") < col("id2"))
-      .select(col("id1"), col("id2"))
-    jaccardVerify(toks, cand, threshold)
+    jaccardVerify(toks, bucketPairs(prefix, "doc_id", Seq("sh")), threshold)
   }
 
   val dedupSetsimPrefix: QueryDef = QueryDef.sql(
@@ -1295,8 +1317,7 @@ object Dedup {
     graft.Ckpt.scoped { sc =>
       val truth = sc.checkpoint(ngramPairs(docs, 300L, 0.8).select("id1", "id2"))
       val sh = sc.persist(stagedShingles(s, d).filter(col("doc_id") < 300L))
-      val verified = sc.checkpoint(sc.adopt(jaccardVerify(
-        sh, lshCandidates(minhashSignatures(sh)), 0.8)).select("id1", "id2"))
+      val verified = sc.checkpoint(sc.adopt(minhashPairs(sh, 0.8)).select("id1", "id2"))
       val nTruth = truth.count()
       val nVerified = verified.count()
       val nHit = truth.join(verified, Seq("id1", "id2"), "left_semi").count()

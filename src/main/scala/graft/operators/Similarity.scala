@@ -74,6 +74,14 @@ object Similarity {
       .limit(10)
   }
 
+  /** Each query's best candidate: per id1, the row with the highest
+    * cos_sim, the lowest id2 on ties — the ANN family's one top-1 cut,
+    * on the native TopKPerKey (bounded buffers, no sort).
+    */
+  private def top1(pairs: DataFrame): DataFrame =
+    org.apache.spark.sql.graft.TopKOps.topKPerKey(
+      pairs, Seq(col("id1")), Seq(col("cos_sim").desc, col("id2").asc), 1)
+
   /** Exact top-1 neighbor for each of the first 100 vectors. */
   val annTopkJoin: QueryDef = QueryDef.sql(
     "ann_topk_join",
@@ -86,17 +94,13 @@ object Similarity {
       |r AS (SELECT *, row_number() OVER (PARTITION BY id1
       |        ORDER BY cos_sim DESC, id2) AS rn FROM p)
       |SELECT id1, id2, cos_sim FROM r WHERE rn = 1 ORDER BY id1""".stripMargin) { (s, d) =>
-    import org.apache.spark.sql.expressions.Window
     val e = vectors(s, d).filter(col("vec_id") < 100)
     val n = e.withColumn("nrm", sqrt(dot(col("v"), col("v"))))
     val p = n.toDF("id1", "v", "nrm")
       .join(n.toDF("id2", "v2", "nrm2"), col("id1") =!= col("id2"))
       .select(col("id1"), col("id2"),
         (floor((dot(col("v"), col("v2")) / (col("nrm") * col("nrm2"))) * 10000 + 0.5) / 10000.0).as("cos_sim"))
-    val w = Window.partitionBy(col("id1")).orderBy(col("cos_sim").desc, col("id2"))
-    p.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .select("id1", "id2", "cos_sim")
-      .orderBy(col("id1"))
+    top1(p).orderBy(col("id1"))
   }
 
   // ---- Random-hyperplane LSH (scale path) ----------------------------
@@ -168,7 +172,6 @@ object Similarity {
     * standard (r,c)-amplification tradeoff).
     */
   val annLsh: QueryDef = QueryDef.rowsOnly("ann_lsh") { (s, d) =>
-    import org.apache.spark.sql.expressions.Window
     val e = vectors(s, d).withColumn("nrm", sqrt(dot(col("v"), col("v"))))
     val corpus = e
       .withColumn("ts", explode(lshAllSignatures(col("v"))))
@@ -190,10 +193,7 @@ object Similarity {
       .select(col("id1"), col("id2"),
         (floor((dot(col("qv"), col("v2")) / (col("qnrm") * col("nrm2"))) * 10000 + 0.5) / 10000.0).as("cos_sim"))
       .distinct() // same pair via several tables/probes → one row
-    val w = Window.partitionBy(col("id1")).orderBy(col("cos_sim").desc, col("id2"))
-    p.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .select("id1", "id2", "cos_sim")
-      .orderBy(col("id1"))
+    top1(p).orderBy(col("id1"))
   }
 
   // ---- IVF (inverted-file) ANN ---------------------------------------
@@ -213,6 +213,14 @@ object Similarity {
       struct((lit(dotd(c, c)) - lit(2.0) * dot(u, cl)).as("dist"),
         lit(i).as("list"))
     }
+
+  /** The nearest centroid to unit vector u, as its (dist, list) struct. */
+  private def nearestList(cs: Array[Array[Double]], u: Column): Column =
+    array_min(array(centroidStructs(cs, u): _*))
+
+  /** u's `probes` nearest centroids, one (dist, list) struct per row. */
+  private def probeLists(cs: Array[Array[Double]], u: Column, probes: Int): Column =
+    explode(slice(array_sort(array(centroidStructs(cs, u): _*)), 1, probes))
 
   private def dotd(a: Array[Double], b: Array[Double]): Double = {
     var s = 0.0; var i = 0
@@ -297,7 +305,6 @@ object Similarity {
     * hash-matched cross-engine.
     */
   val annIvf: QueryDef = QueryDef.sql("ann_ivf", ivfTopOracle(NLists, NProbe, 3, 4096)) { (s, d) =>
-    import org.apache.spark.sql.expressions.Window
     val e = vectors(s, d)
     val cs = coarseCentroids(e, annIndex(s, d))
     // norm and unit vector computed once per row as columns — the
@@ -306,11 +313,10 @@ object Similarity {
       .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
       .withColumn("u", scaled(col("v"), col("nrm")))
     val assigned = withUnit
-      .withColumn("list", array_min(array(centroidStructs(cs, col("u")): _*)).getField("list"))
+      .withColumn("list", nearestList(cs, col("u")).getField("list"))
       .select("vec_id", "v", "list", "nrm")
     val probes = withUnit.filter(col("vec_id") < 20)
-      .withColumn("probe", explode(slice(
-        array_sort(array(centroidStructs(cs, col("u")): _*)), 1, NProbe)))
+      .withColumn("probe", probeLists(cs, col("u"), NProbe))
       .select(col("vec_id").as("id1"), col("v").as("qv"),
         col("nrm").as("qnrm"), col("probe.list").as("list"))
     val p = probes.join(assigned.toDF("id2", "v2", "list", "nrm2"),
@@ -318,10 +324,7 @@ object Similarity {
       .filter(col("id1") =!= col("id2"))
       .select(col("id1"), col("id2"),
         (floor((dot(col("qv"), col("v2")) / (col("qnrm") * col("nrm2"))) * 10000 + 0.5) / 10000.0).as("cos_sim"))
-    val w = Window.partitionBy(col("id1")).orderBy(col("cos_sim").desc, col("id2"))
-    p.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .select("id1", "id2", "cos_sim")
-      .orderBy(col("id1"))
+    top1(p).orderBy(col("id1"))
   }
 
   // ---- Product quantization (PQ) ANN ---------------------------------
@@ -600,7 +603,7 @@ object Similarity {
       fitSubspaceCodebooks(e.limit(4096)
         .withColumn("u0", unit(col("v")))
         .withColumn("list",
-          array_min(array(centroidStructs(cs, col("u0")): _*)).getField("list"))
+          nearestList(cs, col("u0")).getField("list"))
         .select(residualExpr(cs, col("u0"), col("list")).as("u")))
     if (key.isEmpty) fit()
     else ivfPqCache.getOrElseUpdate(key,
@@ -615,7 +618,7 @@ object Similarity {
       cb: Array[Array[Array[Double]]]): DataFrame = {
     val withU = e.withColumn("u", unit(col("v")))
       .withColumn("list",
-        array_min(array(centroidStructs(cs, col("u")): _*)).getField("list"))
+        nearestList(cs, col("u")).getField("list"))
       .withColumn("res", residualExpr(cs, col("u"), col("list")))
     withPqCodes(withU, cb, col("res"), keep = Seq(col("vec_id"), col("list")))
   }
@@ -859,22 +862,18 @@ object Similarity {
   /** IVF-bucketed pairwise cosine ≥ threshold: every vector probes
     * its `probes` nearest coarse lists and pairs only WITHIN a list —
     * Σ n_l² work instead of n², sharded by list id across executors.
+    * (id1, id2, cos_sim), unordered: an entry that returns the pairs
+    * sorts them itself.
     */
   def embeddingIvfPairs(e: DataFrame, cs: Array[Array[Double]],
       threshold: Double, probes: Int): DataFrame = {
     val probed = e
       .withColumn("u", unit(col("v")))
-      .withColumn("probe", explode(slice(
-        array_sort(array(centroidStructs(cs, col("u")): _*)), 1, probes)))
+      .withColumn("probe", probeLists(cs, col("u"), probes))
       .select(col("vec_id"), col("u"), col("probe.list").as("list"))
-    probed.toDF("id1", "u1", "list")
-      .join(probed.toDF("id2", "u2", "list2"),
-        col("list") === col("list2") && col("id1") < col("id2"))
-      .select(col("id1"), col("id2"),
-        (floor((dot(col("u1"), col("u2"))) * 10000 + 0.5) / 10000.0).as("cos_sim"))
+    Dedup.bucketPairs(probed, "vec_id", Seq("list"), Seq("u"), Seq(col("id1"), col("id2"),
+        (floor((dot(col("u1"), col("u2"))) * 10000 + 0.5) / 10000.0).as("cos_sim")))
       .filter(col("cos_sim") >= threshold)
-      .distinct()
-      .orderBy(col("id1"), col("id2"))
   }
 
   /** The probed-pair CTEs over the fitted quantizer (`eu`, `fc3`
@@ -916,6 +915,7 @@ object Similarity {
          |SELECT id1, id2, cos_sim FROM pairs ORDER BY id1, id2""".stripMargin) { (s, d) =>
       val e = vectors(s, d)
       embeddingIvfPairs(e, coarseCentroids(e, annIndex(s, d)), 0.35, probes = 2)
+        .orderBy(col("id1"), col("id2"))
     }
 
   /** Exact cosine k-NN graph (k=4) over the whole embedding corpus
@@ -1057,7 +1057,7 @@ object Similarity {
     graft.Ckpt.scoped { sc =>
       val assigned = sc.checkpoint(withUnit
         .withColumn("list",
-          array_min(array(centroidStructs(cs, col("u")): _*)).getField("list"))
+          nearestList(cs, col("u")).getField("list"))
         .select(col("vec_id").as("dst"), col("v").as("v2"),
           col("nrm").as("nrm2"), col("list"))) // one assignment pass, reused by all probes
       // a kNN-GRAPH build probes deeper than a point query (it runs
@@ -1066,8 +1066,7 @@ object Similarity {
       // fraction keeps shrinking while absolute probes stay constant
       val graphProbes = 8
       val probes = withUnit
-        .withColumn("probe", explode(slice(
-          array_sort(array(centroidStructs(cs, col("u")): _*)), 1, graphProbes)))
+        .withColumn("probe", probeLists(cs, col("u"), graphProbes))
         .select(col("vec_id").as("src"), col("v").as("qv"),
           col("nrm").as("qnrm"), col("probe.list").as("list"))
       val cand = probes.join(assigned, Seq("list"))
@@ -1303,7 +1302,7 @@ object Similarity {
     val assigned = e
       .withColumn("u", unit(col("v")))
       .withColumn("best",
-        array_min(array(centroidStructs(cs, col("u")): _*)))
+        nearestList(cs, col("u")))
       .select(col("best.list").as("list"),
         sqrt(greatest(col("best.dist") + 1.0, lit(0.0))).as("resid"))
     assigned.groupBy(col("list"))
@@ -1445,8 +1444,6 @@ object Similarity {
       .repartition(e.sparkSession.sparkContext.defaultParallelism, col("src"))
     val b = e.select(col("vec_id").as("dst"), col("label").as("nb_label"),
       col("v").as("vb"), sqrt(dot(col("v"), col("v"))).as("nb"))
-    val wVote = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("src")).orderBy(col("n_votes").desc, col("nb_label"))
     // Regime estimate: plan bytes of the vector relation (see emb_knn_graph)
     val pairs = a.crossJoin(Regime.broadcastIfFits(
         "emb_knn_classify.vectors", Regime.planBytes(e), b, "cartesian"))
@@ -1454,12 +1451,13 @@ object Similarity {
       .select(col("src"), col("truth"), col("nb_label"), col("dst"),
         (floor((dot(col("va"), col("vb")) / (col("na") * col("nb"))) * 10000 + 0.5) / 10000.0)
           .as("cos_sim"))
-    org.apache.spark.sql.graft.TopKOps.topKPerKey(
+    val votes = org.apache.spark.sql.graft.TopKOps.topKPerKey(
         pairs, Seq(col("src")), Seq(col("cos_sim").desc, col("dst").asc), k)
       .groupBy(col("src"), col("truth"), col("nb_label"))
       .agg(count(lit(1)).as("n_votes"))
-      .withColumn("vr", row_number().over(wVote))
-      .filter(col("vr") === 1)
+    // the vote: per src, the most-voted label, the lowest on ties
+    org.apache.spark.sql.graft.TopKOps.topKPerKey(
+        votes, Seq(col("src")), Seq(col("n_votes").desc, col("nb_label").asc), 1)
       .groupBy(col("truth"), col("nb_label").as("predicted"))
       .agg(count(lit(1)).as("n"))
   }
@@ -1802,16 +1800,13 @@ object Similarity {
     * grids), so the readout is stable across runs and partitionings.
     */
   val annRecallEval: QueryDef = QueryDef.rowsOnly("ann_recall_eval") { (s, d) =>
-    import org.apache.spark.sql.expressions.Window
     val e = vectors(s, d).withColumn("nrm", sqrt(dot(col("v"), col("v"))))
     val q = e.filter(col("vec_id") < 20)
       .select(col("vec_id").as("id1"), col("v").as("qv"), col("nrm").as("qn"))
-    val w = Window.partitionBy(col("id1")).orderBy(col("cos_sim").desc, col("id2"))
-    val exact1 = e.toDF("id2", "v2", "n2")
+    val exact1 = top1(e.toDF("id2", "v2", "n2")
       .join(broadcast(q), col("id1") =!= col("id2"))
       .select(col("id1"), col("id2"),
-        (floor((dot(col("qv"), col("v2")) / (col("qn") * col("n2"))) * 10000 + 0.5) / 10000.0).as("cos_sim"))
-      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+        (floor((dot(col("qv"), col("v2")) / (col("qn") * col("n2"))) * 10000 + 0.5) / 10000.0).as("cos_sim")))
       .select(col("id1"), col("id2").as("nn"))
     def top1Recall(method: String, got: DataFrame): DataFrame =
       exact1.join(got, Seq("id1"), "left_outer")

@@ -7,22 +7,20 @@ import graft.operators.Dedup
 /** Plan auditor: prints the formatted physical plan for the named
   * queries (or every registry entry) so shuffle/broadcast/pushdown
   * can be reviewed. Besides the registry names it knows two internal
-  * plans, `lsh_candidates` and `jaccard_verify`: the MinHash/LSH
-  * candidate generation and the Jaccard verify that the dedup family
-  * hides behind a localCheckpoint (its registry plans end in a
-  * LocalTableScan).
+  * plans that the dedup family hides behind a localCheckpoint (its
+  * registry plans end in a LocalTableScan): `lsh_candidates`, the
+  * MinHash/LSH candidate generation (`Dedup.lshCandidates`, one
+  * `bucketPairs` expansion), and `jaccard_verify`, the verified
+  * MinHash pairs (`Dedup.minhashPairs`), both over the staged shingles.
   * Usage: runMain graft.tools.Explain <sfDir> [name ...]
   */
 object Explain {
-  private def lshCandidates(s: SparkSession, d: String): DataFrame =
-    Dedup.lshCandidates(Dedup.minhashSignatures(Dedup.stagedShingles(s, d)))
-
   private val plans: Map[String, (SparkSession, String) => DataFrame] =
     SparkEntry.queries ++ Map(
-      "lsh_candidates" -> lshCandidates _,
+      "lsh_candidates" -> ((s: SparkSession, d: String) =>
+        Dedup.lshCandidates(Dedup.minhashSignatures(Dedup.stagedShingles(s, d)))),
       "jaccard_verify" -> ((s: SparkSession, d: String) =>
-        Dedup.jaccardVerify(Dedup.stagedShingles(s, d), lshCandidates(s, d), 0.8)
-          .orderBy("id1", "id2")))
+        Dedup.minhashPairs(Dedup.stagedShingles(s, d), 0.8).orderBy("id1", "id2")))
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")

@@ -117,7 +117,7 @@ class DedupSpec extends AnyFunSuite {
     val expected = Dedup.jaccardVerify(
       Dedup.shinglesHashed(corpus).union(incSh),
       Dedup.incrementCrossCandidates(spark.read.parquet(idx),
-        Dedup.lshBuckets(Dedup.minhashSignatures(incSh))), 0.8)
+        Dedup.lshBuckets(Dedup.minhashSignatures(incSh))).distinct(), 0.8)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val streamed = Dedup.streamDedupIndexed.fn(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet

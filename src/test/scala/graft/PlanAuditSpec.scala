@@ -100,12 +100,31 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(p.contains("o_orderstatus"))
   }
 
-  test("banded simhash LSH joins on bucket equality, never cartesian") {
+  test("banded simhash LSH pairs within grouped buckets, never cartesian") {
+    // bucketPairs: one group-by on (band, bv), a member-list expansion,
+    // and no join at all (the signatures ride along as payload)
     val p = plan("dedup_simhash_lsh")
     assert(!p.contains("CartesianProduct"))
     assert(!p.contains("BroadcastNestedLoopJoin"))
-    assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin")
-      || p.contains("BroadcastHashJoin"), s"no equality join in:\n$p")
+    assert(!p.contains("Join"), s"a join in:\n$p")
+    assert(p.contains("collect_list") && p.contains("Generate"), s"no bucket expansion in:\n$p")
+  }
+
+  test("the four ANN top-1 entries cut with TopKPerKey, not a window") {
+    for (name <- Seq("ann_topk_join", "ann_lsh", "ann_ivf", "ann_recall_eval")) {
+      val p = plan(name)
+      assert(p.contains("TopKPerKey"), s"$name plans no TopKPerKey:\n$p")
+      assert(!p.contains("Window"), s"$name plans a Window:\n$p")
+    }
+  }
+
+  test("dedupedCorpus keeps the lowest doc_id in an aggregate, never TopKPerKey") {
+    // nearly every document is its own fingerprint group, so an
+    // in-memory per-key map (TopKPerKey's) would hold the whole corpus
+    val p = graft.operators.Dedup.dedupedCorpus(graft.sources.Tables.documents(spark, sf))
+      .queryExecution.executedPlan.toString
+    assert(!p.contains("TopKPerKey") && !p.contains("Window"), p)
+    assert(p.contains("min_by"), s"no min_by aggregate in:\n$p")
   }
 
   test("minhash LSH candidate generation is an equality join, never cartesian") {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -119,22 +120,97 @@ class Round11Spec extends AnyFunSuite {
       s"branches diverge:\n${fast.take(10)}\nvs\n${expanded.take(10)}")
   }
 
-  test("lshCandidates group-then-expand equals the self-join pair set") {
-    import spark.implicits._
+  test("bucketPairs equals the self-join pair set on every key shape") {
+    import graft.operators.{Dedup, Similarity}
     val docs = graft.sources.Tables.documents(spark, sf).limit(200)
-    val sigs = graft.operators.Dedup.minhashSignatures(
-      graft.operators.Dedup.shinglesHashed(docs))
-    val now = graft.operators.Dedup.lshCandidates(sigs)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // r10 self-join spelling
-    val buckets = graft.operators.Dedup.lshBuckets(sigs)
-    val ref = buckets.toDF("id1", "band", "sig")
-      .join(buckets.toDF("id2", "band2", "sig2"),
-        col("band") === col("band2") && col("sig") === col("sig2")
-          && col("id1") < col("id2"))
-      .select("id1", "id2").distinct()
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(now == ref, s"missing=${(ref -- now).take(5)} extra=${(now -- ref).take(5)}")
-    assert(now.nonEmpty, "vacuous parity: no candidates at this SF")
+    val hashed = Dedup.shinglesHashed(docs)
+    val toks = docs.select(col("doc_id"),
+      explode(regexp_extract_all(lower(col("text")), lit("\\S+"), lit(0))).as("tok"))
+    val sims = Dedup.simhash(docs)
+    val vecs = Similarity.vectors(spark, sf).filter(col("vec_id") < 200)
+    val idPair = Seq(col("id1"), col("id2"))
+    val simBands = sims.select(col("doc_id"), col("simhash"),
+        explode(array((0 until 4).map(j => struct(lit(j).as("band"),
+          shiftright(col("simhash"), j * 16).bitwiseAND(0xFFFF).as("bv"))): _*)).as("b"))
+      .select(col("doc_id"), col("simhash"), col("b.band").as("band"), col("b.bv").as("bv"))
+    val hamming = bit_count(col("simhash1").bitwiseXOR(col("simhash2"))).cast("long").as("hamming")
+    // the pair's lowest shared band, told by the two signatures
+    val lowestBand = (0 until 3).map(j => col("band") <= j ||
+      shiftright(col("simhash1").bitwiseXOR(col("simhash2")), j * 16).bitwiseAND(0xFFFF) =!= 0)
+      .reduce(_ && _)
+    // (shape, rows, id, keys, payload, out, first): every key shape the
+    // pair families feed bucketPairs, with the payload the site carries
+    val shapes = Seq[(String, DataFrame, String, Seq[String], Seq[String], Seq[Column], Option[Column])](
+      ("MinHash bands", Dedup.lshBuckets(Dedup.minhashSignatures(hashed)),
+        "doc_id", Seq("band", "sig"), Nil, idPair, None),
+      ("SimHash 16-bit bands", simBands, "doc_id", Seq("band", "bv"), Seq("simhash"),
+        idPair :+ hamming, None),
+      ("SimHash bands, lowest shared band", simBands, "doc_id", Seq("band", "bv"), Seq("simhash"),
+        idPair :+ hamming, Some(lowestBand)),
+      // ICWS-shaped (j, tok, t): per (doc, j) the token of least hash
+      ("ICWS (j, tok, t)", toks.withColumn("j", explode(array((0 until 4).map(lit): _*)))
+          .groupBy(col("doc_id"), col("j"))
+          .agg(min(struct(xxhash64(col("tok"), col("j")).as("h"), col("tok").as("tok"))).as("p"))
+          .select(col("doc_id"), col("j"), col("p.tok").as("btok"),
+            (length(col("p.tok")) % 3).cast("long").as("bt")),
+        "doc_id", Seq("j", "btok", "bt"), Nil, idPair, None),
+      // a rarest-first prefix stand-in: each doc's 3 least-hashed shingles
+      ("set-sim prefix shingles", Dedup.shingles(docs)
+          .withColumn("r", row_number().over(org.apache.spark.sql.expressions.Window
+            .partitionBy(col("doc_id")).orderBy(xxhash64(col("sh")), col("sh"))))
+          .filter(col("r") <= 3).select(col("doc_id"), col("sh")),
+        "doc_id", Seq("sh"), Nil, idPair, None),
+      ("IVF probe lists", vecs.select(col("vec_id"), col("v").as("u"),
+          explode(array((col("vec_id") % 7).cast("int"), ((col("vec_id") * 3 + 1) % 7).cast("int")))
+            .as("list")).dropDuplicates("vec_id", "list"),
+        "vec_id", Seq("list"), Seq("u"),
+        idPair :+ (floor(Similarity.dot(col("u1"), col("u2")) * 10000 + 0.5) / 10000.0).as("cos_sim"),
+        None),
+      // one hot key shared by 60 ids, beside a cold key per id
+      ("hot bucket", spark.range(0, 60).select(col("id").as("doc_id"),
+          explode(array(lit(-1L), col("id"))).as("k")),
+        "doc_id", Seq("k"), Nil, idPair, None))
+    for ((shape, rows, id, keys, payload, out, first) <- shapes) {
+      val got = Dedup.bucketPairs(rows, id, keys, payload, out, first)
+      // the self-join + distinct spelling the pair families used
+      def side(n: String) = rows.select(col(id).as(s"id$n") +:
+        (keys.map(k => col(k).as(s"$k$n")) ++ payload.map(p => col(p).as(s"$p$n"))): _*)
+      val ref = side("1").join(side("2"),
+          keys.map(k => col(s"${k}1") === col(s"${k}2")).reduce(_ && _) && col("id1") < col("id2"))
+        .select(out: _*).distinct()
+      val (g, r) = (got.collect().map(_.toString).toSeq, ref.collect().map(_.toString).toSeq)
+      assert(g.size == g.distinct.size, s"$shape: a pair came out twice")
+      assert(g.toSet == r.toSet,
+        s"$shape: missing=${(r.toSet -- g).take(5)} extra=${(g.toSet -- r).take(5)}")
+      assert(g.nonEmpty, s"vacuous parity: no $shape pairs at this SF")
+      if (shape == "hot bucket") assert(g.size == 60 * 59 / 2, s"hot bucket: ${g.size} pairs")
+    }
+  }
+
+  test("Dedup and Similarity expand buckets and cut top-1 in one place") {
+    // a bucket self-join on id1 < id2 or a row_number top-1 window is
+    // the spelling bucketPairs and TopKPerKey replaced; only the exact
+    // overlap counts (ngramPairs, dedup_weighted_exact) join on id1 < id2
+    import java.nio.file.{Files, Paths}
+    val defn = """(?m)^  (?:private(?:\[\w+\])? )?(?:lazy )?(?:def|val) (\w+)""".r
+    val idLess = """col\("id1"\)\s*<\s*col\("id2"\)""".r
+    val top1 = """row_number\(\)\.over\([^)]*\)\)\s*\.filter\(col\("[^"]+"\)\s*===\s*1\)""".r
+    val exact = Set("ngramPairs", "dedupWeightedExact")
+    val hits = Seq("Dedup.scala", "Similarity.scala").flatMap { f =>
+      val p = Paths.get("src/main/scala/graft/operators", f)
+      assert(Files.isRegularFile(p), s"$p not found")
+      val code = Files.readString(p)
+      val starts = defn.findAllMatchIn(code).map(m => (m.start, m.group(1))).toSeq
+      def owner(at: Int) = starts.takeWhile(_._1 <= at).lastOption.fold("?")(_._2)
+      // a key self-join: id1 < id2 inside a join condition that also equates keys
+      val selfJoins = idLess.findAllMatchIn(code).filter { m =>
+        val j = code.lastIndexOf(".join(", m.start)
+        j >= 0 && m.start - j < 300 && code.substring(j, m.start).contains("===")
+      }
+      selfJoins.map(m => owner(m.start)).filterNot(exact)
+        .map(d => s"$f: bucket self-join in $d").toSeq ++
+        top1.findAllMatchIn(code).map(m => s"$f: row_number top-1 in ${owner(m.start)}")
+    }
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 }
