@@ -426,36 +426,9 @@ object Embeddings {
       |    / power(s2 / n - (s1 / n) * (s1 / n), 1.5) * 10000 + 0.5) / 10000
       |    AS skewness
       |FROM s""".stripMargin) { (s, d) =>
-    val e = graft.operators.Similarity.vectors(s, d)
-    // per-side norms: 1 dot per pair instead of 3, bit-identical cos
-    // repartition(src): the embeddings table is ONE parquet split, so
-    // the O(n²) dot-product stage (and the top-4 cut) otherwise runs
-    // on a single core behind the broadcast cross join; hashing the
-    // n-row probe side across the session's shuffle partitions is a
-    // ~n-row exchange that buys full parallelism AND leaves the pair
-    // relation hash(src)-clustered, so the top-k cut below plans no
-    // further exchange (guide §2.5 input-skew / §2.4).
-    val a = e.select(col("vec_id").as("src"), col("v").as("va"),
-      sqrt(graft.operators.Similarity.dot(col("v"), col("v"))).as("na"))
-      .repartition(e.sparkSession.sparkContext.defaultParallelism, col("src"))
-    val b = e.select(col("vec_id").as("dst"), col("v").as("vb"),
-      sqrt(graft.operators.Similarity.dot(col("v"), col("v"))).as("nb"))
-    // native bounded-buffer top-4 per src instead of the window rank:
-    // the rank-filter spelling sorts every src's full n-row candidate
-    // list (WindowGroupLimit still sorts the whole partition); the
-    // TopKPerKey cut keeps 4-row buffers and never sorts. Same
-    // (cos_sim DESC, dst) total order ⇒ identical surviving rows.
-    // Regime estimate: plan bytes of the vector relation (see
-    // emb_knn_graph); cartesian fallback, identical pair set
-    val pairs = a.crossJoin(Regime.broadcastIfFits(
-        "emb_hubness.vectors", Regime.planBytes(e), b, "cartesian"))
-      .filter(col("src") =!= col("dst"))
-      .select(col("src"), col("dst"),
-        round(graft.operators.Similarity.dot(col("va"), col("vb"))
-          / (col("na") * col("nb")), 4)
-          .as("cos_sim"))
-    val nk = org.apache.spark.sql.graft.TopKOps.topKPerKey(
-        pairs, Seq(col("src")), Seq(col("cos_sim").desc, col("dst").asc), 4)
+    val e = Similarity.vectors(s, d)
+    // the oracle rounds with round(…, 4), not the floor spelling
+    val nk = Similarity.exactKnn(e, "emb_hubness.vectors", 4, Nil, round(_, 4))
       .groupBy(col("dst")).agg(count(lit(1)).as("nk0"))
     val occ = e.select(col("vec_id"))
       .join(nk, col("vec_id") === col("dst"), "left_outer")

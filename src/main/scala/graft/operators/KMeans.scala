@@ -1449,7 +1449,7 @@ object KMeans {
   /** DuckDB replay of sphericalFit: list_dot_product accumulates in
     * the same left-to-right order as the codegen'd dot, the argmax
     * uses the identical (−dot, cid) ordering, and the per-dim member
-    * means + renormalization mirror the sweep's Σv / n + l2norm. n is
+    * means + renormalization mirror the sweep's Σv / n + normalize. n is
     * exact; mean_cos floors at 1e-4 (assignment flips would need a
     * sub-ulp dot margin).
     */
@@ -1518,11 +1518,6 @@ object KMeans {
       .orderBy(col("cid"))
   }
 
-  private def l2norm(a: Array[Double]): Array[Double] = {
-    val n = math.sqrt(a.map(x => x * x).sum)
-    if (n == 0) a else a.map(_ / n)
-  }
-
   /** The nonzero embeddings as unit vectors `v`, divided by the
     * native `vec_div` (the transform() HOF is CodegenFallback and
     * would evict the projection from whole-stage codegen).
@@ -1540,7 +1535,7 @@ object KMeans {
     graft.Ckpt.scoped { sc =>
       val pts = sc.persist(unitEmbeddings(s, d))
       val init = pts.orderBy(col("vec_id")).limit(k)
-        .select("v").collect().map(r => l2norm(r.getSeq[Double](0).toArray))
+        .select("v").collect().map(r => Similarity.normalize(r.getSeq[Double](0).toArray))
       spherical(pts, init, iters)
     }
 
@@ -1568,7 +1563,7 @@ object KMeans {
         else {
           val sv = sums(c).take(dim)
           cos(c) = sv.indices.map(j => sv(j) * cs(c)(j)).sum / n
-          l2norm(sv.map(_ / n))
+          Similarity.normalize(sv.map(_ / n))
         }
       }.toArray
       cs.indices.filter(sizes(_) > 0).map(c => cos(c) * sizes(c)).sum / sizes.sum

@@ -1,7 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.TopKOps
 import graft.QueryDef
 import graft.sources.Tables
 
@@ -30,18 +32,21 @@ object Similarity {
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
 
-  /** Embeddings as (vec_id, v: array<double>). */
-  /** NONZERO-NORM INVARIANT: every cosine path here divides by the
-    * row's L2 norm; a zero-norm embedding yields NaN, and NaN then
-    * DIVERGES between engines (Spark's floor() maps NaN to 0, DuckDB
-    * keeps it) — a silent hash drift instead of a failure. The
+  /** Embeddings as (vec_id, `extra` columns…, v: array<double>).
+    *
+    * NONZERO-NORM INVARIANT: every cosine path here divides by the
+    * row's L2 norm; a zero-norm embedding divides by zero: under ANSI
+    * mode a DIVIDE_BY_ZERO error that names no row, otherwise NaN,
+    * and NaN then DIVERGES between engines (Spark's floor() maps NaN
+    * to 0, DuckDB keeps it) — a silent hash drift. The
     * corpus generator never emits zero vectors; assert_true turns a
     * future violation into a loud error at the scan, one codegen'd
     * comparison per row.
     */
-  def vectors(s: SparkSession, d: String): DataFrame =
+  def vectors(s: SparkSession, d: String, extra: String*): DataFrame =
     Tables.embeddings(s, d)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      .select((col("vec_id") +: extra.map(col)) :+
+        col("embedding").cast("array<double>").as("v"): _*)
       // assert_true returns NULL when the condition holds, so the
       // filter passes every valid row and throws on a violation; as a
       // Filter (not a dropped projection) it cannot be pruned away.
@@ -53,6 +58,14 @@ object Similarity {
       .filter(assert_true(dot(col("v"), col("v")) > lit(0.0d),
         concat(lit("zero-norm embedding: cosine similarity is undefined: vec_id="),
           col("vec_id"))).isNull)
+
+  /** The 4-dp rounding the oracles replay: floor(x·10⁴ + 0.5) / 10⁴. */
+  private def round4(c: Column): Column = floor(c * 10000 + 0.5) / 10000.0
+
+  /** The unit vector of row `id`, fetched to the driver. */
+  private def queryVector(e: DataFrame, id: Long): Array[Double] =
+    e.filter(col("vec_id") === id).select(unit(col("v")))
+      .collect()(0).getSeq[Double](0).toArray
 
   /** Exact cosine top-10 for the vec_id=0 query vector. */
   val annBruteforce: QueryDef = QueryDef.sql(
@@ -69,7 +82,7 @@ object Similarity {
     e.filter(col("vec_id") =!= 0)
       .crossJoin(broadcast(q))
       .select(col("vec_id"),
-        (floor((cosine(col("v"), col("qv"))) * 10000 + 0.5) / 10000.0).as("cos_sim"))
+        round4(cosine(col("v"), col("qv"))).as("cos_sim"))
       .orderBy(col("cos_sim").desc, col("vec_id"))
       .limit(10)
   }
@@ -79,8 +92,29 @@ object Similarity {
     * on the native TopKPerKey (bounded buffers, no sort).
     */
   private def top1(pairs: DataFrame): DataFrame =
-    org.apache.spark.sql.graft.TopKOps.topKPerKey(
-      pairs, Seq(col("id1")), Seq(col("cos_sim").desc, col("id2").asc), 1)
+    TopKOps.topKPerKey(pairs, Seq(col("id1")), Seq(col("cos_sim").desc, col("id2").asc), 1)
+
+  /** Per `key`, the k best rows under `order` numbered 1..k as `rank`:
+    * the TopKPerKey cut, then a row_number over only its ≤ k survivors
+    * (a window over every candidate would sort them all).
+    */
+  private def rankedTopK(pairs: DataFrame, key: String, order: Seq[Column], k: Int): DataFrame =
+    TopKOps.topKPerKey(pairs, Seq(col(key)), order, k)
+      .withColumn("rank", row_number().over(Window.partitionBy(col(key)).orderBy(order: _*)))
+
+  /** `e` with its L2 norm as `nrm`. */
+  private def normed(e: DataFrame): DataFrame = e.withColumn("nrm", sqrt(dot(col("v"), col("v"))))
+
+  /** Query×corpus candidates scored by rounded cosine: queries (id1,
+    * qv, qnrm, keys…) meet corpus rows (id2, v2, nrm2, keys…) on equal
+    * `keys`, or with no keys every corpus row meets the broadcast
+    * queries; self-pairs are dropped. (id1, id2, cos_sim), unordered.
+    */
+  private def probePairs(queries: DataFrame, corpus: DataFrame, keys: Seq[String]): DataFrame =
+    (if (keys.isEmpty) corpus.join(broadcast(queries), col("id1") =!= col("id2"))
+     else queries.join(corpus, keys).filter(col("id1") =!= col("id2")))
+      .select(col("id1"), col("id2"),
+        round4(dot(col("qv"), col("v2")) / (col("qnrm") * col("nrm2"))).as("cos_sim"))
 
   /** Exact top-1 neighbor for each of the first 100 vectors. */
   val annTopkJoin: QueryDef = QueryDef.sql(
@@ -94,13 +128,9 @@ object Similarity {
       |r AS (SELECT *, row_number() OVER (PARTITION BY id1
       |        ORDER BY cos_sim DESC, id2) AS rn FROM p)
       |SELECT id1, id2, cos_sim FROM r WHERE rn = 1 ORDER BY id1""".stripMargin) { (s, d) =>
-    val e = vectors(s, d).filter(col("vec_id") < 100)
-    val n = e.withColumn("nrm", sqrt(dot(col("v"), col("v"))))
-    val p = n.toDF("id1", "v", "nrm")
-      .join(n.toDF("id2", "v2", "nrm2"), col("id1") =!= col("id2"))
-      .select(col("id1"), col("id2"),
-        (floor((dot(col("v"), col("v2")) / (col("nrm") * col("nrm2"))) * 10000 + 0.5) / 10000.0).as("cos_sim"))
-    top1(p).orderBy(col("id1"))
+    val n = normed(vectors(s, d).filter(col("vec_id") < 100))
+    top1(probePairs(n.toDF("id1", "qv", "qnrm"), n.toDF("id2", "v2", "nrm2"), Nil))
+      .orderBy(col("id1"))
   }
 
   // ---- Random-hyperplane LSH (scale path) ----------------------------
@@ -172,7 +202,7 @@ object Similarity {
     * standard (r,c)-amplification tradeoff).
     */
   val annLsh: QueryDef = QueryDef.rowsOnly("ann_lsh") { (s, d) =>
-    val e = vectors(s, d).withColumn("nrm", sqrt(dot(col("v"), col("v"))))
+    val e = normed(vectors(s, d))
     val corpus = e
       .withColumn("ts", explode(lshAllSignatures(col("v"))))
       .select(col("vec_id").as("id2"), col("v").as("v2"),
@@ -186,14 +216,9 @@ object Similarity {
         else col("ts.sig").bitwiseXOR(lit(1 << b))
       }: _*)))
       .select(col("vec_id").as("id1"), col("v").as("qv"),
-        col("nrm").as("qnrm"), col("ts.t").as("qt"), col("probe"))
-    val p = queries.join(corpus,
-        col("qt") === col("t") && col("probe") === col("sig") &&
-          col("id1") =!= col("id2"))
-      .select(col("id1"), col("id2"),
-        (floor((dot(col("qv"), col("v2")) / (col("qnrm") * col("nrm2"))) * 10000 + 0.5) / 10000.0).as("cos_sim"))
-      .distinct() // same pair via several tables/probes → one row
-    top1(p).orderBy(col("id1"))
+        col("nrm").as("qnrm"), col("ts.t").as("t"), col("probe").as("sig"))
+    // same pair via several tables/probes → one row
+    top1(probePairs(queries, corpus, Seq("t", "sig")).distinct()).orderBy(col("id1"))
   }
 
   // ---- IVF (inverted-file) ANN ---------------------------------------
@@ -283,14 +308,14 @@ object Similarity {
         KMeans.ndLloyd(sample, init, iters = 3)._1
       }
     }
-    def loadOrFit(): Array[Array[Double]] =
-      loadIndexPart(e.sparkSession, key, "centroids")
-        .map(_.map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
-          .sortBy(_._1).map(_._2))
-        .getOrElse(fit())
     if (key.isEmpty) fit()
-    else quantizerCache.getOrElseUpdate(key, loadOrFit())
+    else quantizerCache.getOrElseUpdate(key, loadCentroids(e.sparkSession, key).getOrElse(fit()))
   }
+
+  /** The coarse centroids persisted in the index, if built. */
+  private def loadCentroids(s: SparkSession, key: String): Option[Array[Array[Double]]] =
+    loadIndexPart(s, key, "centroids")
+      .map(_.map(r => r.getInt(0) -> r.getSeq[Double](1).toArray).sortBy(_._1).map(_._2))
 
   /** IVF ANN: assign every vector to its nearest coarse centroid
     * (map-side expression over broadcast centroid literals — the
@@ -306,25 +331,25 @@ object Similarity {
     */
   val annIvf: QueryDef = QueryDef.sql("ann_ivf", ivfTopOracle(NLists, NProbe, 3, 4096)) { (s, d) =>
     val e = vectors(s, d)
-    val cs = coarseCentroids(e, annIndex(s, d))
-    // norm and unit vector computed once per row as columns — the
-    // normalization never re-enters the 16 per-centroid dist exprs
-    val withUnit = e
-      .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
-      .withColumn("u", scaled(col("v"), col("nrm")))
-    val assigned = withUnit
-      .withColumn("list", nearestList(cs, col("u")).getField("list"))
-      .select("vec_id", "v", "list", "nrm")
-    val probes = withUnit.filter(col("vec_id") < 20)
-      .withColumn("probe", probeLists(cs, col("u"), NProbe))
-      .select(col("vec_id").as("id1"), col("v").as("qv"),
-        col("nrm").as("qnrm"), col("probe.list").as("list"))
-    val p = probes.join(assigned.toDF("id2", "v2", "list", "nrm2"),
-        Seq("list"))
-      .filter(col("id1") =!= col("id2"))
-      .select(col("id1"), col("id2"),
-        (floor((dot(col("qv"), col("v2")) / (col("qnrm") * col("nrm2"))) * 10000 + 0.5) / 10000.0).as("cos_sim"))
-    top1(p).orderBy(col("id1"))
+    val (assigned, probes) = ivfSides(e, coarseCentroids(e, annIndex(s, d)), NProbe)
+    top1(probePairs(probes.filter(col("id1") < 20), assigned, Seq("list")))
+      .orderBy(col("id1"))
+  }
+
+  /** probePairs' two IVF sides over centroids `cs`: every vector
+    * assigned to its nearest list as a corpus row (id2, v2, nrm2, list)
+    * and probing its `probes` nearest lists as a query (id1, qv, qnrm,
+    * list). Norm and unit vector are computed once per row as columns,
+    * so the normalization never re-enters the per-centroid dist exprs.
+    */
+  private def ivfSides(e: DataFrame, cs: Array[Array[Double]],
+      probes: Int): (DataFrame, DataFrame) = {
+    val withUnit = normed(e).withColumn("u", scaled(col("v"), col("nrm")))
+    (withUnit.select(col("vec_id").as("id2"), col("v").as("v2"), col("nrm").as("nrm2"),
+        nearestList(cs, col("u")).getField("list").as("list")),
+      withUnit.withColumn("probe", probeLists(cs, col("u"), probes))
+        .select(col("vec_id").as("id1"), col("v").as("qv"),
+          col("nrm").as("qnrm"), col("probe.list").as("list")))
   }
 
   // ---- Product quantization (PQ) ANN ---------------------------------
@@ -390,7 +415,7 @@ object Similarity {
     val ids = shortlist.collect().map(_.getLong(0))
     val qlit = array(q.map(lit): _*)
     e.filter(col("vec_id").isin(ids.map(java.lang.Long.valueOf): _*))
-      .select(col("vec_id"), (floor((dot(unit(col("v")), qlit)) * 10000 + 0.5) / 10000.0).as("cos_sim"))
+      .select(col("vec_id"), round4(dot(unit(col("v")), qlit)).as("cos_sim"))
       .orderBy(col("cos_sim").desc, col("vec_id"))
       .limit(10)
   }
@@ -436,8 +461,7 @@ object Similarity {
     val withU = e.withColumn("u", unit(col("v")))
     val codes = withPqCodes(withU, cb, col("u"), keep = Seq(col("vec_id")))
     // query = vec 0's unit vector; LUT entry [m][j] = ||q_m - c_mj||^2
-    val q = withU.filter(col("vec_id") === 0)
-      .select(col("u")).collect()(0).getSeq[Double](0).toArray
+    val q = queryVector(e, 0)
     val lut: Array[Array[Double]] = Array.tabulate(PqM) { m =>
       val qm = q.slice(m * SubDim, (m + 1) * SubDim)
       cb(m).map(dist2(_, qm))
@@ -528,8 +552,7 @@ object Similarity {
         (least(greatest(round((x - element_at(mnL, i + 1))
           / element_at(spanL, i + 1) * 255.0, 0), lit(0.0)), lit(255.0))
           .cast("int") - 128).cast("tinyint")).as("codes"))
-    val q = withU.filter(col("vec_id") === 0)
-      .select("u").collect()(0).getSeq[Double](0).toArray
+    val q = queryVector(e, 0)
     // affine collapse: score = C + Σ cᵢ·wᵢ over the signed codes
     val w = Array.tabulate(Dim)(i => span(i) * q(i) / 255.0)
     val c0 = Array.tabulate(Dim)(i => (mn(i) + span(i) * 128.0 / 255.0) * q(i)).sum
@@ -565,7 +588,7 @@ object Similarity {
     val q = e.filter(col("vec_id") === 0).select(col("v").as("qv"))
     val top = e.filter(col("vec_id") =!= 0)
       .crossJoin(broadcast(q))
-      .select(col("vec_id"), (floor((cosine(col("v"), col("qv"))) * 10000 + 0.5) / 10000.0).as("cos_sim"))
+      .select(col("vec_id"), round4(cosine(col("v"), col("qv"))).as("cos_sim"))
       .orderBy(col("cos_sim").desc, col("vec_id"))
       .limit(5)
     broadcast(top)
@@ -672,9 +695,7 @@ object Similarity {
     val e = vectors(s, d)
     val idx = annIndexDir(s, d, e)
     val (cs, cb) = loadAnnCodebooks(s, idx)
-    val q = e.filter(col("vec_id") === 0)
-      .select(unit(col("v"))).collect()(0).getSeq[Double](0).toArray
-    ivfPqShortlist(graft.sources.Tables.parquet(s, s"$idx/codes"), cs, cb, q)
+    ivfPqShortlist(graft.sources.Tables.parquet(s, s"$idx/codes"), cs, cb, queryVector(e, 0))
   }
 
   /** The IVF-PQ replay shared by ann_ivfpq and its persisted twin
@@ -784,9 +805,7 @@ object Similarity {
     val key = annIndex(s, d)
     val cs = coarseCentroids(e, key)
     val cb = ivfPqCodebooks(e, cs, key)
-    val q = e.filter(col("vec_id") === 0)
-      .select(unit(col("v"))).collect()(0).getSeq[Double](0).toArray
-    ivfPqSearchFromCodes(e, ivfPqCodes(e, cs, cb), cs, cb, q)
+    ivfPqSearchFromCodes(e, ivfPqCodes(e, cs, cb), cs, cb, queryVector(e, 0))
   }
 
   // ---- Persisted IVF-PQ index ----------------------------------------
@@ -823,16 +842,8 @@ object Similarity {
     * O(index constants), never O(corpus).
     */
   def loadAnnCodebooks(s: SparkSession, path: String):
-      (Array[Array[Double]], Array[Array[Array[Double]]]) = {
-    val cs = graft.sources.Tables.parquet(s, s"$path/centroids").collect()
-      .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
-      .sortBy(_._1).map(_._2)
-    val cbRows = graft.sources.Tables.parquet(s, s"$path/codebooks").collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
-    val cb = Array.tabulate(PqM, PqK)((m, j) => cbRows
-      .find(t => t._1 == m && t._2 == j).get._3)
-    (cs, cb)
-  }
+      (Array[Array[Double]], Array[Array[Array[Double]]]) =
+    (loadCentroids(s, path).get, loadCodebooks(s, path, "codebooks").get)
 
   /** Once-per-corpus index materialization: the Warehouse artifact
     * at `annIndex`, which a fresh session reuses from disk.
@@ -854,9 +865,7 @@ object Similarity {
       val idx = annIndexDir(s, d, e)
       val (cs, cb) = loadAnnCodebooks(s, idx)
       val codes = graft.sources.Tables.parquet(s, s"$idx/codes")
-      val q = e.filter(col("vec_id") === 0)
-        .select(unit(col("v"))).collect()(0).getSeq[Double](0).toArray
-      ivfPqSearchFromCodes(e, codes, cs, cb, q)
+      ivfPqSearchFromCodes(e, codes, cs, cb, queryVector(e, 0))
     }
 
   /** IVF-bucketed pairwise cosine ≥ threshold: every vector probes
@@ -872,7 +881,7 @@ object Similarity {
       .withColumn("probe", probeLists(cs, col("u"), probes))
       .select(col("vec_id"), col("u"), col("probe.list").as("list"))
     Dedup.bucketPairs(probed, "vec_id", Seq("list"), Seq("u"), Seq(col("id1"), col("id2"),
-        (floor((dot(col("u1"), col("u2"))) * 10000 + 0.5) / 10000.0).as("cos_sim")))
+        round4(dot(col("u1"), col("u2"))).as("cos_sim")))
       .filter(col("cos_sim") >= threshold)
   }
 
@@ -920,8 +929,8 @@ object Similarity {
 
   /** Exact cosine k-NN graph (k=4) over the whole embedding corpus
     * — the adjacency a SemDeDup / label-propagation pass consumes.
-    * This is the EXACT baseline: an all-pairs block product with
-    * per-source top-k pushed into the join's consumer (row_number
+    * This is the EXACT baseline: exactKnn's all-pairs block product
+    * with the per-source top-k cut in the join's consumer (TopKPerKey
     * keeps k rows per src before anything wide materializes). At
     * 100 TB you don't run this; you run the IVF-bucketed variant
     * (dedupEmbeddingIvf / annIvf machinery) whose candidate space
@@ -943,35 +952,42 @@ object Similarity {
       |  FROM p)
       |SELECT src, rank, dst, cos_sim FROM ranked WHERE rank <= 4
       |ORDER BY src, rank""".stripMargin) { (s, d) =>
-    val e = vectors(s, d)
-    // per-side norms: 1 dot per pair instead of 3, bit-identical cos
-    // repartition(src) + native top-k: see emb_hubness — the one-split
-    // embeddings scan otherwise leaves the O(n²) stage on one core,
-    // and the window rank sorts every src's full candidate list where
-    // the bounded TopKPerKey buffer keeps 4 rows. The rank column is
-    // re-derived by a window over the ≤4-row-per-key survivors (the
-    // emb_knn_graph_ivf pattern) — identical rows, identical ranks.
-    val a = e.select(col("vec_id").as("src"), col("v").as("va"),
-      sqrt(dot(col("v"), col("v"))).as("na"))
-      .repartition(e.sparkSession.sparkContext.defaultParallelism, col("src"))
-    val b = e.select(col("vec_id").as("dst"), col("v").as("vb"),
-      sqrt(dot(col("v"), col("v"))).as("nb"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("src")).orderBy(col("cos_sim").desc, col("dst"))
-    // Regime estimate: plan bytes of the vector relation (embedding
-    // doubles are ~incompressible, so file bytes ≈ row bytes); the
-    // fallback cross join plans a cartesian product, same pair set
-    val pairs = a.crossJoin(Regime.broadcastIfFits(
-        "emb_knn_graph.vectors", Regime.planBytes(e), b, "cartesian"))
-      .filter(col("src") =!= col("dst"))
-      .select(col("src"), col("dst"),
-        (floor((dot(col("va"), col("vb")) / (col("na") * col("nb"))) * 10000 + 0.5) / 10000.0)
-          .as("cos_sim"))
-    org.apache.spark.sql.graft.TopKOps.topKPerKey(
-        pairs, Seq(col("src")), Seq(col("cos_sim").desc, col("dst").asc), 4)
-      .withColumn("rank", row_number().over(w))
+    exactKnn(vectors(s, d), "emb_knn_graph.vectors", 4, Nil, round4)
       .select(col("src"), col("rank"), col("dst"), col("cos_sim"))
       .orderBy(col("src"), col("rank"))
+  }
+
+  /** Exact all-pairs kNN over (vec_id, payload…, v), shared by
+    * emb_knn_graph, emb_knn_classify and emb_hubness: each vector's k
+    * nearest others by `round`ed cosine (cos_sim desc, dst asc) as
+    * (src, dst, cos_sim, rank 1..k), each payload column p carried as
+    * p (src's) and nb_p (dst's). A caller that reads no rank plans no
+    * window (the optimizer prunes it).
+    *   - Norms per side: one dot per pair instead of three, and
+    *     dot/(na·nb) is bit-identical to the inline cosine.
+    *   - The src side is hashed across the session's cores: the
+    *     embeddings table is ONE parquet split, which would leave the
+    *     O(n²) stage on one core, and the pairs stay src-clustered, so
+    *     the cut plans no further exchange.
+    *   - The dst side broadcasts while Regime's budget holds its plan
+    *     bytes (embedding doubles are ~incompressible, so file bytes ≈
+    *     row bytes); `site` names the pick. Above it the cross join
+    *     plans a cartesian product: the same pairs.
+    */
+  private[operators] def exactKnn(e: DataFrame, site: String, k: Int, payload: Seq[String],
+      round: Column => Column): DataFrame = {
+    def side(id: String, v: String, nrm: String, prefix: String): DataFrame =
+      e.select(Seq(col("vec_id").as(id), col("v").as(v), sqrt(dot(col("v"), col("v"))).as(nrm)) ++
+        payload.map(p => col(p).as(prefix + p)): _*)
+    val a = side("src", "va", "na", "")
+      .repartition(e.sparkSession.sparkContext.defaultParallelism, col("src"))
+    val b = side("dst", "vb", "nb", "nb_")
+    val pairs = a.crossJoin(Regime.broadcastIfFits(site, Regime.planBytes(e), b, "cartesian"))
+      .filter(col("src") =!= col("dst"))
+      .select(Seq(col("src"), col("dst"),
+        round(dot(col("va"), col("vb")) / (col("na") * col("nb"))).as("cos_sim")) ++
+        payload.flatMap(p => Seq(col(p), col("nb_" + p))): _*)
+    rankedTopK(pairs, "src", Seq(col("cos_sim").desc, col("dst").asc), k)
   }
 
   /** APPROXIMATE kNN graph through the IVF lists — the scale path
@@ -1048,37 +1064,21 @@ object Similarity {
 
   val embKnnGraphIvf: QueryDef = QueryDef.sql(
     "emb_knn_graph_ivf", knnGraphIvfOracle(NLists, 8, 3, 4096)) { (s, d) =>
-    import org.apache.spark.sql.expressions.Window
     val e = vectors(s, d)
-    val cs = coarseCentroids(e, annIndex(s, d))
-    val withUnit = e
-      .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
-      .withColumn("u", scaled(col("v"), col("nrm")))
+    // a kNN-GRAPH build probes deeper than a point query (it runs
+    // once per corpus and its recall gates everything downstream):
+    // 8 of 16 lists here; at production NLists (√n) the probe
+    // fraction keeps shrinking while absolute probes stay constant
+    val (corpus, queries) = ivfSides(e, coarseCentroids(e, annIndex(s, d)), 8)
     graft.Ckpt.scoped { sc =>
-      val assigned = sc.checkpoint(withUnit
-        .withColumn("list",
-          nearestList(cs, col("u")).getField("list"))
-        .select(col("vec_id").as("dst"), col("v").as("v2"),
-          col("nrm").as("nrm2"), col("list"))) // one assignment pass, reused by all probes
-      // a kNN-GRAPH build probes deeper than a point query (it runs
-      // once per corpus and its recall gates everything downstream):
-      // 8 of 16 lists here; at production NLists (√n) the probe
-      // fraction keeps shrinking while absolute probes stay constant
-      val graphProbes = 8
-      val probes = withUnit
-        .withColumn("probe", probeLists(cs, col("u"), graphProbes))
-        .select(col("vec_id").as("src"), col("v").as("qv"),
-          col("nrm").as("qnrm"), col("probe.list").as("list"))
-      val cand = probes.join(assigned, Seq("list"))
-        .filter(col("src") =!= col("dst"))
-        .select(col("src"), col("dst"),
-          (floor((dot(col("qv"), col("v2")) / (col("qnrm") * col("nrm2"))) * 10000 + 0.5) / 10000.0)
-            .as("cos_sim"))
+      // one assignment pass, reused by all probes
+      val cand = probePairs(queries, sc.checkpoint(corpus), Seq("list"))
+        .toDF("src", "dst", "cos_sim")
       // keep a WIDER intermediate list (top-8) for the refinement round
       // — the extra candidates are exactly the pool NN-descent mines —
       // and cut to the final 4 after it
       // read 3x below (two self-join arms + union)
-      val top = sc.checkpoint(org.apache.spark.sql.graft.TopKOps.topKPerKey(
+      val top = sc.checkpoint(TopKOps.topKPerKey(
           cand, Seq(col("src")), Seq(col("cos_sim").desc, col("dst").asc), 8))
       // ONE NN-DESCENT refinement round (Dong et al. WWW 2011): a
       // vector's true neighbors are usually neighbors of its current
@@ -1088,7 +1088,7 @@ object Similarity {
       // misrouted-probe recall gap (0.84 → ≥0.9 pinned) for one cheap
       // equality-join round; production ANN builds iterate this to a
       // fixpoint.
-      val vecs = withUnit.select(col("vec_id"), col("v"), col("nrm"))
+      val vecs = normed(e)
       // SYMMETRIZED adjacency (forward ∪ reverse neighbors) — the
       // NN-descent neighborhood: being someone's neighbor is as
       // informative as having one
@@ -1106,14 +1106,10 @@ object Similarity {
         .join(vecs.select(col("vec_id").as("dst"), col("v").as("v2"),
           col("nrm").as("nrm2")), "dst")
         .select(col("src"), col("dst"),
-          (floor((dot(col("qv"), col("v2")) / (col("qnrm") * col("nrm2"))) * 10000 + 0.5) / 10000.0)
-            .as("cos_sim"))
+          round4(dot(col("qv"), col("v2")) / (col("qnrm") * col("nrm2"))).as("cos_sim"))
       val refined = top.select("src", "dst", "cos_sim").unionAll(extra)
         .dropDuplicates("src", "dst")
-      val top2 = org.apache.spark.sql.graft.TopKOps.topKPerKey(
-        refined, Seq(col("src")), Seq(col("cos_sim").desc, col("dst").asc), 4)
-      val w = Window.partitionBy(col("src")).orderBy(col("cos_sim").desc, col("dst"))
-      sc.keep(top2.withColumn("rank", row_number().over(w))
+      sc.keep(rankedTopK(refined, "src", Seq(col("cos_sim").desc, col("dst").asc), 4)
         .select(col("src"), col("rank"), col("dst"), col("cos_sim"))
         .orderBy(col("src"), col("rank")))
     }
@@ -1307,9 +1303,9 @@ object Similarity {
         sqrt(greatest(col("best.dist") + 1.0, lit(0.0))).as("resid"))
     assigned.groupBy(col("list"))
       .agg(count(lit(1)).as("n_vectors"),
-        (floor((count(lit(1)) / n) * 10000 + 0.5) / 10000.0).as("share"),
-        (floor((avg(col("resid"))) * 10000 + 0.5) / 10000.0).as("mean_resid_l2"),
-        (floor((max(col("resid"))) * 10000 + 0.5) / 10000.0).as("max_resid_l2"))
+        round4(count(lit(1)) / n).as("share"),
+        round4(avg(col("resid"))).as("mean_resid_l2"),
+        round4(max(col("resid"))).as("max_resid_l2"))
       .orderBy(col("list"))
   }
 
@@ -1341,7 +1337,7 @@ object Similarity {
     e.filter(col("vec_id") =!= 0)
       .crossJoin(broadcast(q))
       .filter(cosine(col("v"), col("qv")) >= RangeRadius)
-      .select(col("vec_id"), (floor((cosine(col("v"), col("qv"))) * 10000 + 0.5) / 10000.0).as("cos_sim"))
+      .select(col("vec_id"), round4(cosine(col("v"), col("qv"))).as("cos_sim"))
       .orderBy(col("vec_id"))
   }
 
@@ -1375,11 +1371,11 @@ object Similarity {
     val scored = e.crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id"), dot(col("v"), col("qv")).as("ip"))
-    org.apache.spark.sql.graft.TopKOps.topKPerKey(scored,
+    TopKOps.topKPerKey(scored,
         keys = Seq(col("qid")),
         order = Seq(col("ip").desc, col("vec_id").asc),
         k = 10)
-      .select(col("qid"), col("vec_id"), (floor((col("ip")) * 10000 + 0.5) / 10000.0).as("ip"))
+      .select(col("qid"), col("vec_id"), round4(col("ip")).as("ip"))
       .orderBy(col("qid"), col("ip").desc, col("vec_id"))
   }
 
@@ -1421,9 +1417,7 @@ object Similarity {
       |SELECT truth, predicted, count(*) AS n
       |FROM pred WHERE vr = 1
       |GROUP BY 1, 2 ORDER BY truth, predicted""".stripMargin) { (s, d) =>
-    knnClassify(Tables.embeddings(s, d)
-      .select(col("vec_id"), col("label"),
-        col("embedding").cast("array<double>").as("v")), k = 5)
+    knnClassify(vectors(s, d, "label"), k = 5)
       .orderBy(col("truth"), col("predicted"))
   }
 
@@ -1434,29 +1428,11 @@ object Similarity {
     * labels, which only exercises the plumbing).
     */
   def knnClassify(e: DataFrame, k: Int): DataFrame = {
-    // norms precomputed PER SIDE, not per pair: cos = dot/(na·nb) is
-    // bit-identical to the inline cosine (same ops, factored), and
-    // the O(n²) stage drops from 3 dots/pair to 1
-    // repartition(src) + native top-k: see emb_knn_graph (one-split
-    // scan parallelism + bounded-buffer cut; identical survivors)
-    val a = e.select(col("vec_id").as("src"), col("label").as("truth"),
-      col("v").as("va"), sqrt(dot(col("v"), col("v"))).as("na"))
-      .repartition(e.sparkSession.sparkContext.defaultParallelism, col("src"))
-    val b = e.select(col("vec_id").as("dst"), col("label").as("nb_label"),
-      col("v").as("vb"), sqrt(dot(col("v"), col("v"))).as("nb"))
-    // Regime estimate: plan bytes of the vector relation (see emb_knn_graph)
-    val pairs = a.crossJoin(Regime.broadcastIfFits(
-        "emb_knn_classify.vectors", Regime.planBytes(e), b, "cartesian"))
-      .filter(col("src") =!= col("dst"))
-      .select(col("src"), col("truth"), col("nb_label"), col("dst"),
-        (floor((dot(col("va"), col("vb")) / (col("na") * col("nb"))) * 10000 + 0.5) / 10000.0)
-          .as("cos_sim"))
-    val votes = org.apache.spark.sql.graft.TopKOps.topKPerKey(
-        pairs, Seq(col("src")), Seq(col("cos_sim").desc, col("dst").asc), k)
-      .groupBy(col("src"), col("truth"), col("nb_label"))
+    val votes = exactKnn(e, "emb_knn_classify.vectors", k, Seq("label"), round4)
+      .groupBy(col("src"), col("label").as("truth"), col("nb_label"))
       .agg(count(lit(1)).as("n_votes"))
     // the vote: per src, the most-voted label, the lowest on ties
-    org.apache.spark.sql.graft.TopKOps.topKPerKey(
+    TopKOps.topKPerKey(
         votes, Seq(col("src")), Seq(col("n_votes").desc, col("nb_label").asc), 1)
       .groupBy(col("truth"), col("nb_label").as("predicted"))
       .agg(count(lit(1)).as("n"))
@@ -1483,7 +1459,6 @@ object Similarity {
     * pinned in ScalaTest.
     */
   val annNsw: QueryDef = QueryDef.rowsOnly("ann_nsw") { (s, d) =>
-    import org.apache.spark.sql.expressions.Window
     val e = vectors(s, d)
     val queries: Array[(Long, Array[Double])] = e.filter(col("vec_id") < 5)
       .collect().map(r => r.getLong(0) -> normalize(r.getSeq[Double](1).toArray))
@@ -1499,20 +1474,15 @@ object Similarity {
         org.apache.spark.sql.Encoders.scalaLong,
         org.apache.spark.sql.Encoders.scalaDouble))
       .toDF("qid", "vec_id", "cos_sim")
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-    cands.filter(col("vec_id") =!= col("qid"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 10)
-      .select(col("qid"), col("rank"), col("vec_id"),
-        (floor(col("cos_sim") * 10000 + 0.5) / 10000).as("cos_sim"))
+    rankedTopK(cands.filter(col("vec_id") =!= col("qid")), "qid",
+        Seq(col("cos_sim").desc, col("vec_id").asc), 10)
+      .select(col("qid"), col("rank"), col("vec_id"), round4(col("cos_sim")).as("cos_sim"))
       .orderBy(col("qid"), col("rank"))
   }
 
-  private def normalize(v: Array[Double]): Array[Double] = {
-    var s = 0.0; var i = 0
-    while (i < v.length) { s += v(i) * v(i); i += 1 }
-    val n = math.sqrt(s)
+  /** `v` scaled to unit L2 norm (a zero vector as it is), driver-side. */
+  private[operators] def normalize(v: Array[Double]): Array[Double] = {
+    val n = math.sqrt(dotd(v, v))
     if (n == 0) v else v.map(_ / n)
   }
 
@@ -1531,11 +1501,6 @@ object Similarity {
     val vecs = pts.map(_._2)
     var counting = false // build-phase visits are amortized ingest cost
     val adj = Array.fill(n)(scala.collection.mutable.ArrayBuffer.empty[Int])
-    def dot(a: Array[Double], b: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < a.length) { s += a(i) * b(i); i += 1 }
-      s
-    }
     // best-first beam over the graph restricted to nodes < upTo;
     // returns the `width` best (sim desc, id asc) nodes reached
     def beam(q: Array[Double], width: Int, upTo: Int): Array[(Double, Int)] = {
@@ -1543,7 +1508,7 @@ object Similarity {
       val cand = scala.collection.mutable.PriorityQueue.empty(ord) // max by sim
       val res = scala.collection.mutable.PriorityQueue.empty(ord.reverse) // min by sim
       val visited = new java.util.BitSet(upTo)
-      val s0 = dot(q, vecs(0))
+      val s0 = dotd(q, vecs(0))
       cand.enqueue((s0, 0)); res.enqueue((s0, 0)); visited.set(0)
       if (counting && visitCounter != null) visitCounter.incrementAndGet()
       while (cand.nonEmpty) {
@@ -1554,7 +1519,7 @@ object Similarity {
             if (nb < upTo && !visited.get(nb)) {
               visited.set(nb)
               if (counting && visitCounter != null) visitCounter.incrementAndGet()
-              val sNb = dot(q, vecs(nb))
+              val sNb = dotd(q, vecs(nb))
               if (res.size < width || sNb > res.head._1) {
                 cand.enqueue((sNb, nb)); res.enqueue((sNb, nb))
                 if (res.size > width) res.dequeue()
@@ -1592,7 +1557,7 @@ object Similarity {
     * unlike every float ANN variant the whole operator is
     * deterministic enough for a SQL oracle. Scan shape: 5-row query
     * side broadcast, ONE corpus pass scores all queries, per-query
-    * top-10 window over the Hamming-pruned candidates. At serving
+    * top-10 cut (rankedTopK) over the Hamming-scored candidates. At serving
     * scale the packed codes column is the persisted index (the
     * corpus rescans 16 B/row, not 512 B), and re-ranking the top
     * Hamming bucket by exact cosine restores float precision —
@@ -1617,22 +1582,19 @@ object Similarity {
         |        PARTITION BY qid ORDER BY hamming, vec_id) AS rank FROM p)
         |SELECT qid, rank, vec_id, CAST(hamming AS BIGINT) AS hamming
         |FROM r WHERE rank <= 10 ORDER BY qid, rank""".stripMargin) { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
       val packed = vectors(s, d)
         .withColumn("h1", signPackHalf(col("v"), 0))
         .withColumn("h2", signPackHalf(col("v"), 32))
         .drop("v")
       val q = packed.filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("h1").as("q1"), col("h2").as("q2"))
-      val w = Window.partitionBy(col("qid")).orderBy(col("hamming"), col("vec_id"))
-      packed.crossJoin(broadcast(q))
+      val scored = packed.crossJoin(broadcast(q))
         .filter(col("vec_id") =!= col("qid"))
         .select(col("qid"), col("vec_id"),
           (bit_count(col("h1").bitwiseXOR(col("q1"))) +
             bit_count(col("h2").bitwiseXOR(col("q2")))).cast("long").as("hamming"))
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= 10)
-        .select(col("qid"), col("rank"), col("vec_id"), col("hamming"))
+      rankedTopK(scored, "qid", Seq(col("hamming").asc, col("vec_id").asc), 10)
+        .select(col("qid"), col("rank").cast("long").as("rank"), col("vec_id"), col("hamming"))
         .orderBy(col("qid"), col("rank"))
     }
   }
@@ -1774,15 +1736,12 @@ object Similarity {
       |FROM e CROSS JOIN q
       |WHERE vec_id <> 0 AND label = ql
       |ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin) { (s, d) =>
-    val e = Tables.embeddings(s, d)
-      .select(col("vec_id"), col("label"),
-        col("embedding").cast("array<double>").as("v"))
+    val e = vectors(s, d, "label")
     val q = e.filter(col("vec_id") === 0).head()
     val (ql, qv) = (q.getInt(1), q.getSeq[Double](2))
     e.filter(col("vec_id") =!= 0 && col("label") === lit(ql))
       .select(col("vec_id"), col("label"),
-        (floor((cosine(col("v"),
-          lit(qv.toArray))) * 10000 + 0.5) / 10000.0).as("cos_sim"))
+        round4(cosine(col("v"), lit(qv.toArray))).as("cos_sim"))
       .orderBy(col("cos_sim").desc, col("vec_id"))
       .limit(10)
   }
@@ -1800,13 +1759,9 @@ object Similarity {
     * grids), so the readout is stable across runs and partitionings.
     */
   val annRecallEval: QueryDef = QueryDef.rowsOnly("ann_recall_eval") { (s, d) =>
-    val e = vectors(s, d).withColumn("nrm", sqrt(dot(col("v"), col("v"))))
-    val q = e.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("id1"), col("v").as("qv"), col("nrm").as("qn"))
-    val exact1 = top1(e.toDF("id2", "v2", "n2")
-      .join(broadcast(q), col("id1") =!= col("id2"))
-      .select(col("id1"), col("id2"),
-        (floor((dot(col("qv"), col("v2")) / (col("qn") * col("n2"))) * 10000 + 0.5) / 10000.0).as("cos_sim")))
+    val e = normed(vectors(s, d))
+    val exact1 = top1(probePairs(e.filter(col("vec_id") < 20).toDF("id1", "qv", "qnrm"),
+        e.toDF("id2", "v2", "nrm2"), Nil))
       .select(col("id1"), col("id2").as("nn"))
     def top1Recall(method: String, got: DataFrame): DataFrame =
       exact1.join(got, Seq("id1"), "left_outer")
@@ -1814,7 +1769,7 @@ object Similarity {
           sum(when(col("got") === col("nn"), 1).otherwise(0)).as("hits"))
         .select(lit(method).as("method"), lit(1).as("k"),
           col("nq").as("n_queries"),
-          (floor((col("hits") / col("nq")) * 10000 + 0.5) / 10000.0).as("recall"))
+          round4(col("hits") / col("nq")).as("recall"))
     val lsh = top1Recall("lsh",
       annLsh.fn(s, d).select(col("id1"), col("id2").as("got")))
     val ivf = top1Recall("ivf",
@@ -1825,7 +1780,7 @@ object Similarity {
         .join(broadcast(exact10), col("vec_id") === col("t10"), "left_semi")
         .agg(count(lit(1)).as("hits"))
         .select(lit(method).as("method"), lit(10).as("k"),
-          lit(1L).as("n_queries"), (floor((col("hits") / lit(10.0)) * 10000 + 0.5) / 10000.0).as("recall"))
+          lit(1L).as("n_queries"), round4(col("hits") / lit(10.0)).as("recall"))
     val sq8 = top10Overlap("sq8", annSq8.fn(s, d))
     val pq = top10Overlap("pq", annPq.fn(s, d))
     val ivfpq = top10Overlap("ivfpq", annIvfPq.fn(s, d))

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{KMeans, Relational}
 import graft.sources.SourceOps
@@ -110,11 +112,44 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(p.contains("collect_list") && p.contains("Generate"), s"no bucket expansion in:\n$p")
   }
 
-  test("the four ANN top-1 entries cut with TopKPerKey, not a window") {
-    for (name <- Seq("ann_topk_join", "ann_lsh", "ann_ivf", "ann_recall_eval")) {
-      val p = plan(name)
-      assert(p.contains("TopKPerKey"), s"$name plans no TopKPerKey:\n$p")
-      assert(!p.contains("Window"), s"$name plans a Window:\n$p")
+  /** The executed plans of every query `name` runs: its driver
+    * collects and checkpoints, then its result.
+    */
+  private def executedPlans(name: String): Seq[SparkPlan] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    drainBus()
+    spark.listenerManager.register(listener)
+    try {
+      val df = SparkEntry.queries(name)(spark, sf)
+      df.collect()
+      drainBus()
+      seen.toArray(Array.empty[SparkPlan]).toSeq :+
+        df.queryExecution.executedPlan
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("every ANN top-k cut runs TopKPerKey; a rank window sees only its survivors") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.graft.TopKPerKeyExec
+    val helper = new AdaptiveSparkPlanHelper {}
+    def finals(p: SparkPlan) = helper.collect(p) { case t: TopKPerKeyExec if !t.partial => t }
+    // entry -> whether it numbers its survivors (rank) or keeps the best one
+    val cuts = Seq(
+      "ann_topk_join" -> false, "ann_lsh" -> false, "ann_ivf" -> false,
+      "ann_recall_eval" -> false, "emb_knn_graph" -> true,
+      "emb_knn_graph_ivf" -> true, "ann_nsw" -> true, "ann_hamming" -> true)
+    for ((name, ranked) <- cuts) {
+      val plans = executedPlans(name)
+      val shown = plans.mkString("\n---\n").take(6000)
+      assert(plans.exists(finals(_).nonEmpty), s"$name plans no TopKPerKeyFinal:\n$shown")
+      val windows = plans.flatMap(helper.collect(_) { case w if w.nodeName.startsWith("Window") => w })
+      if (ranked) for (w <- windows)
+        assert(finals(w).nonEmpty, s"$name ranks candidates no TopKPerKey cut:\n$w")
+      else assert(windows.isEmpty, s"$name plans a Window:\n$shown")
     }
   }
 

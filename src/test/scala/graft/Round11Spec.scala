@@ -187,19 +187,25 @@ class Round11Spec extends AnyFunSuite {
     }
   }
 
-  test("Dedup and Similarity expand buckets and cut top-1 in one place") {
-    // a bucket self-join on id1 < id2 or a row_number top-1 window is
-    // the spelling bucketPairs and TopKPerKey replaced; only the exact
-    // overlap counts (ngramPairs, dedup_weighted_exact) join on id1 < id2
+  test("bucket pairs, top-k rank cuts and exact kNN are each spelled in one place") {
+    // a bucket self-join on id1 < id2 is the spelling bucketPairs
+    // replaced, a row_number window followed by a rank filter (top-1 or
+    // <= k) the one top1/rankedTopK replaced, and a second cartesian-
+    // fallback broadcast a copy of exactKnn; only the exact overlap
+    // counts (ngramPairs, dedup_weighted_exact) join on id1 < id2
     import java.nio.file.{Files, Paths}
     val defn = """(?m)^  (?:private(?:\[\w+\])? )?(?:lazy )?(?:def|val) (\w+)""".r
     val idLess = """col\("id1"\)\s*<\s*col\("id2"\)""".r
-    val top1 = """row_number\(\)\.over\([^)]*\)\)\s*\.filter\(col\("[^"]+"\)\s*===\s*1\)""".r
+    val rankCut = ("""row_number\(\)\.over\([^)]*\)(?:\.cast\([^)]*\))?\)""" +
+      """\s*\.filter\(col\("[^"]+"\)\s*(?:===\s*1\)|<=)""").r
+    val cartesian = """Regime\.broadcastIfFits\((?:[^()]|\([^()]*\))*"cartesian"\)""".r
     val exact = Set("ngramPairs", "dedupWeightedExact")
-    val hits = Seq("Dedup.scala", "Similarity.scala").flatMap { f =>
+    val sources = Seq("Dedup.scala", "Similarity.scala", "Embeddings.scala").map { f =>
       val p = Paths.get("src/main/scala/graft/operators", f)
       assert(Files.isRegularFile(p), s"$p not found")
-      val code = Files.readString(p)
+      f -> Files.readString(p)
+    }
+    val hits = sources.flatMap { case (f, code) =>
       val starts = defn.findAllMatchIn(code).map(m => (m.start, m.group(1))).toSeq
       def owner(at: Int) = starts.takeWhile(_._1 <= at).lastOption.fold("?")(_._2)
       // a key self-join: id1 < id2 inside a join condition that also equates keys
@@ -209,8 +215,12 @@ class Round11Spec extends AnyFunSuite {
       }
       selfJoins.map(m => owner(m.start)).filterNot(exact)
         .map(d => s"$f: bucket self-join in $d").toSeq ++
-        top1.findAllMatchIn(code).map(m => s"$f: row_number top-1 in ${owner(m.start)}")
+        rankCut.findAllMatchIn(code).map(m => s"$f: row_number rank filter in ${owner(m.start)}")
+    }
+    val knn = sources.flatMap { case (f, code) =>
+      cartesian.findAllMatchIn(code).map(_ => f)
     }
     assert(hits.isEmpty, hits.mkString("\n"))
+    assert(knn.size == 1, s"cartesian-fallback broadcasts outside exactKnn: ${knn.mkString(", ")}")
   }
 }

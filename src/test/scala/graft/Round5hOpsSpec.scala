@@ -300,6 +300,29 @@ class Round5hOpsSpec extends AnyFunSuite {
     assert(out.map(_.getLong(0)).toSeq === expect)
   }
 
+  test("ann_filtered and emb_knn_classify reject a zero-norm embedding by its vec_id") {
+    // both divide by norms, so both read through Similarity.vectors'
+    // nonzero-norm check; the zeroed row shares the query's label, so
+    // ann_filtered's label predicate keeps it in the scored class
+    val e = Tables.embeddings(spark, sf)
+    val ql = e.filter(col("vec_id") === 0).select("label").head().getInt(0)
+    val zid = e.filter(col("vec_id") =!= 0 && col("label") === ql)
+      .agg(min(col("vec_id"))).head().getLong(0)
+    val dir = java.nio.file.Files.createTempDirectory("zero_norm").toString
+    try {
+      e.withColumn("embedding", when(col("vec_id") === zid,
+          array_repeat(lit(0.0f), size(col("embedding")))).otherwise(col("embedding")))
+        .write.parquet(s"$dir/embeddings.parquet")
+      for (q <- Seq(Similarity.annFiltered, Similarity.embKnnClassify)) {
+        val err = intercept[Exception](q.fn(spark, dir).collect())
+        val msgs = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+          .map(t => String.valueOf(t.getMessage)).toSeq
+        assert(msgs.exists(_.contains(s"vec_id=$zid")),
+          s"${q.name}: no vec_id=$zid in ${msgs.mkString(" / ").take(500)}")
+      }
+    } finally new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
+  }
+
   // ---- events_trending -----------------------------------------------
 
   test("events_trending: decayed score bounded by raw count and matches a replay") {
